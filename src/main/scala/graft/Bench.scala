@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.model.PageGen
@@ -180,20 +182,52 @@ object Bench {
     }.min
   }
 
-  private case class SentinelReport(q1: Double, q19: Double, attempts: Int,
-                                    q1Max: Double, q19Max: Double, armed: Boolean) {
+  private[graft] case class SentinelReport(q1: Double, q19: Double, attempts: Int,
+                                           q1Max: Double, q19Max: Double, armed: Boolean) {
     def pass: Boolean = !armed || (q1 <= q1Max && q19 <= q19Max)
+    /** The headline's own sentinel readings are within the band. A missing
+      * reading (the query failed) is out of band: it must not pass. */
+    def inBand(rs: Seq[(String, Double)]): Boolean = {
+      val m = rs.toMap
+      !armed || (m.get("q1_agg").exists(_ <= q1Max) &&
+        m.get("q19_running_sum").exists(_ <= q19Max))
+    }
     def json: String =
       f""""sentinel":{"q1_agg":$q1%.3f,"q19_running_sum":$q19%.3f,"attempts":$attempts,"q1_max":$q1Max%.2f,"q19_max":$q19Max%.2f,"armed":$armed}"""
   }
 
+  /** The data basis of a run: the basename of its sf directory. Matching
+    * on the basename keeps `sf10` from passing for `sf1`. */
+  private[graft] def basisOf(sfDir: String): String =
+    Option(java.nio.file.Paths.get(sfDir).getFileName).map(_.toString).getOrElse(sfDir)
+
+  /** Times each query once. A query that throws lands in the error list,
+    * never among the timings: a crash must not shorten the total. */
+  private[graft] def timeQueries(
+      queries: Seq[(String, () => Unit)]): (Seq[(String, Double)], Seq[String]) = {
+    val runs = queries.map { case (name, run) =>
+      val t0 = System.nanoTime()
+      try { run(); Right(name -> (System.nanoTime() - t0) / 1e9) }
+      catch { case NonFatal(e) => Left(s"$name: $e") }
+    }
+    (runs.collect { case Right(r) => r }, runs.collect { case Left(e) => e })
+  }
+
+  /** Where the artifact lands. A rejected run (burst gate tripped or a
+    * headline query failed) never replaces a canonical artifact. */
+  private[graft] def artifactPath(rejected: Boolean, canonicalBasis: Boolean,
+                                  env: Map[String, String]): String =
+    if (rejected) env.getOrElse("SPARK_GRAFT_BENCH_REJECT_JSON", "BENCH_REJECTED.json")
+    else env.getOrElse("SPARK_GRAFT_BENCH_JSON",
+      if (canonicalBasis) "BENCH_LATEST.json" else "BENCH_NONCANONICAL.json")
+
   private def runSentinels(sfDir: String, cpus: Int): SentinelReport = {
     val disabled = sys.env.get("SPARK_GRAFT_SENTINEL_DISABLE").contains("1")
-    val canonicalBasis = sfDir.contains("sf0.1") && cpus == 32
+    val canonicalBasis = basisOf(sfDir) == "sf0.1" && cpus == 32
     // sf1 band seeded by the first sf1 artifact (BASELINE.md "sf1-class
     // canonical artifact": q1 0.80-1.17 s, q19 0.18-0.26 s warm) — armed by
     // default so the 10x basis gets the same burst protection as canonical
-    val sf1Basis = sfDir.contains("sf1") && cpus == 32
+    val sf1Basis = basisOf(sfDir) == "sf1" && cpus == 32
     val armed = !disabled &&
       (canonicalBasis || sf1Basis || sys.env.contains("SPARK_GRAFT_SENTINEL_Q1_MAX"))
     val q1Max = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_Q1_MAX",
@@ -228,7 +262,7 @@ object Bench {
     val midCpus = math.max(cpus / 4, 1)
     val lowCpus = math.max(cpus / 16, 1)
     val benchPages = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAGES",
-      if (sfDir.contains("sf0.1")) "40000" else "5000").toInt
+      if (basisOf(sfDir) == "sf0.1") "40000" else "5000").toInt
     val shm = "/dev/shm/graft-bench"
     val pagesDir = s"$shm-pages"
 
@@ -292,7 +326,7 @@ object Bench {
     // nhash seed frames (all pure functions of the built KG) materialize
     // outside every timed rep; SPARK_GRAFT_HEADLINE_COLD=1 restores the old
     // first-touch-pays semantics for A/B comparison.
-    def headlinePhase(): Seq[(String, Double)] = {
+    def headlinePhase(): (Seq[(String, Double)], Seq[String]) = {
       val spark = newSession(cpus)
       try {
         if (!sys.env.get("SPARK_GRAFT_HEADLINE_COLD").contains("1")) {
@@ -300,13 +334,9 @@ object Bench {
           kt.flatEnc.count(); kt.components.count()
           Queries.nhashFrames(spark, sfDir)
         }
-        headline.flatMap { name =>
-          all.get(name).map { fn =>
-            val t0 = System.nanoTime()
-            try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-            name -> (System.nanoTime() - t0) / 1e9
-          }
-        }
+        timeQueries(headline.flatMap { name =>
+          all.get(name).map(fn => name -> (() => { fn(spark, sfDir).count(); () }))
+        })
       } finally spark.stop()
     }
     // Post-hoc audit WITH phase retry: the headline sentinels are
@@ -319,38 +349,42 @@ object Bench {
     // best-of-N already has: re-run the PHASE (pause, fresh session) up to
     // the pre-flight attempt budget, keeping per-query single-rep
     // semantics — a retry re-measures, it never takes a min over reps.
-    def inBand(rs: Seq[(String, Double)]): Boolean = {
-      val m = rs.toMap
-      !sentinel.armed || (m.getOrElse("q1_agg", 0.0) <= sentinel.q1Max &&
-        m.getOrElse("q19_running_sum", 0.0) <= sentinel.q19Max)
-    }
     val pauseSec = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_PAUSE_SEC", "45").toLong
     // no retry when the pre-flight gate already failed: the run is routed
     // to the reject artifact regardless, so extra phases buy nothing
     val maxHeadline = if (sentinel.armed && sentinel.pass) 3 else 1
     var headlineAttempts = 1
-    var results = headlinePhase()
-    while (!inBand(results) && headlineAttempts < maxHeadline) {
-      val m = results.toMap
+    var phase = headlinePhase()
+    while (!sentinel.inBand(phase._1) && headlineAttempts < maxHeadline) {
+      val m = phase._1.toMap
       System.err.println(f"[bench] headline attempt $headlineAttempts out of band: " +
         f"q1_agg ${m.getOrElse("q1_agg", -1.0)}%.3f (max ${sentinel.q1Max}%.2f), " +
         f"q19 ${m.getOrElse("q19_running_sum", -1.0)}%.3f (max ${sentinel.q19Max}%.2f) — retrying phase")
       Thread.sleep(pauseSec * 1000)
-      results = headlinePhase()
+      phase = headlinePhase()
       headlineAttempts += 1
     }
+    val (results, errors) = phase
 
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val postHocBurst = !inBand(results)
+    val postHocBurst = !sentinel.inBand(results)
     val gated = !sentinel.pass || postHocBurst
     val gatedJson = if (gated) """"gated":"burst-rejected",""" else ""
+    val errorsJson = errors.map { e =>
+      "\"" + e.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < ' ' => " "
+        case c => c.toString
+      } + "\""
+    }.mkString("[", ",", "]")
     // per-round raw seconds: the host is a shared microVM with multi-minute
     // neighbor-noise bursts — the spread makes the best-of basis auditable
     val roundsJson = rounds.map { case ((_, a), (_, b), (_, c)) =>
       f"[$a%.3f,$b%.3f,$c%.3f]" }.mkString("[", ",", "]")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$gatedJson${sentinel.json},"headline_attempts":$headlineAttempts,"queries":$qs,"sf":"$sfDir","pipeline":{"pages":$benchPages,"triples":$triplesHigh,"cores":[$lowCpus,$midCpus,$cpus],"sec":[$secLow%.3f,$secMid%.3f,$secHigh%.3f],"round_sec":$roundsJson,"triples_per_sec":[$thrLow%.1f,$thrMid%.1f,$thrHigh%.1f],"scaling_efficiency_${lowCpus}to$midCpus":$effLowMid%.3f,"scaling_efficiency_${midCpus}to$cpus":$effMidHigh%.3f}}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$gatedJson${sentinel.json},"headline_attempts":$headlineAttempts,"errors":$errorsJson,"queries":$qs,"sf":"$sfDir","pipeline":{"pages":$benchPages,"triples":$triplesHigh,"cores":[$lowCpus,$midCpus,$cpus],"sec":[$secLow%.3f,$secMid%.3f,$secHigh%.3f],"round_sec":$roundsJson,"triples_per_sec":[$thrLow%.1f,$thrMid%.1f,$thrHigh%.1f],"scaling_efficiency_${lowCpus}to$midCpus":$effLowMid%.3f,"scaling_efficiency_${midCpus}to$cpus":$effMidHigh%.3f}}"""
     // the JSON must be machine-findable: sbt's logger prefixes every
     // println with "[info] ", which broke the round-1 driver parse — so
     // also (a) write it straight to fd 1, bypassing the redirected
@@ -371,14 +405,12 @@ object Bench {
     // round-3 incident was an sf0.01 smoke run landing on the canonical
     // path): those default to BENCH_NONCANONICAL.json unless the operator
     // names a path explicitly.
-    val canonicalBasis = sfDir.contains("sf0.1") && cpus == 32 && benchPages == 40000
-    val jsonPath =
-      if (gated) sys.env.getOrElse("SPARK_GRAFT_BENCH_REJECT_JSON", "BENCH_REJECTED.json")
-      else sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
-        if (canonicalBasis) "BENCH_LATEST.json" else "BENCH_NONCANONICAL.json")
+    val canonicalBasis = basisOf(sfDir) == "sf0.1" && cpus == 32 && benchPages == 40000
+    val jsonPath = artifactPath(gated || errors.nonEmpty, canonicalBasis, sys.env)
     if (gated) System.err.println(
       s"[bench] burst gate tripped (pre-flight pass=${sentinel.pass}, " +
         s"post-hoc burst=$postHocBurst) — writing $jsonPath, canonical kept")
+    errors.foreach(e => System.err.println(s"[bench] headline query failed: $e — writing $jsonPath"))
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(jsonPath), json + "\n")
     catch { case _: Throwable => () }
     println(json)

@@ -8,6 +8,7 @@ import graft.canon.ConnectedComponents
 import graft.extract.{ExtractMetrics, Lit, PatternAutomaton, PatternRule, TripleExtractor}
 import graft.model.{GraphEdge, Ids, Page, Schema}
 import graft.store.TableIO
+import graft.util.Par
 
 /** Rule-diff incremental recompute — the full G3 shape (≙ joern's
   * ArgumentTainter re-analyzing only affected functions and patching the
@@ -64,8 +65,12 @@ object Incremental {
     }
   }
 
-  private def bucketCol(numBuckets: Int): Column =
-    pmod(xxhash64(col("url")), lit(numBuckets)).cast("int")
+  private def bucketCol(c: String, numBuckets: Int): Column =
+    pmod(xxhash64(col(c)), lit(numBuckets)).cast("int")
+
+  /** The buckets `df`'s `c` keys hash into (one small collect). */
+  private def bucketsOf(df: DataFrame, c: String, numBuckets: Int): Set[Int] =
+    df.select(bucketCol(c, numBuckets).as("b")).distinct().collect().map(_.getInt(0)).toSet
 
   /** Remap canonical ids in both triple slots (broadcast — merge-sized). */
   private def applyRemap(t: DataFrame, r: DataFrame): DataFrame =
@@ -85,7 +90,7 @@ object Incremental {
                                   numBuckets: Int): Set[Int] = {
     import spark.implicits._
     val old = TableIO.read(spark, triplesDir)
-    val tb = bucketCol(numBuckets).as("b")
+    val tb = bucketCol("url", numBuckets).as("b")
     // merges are usually few: below the literal threshold the stale-row
     // probe is ONE scan with an isin predicate that pushes into parquet
     // (row-group stats skip clean files); past it, two broadcast-semi
@@ -174,11 +179,9 @@ object Incremental {
   private def rewriteStaleSameAs(spark: SparkSession, edgesDir: String,
                                  remap: DataFrame, numBuckets: Int): Set[Int] = {
     val remapNode = nodeRemap(spark, remap)
-    val stale = TableIO.read(spark, edgesDir)
+    val stale = bucketsOf(TableIO.read(spark, edgesDir)
       .filter(col("kind") === Schema.EdgeKinds.SameAs)
-      .join(broadcast(remapNode), col("dst") === col("oldDst"), "left_semi")
-      .select(pmod(xxhash64(col("src")), lit(numBuckets)).cast("int"))
-      .distinct().collect().map(_.getInt(0)).toSet
+      .join(broadcast(remapNode), col("dst") === col("oldDst"), "left_semi"), "src", numBuckets)
     if (stale.nonEmpty) {
       val rewritten = applyEdgeRemap(TableIO.read(spark, edgesDir, Some(stale)), remapNode)
       TableIO.rewriteBuckets(rewritten, edgesDir, col("src"), stale,
@@ -258,16 +261,14 @@ object Incremental {
     val sameAsChanged = changed.exists(_.pred == "same_as")
     val touched: Set[Int] =
       if (sameAsChanged) (0 until numBuckets).toSet
-      else affectedPages(pages, changed)
-        .select(bucketCol(numBuckets).as("b")).distinct()
-        .collect().map(_.getInt(0)).toSet
+      else bucketsOf(affectedPages(pages, changed).toDF(), "url", numBuckets)
     if (touched.isEmpty) return Set.empty
 
     TableIO.invalidateBuckets(s"$outDir/triples", touched)
 
     val restricted =
       if (touched.size == numBuckets) pages
-      else pages.filter(bucketCol(numBuckets).isin(touched.toSeq: _*))
+      else pages.filter(bucketCol("url", numBuckets).isin(touched.toSeq: _*))
     val components =
       if (sameAsChanged) None
       else Some(TableIO.read(spark, s"$outDir/components"))
@@ -437,9 +438,6 @@ object Incremental {
     // an EAGER append must see physically-canonical rows — fold any pending
     // deferred remap first so the stale-row probe can trust the bytes
     if (!deferMergeRewrite) compactMergeRemap(spark, outDir, numBuckets)
-    def bucketsOf(df: DataFrame, c: String): Set[Int] =
-      df.select(pmod(xxhash64(col(c)), lit(numBuckets)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
 
     // ---- extract the batch (O(|batch|), the same stage-2 as a full run) ----
     // a crawl micro-batch may carry the same url twice (re-fetch inside the
@@ -473,7 +471,7 @@ object Incremental {
     // rejects — a permanent split). All-or-nothing: all present = resume,
     // none = fresh append, a mix = misuse, rejected atomically.
     val nodesDir = s"$outDir/nodes"
-    val pageOverlap = TableIO.read(spark, nodesDir, Some(bucketsOf(pageIds, "id")))
+    val pageOverlap = TableIO.read(spark, nodesDir, Some(bucketsOf(pageIds, "id", numBuckets)))
       .filter(col("kind") === Schema.NodeKinds.Page)
       .join(pageIds, Seq("id"), "left_semi").count()
     require(pageOverlap == 0 || pageOverlap == nBatch,
@@ -513,17 +511,14 @@ object Incremental {
     // jobs (the materialize precedent): the append path is dominated by
     // driver-synchronized round trips, and on a real cluster three output
     // pipelines sharing the executor pool beat a serial walk just the same
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
 
     // ---- triples: rewrite merge-stale buckets, then append the batch ----
     val triplesDir = s"$outDir/triples"
-    val triplesF = Future {
+    val triplesF = Par {
     val triplesB = Pipeline.canonicalizeTriples(flatB, components2, canonBroadcastCutover)
     val batchUrls = triplesB.select($"url").distinct().localCheckpoint(true)
     val nUrls = batchUrls.count()
-    val urlBuckets = bucketsOf(batchUrls, "url")
+    val urlBuckets = bucketsOf(batchUrls, "url", numBuckets)
     // per-table resume detection (mixed batches were already rejected by the
     // authoritative page-node check; a partial overlap here can only mean a
     // corrupted table — appendBucketed commits are all-or-nothing)
@@ -569,9 +564,9 @@ object Incremental {
     val (nodesB, edgesB) = Pipeline.graphTables(spark, flatB, emptyComp)
 
     val edgesDir = s"$outDir/edges"
-    val edgesF = Future {
+    val edgesF = Par {
     val hostBuckets = bucketsOf(
-      flatB.filter($"rowKind" === "p").select($"hostId".as("h")).distinct(), "h")
+      flatB.filter($"rowKind" === "p").select($"hostId".as("h")).distinct(), "h", numBuckets)
     val edgeOverlap = TableIO.read(spark, edgesDir, Some(hostBuckets))
       .filter(col("kind") === EK.IsPageOf)
       .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
@@ -599,7 +594,7 @@ object Incremental {
       // every other batch edge is page-scoped and cannot pre-exist
       val ph = edgesB.filter(col("kind") === EK.IsParentHost).localCheckpoint(true)
       val phExisting = TableIO.read(spark, edgesDir,
-        Some(bucketsOf(ph.select(col("src").as("s")), "s")))
+        Some(bucketsOf(ph.select(col("src").as("s")), "s", numBuckets)))
         .filter(col("kind") === EK.IsParentHost).select("src", "dst")
       val novelPh = ph.join(phExisting, Seq("src", "dst"), "left_anti")
       TableIO.appendBucketed(
@@ -610,7 +605,7 @@ object Incremental {
     (edgesApplied, edgeBucketsRewritten)
     }
 
-    val nodesF = Future {
+    val nodesF = Par {
     // the authoritative pre-check already counted this table's Page rows
     val nodesApplied = pageOverlap == nBatch
     if (!nodesApplied) {
@@ -619,7 +614,7 @@ object Incremental {
       // only the buckets the batch's ids hash into
       val globals = nodesB.filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity))
         .localCheckpoint(true)
-      val gBuckets = bucketsOf(globals, "id")
+      val gBuckets = bucketsOf(globals, "id", numBuckets)
       val existing = TableIO.read(spark, nodesDir, Some(gBuckets))
         .filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity)).select("id")
       val novel = globals.join(existing, Seq("id"), "left_anti")
@@ -629,7 +624,7 @@ object Incremental {
     nodesApplied
     }
 
-    val evidenceF = Future {
+    val evidenceF = Par {
     // same-as evidence rides with every batch: the takedown path
     // (removePages) recomputes the canonical mapping from this table, so an
     // append must keep it exactly what a full rebuild would extract. Rows
@@ -641,7 +636,8 @@ object Incremental {
     val evApplied =
       if (nEv == 0L) true
       else {
-        val evOverlap = TableIO.read(spark, evDir, Some(bucketsOf(evB.select($"a"), "a")))
+        val evOverlap = TableIO.read(spark, evDir,
+            Some(bucketsOf(evB.select($"a"), "a", numBuckets)))
           .join(evB, Seq("a", "b", "url"), "left_semi").count()
         assert(evOverlap == 0 || evOverlap == nEv,
           s"evidence table at $evDir holds a partial batch ($evOverlap of $nEv pairs)")
@@ -651,7 +647,7 @@ object Incremental {
     evApplied && nEv > 0 // "skipped" = a genuine resume, not an empty batch
     }
 
-    val refcountF = Future {
+    val refcountF = Par {
     // entity refcount delta log: the batch's per-entity mention counts
     // append as positive deltas. Deltas are NOT idempotent by key (existing
     // entities already have rows), so exactly-once rests on a per-batch
@@ -662,11 +658,11 @@ object Incremental {
       "batch_" + batchTag(flatB.toDF()), numBuckets)
     }
 
-    val (tripApplied, tripleBucketsRewritten) = Await.result(triplesF, Duration.Inf)
-    val (edgesApplied, edgeBucketsRewritten) = Await.result(edgesF, Duration.Inf)
-    val nodesApplied = Await.result(nodesF, Duration.Inf)
-    val evApplied = Await.result(evidenceF, Duration.Inf)
-    Await.result(refcountF, Duration.Inf)
+    Par.awaitAll(triplesF, edgesF, nodesF, evidenceF, refcountF)
+    val (tripApplied, tripleBucketsRewritten) = Par.await(triplesF)
+    val (edgesApplied, edgeBucketsRewritten) = Par.await(edgesF)
+    val nodesApplied = Par.await(nodesF)
+    val evApplied = Par.await(evidenceF)
 
     // ---- components: snapshot-swap LAST (the retry-convergence anchor).
     // Swap only when the batch actually CHANGED the mapping (merges or new
@@ -682,9 +678,8 @@ object Incremental {
     // per-batch lineage.
     if (havePairs && (remapN > 0 || newMappingRows > 0)) {
       val priorC = TableIO.readManifest(s"$outDir/components").get.counters
-      val mergedC = (priorC.keySet ++ batchCounters.keySet).map { k =>
-        k -> (priorC.getOrElse(k, 0L) + batchCounters.getOrElse(k, 0L)) }.toMap
-      swapWrite(components2.toDF(), s"$outDir/components", col("id"), mergedC, numBuckets)
+      swapWrite(components2.toDF(), s"$outDir/components", col("id"),
+        TableIO.sumCounters(priorC, batchCounters), numBuckets)
     }
 
     val skipped = Seq(
@@ -719,45 +714,53 @@ object Incremental {
     * root diverge), so unlike the merge case it cannot be patched by a
     * value remap or deferred to read time.
     *
-    * Shape, fast path (no dead evidence — the common takedown):
-    *   - the batch's exact build-time rows are re-DERIVED by re-running the
-    *     deterministic extraction on the removed pages (O(batch)) — that IS
-    *     the delete manifest: every page-scoped key, candidate dimension id
-    *     and candidate same-as pair, with no tombstone bookkeeping to keep
-    *     in sync;
-    *   - triples/evidence: drop by url in the O(batch) buckets those urls
-    *     hash into ([[TableIO.rewriteBuckets]] — atomic manifest swap per
-    *     table, crash loses nothing);
-    *   - nodes/edges: drop page-scoped rows by their exact ids (page-scoped
-    *     id spaces are kind-prefixed hashes — an anti-join on id cannot
-    *     touch dimension rows); dimension rows (Host/Domain/Entity) die
-    *     only when their last referencing page leaves — host/domain
-    *     liveness probes read ONLY the candidates' buckets (IS_PAGE_OF /
-    *     IS_PARENT_HOST_OF are bucketed by the dimension id), and entity
-    *     liveness reads the candidates' buckets of the `entity_refcounts`
-    *     delta log (post-batch sum == 0 ⇒ dead) — every step O(batch), no
-    *     corpus-wide scan anywhere on this path.
+    * What gets deleted: the batch's exact build-time rows are re-DERIVED by
+    * re-running the deterministic extraction on the removed pages (O(batch))
+    * — that IS the delete manifest: every page-scoped key, candidate
+    * dimension id and candidate same-as pair, with no tombstone bookkeeping
+    * to keep in sync. Page-scoped node/edge ids are kind-prefixed hashes, so
+    * an anti-join on them cannot touch dimension rows; dimension rows
+    * (Host/Domain/Entity) die only when their last referencing page leaves.
     *
-    * Slow path (some candidate pair lost its last evidence): recompute CC
-    * over the SURVIVING pair set from the `sameas_evidence` side table —
-    * O(evidence), corpus-independent, exactly the full rebuild's input — and
-    * diff against the old mapping. Rows referencing a changed old root are
-    * found by one column-pruned triples scan, their pages re-extracted
-    * (from the caller-supplied remaining corpus) and their url buckets
-    * rewritten wholesale with the new mapping; SAME_AS edges and the
-    * components table follow as deltas/snapshot-swap.
+    * Shape: after the presence probe, three independent chains run as
+    * concurrent jobs (the [[appendPages]] precedent), each reading only the
+    * candidates' buckets — no corpus-wide scan on the fast path:
+    *   - A: the negative refcount deltas append to `entity_refcounts`, then
+    *     entity liveness reads the candidates' buckets of that delta log
+    *     (post-batch sum == 0 ⇒ dead);
+    *   - B: the batch's `sameas_evidence` rows drop, pairs whose LAST
+    *     evidence left are detected, and only if there are any (the slow
+    *     path) connected components are recomputed over the SURVIVING
+    *     evidence — O(evidence), exactly the full rebuild's input — and
+    *     diffed against the old mapping (`changed`: old id → old/new root);
+    *   - C: host liveness (IS_PAGE_OF, bucketed by host), then domain
+    *     liveness (IS_PARENT_HOST_OF, bucketed by domain).
+    * Two table rewrites hang off them. Triples probe for the batch urls at
+    * once, then wait for B: surviving pages whose rows reference a changed
+    * root are re-extracted from `remaining` under the new mapping, and ONE
+    * [[TableIO.rewriteBuckets]] over urlBuckets ∪ affBuckets drops the batch
+    * and affected urls and unions in the re-derived rows. Edges wait for B
+    * and C, then one rewrite drops page-scoped, dead-host and stale SAME_AS
+    * rows and adds the new SAME_AS delta. The components snapshot-swap and
+    * the nodes rewrite follow, in that order.
     *
-    * Crash/retry: idempotent. The page NODES are the presence anchor
-    * (deleted LAST): a retry first probes them — all gone means the removal
-    * completed (early no-op; negative manifest counters cannot double-
-    * subtract); still present means every step re-runs, and each step
-    * either detects it already applied (key probes find nothing) or
-    * converges (rewrites are replace-by-content; the components snapshot
-    * swaps only when the recomputed diff is nonempty, and the SAME_AS edge
-    * delta lands BEFORE the swap so a crash between them re-derives the
-    * same diff from the unchanged old mapping). A takedown list may carry
-    * never-crawled or already-removed urls — they restrict away against the
-    * presence probe and no-op. */
+    * Crash/retry: idempotent. Each table commit is atomic, and four
+    * ordering edges keep any crash point resumable:
+    *   1. the refcount deltas land before entity liveness reads them (the
+    *      batch marker makes the append exactly-once);
+    *   2. the SAME_AS edge delta (and the triples fallout) land before the
+    *      components swap, so a crash between them re-derives the same
+    *      `changed` from the unchanged old mapping;
+    *   3. the components swap lands before the nodes anchor;
+    *   4. the page NODES are the presence anchor and drop LAST.
+    * A retry first probes the anchor: all gone means the removal completed
+    * (early no-op; negative manifest counters cannot double-subtract); still
+    * present means every chain re-runs, and each step either detects it
+    * already applied (key probes find nothing) or converges (rewrites are
+    * replace-by-content; liveness probes exclude the batch rows explicitly,
+    * so they read the same answer either side of a rewrite). A takedown
+    * list may carry never-crawled or already-removed urls — they restrict
+    * away against the presence probe and no-op. */
   def removePages(spark: SparkSession, removedPages: Dataset[Page],
                   remaining: Dataset[Page], outDir: String,
                   nPersons: Int = 500, targetLang: String = "en",
@@ -774,9 +777,6 @@ object Incremental {
     // eager semantics: fold any pending deferred merge remap first (the
     // eager-append rule) so the probes below can trust the physical bytes
     compactMergeRemap(spark, outDir, numBuckets)
-    def bucketsOf(df: DataFrame, c: String): Set[Int] =
-      df.select(pmod(xxhash64(col(c)), lit(numBuckets)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
     // a using-columns join MOVES the join keys to the front — the rewritten
     // buckets must keep the table's committed column order or readers of a
     // patched table would see a different physical schema than a rebuild's
@@ -793,7 +793,8 @@ object Incremental {
     // presence anchor: restrict to pages actually IN the build
     val nodesDir = s"$outDir/nodes"
     val batchPageIds = flatR0.filter($"rowKind" === "p").select($"pageId".as("id"))
-    val presentPages = TableIO.read(spark, nodesDir, Some(bucketsOf(batchPageIds, "id")))
+    val presentPages = TableIO.read(spark, nodesDir,
+        Some(bucketsOf(batchPageIds, "id", numBuckets)))
       .filter(col("kind") === Schema.NodeKinds.Page)
       .join(batchPageIds, Seq("id"), "left_semi")
       .select(col("id").as("presentPid")).localCheckpoint(true)
@@ -805,14 +806,8 @@ object Incremental {
     val flatR = flatR0.toDF()
       .join(presentPages, flatR0("pageId") === col("presentPid"), "left_semi")
       .as[graft.extract.FlatRow].persist(StorageLevel.MEMORY_AND_DISK)
+    // the counter job also fills the flat cache every chain below reads
     val negCounters = Pipeline.flatCounters(flatR).map { case (k, v) => k -> -v }
-
-    // refcount deltas FIRST (exactly-once via the batch marker): dimension
-    // liveness below is defined on POST-batch sums, so retries on either
-    // side of this append read the same answer
-    appendRefDeltas(spark, outDir,
-      Pipeline.entityRefDeltas(flatR).select(col("id"), (-col("n")).as("n")),
-      "takedown_" + batchTag(flatR.toDF()), numBuckets)
 
     val pRows = flatR.filter($"rowKind" === "p")
       .select($"pageId", $"url", $"host", $"hostId").localCheckpoint(true)
@@ -822,198 +817,218 @@ object Incremental {
     val tripleNodeIds = flatR.filter($"rowKind" === "t" && $"tripleNodeId" =!= 0L)
       .select($"tripleNodeId".as("id")).distinct()
 
-    // ---- triples: drop the batch urls' rows in their O(batch) buckets ----
-    val triplesDir = s"$outDir/triples"
-    val urlBuckets = bucketsOf(urls, "url")
-    val tripPresent = TableIO.read(spark, triplesDir, Some(urlBuckets))
-      .join(urls, Seq("url"), "left_semi").limit(1).count() > 0
-    val tripleBuckets1: Set[Int] =
-      if (!tripPresent) Set.empty
-      else {
-        val cur = TableIO.read(spark, triplesDir, Some(urlBuckets))
-        TableIO.rewriteBuckets(
-          keepOrder(cur.join(urls, Seq("url"), "left_anti"), cur.columns),
-          triplesDir, col("url"), urlBuckets, negCounters, numBuckets)
-        urlBuckets
-      }
+    // ---- chain A: refcount deltas, then entity liveness ----
+    val deadEntsF = Par {
+      // exactly-once via the batch marker; liveness is defined on POST-batch
+      // sums, so retries on either side of this append read the same answer
+      appendRefDeltas(spark, outDir,
+        Pipeline.entityRefDeltas(flatR).select(col("id"), (-col("n")).as("n")),
+        "takedown_" + batchTag(flatR.toDF()), numBuckets)
+      val entCand = flatR.filter($"rowKind" === "m" && $"entityId" >= 0)
+        .select($"entityId".as("id"), $"entityNodeId".as("e")).distinct()
+        .localCheckpoint(true)
+      val liveIds = TableIO.read(spark, s"$outDir/entity_refcounts",
+          Some(bucketsOf(entCand, "id", numBuckets)))
+        .join(entCand.select("id"), Seq("id"), "left_semi")
+        .groupBy("id").agg(sum($"n").as("n")).filter($"n" > 0)
+        .select("id")
+      val deadEnts = entCand.join(liveIds, Seq("id"), "left_anti").select($"e")
+        .localCheckpoint(true)
+      (deadEnts, deadEnts.count())
+    }
 
-    // ---- evidence: drop batch rows, detect pairs whose LAST evidence left ----
+    // ---- chain B: evidence drop, dead pairs, then the mapping refresh ----
+    // `changed` (id, oldComp, newComp) and `newC` stay null on the fast path
+    case class Split(deadPairs: Long, changed: DataFrame, newC: DataFrame, remapped: Long)
     val evDir = s"$outDir/sameas_evidence"
-    val candPairs = flatR.filter($"rowKind" === "t" && $"pred" === "same_as" && $"obj" >= 0)
-      .select($"subj".as("a"), $"obj".as("b")).distinct().localCheckpoint(true)
-    val deadPairsN =
-      if (candPairs.isEmpty) 0L
-      else {
-        val evBuckets = bucketsOf(candPairs.select("a"), "a")
-        val hasBatchRows = TableIO.read(spark, evDir, Some(evBuckets))
-          .join(urls, Seq("url"), "left_semi").limit(1).count() > 0
-        if (hasBatchRows) {
-          val cur = TableIO.read(spark, evDir, Some(evBuckets))
-          TableIO.rewriteBuckets(
-            keepOrder(cur.join(urls, Seq("url"), "left_anti"), cur.columns),
-            evDir, col("a"), evBuckets, negCounters, numBuckets)
-        }
-        val survivors = TableIO.read(spark, evDir, Some(evBuckets))
-          .select("a", "b").distinct()
-        candPairs.join(survivors, Seq("a", "b"), "left_anti").count()
-      }
-
-    // ---- canonical mapping refresh (slow path only) ----
     val compDir = s"$outDir/components"
-    val oldC = TableIO.read(spark, compDir).persist(StorageLevel.MEMORY_AND_DISK)
-    val (changed, newC) =
-      if (deadPairsN == 0) (null: DataFrame, null: DataFrame)
+    val splitF = Par {
+      val candPairs = flatR.filter($"rowKind" === "t" && $"pred" === "same_as" && $"obj" >= 0)
+        .select($"subj".as("a"), $"obj".as("b")).distinct().localCheckpoint(true)
+      val deadPairsN =
+        if (candPairs.isEmpty) 0L
+        else {
+          val evBuckets = bucketsOf(candPairs.select("a"), "a", numBuckets)
+          val hasBatchRows = TableIO.read(spark, evDir, Some(evBuckets))
+            .join(urls, Seq("url"), "left_semi").limit(1).count() > 0
+          if (hasBatchRows) {
+            val cur = TableIO.read(spark, evDir, Some(evBuckets))
+            TableIO.rewriteBuckets(
+              keepOrder(cur.join(urls, Seq("url"), "left_anti"), cur.columns),
+              evDir, col("a"), evBuckets, negCounters, numBuckets)
+          }
+          val survivors = TableIO.read(spark, evDir, Some(evBuckets))
+            .select("a", "b").distinct()
+          candPairs.join(survivors, Seq("a", "b"), "left_anti").count()
+        }
+      if (deadPairsN == 0) Split(0L, null, null, 0L)
       else {
         val pairs = TableIO.read(spark, evDir).select($"a", $"b").distinct()
           .localCheckpoint(true)
         val n = ConnectedComponents.auto(spark, pairs).persist(StorageLevel.MEMORY_AND_DISK)
         // removal only shrinks the pair set, so every id in the new mapping
         // exists in the old one: changed = old rows whose root moved or left
-        val ch = oldC
+        val ch = TableIO.read(spark, compDir)
           .join(n.withColumnRenamed("component", "newComp"), Seq("id"), "left")
           .filter(!($"component" <=> $"newComp"))
           .select($"id", $"component".as("oldComp"), $"newComp")
           .localCheckpoint(true)
-        (ch, n)
+        Split(deadPairsN, ch, n, ch.count())
       }
-    val remappedN = if (changed == null) 0L else changed.count()
+    }
 
-    // ---- split fallout: re-derive affected surviving pages from source ----
-    val (falloutBuckets, nAffected) =
-      if (remappedN == 0) (Set.empty[Int], 0L)
-      else {
-        val changedVals = broadcast(changed.select($"oldComp".as("v")).distinct())
-        val t = TableIO.read(spark, triplesDir)
-        val affectedUrls = t
-          .join(changedVals, t("subj") === col("v") || t("obj") === col("v"), "left_semi")
-          .select("url").distinct()
-          .join(urls, Seq("url"), "left_anti")
-          .localCheckpoint(true)
-        val nAff = affectedUrls.count()
-        if (nAff == 0) (Set.empty[Int], 0L)
-        else {
-          val affPages = remaining.join(affectedUrls, Seq("url"), "left_semi").as[Page]
-          val flatA = TripleExtractor.extractFlat(affPages, gaz, auto, metrics)
-          val regenerated = Pipeline.canonicalizeTriples(flatA, newC, canonBroadcastCutover)
-          val affBuckets = bucketsOf(affectedUrls, "url")
-          val cur = TableIO.read(spark, triplesDir, Some(affBuckets))
-          val keep = keepOrder(cur.join(affectedUrls, Seq("url"), "left_anti"), cur.columns)
-          TableIO.rewriteBuckets(keep.unionByName(regenerated), triplesDir, col("url"),
-            affBuckets, Map.empty, numBuckets)
-          (affBuckets, nAff)
-        }
-      }
-
-    // ---- dimension liveness probes (candidate buckets only; batch rows
-    // excluded explicitly so a retry reads the same answer either side of
-    // the edges rewrite) ----
+    // ---- chain C: dimension liveness probes (candidate buckets only; batch
+    // rows excluded explicitly so a retry reads the same answer either side
+    // of the edges rewrite) ----
+    case class Dims(hostBuckets: Set[Int], deadHosts: DataFrame, nHosts: Long,
+                    domBuckets: Set[Int], deadDoms: DataFrame, nDoms: Long)
     val edgesDir = s"$outDir/edges"
-    val hostCand = pRows.select($"hostId".as("h")).distinct().localCheckpoint(true)
-    val hostBuckets = bucketsOf(hostCand, "h")
-    val liveHosts = TableIO.read(spark, edgesDir, Some(hostBuckets))
-      .filter(col("kind") === EK.IsPageOf)
-      .join(hostCand.withColumnRenamed("h", "src"), Seq("src"), "left_semi")
-      .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-      .select($"src".as("h")).distinct()
-    val deadHosts = hostCand.join(liveHosts, Seq("h"), "left_anti").localCheckpoint(true)
-    val nDeadHosts = deadHosts.count()
-
-    val domCand = Pipeline.hostDomainOf(pRows.toDF())
-      .join(deadHosts.withColumnRenamed("h", "hostId"), Seq("hostId"), "left_semi")
-      .select($"domainId".as("d")).distinct().localCheckpoint(true)
-    val domBuckets = if (nDeadHosts == 0) Set.empty[Int] else bucketsOf(domCand, "d")
-    val deadDoms =
-      if (nDeadHosts == 0) domCand.limit(0)
+    val dimsF = Par {
+      val hostCand = pRows.select($"hostId".as("h")).distinct().localCheckpoint(true)
+      val hostBuckets = bucketsOf(hostCand, "h", numBuckets)
+      val liveHosts = TableIO.read(spark, edgesDir, Some(hostBuckets))
+        .filter(col("kind") === EK.IsPageOf)
+        .join(hostCand.withColumnRenamed("h", "src"), Seq("src"), "left_semi")
+        .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
+        .select($"src".as("h")).distinct()
+      val deadHosts = hostCand.join(liveHosts, Seq("h"), "left_anti").localCheckpoint(true)
+      val nDeadHosts = deadHosts.count()
+      val domCand = Pipeline.hostDomainOf(pRows.toDF())
+        .join(deadHosts.withColumnRenamed("h", "hostId"), Seq("hostId"), "left_semi")
+        .select($"domainId".as("d")).distinct().localCheckpoint(true)
+      if (nDeadHosts == 0) Dims(hostBuckets, deadHosts, 0L, Set.empty, domCand.limit(0), 0L)
       else {
+        val domBuckets = bucketsOf(domCand, "d", numBuckets)
         val liveDoms = TableIO.read(spark, edgesDir, Some(domBuckets))
           .filter(col("kind") === EK.IsParentHost)
           .join(domCand.withColumnRenamed("d", "src"), Seq("src"), "left_semi")
           .join(deadHosts.withColumnRenamed("h", "dst"), Seq("dst"), "left_anti")
           .select($"src".as("d")).distinct()
-        domCand.join(liveDoms, Seq("d"), "left_anti").localCheckpoint(true)
+        val deadDoms = domCand.join(liveDoms, Seq("d"), "left_anti").localCheckpoint(true)
+        Dims(hostBuckets, deadHosts, nDeadHosts, domBuckets, deadDoms, deadDoms.count())
       }
-    val nDeadDoms = if (nDeadHosts == 0) 0L else deadDoms.count()
-
-    // entity liveness via the refcount delta log: the batch's negative
-    // deltas landed above, so an entity is dead iff its post-batch mention
-    // count sums to ZERO. Reads only the candidates' buckets — this
-    // replaced a corpus-wide LINKS_TO scan, the last corpus-linear step on
-    // the takedown fast path.
-    val entCand = flatR.filter($"rowKind" === "m" && $"entityId" >= 0)
-      .select($"entityId".as("id"), $"entityNodeId".as("e")).distinct()
-      .localCheckpoint(true)
-    val liveIds = TableIO.read(spark, s"$outDir/entity_refcounts",
-        Some(bucketsOf(entCand, "id")))
-      .join(entCand.select("id"), Seq("id"), "left_semi")
-      .groupBy("id").agg(sum($"n").as("n")).filter($"n" > 0)
-      .select("id")
-    val deadEnts = entCand.join(liveIds, Seq("id"), "left_anti")
-      .select($"e").localCheckpoint(true)
-    val nDeadEnts = deadEnts.count()
-
-    // ---- edges: one combined rewrite over every touched bucket ----
-    val srcIds = pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)
-      .distinct().localCheckpoint(true)
-    val changedEntNodes =
-      if (remappedN == 0) null
-      else changed.select($"id").as[Long].map(Ids.entityNodeId).toDF("en")
-        .localCheckpoint(true)
-    val edgeBuckets = bucketsOf(srcIds, "id") ++ hostBuckets ++ domBuckets ++
-      (if (changedEntNodes == null) Set.empty[Int] else bucketsOf(changedEntNodes, "en"))
-    val eContent = TableIO.read(spark, edgesDir, Some(edgeBuckets))
-    val edgesNeedWork = changedEntNodes != null ||
-      eContent.join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .limit(1).count() > 0 ||
-      eContent.filter(col("kind") === EK.IsPageOf)
-        .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .limit(1).count() > 0
-    if (edgesNeedWork) {
-      var keepE = eContent
-        .join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-        .join(pageIds.select($"id".as("dst")).withColumn("kind", lit(EK.IsPageOf)),
-          Seq("dst", "kind"), "left_anti")
-        .join(deadHosts.select($"h".as("dst")).withColumn("kind", lit(EK.IsParentHost)),
-          Seq("dst", "kind"), "left_anti")
-      if (changedEntNodes != null) {
-        keepE = keepE.join(
-          changedEntNodes.select($"en".as("src")).withColumn("kind", lit(EK.SameAs)),
-          Seq("src", "kind"), "left_anti")
-        val freshSameAs = changed.filter($"newComp".isNotNull)
-          .select($"id", $"newComp").as[(Long, Long)]
-          .map { case (id, c) =>
-            GraphEdge(Ids.entityNodeId(id), Ids.entityNodeId(c), EK.SameAs, null) }
-          .toDF().select(col("src"), col("dst"), col("kind"), col("variable"), col("label"))
-        keepE = keepE.unionByName(freshSameAs)
-      }
-      TableIO.rewriteBuckets(keepOrder(keepE, eContent.columns), edgesDir, col("src"),
-        edgeBuckets, negCounters, numBuckets)
     }
 
-    // ---- components: snapshot-swap BEFORE the nodes anchor drops ----
-    if (remappedN > 0) {
+    // ---- triples: ONE rewrite drops the batch urls and re-derives the
+    // split fallout (surviving pages whose rows reference a changed root) ----
+    val triplesDir = s"$outDir/triples"
+    val triplesF = Par {
+      // the url probe needs nothing from B — it overlaps the mapping refresh
+      val urlBuckets = bucketsOf(urls, "url", numBuckets)
+      val tripPresent = TableIO.read(spark, triplesDir, Some(urlBuckets))
+        .join(urls, Seq("url"), "left_semi").limit(1).count() > 0
+      val split = Par.await(splitF)
+      val (affectedUrls, nAffected) =
+        if (split.remapped == 0) (urls.limit(0), 0L)
+        else {
+          val changedVals = broadcast(split.changed.select($"oldComp".as("v")).distinct())
+          val t = TableIO.read(spark, triplesDir)
+          val aff = t
+            .join(changedVals, t("subj") === col("v") || t("obj") === col("v"), "left_semi")
+            .select("url").distinct()
+            .join(urls, Seq("url"), "left_anti")
+            .localCheckpoint(true)
+          (aff, aff.count())
+        }
+      val buckets = (if (tripPresent) urlBuckets else Set.empty[Int]) ++
+        (if (nAffected == 0) Set.empty[Int] else bucketsOf(affectedUrls, "url", numBuckets))
+      if (buckets.nonEmpty) {
+        val cur = TableIO.read(spark, triplesDir, Some(buckets))
+        val keep = keepOrder(cur.join(urls.unionByName(affectedUrls), Seq("url"), "left_anti"),
+          cur.columns)
+        val rows =
+          if (nAffected == 0) keep
+          else {
+            val affPages = remaining.join(affectedUrls, Seq("url"), "left_semi").as[Page]
+            val flatA = TripleExtractor.extractFlat(affPages, gaz, auto, metrics)
+            keep.unionByName(Pipeline.canonicalizeTriples(flatA, split.newC, canonBroadcastCutover))
+          }
+        // the batch's counters leave with its rows: a retry after this
+        // commit finds no batch url and subtracts nothing again
+        TableIO.rewriteBuckets(rows, triplesDir, col("url"), buckets,
+          if (tripPresent) negCounters else Map.empty, numBuckets)
+      }
+      (buckets, nAffected)
+    }
+
+    // ---- edges: one combined rewrite over every touched bucket ----
+    val edgesF = Par {
+      val srcIds = pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)
+        .distinct().localCheckpoint(true)
+      val srcBuckets = bucketsOf(srcIds, "id", numBuckets)
+      val split = Par.await(splitF)
+      val dims = Par.await(dimsF)
+      val changedEntNodes =
+        if (split.remapped == 0) null
+        else split.changed.select($"id").as[Long].map(Ids.entityNodeId).toDF("en")
+          .localCheckpoint(true)
+      val edgeBuckets = srcBuckets ++ dims.hostBuckets ++ dims.domBuckets ++
+        (if (changedEntNodes == null) Set.empty[Int]
+         else bucketsOf(changedEntNodes, "en", numBuckets))
+      val eContent = TableIO.read(spark, edgesDir, Some(edgeBuckets))
+      val edgesNeedWork = changedEntNodes != null ||
+        eContent.join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+          .limit(1).count() > 0 ||
+        eContent.filter(col("kind") === EK.IsPageOf)
+          .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+          .limit(1).count() > 0
+      if (edgesNeedWork) {
+        var keepE = eContent
+          .join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
+          .join(pageIds.select($"id".as("dst")).withColumn("kind", lit(EK.IsPageOf)),
+            Seq("dst", "kind"), "left_anti")
+          .join(dims.deadHosts.select($"h".as("dst")).withColumn("kind", lit(EK.IsParentHost)),
+            Seq("dst", "kind"), "left_anti")
+        if (changedEntNodes != null) {
+          keepE = keepE.join(
+            changedEntNodes.select($"en".as("src")).withColumn("kind", lit(EK.SameAs)),
+            Seq("src", "kind"), "left_anti")
+          val freshSameAs = split.changed.filter($"newComp".isNotNull)
+            .select($"id", $"newComp").as[(Long, Long)]
+            .map { case (id, c) =>
+              GraphEdge(Ids.entityNodeId(id), Ids.entityNodeId(c), EK.SameAs, null) }
+            .toDF().select(col("src"), col("dst"), col("kind"), col("variable"), col("label"))
+          keepE = keepE.unionByName(freshSameAs)
+        }
+        TableIO.rewriteBuckets(keepOrder(keepE, eContent.columns), edgesDir, col("src"),
+          edgeBuckets, negCounters, numBuckets)
+      }
+      edgeBuckets
+    }
+
+    // every chain settles before anything is rethrown, so a failed takedown
+    // never leaves a sibling job still committing when its caller retries
+    Par.awaitAll(deadEntsF, splitF, dimsF, triplesF, edgesF)
+    val (deadEnts, nDeadEnts) = Par.await(deadEntsF)
+    val split = Par.await(splitF)
+    val dims = Par.await(dimsF)
+    val (tripleBuckets, nAffected) = Par.await(triplesF)
+    val edgeBuckets = Par.await(edgesF)
+
+    // ---- components: snapshot-swap after the triples and SAME_AS deltas,
+    // BEFORE the nodes anchor drops ----
+    if (split.remapped > 0) {
       val priorC = TableIO.readManifest(compDir).get.counters
-      val mergedC = (priorC.keySet ++ negCounters.keySet).map { k =>
-        k -> (priorC.getOrElse(k, 0L) + negCounters.getOrElse(k, 0L)) }.toMap
-      swapWrite(newC.toDF(), compDir, col("id"), mergedC, numBuckets)
+      swapWrite(split.newC.toDF(), compDir, col("id"),
+        TableIO.sumCounters(priorC, negCounters), numBuckets)
     }
 
     // ---- nodes LAST: the presence anchor falls only when all else is done ----
     val delNodeIds = pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)
-      .unionByName(deadHosts.select($"h".as("id")))
-      .unionByName(deadDoms.select($"d".as("id")))
+      .unionByName(dims.deadHosts.select($"h".as("id")))
+      .unionByName(dims.deadDoms.select($"d".as("id")))
       .unionByName(deadEnts.select($"e".as("id")))
       .distinct().localCheckpoint(true)
-    val nodeBuckets = bucketsOf(delNodeIds, "id")
+    val nodeBuckets = bucketsOf(delNodeIds, "id", numBuckets)
     val curN = TableIO.read(spark, nodesDir, Some(nodeBuckets))
     TableIO.rewriteBuckets(
       keepOrder(curN.join(delNodeIds, Seq("id"), "left_anti"), curN.columns),
       nodesDir, col("id"), nodeBuckets, negCounters, numBuckets)
 
-    flatR0.unpersist(false); flatR.unpersist(false); oldC.unpersist(false)
+    flatR0.unpersist(false); flatR.unpersist(false)
     presentPages.unpersist(false); delNodeIds.unpersist(false)
-    if (newC != null) newC.unpersist(false)
-    RemoveStats(nPresent, deadPairsN, remappedN, nDeadHosts, nDeadDoms, nDeadEnts,
-      (tripleBuckets1 ++ falloutBuckets).size, edgeBuckets.size, nodeBuckets.size,
-      nAffected)
+    if (split.newC != null) split.newC.unpersist(false)
+    RemoveStats(nPresent, split.deadPairs, split.remapped, dims.nHosts, dims.nDoms,
+      nDeadEnts, tripleBuckets.size, edgeBuckets.size, nodeBuckets.size, nAffected)
   }
 }

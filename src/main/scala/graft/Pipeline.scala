@@ -8,6 +8,7 @@ import graft.canon.ConnectedComponents
 import graft.extract._
 import graft.model._
 import graft.store.TableIO
+import graft.util.Par
 
 /** End-to-end KG construction: pages → extract → link → canonicalize →
   * materialize (nodes / edges / triples) — the Spark re-expression of
@@ -295,9 +296,6 @@ object Pipeline {
     * sharing the same executor pool. */
   def materialize(spark: SparkSession, t: Tables, outDir: String,
                   numBuckets: Int = graft.store.TableIO.NumBuckets): Map[String, Long] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // numBuckets is a BUILD parameter that must grow with the corpus (the
     // local default 32 ≙ thousands at cluster scale): increments touch
     // O(batch) buckets each sized O(corpus/numBuckets), so fixed buckets
@@ -311,17 +309,17 @@ object Pipeline {
     // the same flat cache) — each write only blocks on it at manifest-commit
     // time, after its data files are out, so the counter scan's wall time
     // fully overlaps the writes instead of serially preceding them
-    val countersF = Future(flatCounters(t.flat))
-    def counters: Map[String, Long] = Await.result(countersF, Duration.Inf)
+    val countersF = Par(flatCounters(t.flat))
+    def counters: Map[String, Long] = Par.await(countersF)
     val writes = Seq(
-      Future(TableIO.writeBucketed(t.triples, s"$outDir/triples", col("url"), counters, numBuckets)),
-      Future(TableIO.writeBucketed(t.nodes, s"$outDir/nodes", col("id"), counters, numBuckets)),
-      Future(TableIO.writeBucketed(t.edges, s"$outDir/edges", col("src"), counters, numBuckets)),
+      Par(TableIO.writeBucketed(t.triples, s"$outDir/triples", col("url"), counters, numBuckets)),
+      Par(TableIO.writeBucketed(t.nodes, s"$outDir/nodes", col("id"), counters, numBuckets)),
+      Par(TableIO.writeBucketed(t.edges, s"$outDir/edges", col("src"), counters, numBuckets)),
       // the canonical mapping is materialized too: a rule-diff incremental
       // recompute (Incremental.applyRuleDiff) re-extracts only the touched
       // page buckets and must reuse THIS global mapping, not rebuild one
       // from the restricted page set
-      Future(TableIO.writeBucketed(t.components, s"$outDir/components", col("id"), counters, numBuckets)),
+      Par(TableIO.writeBucketed(t.components, s"$outDir/components", col("id"), counters, numBuckets)),
       // same-as EVIDENCE (a, b, url): the raw pair occurrences the canonical
       // mapping was computed FROM, with their page provenance. The mapping
       // alone cannot answer "does this merge survive if page X is taken
@@ -331,13 +329,13 @@ object Pipeline {
       // O(corpus re-extraction). Evidence-sized (same_as rows only, ≪
       // triples), bucketed by the pair's first id so a removal batch probes
       // only the buckets its candidate pairs hash into.
-      Future(TableIO.writeBucketed(sameAsEvidence(t.flat),
+      Par(TableIO.writeBucketed(sameAsEvidence(t.flat),
         s"$outDir/sameas_evidence", col("a"), counters, numBuckets)),
       // entity refcount delta log (see entityRefDeltas): the build writes
       // the initial counts as one snapshot; increments append signed deltas
-      Future(TableIO.writeBucketed(entityRefDeltas(t.flat),
+      Par(TableIO.writeBucketed(entityRefDeltas(t.flat),
         s"$outDir/entity_refcounts", col("id"), counters, numBuckets)))
-    writes.foreach(Await.result(_, Duration.Inf))
+    Par.awaitAll(countersF +: writes: _*)
     counters
   }
 

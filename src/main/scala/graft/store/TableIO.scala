@@ -133,6 +133,10 @@ object TableIO {
     Files.write(hist.resolve(s"${m.snapshotId}.json"), bytes)
   }
 
+  /** Key-wise sum of two counter maps (a key missing on one side is 0). */
+  private[graft] def sumCounters(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
+    (a.keySet ++ b.keySet).map(k => k -> (a.getOrElse(k, 0L) + b.getOrElse(k, 0L))).toMap
+
   /** Monotonic snapshot id: wall clock, bumped past the prior head so two
     * commits in the same millisecond (or a clock step back) never collide
     * in the history directory. */
@@ -300,14 +304,10 @@ object TableIO {
       if (fresh.isEmpty) None
       else Some(b -> (fresh.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fresh))
     }.toMap
-    val addCounters = counters
-    val mergedCounters = (prior.counters.keySet ++ addCounters.keySet).map { k =>
-      k -> (prior.counters.getOrElse(k, 0L) + addCounters.getOrElse(k, 0L))
-    }.toMap
     val m = Manifest(
       nextSnapshotId(Some(prior)),
       prior.buckets.map { case (b, n) => b -> (n + appended.get(b).map(_._1).getOrElse(0L)) },
-      mergedCounters,
+      sumCounters(prior.counters, counters),
       numBuckets,
       prior.files.map { case (b, fs) => b -> (fs ++ appended.get(b).map(_._2).getOrElse(Seq.empty)) })
     writeManifestAtomic(dir, m)
@@ -367,13 +367,10 @@ object TableIO {
         .filterNot(claimed.getOrElse(b, Set.empty))
       b -> (fs.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fs)
     }.toMap
-    val mergedCounters = (prior.counters.keySet ++ addCounters.keySet).map { k =>
-      k -> (prior.counters.getOrElse(k, 0L) + addCounters.getOrElse(k, 0L))
-    }.toMap
     val m = Manifest(
       nextSnapshotId(Some(prior)),
       prior.buckets ++ fresh.map { case (b, (n, _)) => b -> n },
-      mergedCounters,
+      sumCounters(prior.counters, addCounters),
       numBuckets,
       prior.files ++ fresh.map { case (b, (_, fs)) => b -> fs })
     writeManifestAtomic(dir, m)

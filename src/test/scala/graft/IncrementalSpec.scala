@@ -234,6 +234,109 @@ class IncrementalSpec extends AnyFunSuite with Matchers {
     TableIO.deleteRecursively(dir)
   }
 
+  // ---- takedown fixtures shared by the concurrent-takedown specs: a build
+  // over pages [0, 90) and the rebuild over the survivors [0, 60) ----
+  private val rmCfg = PageGen.Config(nPages = 90)
+  private def rmRange(lo: Long, hi: Long) = {
+    import spark.implicits._
+    val c = rmCfg // the closure must not capture the (unserializable) suite
+    spark.range(lo, hi).map(i => PageGen.page(c, i))
+  }
+  private lazy val rmBase: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rm-base").toString
+    val t = Pipeline.run(spark, rmRange(0, 90), rmCfg.nPersons)
+    Pipeline.materialize(spark, t, dir)
+    t.flatEnc.unpersist(false); t.components.unpersist(false)
+    dir
+  }
+  private lazy val rmWant: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rm-want").toString
+    val t = Pipeline.run(spark, rmRange(0, 60), rmCfg.nPersons)
+    Pipeline.materialize(spark, t, dir)
+    t.flatEnc.unpersist(false); t.components.unpersist(false)
+    dir
+  }
+  private def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(from)
+    val ls = Files.walk(src)
+    try ls.forEach { p =>
+      val d = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(d) else Files.copy(p, d)
+    } finally ls.close()
+  }
+  private def takedown(dir: String) =
+    Incremental.removePages(spark, rmRange(60, 90), rmRange(0, 60), dir, rmCfg.nPersons)
+  private def assertRebuild(dir: String): Unit = {
+    Seq("triples", "nodes", "edges", "components", "sameas_evidence").foreach { tb =>
+      withClue(tb) {
+        sortedRows(TableIO.read(spark, s"$dir/$tb")) shouldBe
+          sortedRows(TableIO.read(spark, s"$rmWant/$tb"))
+      }
+    }
+    refAgg(dir) shouldBe refAgg(rmWant)
+  }
+
+  test("removePages drops the batch urls and re-derives the split fallout in ONE triples commit") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rm-one").toString
+    TableIO.deleteRecursively(dir); copyTree(rmBase, dir)
+    val tDir = s"$dir/triples"
+    val before = TableIO.snapshots(tDir)
+    // the engine's affected set, derived independently from the base and
+    // the rebuild: surviving urls with a row that references an old root
+    // some id moved away from
+    val oldComp = TableIO.read(spark, s"$dir/components").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val newComp = TableIO.read(spark, s"$rmWant/components").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val changedRoots = oldComp.collect { case (id, c) if !newComp.get(id).contains(c) => c }.toSet
+    val batchUrls = (60L until 90L).map(i => PageGen.page(rmCfg, i).url).toSet
+    val rows = TableIO.read(spark, tDir).select("url", "subj", "obj").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val presentUrls = rows.map(_._1).filter(batchUrls).distinct
+    val affUrls = rows.collect {
+      case (u, s, o) if !batchUrls(u) && (changedRoots(s) || changedRoots(o)) => u }.distinct
+    affUrls should not be empty // the spec exercises both halves of the commit
+    val want = TableIO.bucketsOfSpark(spark, presentUrls.toSeq ++ affUrls).values.toSet
+
+    val stats = takedown(dir)
+    stats.affectedUrls shouldBe affUrls.size.toLong
+    stats.tripleBucketsRewritten shouldBe want.size
+    TableIO.snapshots(tDir).filterNot(before.toSet) should have size 1
+    // the rewritten buckets' files all come from one write job (the file
+    // name carries the job's uuid)
+    val head = TableIO.readManifest(tDir).get
+    val JobOf = """part-\d+-([0-9a-f-]{36}).*""".r
+    val jobs = want.toSeq.flatMap(b => head.files.getOrElse(b, Nil))
+      .map { case JobOf(uuid) => uuid }.toSet
+    jobs should have size 1
+    assertRebuild(dir)
+    TableIO.deleteRecursively(dir)
+  }
+
+  test("removePages crash/retry: a takedown cut after its triples, evidence and refcount commits converges") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-rm-snap").toString
+    TableIO.deleteRecursively(snap); copyTree(rmBase, snap)
+    // restoring a table from the pre-takedown copy = the takedown never
+    // committed it; nodes alone = the crash just before the anchor drop
+    Seq(Seq("nodes", "edges", "components"), Seq("nodes")).foreach { restored =>
+      withClue(restored.mkString("restored ", ",", ": ")) {
+        val dir = java.nio.file.Files.createTempDirectory("graft-rm-crash").toString
+        TableIO.deleteRecursively(dir); copyTree(snap, dir)
+        val first = takedown(dir)
+        first.deadPairs should be > 0L
+        restored.foreach { tb =>
+          TableIO.deleteRecursively(s"$dir/$tb"); copyTree(s"$snap/$tb", s"$dir/$tb")
+        }
+        // the anchor is back, so the retry re-runs every chain
+        takedown(dir).pages shouldBe first.pages
+        assertRebuild(dir)
+        TableIO.deleteRecursively(dir)
+      }
+    }
+    TableIO.deleteRecursively(snap)
+  }
+
   test("deferred merge rewrite (merge-on-read): readTriples is current, compaction folds") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-mor").toString

@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 import graft.model.PageGen
+import graft.util.Json
 
 /** Benchmark main (driver-run; BASELINE.md protocol).
   *
@@ -221,29 +222,42 @@ object Bench {
     else env.getOrElse("SPARK_GRAFT_BENCH_JSON",
       if (canonicalBasis) "BENCH_LATEST.json" else "BENCH_NONCANONICAL.json")
 
-  private def runSentinels(sfDir: String, cpus: Int): SentinelReport = {
-    val disabled = sys.env.get("SPARK_GRAFT_SENTINEL_DISABLE").contains("1")
+  /** The sf1-class basis: ScaleUpData's default destination
+    * (`/dev/shm/graft-sf1`, the `sf` of BENCH_SF1.json) or a plain `sf1`. */
+  private[graft] val Sf1Bases = Set("graft-sf1", "sf1")
+
+  /** The burst gate of a run, before any reading: armed by default on the
+    * sf0.1/32 and sf1/32 bases, or wherever a q1 band is given explicitly. */
+  private[graft] def sentinelGate(sfDir: String, cpus: Int,
+                                  env: Map[String, String]): SentinelReport = {
+    val disabled = env.get("SPARK_GRAFT_SENTINEL_DISABLE").contains("1")
     val canonicalBasis = basisOf(sfDir) == "sf0.1" && cpus == 32
     // sf1 band seeded by the first sf1 artifact (BASELINE.md "sf1-class
     // canonical artifact": q1 0.80-1.17 s, q19 0.18-0.26 s warm) — armed by
     // default so the 10x basis gets the same burst protection as canonical
-    val sf1Basis = basisOf(sfDir) == "sf1" && cpus == 32
+    val sf1Basis = Sf1Bases(basisOf(sfDir)) && cpus == 32
     val armed = !disabled &&
-      (canonicalBasis || sf1Basis || sys.env.contains("SPARK_GRAFT_SENTINEL_Q1_MAX"))
-    val q1Max = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_Q1_MAX",
+      (canonicalBasis || sf1Basis || env.contains("SPARK_GRAFT_SENTINEL_Q1_MAX"))
+    val q1Max = env.getOrElse("SPARK_GRAFT_SENTINEL_Q1_MAX",
       if (sf1Basis) "1.80" else "0.62").toDouble
-    val q19Max = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_Q19_MAX",
+    val q19Max = env.getOrElse("SPARK_GRAFT_SENTINEL_Q19_MAX",
       if (sf1Basis) "0.40" else "0.30").toDouble
+    SentinelReport(-1, -1, 0, q1Max, q19Max, armed)
+  }
+
+  private def runSentinels(sfDir: String, cpus: Int): SentinelReport = {
+    val gate = sentinelGate(sfDir, cpus, sys.env)
+    import gate.{armed, q1Max, q19Max}
     val maxAttempts = if (armed) 3 else 1
     val pauseSec = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_PAUSE_SEC", "45").toLong
     var attempt = 0
-    var rep = SentinelReport(-1, -1, 0, q1Max, q19Max, armed)
+    var rep = gate
     while (attempt < maxAttempts && (attempt == 0 || !rep.pass)) {
       if (attempt > 0) Thread.sleep(pauseSec * 1000)
       attempt += 1
       val spark = newSession(cpus)
-      try rep = SentinelReport(sentinelMin(spark, sfDir, "q1_agg"),
-        sentinelMin(spark, sfDir, "q19_running_sum"), attempt, q1Max, q19Max, armed)
+      try rep = gate.copy(q1 = sentinelMin(spark, sfDir, "q1_agg"),
+        q19 = sentinelMin(spark, sfDir, "q19_running_sum"), attempts = attempt)
       finally spark.stop()
       if (!rep.pass)
         System.err.println(f"[bench] sentinel attempt $attempt out of band: " +
@@ -371,14 +385,7 @@ object Bench {
     val postHocBurst = !sentinel.inBand(results)
     val gated = !sentinel.pass || postHocBurst
     val gatedJson = if (gated) """"gated":"burst-rejected",""" else ""
-    val errorsJson = errors.map { e =>
-      "\"" + e.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
-    }.mkString("[", ",", "]")
+    val errorsJson = errors.map(Json.quote).mkString("[", ",", "]")
     // per-round raw seconds: the host is a shared microVM with multi-minute
     // neighbor-noise bursts — the spread makes the best-of basis auditable
     val roundsJson = rounds.map { case ((_, a), (_, b), (_, c)) =>

@@ -739,9 +739,10 @@ object Incremental {
     * once, then wait for B: surviving pages whose rows reference a changed
     * root are re-extracted from `remaining` under the new mapping, and ONE
     * [[TableIO.rewriteBuckets]] over urlBuckets ∪ affBuckets drops the batch
-    * and affected urls and unions in the re-derived rows. Edges wait for B
-    * and C, then one rewrite drops page-scoped, dead-host and stale SAME_AS
-    * rows and adds the new SAME_AS delta. The components snapshot-swap and
+    * and affected urls and unions in the re-derived rows. Edges probe for
+    * the batch's page-scoped rows at once, then wait for B and C: one
+    * rewrite drops page-scoped, dead-host and stale SAME_AS rows and adds
+    * the new SAME_AS delta. The components snapshot-swap and
     * the nodes rewrite follow, in that order.
     *
     * Crash/retry: idempotent. Each table commit is atomic, and four
@@ -758,9 +759,12 @@ object Incremental {
     * present means every chain re-runs, and each step either detects it
     * already applied (key probes find nothing) or converges (rewrites are
     * replace-by-content; liveness probes exclude the batch rows explicitly,
-    * so they read the same answer either side of a rewrite). A takedown
-    * list may carry never-crawled or already-removed urls — they restrict
-    * away against the presence probe and no-op. */
+    * so they read the same answer either side of a rewrite). The evidence,
+    * triples and edges rewrites subtract the batch's manifest counters only
+    * while their probe still finds batch rows, so a re-applied rewrite never
+    * subtracts twice. A takedown list may carry never-crawled or
+    * already-removed urls — they restrict away against the presence probe
+    * and no-op. */
   def removePages(spark: SparkSession, removedPages: Dataset[Page],
                   remaining: Dataset[Page], outDir: String,
                   nPersons: Int = 500, targetLang: String = "en",
@@ -956,6 +960,11 @@ object Incremental {
       val srcIds = pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)
         .distinct().localCheckpoint(true)
       val srcBuckets = bucketsOf(srcIds, "id", numBuckets)
+      // the batch-presence probe needs nothing from B — it overlaps the
+      // mapping refresh
+      val srcPresent = TableIO.read(spark, edgesDir, Some(srcBuckets))
+        .join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .limit(1).count() > 0
       val split = Par.await(splitF)
       val dims = Par.await(dimsF)
       val changedEntNodes =
@@ -966,13 +975,11 @@ object Incremental {
         (if (changedEntNodes == null) Set.empty[Int]
          else bucketsOf(changedEntNodes, "en", numBuckets))
       val eContent = TableIO.read(spark, edgesDir, Some(edgeBuckets))
-      val edgesNeedWork = changedEntNodes != null ||
-        eContent.join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-          .limit(1).count() > 0 ||
+      val batchPresent = srcPresent ||
         eContent.filter(col("kind") === EK.IsPageOf)
           .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
           .limit(1).count() > 0
-      if (edgesNeedWork) {
+      if (batchPresent || changedEntNodes != null) {
         var keepE = eContent
           .join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
           .join(pageIds.select($"id".as("dst")).withColumn("kind", lit(EK.IsPageOf)),
@@ -990,8 +997,10 @@ object Incremental {
             .toDF().select(col("src"), col("dst"), col("kind"), col("variable"), col("label"))
           keepE = keepE.unionByName(freshSameAs)
         }
+        // as for triples: a retry after this commit but before the
+        // components swap re-applies the SAME_AS delta, never the counters
         TableIO.rewriteBuckets(keepOrder(keepE, eContent.columns), edgesDir, col("src"),
-          edgeBuckets, negCounters, numBuckets)
+          edgeBuckets, if (batchPresent) negCounters else Map.empty, numBuckets)
       }
       edgeBuckets
     }

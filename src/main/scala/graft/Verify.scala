@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.util.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -32,18 +33,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // single-threaded oracle leaf dumps (the reference's
     // output-vs-in-memory-recompute test shape — see VerifyOracle); the
     // `{{ORA}}` placeholder in dump-backed oracle SQL resolves to wherever
@@ -60,7 +49,7 @@ object Verify {
       }
     val oraDir = Paths.get(outDir).toAbsolutePath.normalize.toString + "/_oracle"
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("{{ORA}}", oraDir))}" }
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v.replace("{{ORA}}", oraDir))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

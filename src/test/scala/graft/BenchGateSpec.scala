@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import graft.util.Json
+
 /** The bench's fail-closed decisions, without running a bench. */
 class BenchGateSpec extends AnyFunSuite with Matchers {
   private val armed = Bench.SentinelReport(0.3, 0.1, 1, q1Max = 0.62, q19Max = 0.30, armed = true)
@@ -40,5 +42,32 @@ class BenchGateSpec extends AnyFunSuite with Matchers {
     Bench.basisOf("/data/sf0.1") shouldBe "sf0.1"
     Bench.basisOf("/data/sf0.10") shouldBe "sf0.10"
     Bench.basisOf("sf1") shouldBe "sf1"
+    Bench.basisOf("/dev/shm/graft-sf1") shouldBe "graft-sf1"
+  }
+
+  test("the sf1-class basis at 32 cpus arms the sf1 band; sf10 and other core counts do not") {
+    Seq("/dev/shm/graft-sf1", "/data/sf1").foreach { dir =>
+      withClue(dir) {
+        val g = Bench.sentinelGate(dir, 32, Map.empty)
+        g.armed shouldBe true
+        (g.q1Max, g.q19Max) shouldBe ((1.80, 0.40))
+      }
+    }
+    val canonical = Bench.sentinelGate("/data/sf0.1", 32, Map.empty)
+    canonical.armed shouldBe true
+    (canonical.q1Max, canonical.q19Max) shouldBe ((0.62, 0.30))
+    Bench.sentinelGate("/dev/shm/graft-sf1", 8, Map.empty).armed shouldBe false
+    val sf10 = Bench.sentinelGate("/data/sf10", 32, Map.empty)
+    sf10.armed shouldBe false
+    (sf10.q1Max, sf10.q19Max) shouldBe ((0.62, 0.30))
+    Bench.sentinelGate("/dev/shm/graft-sf1", 32,
+      Map("SPARK_GRAFT_SENTINEL_DISABLE" -> "1")).armed shouldBe false
+    Bench.sentinelGate("/data/sf10", 32,
+      Map("SPARK_GRAFT_SENTINEL_Q1_MAX" -> "2.5")).q1Max shouldBe 2.5
+  }
+
+  test("an error message is a valid JSON string") {
+    Json.quote("q: \"x\"\tat a\\b\n\u0001") shouldBe
+      "\"q: \\\"x\\\"\\tat a\\\\b\\n\\u0001\""
   }
 }

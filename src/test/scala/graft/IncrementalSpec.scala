@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import org.apache.spark.sql.functions._
@@ -8,7 +9,7 @@ import graft.extract.{EntSlot, Lit, NumSlot, PatternAutomaton, PatternRule}
 import graft.model.PageGen
 import graft.store.TableIO
 
-class IncrementalSpec extends AnyFunSuite with Matchers {
+class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
   private val cfg = PageGen.Config(nPages = 60)
@@ -145,63 +146,118 @@ class IncrementalSpec extends AnyFunSuite with Matchers {
     TableIO.deleteRecursively(dir)
   }
 
-  test("removePages: takedown equals a full rebuild on the remaining corpus") {
+  // ---- takedown fixtures shared by the takedown specs: a build
+  // over pages [0, 90) and the rebuild over the survivors [0, 60) ----
+  private val rmCfg = PageGen.Config(nPages = 90)
+  private def rmRange(lo: Long, hi: Long) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rm").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-rm-want").toString
-    val c = PageGen.Config(nPages = 90)
-    def range(lo: Long, hi: Long) = spark.range(lo, hi).map(i => PageGen.page(c, i))
+    val c = rmCfg // the closure must not capture the (unserializable) suite
+    spark.range(lo, hi).map(i => PageGen.page(c, i))
+  }
+  private val rmDirs = collection.mutable.Buffer.empty[String]
+  private def rmBuild(hi: Long): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rm-fixture").toString
+    rmDirs += dir
+    val t = Pipeline.run(spark, rmRange(0, hi), rmCfg.nPersons)
+    Pipeline.materialize(spark, t, dir)
+    t.flatEnc.unpersist(false); t.components.unpersist(false)
+    dir
+  }
+  private lazy val rmBase: String = rmBuild(90)
+  private lazy val rmWant: String = rmBuild(60)
+  override def afterAll(): Unit = try rmDirs.foreach(TableIO.deleteRecursively)
+    finally super.afterAll()
+  private def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(from)
+    val ls = Files.walk(src)
+    try ls.forEach { p =>
+      val d = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(d) else Files.copy(p, d)
+    } finally ls.close()
+  }
+  private def takedown(dir: String) =
+    Incremental.removePages(spark, rmRange(60, 90), rmRange(0, 60), dir, rmCfg.nPersons)
+  private def counters(dir: String): Map[String, Map[String, Long]] =
+    Seq("triples", "nodes", "edges", "components", "sameas_evidence", "entity_refcounts")
+      .map(tb => tb -> TableIO.readManifest(s"$dir/$tb").get.counters).toMap
+  private def assertRebuild(dir: String): Unit = {
+    Seq("triples", "nodes", "edges", "components", "sameas_evidence").foreach { tb =>
+      withClue(tb) {
+        sortedRows(TableIO.read(spark, s"$dir/$tb")) shouldBe
+          sortedRows(TableIO.read(spark, s"$rmWant/$tb"))
+      }
+    }
+    refAgg(dir) shouldBe refAgg(rmWant)
+  }
 
-    val t0 = Pipeline.run(spark, range(0, 90), c.nPersons)
-    Pipeline.materialize(spark, t0, dir)
-    t0.flatEnc.unpersist(false); t0.components.unpersist(false)
+  test("removePages: takedown equals a full rebuild on the remaining corpus") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rm").toString
+    TableIO.deleteRecursively(dir); copyTree(rmBase, dir)
+    val tDir = s"$dir/triples"
+    val before = TableIO.snapshots(tDir)
+    // the engine's affected set, derived independently from the base and
+    // the rebuild: surviving urls with a row that references an old root
+    // some id moved away from
+    val oldComp = TableIO.read(spark, s"$dir/components").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val newComp = TableIO.read(spark, s"$rmWant/components").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val changedRoots = oldComp.collect { case (id, c) if !newComp.get(id).contains(c) => c }.toSet
+    val batchUrls = (60L until 90L).map(i => PageGen.page(rmCfg, i).url).toSet
+    val rows = TableIO.read(spark, tDir).select("url", "subj", "obj").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val presentUrls = rows.map(_._1).filter(batchUrls).distinct
+    val affUrls = rows.collect {
+      case (u, s, o) if !batchUrls(u) && (changedRoots(s) || changedRoots(o)) => u }.distinct
+    affUrls should not be empty // the takedown exercises both halves of the triples commit
+    val want = TableIO.bucketsOfSpark(spark, presentUrls.toSeq ++ affUrls).values.toSet
 
     // take down pages [60, 90) — the appendPages spec proves this exact
     // slice carries same-as evidence that MERGED components, so its removal
     // must SPLIT them back: the hard (non-functional-remap) direction
-    val stats = Incremental.removePages(spark, range(60, 90), range(0, 60), dir, c.nPersons)
+    val stats = takedown(dir)
     stats.pages should be > 0L
     stats.deadPairs should be > 0L     // the slice's evidence actually left
     stats.remappedIds should be > 0L   // and the mapping actually split
-    stats.tripleBucketsRewritten should be > 0
+    stats.affectedUrls shouldBe affUrls.size.toLong
+
+    // the batch-url drop and the split-fallout re-derivation are ONE
+    // triples commit over urlBuckets ∪ affBuckets, written by one job (the
+    // file name carries the job's uuid)
+    stats.tripleBucketsRewritten shouldBe want.size
+    TableIO.snapshots(tDir).filterNot(before.toSet) should have size 1
+    val head = TableIO.readManifest(tDir).get
+    val JobOf = """part-\d+-([0-9a-f-]{36}).*""".r
+    val jobs = want.toSeq.flatMap(b => head.files.getOrElse(b, Nil))
+      .map { case JobOf(uuid) => uuid }.toSet
+    jobs should have size 1
 
     // ground truth: a from-scratch build over the remaining 60 pages —
     // every table, including the evidence sidecar, must match bit-exactly
-    val t1 = Pipeline.run(spark, range(0, 60), c.nPersons)
-    Pipeline.materialize(spark, t1, dir2)
-    t1.flatEnc.unpersist(false); t1.components.unpersist(false)
-    Seq("triples", "nodes", "edges", "components", "sameas_evidence").foreach { tb =>
-      withClue(tb) {
-        sortedRows(TableIO.read(spark, s"$dir/$tb")) shouldBe
-          sortedRows(TableIO.read(spark, s"$dir2/$tb"))
-      }
-    }
-    refAgg(dir) shouldBe refAgg(dir2) // delta log folds to the rebuild's counts
+    assertRebuild(dir)
 
     // idempotent retry: the presence anchor (page nodes) is gone, so a
     // redelivered takedown no-ops — no table changes, no double-subtracted
     // manifest counters
-    val again = Incremental.removePages(spark, range(60, 90), range(0, 60), dir, c.nPersons)
+    val again = takedown(dir)
     again.pages shouldBe 0L
     again.remappedIds shouldBe 0L
-    sortedRows(TableIO.read(spark, s"$dir/triples")) shouldBe
-      sortedRows(TableIO.read(spark, s"$dir2/triples"))
+    sortedRows(TableIO.read(spark, tDir)) shouldBe sortedRows(TableIO.read(spark, s"$rmWant/triples"))
 
     // a takedown list of never-crawled urls is a clean no-op, not an error
-    val unknown = Incremental.removePages(spark, range(200, 210), range(0, 60), dir, c.nPersons)
+    val unknown = Incremental.removePages(spark, rmRange(200, 210), rmRange(0, 60), dir,
+      rmCfg.nPersons)
     unknown.pages shouldBe 0L
 
-    TableIO.deleteRecursively(dir); TableIO.deleteRecursively(dir2)
+    TableIO.deleteRecursively(dir)
   }
 
   test("removePages fast path: no dead evidence means no mapping churn") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-rm-fast").toString
-    val c = PageGen.Config(nPages = 90)
-    def range(lo: Long, hi: Long) = spark.range(lo, hi).map(i => PageGen.page(c, i))
-    val t0 = Pipeline.run(spark, range(0, 90), c.nPersons)
-    Pipeline.materialize(spark, t0, dir)
-    t0.flatEnc.unpersist(false); t0.components.unpersist(false)
+    TableIO.deleteRecursively(dir); copyTree(rmBase, dir)
+    val c = rmCfg
     val before = sortedRows(TableIO.read(spark, s"$dir/components"))
 
     // a batch with no same-as evidence at all cannot touch the mapping:
@@ -234,107 +290,29 @@ class IncrementalSpec extends AnyFunSuite with Matchers {
     TableIO.deleteRecursively(dir)
   }
 
-  // ---- takedown fixtures shared by the concurrent-takedown specs: a build
-  // over pages [0, 90) and the rebuild over the survivors [0, 60) ----
-  private val rmCfg = PageGen.Config(nPages = 90)
-  private def rmRange(lo: Long, hi: Long) = {
-    import spark.implicits._
-    val c = rmCfg // the closure must not capture the (unserializable) suite
-    spark.range(lo, hi).map(i => PageGen.page(c, i))
-  }
-  private lazy val rmBase: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rm-base").toString
-    val t = Pipeline.run(spark, rmRange(0, 90), rmCfg.nPersons)
-    Pipeline.materialize(spark, t, dir)
-    t.flatEnc.unpersist(false); t.components.unpersist(false)
-    dir
-  }
-  private lazy val rmWant: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rm-want").toString
-    val t = Pipeline.run(spark, rmRange(0, 60), rmCfg.nPersons)
-    Pipeline.materialize(spark, t, dir)
-    t.flatEnc.unpersist(false); t.components.unpersist(false)
-    dir
-  }
-  private def copyTree(from: String, to: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(from)
-    val ls = Files.walk(src)
-    try ls.forEach { p =>
-      val d = Paths.get(to).resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(d) else Files.copy(p, d)
-    } finally ls.close()
-  }
-  private def takedown(dir: String) =
-    Incremental.removePages(spark, rmRange(60, 90), rmRange(0, 60), dir, rmCfg.nPersons)
-  private def assertRebuild(dir: String): Unit = {
-    Seq("triples", "nodes", "edges", "components", "sameas_evidence").foreach { tb =>
-      withClue(tb) {
-        sortedRows(TableIO.read(spark, s"$dir/$tb")) shouldBe
-          sortedRows(TableIO.read(spark, s"$rmWant/$tb"))
-      }
-    }
-    refAgg(dir) shouldBe refAgg(rmWant)
-  }
-
-  test("removePages drops the batch urls and re-derives the split fallout in ONE triples commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rm-one").toString
-    TableIO.deleteRecursively(dir); copyTree(rmBase, dir)
-    val tDir = s"$dir/triples"
-    val before = TableIO.snapshots(tDir)
-    // the engine's affected set, derived independently from the base and
-    // the rebuild: surviving urls with a row that references an old root
-    // some id moved away from
-    val oldComp = TableIO.read(spark, s"$dir/components").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val newComp = TableIO.read(spark, s"$rmWant/components").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val changedRoots = oldComp.collect { case (id, c) if !newComp.get(id).contains(c) => c }.toSet
-    val batchUrls = (60L until 90L).map(i => PageGen.page(rmCfg, i).url).toSet
-    val rows = TableIO.read(spark, tDir).select("url", "subj", "obj").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val presentUrls = rows.map(_._1).filter(batchUrls).distinct
-    val affUrls = rows.collect {
-      case (u, s, o) if !batchUrls(u) && (changedRoots(s) || changedRoots(o)) => u }.distinct
-    affUrls should not be empty // the spec exercises both halves of the commit
-    val want = TableIO.bucketsOfSpark(spark, presentUrls.toSeq ++ affUrls).values.toSet
-
-    val stats = takedown(dir)
-    stats.affectedUrls shouldBe affUrls.size.toLong
-    stats.tripleBucketsRewritten shouldBe want.size
-    TableIO.snapshots(tDir).filterNot(before.toSet) should have size 1
-    // the rewritten buckets' files all come from one write job (the file
-    // name carries the job's uuid)
-    val head = TableIO.readManifest(tDir).get
-    val JobOf = """part-\d+-([0-9a-f-]{36}).*""".r
-    val jobs = want.toSeq.flatMap(b => head.files.getOrElse(b, Nil))
-      .map { case JobOf(uuid) => uuid }.toSet
-    jobs should have size 1
-    assertRebuild(dir)
-    TableIO.deleteRecursively(dir)
-  }
-
   test("removePages crash/retry: a takedown cut after its triples, evidence and refcount commits converges") {
-    val snap = java.nio.file.Files.createTempDirectory("graft-rm-snap").toString
-    TableIO.deleteRecursively(snap); copyTree(rmBase, snap)
     // restoring a table from the pre-takedown copy = the takedown never
-    // committed it; nodes alone = the crash just before the anchor drop
-    Seq(Seq("nodes", "edges", "components"), Seq("nodes")).foreach { restored =>
-      withClue(restored.mkString("restored ", ",", ": ")) {
-        val dir = java.nio.file.Files.createTempDirectory("graft-rm-crash").toString
-        TableIO.deleteRecursively(dir); copyTree(snap, dir)
-        val first = takedown(dir)
-        first.deadPairs should be > 0L
-        restored.foreach { tb =>
-          TableIO.deleteRecursively(s"$dir/$tb"); copyTree(s"$snap/$tb", s"$dir/$tb")
+    // committed it; components + nodes = the crash after the SAME_AS edge
+    // delta; nodes alone = the crash just before the anchor drop
+    Seq(Seq("nodes", "edges", "components"), Seq("components", "nodes"), Seq("nodes"))
+      .foreach { restored =>
+        withClue(restored.mkString("restored ", ",", ": ")) {
+          val dir = java.nio.file.Files.createTempDirectory("graft-rm-crash").toString
+          TableIO.deleteRecursively(dir); copyTree(rmBase, dir)
+          val first = takedown(dir)
+          first.deadPairs should be > 0L
+          val clean = counters(dir)
+          restored.foreach { tb =>
+            TableIO.deleteRecursively(s"$dir/$tb"); copyTree(s"$rmBase/$tb", s"$dir/$tb")
+          }
+          // the anchor is back, so the retry re-runs every chain
+          takedown(dir).pages shouldBe first.pages
+          assertRebuild(dir)
+          // a re-applied rewrite subtracts the batch's counters only once
+          counters(dir) shouldBe clean
+          TableIO.deleteRecursively(dir)
         }
-        // the anchor is back, so the retry re-runs every chain
-        takedown(dir).pages shouldBe first.pages
-        assertRebuild(dir)
-        TableIO.deleteRecursively(dir)
       }
-    }
-    TableIO.deleteRecursively(snap)
   }
 
   test("deferred merge rewrite (merge-on-read): readTriples is current, compaction folds") {

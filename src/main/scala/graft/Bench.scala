@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 import graft.model.PageGen
-import graft.util.Json
+import graft.util.{Json, Sessions}
 
 /** Benchmark main (driver-run; BASELINE.md protocol).
   *
@@ -26,136 +26,44 @@ import graft.util.Json
   * pipeline is extraction-dominated, which is the regime the 100-TB design
   * targets (per-page local work, zero shuffle until the entity merge).
   */
-/** Child-JVM entry for one bench level (see Bench.runPipeline): JIT-warms
-  * on the small corpus (untimed — a fresh JVM would otherwise charge cold
-  * compilation to the measurement, which hits the short high-core runs
-  * hardest), then runs the timed full pipeline and prints one
-  * GRAFT_BENCH_RESULT line. */
-object BenchOne {
-  def main(args: Array[String]): Unit = {
-    // the parent parses GRAFT_BENCH_RESULT with [0-9.]+ — a comma-decimal
-    // default locale would print 12,345 and silently truncate the parse
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val Array(coresS, warmDir, pagesDir, outDir) = args
-    if (warmDir != "-")
-      Bench.runPipelineInProcess(coresS.toInt, warmDir, s"$outDir-warm")
-    val (n, sec) = Bench.runPipelineInProcess(coresS.toInt, pagesDir, outDir)
-    println(f"GRAFT_BENCH_RESULT $n $sec%.3f")
-  }
-}
-
 object Bench {
-  private def newSession(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the flat cache is the pipeline's one big persist; columnar cache
-      // COMPRESSION costs ~2x the cache-build CPU for no win here (it is
-      // MEMORY_AND_DISK-backed and read back only a handful of times) —
-      // measured: build 22s->15s at 2 cores, 11s->7s at 8 (ScaleProbe)
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+  private def withSession[A](cores: Int)(body: SparkSession => A): A = {
+    val spark = Sessions.local(s"graft-bench-$cores", cores)
+    try body(spark) finally spark.stop()
   }
 
   /** Write the synthetic corpus as a parquet pages table once (untimed
     * setup): the timed job then READS the table — the input_hint shape
     * (Iceberg-style pages table in, KG tables out). */
-  private def materializeCorpus(cores: Int, nPages: Int, dir: String): Unit = {
-    val spark = newSession(cores)
-    try {
+  private def materializeCorpus(cores: Int, nPages: Int, dir: String): Unit =
+    withSession(cores) { spark =>
       val cfg = PageGen.Config(nPages = nPages, sentMin = 40, sentMax = 80)
       graft.store.TableIO.deleteRecursively(dir)
       PageGen.pages(spark, cfg).write.mode("overwrite").parquet(dir)
-    } finally spark.stop()
-  }
-
-  /** Full pipeline incl. materialization; returns (triples, seconds). */
-  private[graft] def runPipelineInProcess(cores: Int, pagesDir: String,
-                                          outDir: String): (Long, Double) = {
-    val spark = newSession(cores)
-    try {
-      import spark.implicits._
-      graft.store.TableIO.deleteRecursively(outDir)
-      val t0 = System.nanoTime()
-      val t = Pipeline.run(spark, spark.read.parquet(pagesDir).as[graft.model.Page], 500)
-      Pipeline.materialize(spark, t, outDir)
-      // committed-row count from the manifest (footer-derived lineage) —
-      // no extra read-back job inside the timed region
-      val nTriples = graft.store.TableIO.readManifest(s"$outDir/triples")
-        .map(_.buckets.values.sum).getOrElse(0L)
-      val sec = (System.nanoTime() - t0) / 1e9
-      t.flatEnc.unpersist(false)
-      t.components.unpersist(false)
-      graft.store.TableIO.deleteRecursively(outDir)
-      (nTriples, sec)
-    } finally spark.stop()
-  }
-
-  /** The classpath of the running application, reconstructed from the
-    * classloader chain (under sbt, java.class.path is only the launcher). */
-  private def appClasspath: String = {
-    def urls(cl: ClassLoader): Seq[java.net.URL] = cl match {
-      case null => Nil
-      case u: java.net.URLClassLoader => u.getURLs.toSeq ++ urls(cl.getParent)
-      case other => urls(other.getParent)
     }
-    val fromCl = urls(getClass.getClassLoader)
-      .filter(_.getProtocol == "file")
-      .map(u => java.nio.file.Paths.get(u.toURI).toString)
-    (fromCl :+ System.getProperty("java.class.path"))
-      .filter(_.nonEmpty).distinct.mkString(java.io.File.pathSeparator)
+
+  /** One pipeline leg: the full pipeline incl. materialization over
+    * `spark`, timed; returns (triples, seconds). */
+  private[graft] def runPipeline(spark: SparkSession, pagesDir: String,
+                                 outDir: String): (Long, Double) = {
+    import spark.implicits._
+    graft.store.TableIO.deleteRecursively(outDir)
+    val t0 = System.nanoTime()
+    val t = Pipeline.run(spark, spark.read.parquet(pagesDir).as[graft.model.Page], 500)
+    Pipeline.materialize(spark, t, outDir)
+    // committed-row count from the manifest (footer-derived lineage) —
+    // no extra read-back job inside the timed region
+    val nTriples = graft.store.TableIO.readManifest(s"$outDir/triples")
+      .map(_.buckets.values.sum).getOrElse(0L)
+    val sec = (System.nanoTime() - t0) / 1e9
+    t.flatEnc.unpersist(false)
+    t.components.unpersist(false)
+    graft.store.TableIO.deleteRecursively(outDir)
+    (nTriples, sec)
   }
 
-  /** Optionally (SPARK_GRAFT_CHILD_JVM=1) run one parallelism level in a
-    * CHILD JVM with `-XX:ActiveProcessorCount=cores`: a shared parent JVM
-    * sized for the whole box lends its 32 GC/JIT/pool threads to the
-    * low-core levels, which slightly flatters their wall time. Measured on
-    * this host, though, fresh child JVMs run the HIGH-core level 2-3x
-    * slower than a warmed shared JVM even after a small-corpus JIT warmup
-    * (cold code cache + cold allocator at short wall times), which corrupts
-    * the efficiency ratio far more than the GC-thread effect it removes —
-    * so the default stays in-process, matching the BASELINE.md protocol. */
-  private def runPipeline(cores: Int, pagesDir: String, outDir: String,
-                          warmDir: String = "-"): (Long, Double) = {
-    if (!sys.env.get("SPARK_GRAFT_CHILD_JVM").contains("1"))
-      return runPipelineInProcess(cores, pagesDir, outDir)
-    val mem = sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "28g")
-    try {
-      val javaBin = java.nio.file.Paths.get(
-        System.getProperty("java.home"), "bin", "java").toString
-      val moduleOpts = org.apache.spark.launcher.JavaModuleOptions
-        .defaultModuleOptions().split("\\s+").toSeq.filter(_.nonEmpty)
-      val cmd = Seq(javaBin, s"-Xmx$mem", s"-XX:ActiveProcessorCount=$cores") ++
-        moduleOpts ++ Seq("-cp", appClasspath, "graft.BenchOne",
-          cores.toString, warmDir, pagesDir, outDir)
-      val log = java.nio.file.Files.createTempFile("graft-bench-child", ".log").toFile
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(log)
-      val p = pb.start()
-      val rc = p.waitFor()
-      val out = new String(java.nio.file.Files.readAllBytes(log.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      log.delete()
-      val m = "GRAFT_BENCH_RESULT (\\d+) ([0-9.]+)".r.findAllMatchIn(out).toSeq.lastOption
-      if (rc != 0 || m.isEmpty) {
-        System.err.println(s"[bench] child (cores=$cores) failed rc=$rc; " +
-          s"tail: ${out.takeRight(500)}; falling back in-process")
-        runPipelineInProcess(cores, pagesDir, outDir)
-      } else (m.get.group(1).toLong, m.get.group(2).toDouble)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] child spawn failed: ${e.getMessage}; in-process fallback")
-        runPipelineInProcess(cores, pagesDir, outDir)
-    }
-  }
+  private def leg(cores: Int, pagesDir: String, outDir: String): (Long, Double) =
+    withSession(cores)(runPipeline(_, pagesDir, outDir))
 
   /** Pre-flight burst gate. The host is a shared microVM whose neighbor
     * bursts inflate walls 1.5-7x for minutes at a time; twice (rounds 3+4)
@@ -255,10 +163,10 @@ object Bench {
     while (attempt < maxAttempts && (attempt == 0 || !rep.pass)) {
       if (attempt > 0) Thread.sleep(pauseSec * 1000)
       attempt += 1
-      val spark = newSession(cpus)
-      try rep = gate.copy(q1 = sentinelMin(spark, sfDir, "q1_agg"),
-        q19 = sentinelMin(spark, sfDir, "q19_running_sum"), attempts = attempt)
-      finally spark.stop()
+      rep = withSession(cpus) { spark =>
+        gate.copy(q1 = sentinelMin(spark, sfDir, "q1_agg"),
+          q19 = sentinelMin(spark, sfDir, "q19_running_sum"), attempts = attempt)
+      }
       if (!rep.pass)
         System.err.println(f"[bench] sentinel attempt $attempt out of band: " +
           f"q1_agg ${rep.q1}%.3f (max $q1Max%.2f), q19 ${rep.q19}%.3f (max $q19Max%.2f)")
@@ -267,7 +175,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // locale-stable float formatting for the JSON artifact (see BenchOne)
+    // locale-stable float formatting for the JSON artifact
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -280,20 +188,9 @@ object Bench {
     val shm = "/dev/shm/graft-bench"
     val pagesDir = s"$shm-pages"
 
-    // untimed setup: full corpus parquet, then JIT warmup — the shared JVM
-    // warms once on the full corpus (round-1 protocol); the child-JVM mode
-    // instead materializes a small corpus each child warms on
-    val childMode = sys.env.get("SPARK_GRAFT_CHILD_JVM").contains("1")
-    val warmPagesDir = if (childMode) s"$shm-pages-warm" else "-"
+    // untimed setup: full corpus parquet, then one JIT-warming leg on it
     materializeCorpus(cpus, benchPages, pagesDir)
-    // child-JVM warmup DEFAULTS to 1/4 corpus: the old 1/20 left C2
-    // half-cold at the short high-core walls (measured 2-3x slow, per-level
-    // spread ±100%); at 1/4 the spread collapses to ±5% — the default must
-    // be the protocol that works, not an env var the operator must remember
-    val warmPages = sys.env.getOrElse("SPARK_GRAFT_CHILD_WARM_PAGES",
-      math.max(benchPages / 4, 200).toString).toInt
-    if (childMode) materializeCorpus(cpus, warmPages, warmPagesDir)
-    else runPipelineInProcess(cpus, pagesDir, s"$shm-warm")
+    leg(cpus, pagesDir, s"$shm-warm")
 
     // INTERLEAVED best-of-N: host slowdowns come in multi-minute bursts, so
     // consecutive same-level runs share the same fate — cycling the levels
@@ -310,15 +207,14 @@ object Bench {
       val elapsed = (System.nanoTime() - benchT0) / 1e9
       if (i > 2 && elapsed > budgetSec) None
       else Some(
-        (runPipeline(lowCpus, pagesDir, s"$shm-low", warmPagesDir),
-          runPipeline(midCpus, pagesDir, s"$shm-mid", warmPagesDir),
-          runPipeline(cpus, pagesDir, s"$shm-high", warmPagesDir)))
+        (leg(lowCpus, pagesDir, s"$shm-low"),
+          leg(midCpus, pagesDir, s"$shm-mid"),
+          leg(cpus, pagesDir, s"$shm-high")))
     }
     val (triplesLow, secLow) = rounds.map(_._1).minBy(_._2)
     val (triplesMid, secMid) = rounds.map(_._2).minBy(_._2)
     val (triplesHigh, secHigh) = rounds.map(_._3).minBy(_._2)
     graft.store.TableIO.deleteRecursively(pagesDir)
-    if (childMode) graft.store.TableIO.deleteRecursively(warmPagesDir)
     val thrLow = triplesLow / secLow
     val thrMid = triplesMid / secMid
     val thrHigh = triplesHigh / secHigh
@@ -338,21 +234,16 @@ object Bench {
     // query happens to run first double-counted ~1-1.5 s of build inside
     // kg_triples/kg_step_nhash. The encoded flat cache, component map, and
     // nhash seed frames (all pure functions of the built KG) materialize
-    // outside every timed rep; SPARK_GRAFT_HEADLINE_COLD=1 restores the old
-    // first-touch-pays semantics for A/B comparison.
-    def headlinePhase(): (Seq[(String, Double)], Seq[String]) = {
-      val spark = newSession(cpus)
-      try {
-        if (!sys.env.get("SPARK_GRAFT_HEADLINE_COLD").contains("1")) {
-          val kt = Queries.kg(spark, sfDir)
-          kt.flatEnc.count(); kt.components.count()
-          Queries.nhashFrames(spark, sfDir)
-        }
+    // outside every timed rep.
+    def headlinePhase(): (Seq[(String, Double)], Seq[String]) =
+      withSession(cpus) { spark =>
+        val kt = Queries.kg(spark, sfDir)
+        kt.flatEnc.count(); kt.components.count()
+        Queries.nhashFrames(spark, sfDir)
         timeQueries(headline.flatMap { name =>
           all.get(name).map(fn => name -> (() => { fn(spark, sfDir).count(); () }))
         })
-      } finally spark.stop()
-    }
+      }
     // Post-hoc audit WITH phase retry: the headline sentinels are
     // re-measured inside the phase itself (q1/q19 touch no KG cache, so
     // only host noise can move them) — a burst that starts AFTER the

@@ -212,28 +212,19 @@ object TripleExtractor {
     * depth 5 / path cap 30 (`slice.groovy:2-3`, `dataflow.groovy:157-158`). */
   val MaxSentencesPerPage = 1000
 
-  def extract(
-      pages: Dataset[Page],
-      gaz: Broadcast[Gazetteer],
-      rules: Broadcast[PatternAutomaton],
-      metrics: ExtractMetrics): Dataset[PageExtract] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.mapPartitions { it =>
-      val g = gaz.value
-      val auto = rules.value
-      it.map { p =>
-        metrics.pagesIn.add(1)
-        val ex = extractPage(p, g, auto) // total: errors come back in `error`
-        if (ex.error != null) metrics.pagesErrored.add(1)
-        else {
-          metrics.sentences.add(ex.nSentences)
-          metrics.mentions.add(ex.mentions.size)
-          metrics.triples.add(ex.triples.size)
-        }
-        ex
-      }
+  /** The per-page pure function plus its page-level counters — the one
+    * update site of pagesIn/pagesErrored/sentences/mentions/triples. */
+  private def extractCounted(p: Page, g: Gazetteer, auto: PatternAutomaton,
+                             metrics: ExtractMetrics): PageExtract = {
+    metrics.pagesIn.add(1)
+    val ex = extractPage(p, g, auto) // total: errors come back as rows
+    if (ex.error != null) metrics.pagesErrored.add(1)
+    else {
+      metrics.sentences.add(ex.nSentences)
+      metrics.mentions.add(ex.mentions.size)
+      metrics.triples.add(ex.triples.size)
     }
+    ex
   }
 
   /** Flat-row extraction: same per-page pure function, rows out immediately. */
@@ -247,17 +238,7 @@ object TripleExtractor {
     pages.mapPartitions { it =>
       val g = gaz.value
       val auto = rules.value
-      it.flatMap { p =>
-        metrics.pagesIn.add(1)
-        val ex = extractPage(p, g, auto) // total: errors come back as rows
-        if (ex.error != null) metrics.pagesErrored.add(1)
-        else {
-          metrics.sentences.add(ex.nSentences)
-          metrics.mentions.add(ex.mentions.size)
-          metrics.triples.add(ex.triples.size)
-        }
-        toFlatRows(ex, metrics)
-      }
+      it.flatMap(p => toFlatRows(extractCounted(p, g, auto, metrics), metrics))
     }
   }
 
@@ -278,15 +259,8 @@ object TripleExtractor {
       val aliasIdx = g.aliasIdx
       val predIdx = auto.predIdx
       it.flatMap { p =>
-        metrics.pagesIn.add(1)
-        val ex = extractPage(p, g, auto)
-        if (ex.error != null) metrics.pagesErrored.add(1)
-        else {
-          metrics.sentences.add(ex.nSentences)
-          metrics.mentions.add(ex.mentions.size)
-          metrics.triples.add(ex.triples.size)
-        }
-        toFlatRows(ex, metrics).map(encodeRow(_, aliasIdx, predIdx, metrics))
+        toFlatRows(extractCounted(p, g, auto, metrics), metrics)
+          .map(encodeRow(_, aliasIdx, predIdx, metrics))
       }
     }
   }

@@ -58,16 +58,6 @@ case class Mention(
     tokStart: Int,
     tokEnd: Int)
 
-/** A raw (pre-linking) extracted triple: surfaces, not entity ids. */
-case class RawTriple(
-    pageId: Long,
-    url: String,
-    subjSurface: String,
-    pred: String,
-    objSurface: String,
-    sentIdx: Int,
-    ruleId: Int)
-
 /** A linked mention: candidate entity chosen by the scoring join. */
 case class LinkedMention(
     pageId: Long,

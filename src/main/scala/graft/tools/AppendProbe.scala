@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{Incremental, Pipeline}
 import graft.model.PageGen
 import graft.store.TableIO
+import graft.util.Sessions
 
 /** Scale probe for the corpus-growth ingest path: does appendPages cost
   * O(|batch|) — independent of the corpus it lands on — or does something
@@ -33,13 +32,7 @@ object AppendProbe {
     // 400k base read 2x a 100k base under fixed 32 buckets, flat once
     // buckets scale.
     val baseBuckets = if (args.length > 3) args(3).toInt else 0
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("graft-append-probe")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-append-probe", cores)
     import spark.implicits._
     try {
       def time[A](f: => A): (A, Double) = {

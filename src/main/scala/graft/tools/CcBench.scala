@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Scale stress for the distributed CC fixpoint:
   * `runMain graft.tools.CcBench [nSpokes] [nChains] [chainLen] [cores]`.
@@ -19,14 +20,7 @@ object CcBench {
     val nChains = if (args.length > 1) args(1).toLong else 100000L
     val chainLen = if (args.length > 2) args(2).toInt else 8
     val cores = if (args.length > 3) args(3).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("graft-ccbench")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-ccbench", cores)
     import spark.implicits._
 
     // hub 0 -> spokes 1..nSpokes (one mega component, max skew)

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** The cluster fault story, DEMONSTRATED instead of argued.
   *
@@ -58,13 +60,8 @@ object ClusterFaultProbe {
   def main(args: Array[String]): Unit = {
     val kernel = if (args.length > 0) args(0) else "cc"
     val nSpokes = if (args.length > 1) args(1).toLong else 1500000L
-    val spark = SparkSession.builder()
-      .appName("graft-cluster-fault-probe")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // spark-submit sets the local-cluster master; 16 is the shuffle width
+    val spark = Sessions.local("graft-cluster-fault-probe", 16)
     val appId = spark.sparkContext.applicationId
 
     // adversarial-but-recomputable input: mega-hub star + disjoint chains

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Adversarial battery for the CorpusOps substring machinery: N documents
   * that ALL share the same 15-token boilerplate block (the web-corpus norm —
@@ -29,13 +30,7 @@ object CorpusSkewProbe {
     val n = if (args.length > 0) args(0).toLong else 2000000L
     val cores = if (args.length > 1) args(1).toInt else 32
     val op = if (args.length > 2) args(2) else "spans"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("graft-corpus-skew-probe")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-corpus-skew-probe", cores)
     try {
       val boiler = "accept all cookies to continue reading this site uses " +
         "cookies to improve your experience ok"

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Adversarial hot-bucket battery for the near-dup cap rework (the CcBench
   * twin for Dedup): N IDENTICAL documents — every band of every doc lands in
@@ -30,13 +31,7 @@ object DedupSkewProbe {
     val n = if (args.length > 0) args(0).toLong else 2000000L
     val cores = if (args.length > 1) args(1).toInt else 32
     val op = if (args.length > 2) args(2) else "minhash"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("graft-dedup-skew-probe")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-dedup-skew-probe", cores)
     try {
       val docs = spark.range(n).select(col("id").as("doc_id"),
         lit("the quick brown fox jumps over the lazy dog again and again").as("text"))

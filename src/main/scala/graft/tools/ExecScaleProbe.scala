@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.Pipeline
 import graft.model.{Page, PageGen}
 import graft.store.TableIO
+import graft.util.Sessions
 
 /** The north rule's scaling criterion, measured in ITS OWN framing: the
   * same spark-submit job at two CLUSTER SIZES — N and 4N executors — not
@@ -29,10 +30,10 @@ import graft.store.TableIO
   * is seeded — every submit sees byte-identical input), JIT-warms each
   * fresh executor set on a quarter corpus UNTIMED (fresh JVMs per submit
   * would otherwise charge cold C2 compilation to the short high-core legs
-  * — the exact corruption the child-JVM bench protocol documents), then
-  * times `nRounds` full pipeline passes (scan → extract → link → CC →
-  * materialize) and prints one GRAFT_EXECSCALE line per round plus a
-  * best-of summary. Interleave submits across the two cluster sizes so
+  * — measured 2-3× slow in BASELINE.md), then times `nRounds` full
+  * pipeline passes (scan → extract → link → CC → materialize, the bench's
+  * own leg) and prints one GRAFT_EXECSCALE line per round plus a best-of
+  * summary. Interleave submits across the two cluster sizes so
   * neither level owns a host-noise burst.
   */
 object ExecScaleProbe {
@@ -51,24 +52,6 @@ object ExecScaleProbe {
       // widened; same input for both levels either way.)
       PageGen.pages(spark, cfg).repartition(64).write.mode("overwrite").parquet(dir)
     }
-  }
-
-  /** One full pipeline pass, timed; same body as the bench's in-process
-    * leg but over the AMBIENT (cluster) session. */
-  private def runOnce(spark: SparkSession, pagesDir: String,
-                      outDir: String): (Long, Double) = {
-    import spark.implicits._
-    TableIO.deleteRecursively(outDir)
-    val t0 = System.nanoTime()
-    val t = Pipeline.run(spark, spark.read.parquet(pagesDir).as[Page], 500)
-    Pipeline.materialize(spark, t, outDir)
-    val nTriples = TableIO.readManifest(s"$outDir/triples")
-      .map(_.buckets.values.sum).getOrElse(0L)
-    val sec = (System.nanoTime() - t0) / 1e9
-    t.flatEnc.unpersist(false)
-    t.components.unpersist(false)
-    TableIO.deleteRecursively(outDir)
-    (nTriples, sec)
   }
 
   /** Extraction-ONLY pass (mode=extract): scan → mapPartitions extract →
@@ -101,29 +84,16 @@ object ExecScaleProbe {
     val totalCores = if (args.length > 3) args(3).toInt else 2
     val nRounds = if (args.length > 4) args(4).toInt else 2
     val mode = if (args.length > 5) args(5) else "full" // full | extract
-    // the DRAM-attribution experiment's knob: compressed columnar cache
-    // (596 vs 1033 MiB resident at sf-bench scale — trades cache-build CPU
-    // for resident bytes; the bench default is uncompressed, measured)
-    val compressed = sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESSED", "false")
-    val spark = SparkSession.builder()
-      .appName(s"graft-execscale-$totalCores")
-      // shuffle width = the cluster's total cores, the same sizing rule the
-      // bench protocol uses per level (passed in: defaultParallelism reads
-      // 0 until executors register)
-      .config("spark.sql.shuffle.partitions", totalCores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", compressed)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"graft-execscale-$totalCores", totalCores)
+    // the codec follows the master (Sessions): compressed under local-cluster
+    val compressed = spark.conf.get("spark.sql.inMemoryColumnarStorage.compressed")
     try {
       val master = spark.sparkContext.master // local-cluster[E,C,mem]
       corpusIfAbsent(spark, pagesDir, nPages)
       corpusIfAbsent(spark, warmDir, math.max(nPages / 4, 200))
       def pass(dir: String, out: String): (Long, Double) =
         if (mode == "extract") runExtractOnce(spark, dir)
-        else runOnce(spark, dir, out)
+        else graft.Bench.runPipeline(spark, dir, out)
       val wt0 = System.nanoTime()
       pass(warmDir, s"$pagesDir-warmout") // untimed JIT warm
       System.err.println(f"[execscale] warm done in ${(System.nanoTime() - wt0) / 1e9}%.1f s")

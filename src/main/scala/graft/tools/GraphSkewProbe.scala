@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Adversarial-skew battery for the graph-analytics kernels (the CcBench
   * twin for GraphAnalytics): a WHEEL graph — one mega-hub adjacent to ALL n
@@ -45,14 +46,7 @@ object GraphSkewProbe {
     val n = if (args.length > 0) args(0).toLong else 5000000L
     val cores = if (args.length > 1) args(1).toInt else 32
     val op = if (args.length > 2) args(2) else "all"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("graft-graph-skew-probe")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-graph-skew-probe", cores)
     try {
       val half = n / 2
       val in = spark.range(1, half + 1).select(col("id").as("src"), lit(0L).as("dst"))

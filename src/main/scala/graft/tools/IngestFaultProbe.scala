@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{Incremental, Pipeline}
 import graft.model.PageGen
 import graft.store.TableIO
+import graft.util.Sessions
 
 /** The crash/retry contract of the INCREMENTS, demonstrated under real
   * executor loss — the multi-JVM companion to [[ClusterFaultProbe]] (which
@@ -61,13 +62,8 @@ object IngestFaultProbe {
   def main(args: Array[String]): Unit = {
     val nPages = if (args.length > 0) args(0).toInt else 6000
     val killFrac = if (args.length > 1) args(1).toDouble else 0.45
-    val spark = SparkSession.builder()
-      .appName("graft-ingest-fault-probe")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // spark-submit sets the local-cluster master; 16 is the shuffle width
+    val spark = Sessions.local("graft-ingest-fault-probe", 16)
     require(spark.sparkContext.master.startsWith("local-cluster"),
       "IngestFaultProbe needs --master local-cluster[...] (forked executor JVMs)")
     val appId = spark.sparkContext.applicationId

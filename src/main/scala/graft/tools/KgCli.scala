@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.query.Steps
 import graft.store.TableIO
+import graft.util.Sessions
 
 /** The joern-tools CLI contract (SURVEY.md §2.7: thin verb per tool, ids in,
   * TSV on stdout) over materialized KG tables:
@@ -576,14 +577,7 @@ object KgCli {
       sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]").appName("graft-kgcli")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-kgcli", cpus)
     try println(toTsv(run(spark, argv(0), argv(1), argv.drop(2).toSeq)))
     finally spark.stop()
   }

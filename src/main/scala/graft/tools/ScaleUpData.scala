@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Deterministic 10×-class scale-up of the driver's synthetic relational
   * tables (TESTDATA.md shape) — no external data, pure replication with
@@ -56,15 +58,7 @@ object ScaleUpData {
     val factor = if (args.length > 2) args(2).toInt else 10
     if (args.length > 3) rowGroupBytes = args(3).toLong * 1024 * 1024
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-scaleup", cpus)
     import spark.implicits._
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))

@@ -6,10 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStream
+import graft.util.Sessions
 
-/** Streaming throughput probe (BASELINE.md evidence; the streaming analog of
-  * ExtractProbe's controlled repeats — run each measurement twice in one JVM
-  * and report the steady-state second rep).
+/** Streaming throughput probe (BASELINE.md evidence): run each measurement
+  * twice in one JVM and report the steady-state second rep.
   *
   *   runMain graft.tools.StreamBench [nEvents] [nPages] [cores]
   *
@@ -31,14 +31,7 @@ object StreamBench {
     val nPages = if (args.length > 1) args(1).toInt else 20000
     val cores = if (args.length > 2) args(2).toInt else 32
     val nFiles = if (args.length > 3) args(3).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]").appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-stream-bench", cores)
     try {
       for (rep <- 1 to 2) { sessionizeBench(spark, nEvents, rep) }
       for (rep <- 1 to 2) { extractBench(spark, nPages, nFiles, rep) }

@@ -6,6 +6,7 @@ import graft.{Incremental, Pipeline}
 import graft.extract.{PatternAutomaton, TripleExtractor}
 import graft.model.PageGen
 import graft.store.TableIO
+import graft.util.Sessions
 
 /** Corpus-size independence of the takedown fast path, measured.
   *
@@ -35,17 +36,7 @@ object TakedownScaleProbe {
       else Seq(50000, 100000)
     val batchN = if (rest.length > 1) rest(1).toInt else 2000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-takedown-scale")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-takedown-scale", cpus)
     import spark.implicits._
 
     if (slowMode) { runSlow(spark, sizes, batchN); spark.stop(); return }

@@ -28,7 +28,17 @@ class SessionsSpec extends AnyFunSuite with Matchers {
     c.get("spark.driver.host") shouldBe "localhost"
   }
 
-  test("a spark.master already in the conf is not overridden") {
+  test("a submitted in-process master is pinned to local[cores]") {
+    Seq("local[32]", "local[*]", "local").foreach { m =>
+      val c = Sessions.conf(new SparkConf(false).setMaster(m), "t", 2)
+      c.get("spark.master") shouldBe "local[2]"
+      c.get("spark.sql.shuffle.partitions") shouldBe "2"
+    }
+  }
+
+  test("a submitted forked-executor master is not overridden") {
+    conf(new SparkConf(false).setMaster("local-cluster[1,2,1024]"))
+      .get("spark.master") shouldBe "local-cluster[1,2,1024]"
     val c = conf(new SparkConf(false).setMaster("spark://h:7077"))
     c.get("spark.master") shouldBe "spark://h:7077"
     c.get("spark.sql.shuffle.partitions") shouldBe "4"

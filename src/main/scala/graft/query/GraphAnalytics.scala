@@ -1,7 +1,12 @@
 package graft.query
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.util.Materialize
 
@@ -14,18 +19,33 @@ import graft.util.Materialize
   * designed driver-hashable: no floating-point accumulation anywhere.
   *
   * Scale shape:
-  *  - PageRank: per-iteration cost is one equi-join (ranks ⋈ edges on src)
-  *    plus one map-side-combinable groupBy(dst) sum — a hub entity's huge
-  *    in-degree is absorbed by partial aggregation, never by one task.
-  *    Exact INTEGER fixed-point arithmetic (`div`, long sums) makes the
-  *    result independent of aggregation order, so a second engine can
-  *    re-derive it bit-exactly — float PageRank cannot be hash-compared.
+  *  - PageRank: per-iteration cost is one zip of the node state with the
+  *    co-partitioned edge pin plus one map-side-combined sum per dst — a
+  *    hub entity's huge in-degree is absorbed by the combiners, never by
+  *    one task. Exact INTEGER fixed-point arithmetic (`div`, long sums)
+  *    makes the result independent of aggregation order, so a second
+  *    engine can re-derive it bit-exactly — float PageRank cannot be
+  *    hash-compared.
   *  - Triangles: edges oriented low→high (degree, id) endpoint; wedges are
   *    enumerated only at each edge's ≺-smaller vertex, which bounds
   *    per-vertex pair expansion by the oriented out-degree (≤ O(√m)
   *    amortized — the arboricity argument), so the mega-hub contributes no
   *    quadratic bucket. Closure is one equi-join against the undirected
   *    edge set. No window functions anywhere in either kernel.
+  *
+  * The query kernels (PageRank and the BFS behind `slice`, `path` and the
+  * SCC/bow-tie reach) run as co-partitioned RDD rounds. At query sizes their
+  * cost is per-job overhead, not data: a small DataFrame action costs two to
+  * four times an RDD job (BASELINE.md), and under AQE a pinned frame loses
+  * its partitioning, so DataFrame rounds re-shuffle the edge side every
+  * round. Each kernel turns its edge input
+  * once into an RDD hash-partitioned by the hop key and pins it; every round
+  * zips its state with that pin partition by partition (a narrow
+  * dependency), streaming the partition's edges against a hash map of the
+  * partition's state — no per-node adjacency list, so a hub's edge list is
+  * never held in memory — and pays one real shuffle, a map-side-combined
+  * reduce. Every pin a kernel makes is released except the one backing its
+  * result.
   */
 object GraphAnalytics {
 
@@ -59,65 +79,102 @@ object GraphAnalytics {
   def pageRankInt(edges: DataFrame, iters: Int = 10,
                   totalMass: Long = 1000000000000000L,
                   seeds: Option[DataFrame] = None): DataFrame = {
-    // the returned frame must be its OWN checkpoint (we release every input
-    // frame below); with zero rounds it would still be lazy over them
+    // the returned frame reads its OWN pin (every input pin is released
+    // below); with zero rounds it would still read them
     require(iters >= 1, "pageRankInt: iters must be >= 1")
-    val e = Materialize.pin(edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()) // reused every round: pin it once (reliable under the fault interval)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // pre-partition the (invariant) edge side by the per-round join key ONCE:
-    // `e` comes out of distinct() hashed by (src,dst), which would reshuffle
-    // the full edge table under every round's ranks join. With src-hash
-    // pinned here (localCheckpoint preserves outputPartitioning) and ranks
-    // emerging id-hashed from the previous round's node join, each round
-    // pays exactly one real shuffle — the contribution groupBy on dst.
-    val withDeg = Materialize.pin(e.join(outdeg, "src").repartition(col("src")))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val flagged = (seeds match {
-      case Some(s) => nodes.join(
-        s.select(col("id")).distinct().withColumn("isSeed", lit(true)),
-        Seq("id"), "left")
-        .select(col("id"), coalesce(col("isSeed"), lit(false)).as("isSeed"))
-      case None => nodes.withColumn("isSeed", lit(true))
-    })
-    val flaggedP = Materialize.pin(flagged)
-    // one bounded driver scalar each (like the CC probe)
-    val nSeeds = flaggedP.filter(col("isSeed")).count()
+    val spark = edges.sparkSession
+    val part = hopPartitioner(spark)
+    val e = hopPin(edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")).distinct(), part)
+    // node → (outdeg, isSeed) in one map-side-combined reduce over both
+    // endpoints of every edge (every node is a seed when none are given);
+    // a seed id counts only if it is a graph node
+    val all = seeds.isEmpty
+    val ends: RDD[(Long, (Long, Boolean, Boolean))] = e.flatMap { case (s, d) =>
+      Iterator((s, (1L, true, all)), (d, (0L, true, all)))
+    }
+    val flagged = seeds.fold(ends) { sd =>
+      ends.union(sd.select(col("id")).rdd.map(r => (r.getLong(0), (0L, false, true))))
+    }
+    val info = flagged
+      .reduceByKey(part, (a, b) => (a._1 + b._1, a._2 || b._2, a._3 || b._3))
+      .filter(_._2._2).mapValues { case (outdeg, _, isSeed) => (outdeg, isSeed) }
+    val nNodes = Materialize.pin(spark, info)
+    // one bounded driver scalar (like the CC probe); free without seeds
+    val nSeeds = if (seeds.isEmpty) nNodes else info.filter(_._2._2).count()
+    if (nSeeds == 0L) { e.unpersist(false); info.unpersist(false) }
     require(nSeeds > 0, "pageRankInt: empty graph or no seed is a graph node")
     val perSeed = totalMass / nSeeds
-    // per-node teleport base — the frame every round's final join reuses
-    val nb = Materialize.pin(flaggedP.select(col("id"),
-      when(col("isSeed"), lit(perSeed * 15L / 100L)).otherwise(lit(0L)).as("base")))
-    var ranks = flaggedP.select(col("id"),
-      when(col("isSeed"), lit(perSeed)).otherwise(lit(0L)).as("rank"))
-    for (i <- 0 until iters) {
-      val old = ranks
-      ranks = graft.util.Materialize.iterate(prStep(withDeg, ranks, nb), i)
-      // drop the superseded round's checkpoint blocks NOW (same discipline
-      // as the CC fixpoint): without this, `iters` copies of the rank table
-      // pile up in storage memory and large graphs hit an eviction cliff —
-      // measured 8x super-linear at 5M nodes before this line existed
-      old.unpersist(false)
+    val base = perSeed * 15L / 100L
+    // node → (rank, outdeg, base)
+    var ranks = info.mapValues { case (outdeg, isSeed) =>
+      if (isSeed) (perSeed, outdeg, base) else (0L, outdeg, 0L)
     }
-    // the result is its own checkpoint; the invariant frames can go too
-    e.unpersist(false); withDeg.unpersist(false)
-    flaggedP.unpersist(false); nb.unpersist(false)
-    ranks
+    for (i <- 0 until iters) {
+      val next = prRound(e, ranks, part)
+      Materialize.iterate(spark, next, i)
+      // drop the superseded round's blocks NOW: without this, `iters`
+      // copies of the rank table pile up in storage memory and large graphs
+      // hit an eviction cliff (measured 8x super-linear at 5M nodes)
+      ranks.unpersist(false)
+      ranks = next
+    }
+    e.unpersist(false); info.unpersist(false)
+    spark.createDataFrame(ranks.map { case (id, (rank, _, _)) => Row(id, rank) },
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("rank", LongType, nullable = false))))
   }
 
-  /** One PageRank round — the exact frame each iteration materializes
-    * (factored out so PlanSpec pins its physical shape: partial-agg sum on
-    * dst, two equi-joins, no window, no cartesian). `nb` = (id, base). */
-  private[graft] def prStep(withDeg: DataFrame, ranks: DataFrame,
-                            nb: DataFrame): DataFrame = {
-    val contrib = withDeg.join(ranks, col("src") === col("id"))
-      .select(col("dst").as("id"), expr("`rank` div `outdeg`").as("c"))
-      .groupBy("id").agg(sum("c").as("cx"))
-    nb.join(contrib, Seq("id"), "left")
-      .select(col("id"),
-        (col("base") + expr("(85 * coalesce(cx, 0L)) div 100")).as("rank"))
+  /** One PageRank round — the exact RDD each iteration materializes
+    * (factored out so PlanSpec pins its shape). `state` maps a node to
+    * (rank, outdeg, base) and is partitioned like the (src, dst) edge pin.
+    * Each partition streams its edges against a hash map of its own nodes'
+    * `rank div outdeg` shares; the contributions sum per dst with map-side
+    * combine (the round's one shuffle); the sums zip back onto the state. */
+  private[graft] def prRound(edges: RDD[(Long, Long)],
+                             state: RDD[(Long, (Long, Long, Long))],
+                             part: Partitioner): RDD[(Long, (Long, Long, Long))] = {
+    val sums = edges.zipPartitions(state) { (es, ss) =>
+      val share = mutable.LongMap.empty[Long]
+      ss.foreach { case (id, (rank, outdeg, _)) =>
+        if (outdeg > 0 && rank >= outdeg) share.update(id, rank / outdeg)
+      }
+      es.map { case (s, d) => (d, share.getOrElse(s, 0L)) }.filter(_._2 > 0L)
+    }.reduceByKey(part, _ + _)
+    state.zipPartitions(sums, preservesPartitioning = true) { (ss, cs) =>
+      val cx = mutable.LongMap.empty[Long]
+      cs.foreach { case (id, c) => cx.update(id, c) }
+      ss.map { case (id, (_, outdeg, base)) =>
+        (id, (base + 85L * cx.getOrElse(id, 0L) / 100L, outdeg, base))
+      }
+    }
   }
+
+  /** The partitioner of every RDD kernel's edge pin and round state: one
+    * HashPartitioner over the session's shuffle width, so a round's
+    * state ⋈ edges is a zip of matching partitions. */
+  private[graft] def hopPartitioner(spark: SparkSession): HashPartitioner =
+    new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
+  /** `df`'s first two (long) columns as (hop key, other end) pairs,
+    * hash-partitioned by the hop key. Lazy. */
+  private[graft] def hops(df: DataFrame, part: Partitioner): RDD[(Long, Long)] = {
+    val (a, b) = (col(df.columns(0)), col(df.columns(1)))
+    df.filter(a.isNotNull && b.isNotNull).rdd
+      .map(r => (r.getLong(0), r.getLong(1))).partitionBy(part)
+  }
+
+  /** `hops`, pinned (Materialize.pin); the caller unpersists it. */
+  private[graft] def hopPin(df: DataFrame, part: Partitioner): RDD[(Long, Long)] = {
+    val rdd = hops(df, part)
+    Materialize.pin(df.sparkSession, rdd)
+    rdd
+  }
+
+  /** The node ids of a BFS state (`reachClosure`) as an (id) frame. */
+  private[graft] def idFrame(spark: SparkSession, state: RDD[(Long, (Long, Int))]): DataFrame =
+    spark.createDataFrame(state.map(v => Row(v._1)),
+      StructType(Seq(StructField("id", LongType, nullable = false))))
 
   /** Exact integer fixed-point HITS (hubs & authorities) over the directed,
     * deduped, self-loop-free projection of `edges`.
@@ -140,11 +197,11 @@ object GraphAnalytics {
     * ~9.2e6 — at web scale pass a smaller scale (the bound is
     * maxDegree · scale < Long.MaxValue).
     *
-    * Scale shape: the edge frame is pinned TWICE, pre-partitioned by src and
-    * by dst (each half-round joins on a different side — one pinned copy per
-    * key means no per-round edge reshuffle); the raw sums are map-side
-    * combinable groupBys, so a hub's huge degree is absorbed by partial
-    * aggregation. No window functions.
+    * Scale shape: one pinned edge copy serves both half-rounds. Each gather
+    * is a join that re-shuffles the edge side (a pinned frame carries no
+    * partitioning under AQE, so a pre-partitioned second copy would not
+    * save it); the raw sums are map-side combinable groupBys, so a hub's
+    * huge degree is absorbed by partial aggregation. No window functions.
     */
   def hitsInt(edges: DataFrame, iters: Int = 8,
               scale: Long = 1000000000000L): DataFrame = {
@@ -153,13 +210,12 @@ object GraphAnalytics {
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .localCheckpoint(eager = true)
-    require(!e.isEmpty, "hitsInt: empty graph")
-    val eBySrc = e.repartition(col("src")).localCheckpoint(eager = true)
-    val eByDst = e.repartition(col("dst")).localCheckpoint(eager = true)
+    val empty = e.isEmpty
+    if (empty) Materialize.release(e)
+    require(!empty, "hitsInt: empty graph")
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(eager = true)
-    e.unpersist(false) // last read above — don't hold a third edge copy all rounds
     // Intermediate scores are SPARSE: a node absent from a gather has score
     // 0, and a 0 row is indistinguishable from an absent row to both the
     // next gather (inner join, contributes 0) and the max divisor — so the
@@ -173,17 +229,18 @@ object GraphAnalytics {
       val oldH = hubs
       val oldA = auths
       // authority half-round: gather hub mass along edge direction
-      val aRaw = gatherSum(eBySrc, hubs, from = "src", to = "dst")
+      val aRaw = gatherSum(e, hubs, from = "src", to = "dst")
         .localCheckpoint(eager = true) // read twice: max probe + divide
       auths = Materialize.iterate(rescale(aRaw, scale), 2 * i)
-      aRaw.unpersist(false)
+      Materialize.release(aRaw)
       // hub half-round: gather authority mass against edge direction
-      val hRaw = gatherSum(eByDst, auths, from = "dst", to = "src")
+      val hRaw = gatherSum(e, auths, from = "dst", to = "src")
         .localCheckpoint(eager = true)
       hubs = Materialize.iterate(rescale(hRaw, scale), 2 * i + 1)
-      hRaw.unpersist(false)
-      oldH.unpersist(false)
-      if (oldA != null) oldA.unpersist(false)
+      Materialize.release(hRaw)
+      // the first round's hubs is a lazy projection of `nodes`, not a pin
+      if (i > 0) Materialize.release(oldH)
+      if (oldA != null) Materialize.release(oldA)
     }
     val res = nodes
       .join(hubs.withColumnRenamed("score", "hub"), Seq("id"), "left")
@@ -191,7 +248,7 @@ object GraphAnalytics {
       .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
       .localCheckpoint(eager = true)
-    Seq(eBySrc, eByDst, nodes, hubs, auths).foreach(_.unpersist(false))
+    Seq(e, nodes, hubs, auths).foreach(Materialize.release)
     res
   }
 
@@ -445,7 +502,7 @@ object GraphAnalytics {
     if (!materialize) cand
     else {
       val res = cand.localCheckpoint(eager = true)
-      Seq(bi, deg, inv).foreach(_.unpersist(false))
+      Seq(bi, deg, inv).foreach(Materialize.release)
       res
     }
   }
@@ -492,6 +549,7 @@ object GraphAnalytics {
     * edge frame — shared with bowTie so the canonicalization shuffle and
     * the pinned edge copy are paid once. */
   private def sccCanonical(e0: DataFrame): DataFrame = {
+    val spark = e0.sparkSession
     var active = e0.select(col("src").as("id"))
       .union(e0.select(col("dst").as("id"))).distinct()
       .select(col("id"), lit(0L).as("part"))
@@ -538,8 +596,9 @@ object GraphAnalytics {
         val pivots = active.groupBy("part").agg(min(col("id")).as("pivot"))
           .localCheckpoint(eager = true)
         val seeds = pivots.select(col("pivot").as("id"))
-        val fwd = reachClosure(aE, seeds, forward = true)
-        val bwd = reachClosure(aE, seeds, forward = false)
+        val fwdPin = reachClosure(aE, seeds, forward = true)
+        val bwdPin = reachClosure(aE, seeds, forward = false)
+        val (fwd, bwd) = (idFrame(spark, fwdPin), idFrame(spark, bwdPin))
         // 3. emit the pivot SCCs (fwd ∩ bwd), split the rest
         val inBoth = fwd.join(bwd, Seq("id"), "left_semi")
         out += active.join(inBoth, Seq("id"), "left_semi")
@@ -555,7 +614,8 @@ object GraphAnalytics {
         active = rest.join(np, Seq("part", "fwd", "bwd"))
           .select(col("id"), col("npart").as("part"))
           .localCheckpoint(eager = true)
-        Seq(oldActive, pivots, fwd, bwd, aE).foreach(_.unpersist(false))
+        Seq(oldActive, pivots, aE).foreach(_.unpersist(false))
+        fwdPin.unpersist(false); bwdPin.unpersist(false)
       }
       outer += 1
     }
@@ -593,8 +653,9 @@ object GraphAnalytics {
     val coreId = coreRow.getLong(0)
     val core = s.filter(col("scc") === lit(coreId)).select("id")
       .localCheckpoint(eager = true)
-    val toCore = reachClosure(e0, core, forward = false) // core ∪ who reaches it
-    val fromCore = reachClosure(e0, core, forward = true) // core ∪ whom it reaches
+    val toPin = reachClosure(e0, core, forward = false) // core ∪ who reaches it
+    val fromPin = reachClosure(e0, core, forward = true) // core ∪ whom it reaches
+    val (toCore, fromCore) = (idFrame(e0.sparkSession, toPin), idFrame(e0.sparkSession, fromPin))
     val res = s.select("id")
       .join(core.withColumn("inCore", lit(true)), Seq("id"), "left")
       .join(toCore.withColumn("inTo", lit(true)), Seq("id"), "left")
@@ -605,128 +666,130 @@ object GraphAnalytics {
           .when(col("inFrom").isNotNull, "OUT")
           .otherwise("OTHER").as("region"))
       .localCheckpoint(eager = true)
-    Seq(e0, s, core, toCore, fromCore).foreach(_.unpersist(false))
+    Seq(e0, s, core).foreach(_.unpersist(false))
+    toPin.unpersist(false); fromPin.unpersist(false)
     res
   }
 
-  /** Deterministic shortest path between two entities over the directed,
-    * deduped, self-loop-free projection of `edges` — the "how are X and Y
-    * related?" query. BFS guarantees minimal hop count; among equal-length
-    * paths the MIN-parent rule at every level makes the returned path
-    * unique (a pure function of the graph, partition-invariant).
-    *
-    * Scale shape: frontier rounds are one equi-join + a min-parent groupBy
-    * (map-side combine at in-degree hubs) + one anti-join against visited;
-    * the found-check is a bounded driver scalar per round, and backtracking
-    * touches pathLength singleton lookups. Returns None when `to` is not
-    * reachable within `maxDepth` hops. */
   /** Above this many visited nodes the backtrack falls back to per-hop
     * lookups instead of one driver-side collect (~64 MB of (id, parent)
     * longs at the cap — the same driver-budget argument as
     * Pipeline.CanonBroadcastCutover). */
   val BacktrackCollectCap: Long = 4000000L
 
+  /** Deterministic shortest path between two entities over the directed,
+    * self-loop-free projection of `edges` — the "how are X and Y
+    * related?" query. BFS guarantees minimal hop count; among equal-length
+    * paths the MIN-parent rule at every level makes the returned path
+    * unique (a pure function of the graph, partition-invariant). Duplicate
+    * edges change neither, so the edge input is not deduplicated.
+    *
+    * Scale shape: the BFS rounds `reachClosure` runs (one zip with the
+    * edge pin, one map-side-combined min-parent reduce), stopped as soon as
+    * `to` is reached — a one-partition lookup per round. Backtracking touches
+    * pathLength singleton lookups. Returns None when `to` is not
+    * reachable within `maxDepth` hops. */
   def shortestPath(edges: DataFrame, from: Long, to: Long,
                    maxDepth: Int = 30): Option[Seq[Long]] = {
     require(maxDepth >= 1, "shortestPath: maxDepth must be >= 1")
     if (from == to) return Some(Seq(from))
     val spark = edges.sparkSession
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    // visited carries the chosen (min) BFS parent per node; the seed's
-    // parent slot is unused
-    var visited = spark.range(1)
-      .select(lit(from).as("id"), lit(from).as("parent"))
-      .localCheckpoint(eager = true)
-    var frontier = visited.select("id")
-    var frontPin: DataFrame = null // the checkpoint backing the frontier
-    var found = false
-    var done = false
-    var depth = 0
-    var visitedCount = 1L
-    while (!found && !done && depth < maxDepth) {
-      val next = Materialize.iterate(
-        e.join(frontier.select(col("id").as("src")), Seq("src"))
-          .groupBy(col("dst").as("id")).agg(min(col("src")).as("parent"))
-          .join(visited.select("id"), Seq("id"), "left_anti"), depth)
-      // ONE scan answers both "dead end?" and "target reached?"
-      val probe = next.agg(count(lit(1)),
-        max(when(col("id") === lit(to), 1).otherwise(0))).head()
-      if (probe.getLong(0) == 0L) { next.unpersist(false); done = true }
-      else {
-        visitedCount += probe.getLong(0)
-        found = probe.getInt(1) == 1
-        val old = visited
-        visited = Materialize.iterate(visited.union(next), depth)
-        old.unpersist(false)
-        if (frontPin != null) frontPin.unpersist(false)
-        frontPin = next
-        frontier = next.select("id")
-      }
-      depth += 1
-    }
+    val part = hopPartitioner(spark)
+    val e = hopPin(edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")), part)
+    // the seed's parent slot is unused
+    val seed = spark.sparkContext.parallelize(Seq((from, (from, 0)))).partitionBy(part)
+    val (visited, nVisited, found) = bfs(spark, e, seed, 1L, maxDepth, target = Some(to))
     val res = if (!found) None
-    else if (visitedCount <= BacktrackCollectCap) {
+    else if (nVisited <= BacktrackCollectCap) {
       // backtrack with ONE action: the visited set fits a driver map (the
-      // common case for a ≤30-hop relatedness query — the round probes above
-      // tracked its exact size), so chase the ≤ maxDepth parent hops in
-      // memory instead of issuing one sequential Spark job per hop
-      import org.apache.spark.sql.Row
-      val parentOf = new scala.collection.mutable.LongMap[Long](visitedCount.toInt * 2)
-      visited.select("id", "parent").collect().foreach {
-        case Row(id: Long, parent: Long) => parentOf.update(id, parent)
-      }
+      // common case for a ≤30-hop relatedness query — the round counts
+      // above tracked its exact size), so chase the ≤ maxDepth parent hops
+      // in memory instead of issuing one sequential Spark job per hop
+      val parentOf = mutable.LongMap.empty[Long]
+      visited.collect().foreach { case (id, (parent, _)) => parentOf.update(id, parent) }
       var path = List(to)
       while (path.head != from) path = parentOf(path.head) :: path
       Some(path)
     } else {
-      // bounded-memory fallback past the cap: pathLength singleton lookups
-      // against the pinned visited frame (a BFS parent chain never revisits
-      // a node), ≤ maxDepth jobs
+      // bounded-memory fallback past the cap: one single-partition lookup
+      // per hop (a BFS parent chain never revisits a node), ≤ maxDepth jobs
       var path = List(to)
-      while (path.head != from) {
-        path = visited.filter(col("id") === path.head).head().getLong(1) :: path
-      }
+      while (path.head != from) path = visited.lookup(path.head).head._1 :: path
       Some(path)
     }
     e.unpersist(false); visited.unpersist(false)
-    if (frontPin != null) frontPin.unpersist(false)
     res
   }
 
   /** BFS closure from `seeds` over `edges`, seeds included: forward = true
-    * follows src→dst, false follows dst→src. Frontier expansion (the
-    * Steps.reachable shape): each round touches only the NEW wavefront's
-    * edges — a frontier semi-join + map-side-combinable distinct + one
-    * anti-join against the visited set — and stops on an empty frontier.
-    * Returns a single-column (id) frame, eagerly materialized. */
-  private[graft] def reachClosure(edges: DataFrame, seeds: DataFrame,
-                                  forward: Boolean): DataFrame = {
-    val (from, to) = if (forward) ("src", "dst") else ("dst", "src")
-    var visited = seeds.select("id").localCheckpoint(eager = true)
-    var frontier = visited
-    var it = 0
-    var done = false
-    while (!done) {
-      val next = Materialize.iterate(
-        edges.join(frontier.select(col("id").as(from)), Seq(from), "left_semi")
-          .select(col(to).as("id")).distinct()
-          .join(visited, Seq("id"), "left_anti"), it)
-      if (next.isEmpty) { next.unpersist(false); done = true }
-      else {
-        val old = visited
-        visited = Materialize.iterate(visited.union(next), it)
-        old.unpersist(false)
-        if (frontier ne old) frontier.unpersist(false)
-        frontier = next
-      }
-      it += 1
-    }
-    // the loop exits on an empty `next` with the last NON-empty frontier
-    // still checkpointed — release it (it is only the seed/visited frame on
-    // a zero-expansion run, which is the returned frame and must stay)
-    if (frontier ne visited) frontier.unpersist(false)
+    * follows src→dst, false follows dst→src; at most `maxDepth` rounds, and
+    * `firstHop` (same orientation) replaces the edges in the first round.
+    * The edges are pinned once, keyed by the hop end; returns the final
+    * BFS state (node → (min parent, depth)), pinned — the caller
+    * releases it (or wraps it with `idFrame`). */
+  private[graft] def reachClosure(edges: DataFrame, seeds: DataFrame, forward: Boolean,
+                                  maxDepth: Int = Int.MaxValue,
+                                  firstHop: Option[DataFrame] = None): RDD[(Long, (Long, Int))] = {
+    val spark = edges.sparkSession
+    val part = hopPartitioner(spark)
+    val ends = if (forward) Seq(col("src"), col("dst")) else Seq(col("dst"), col("src"))
+    val e = hopPin(edges.select(ends: _*), part)
+    val seed = seeds.select(col("id")).filter(col("id").isNotNull).rdd
+      .map { r => val id = r.getLong(0); (id, (id, 0)) }
+      .reduceByKey(part, (a, _) => a)
+    val nSeeds = Materialize.pin(spark, seed)
+    val (visited, _, _) = bfs(spark, e, seed, nSeeds, maxDepth,
+      firstHop = firstHop.map(f => hops(f.select(ends: _*), part)))
+    e.unpersist(false)
     visited
+  }
+
+  /** Frontier BFS over the hop-keyed edge pin `edges` from `seed` (a state
+    * partitioned like it, holding `nSeed` nodes), at most `maxDepth` rounds,
+    * stopping early when a round adds nothing or `target` is reached. Each
+    * round's state is materialized by Materialize.iterate and the
+    * superseded one released (the seed state included). Returns the final
+    * state, its size and whether it holds `target`. */
+  private def bfs(spark: SparkSession, edges: RDD[(Long, Long)],
+                  seed: RDD[(Long, (Long, Int))], nSeed: Long, maxDepth: Int,
+                  firstHop: Option[RDD[(Long, Long)]] = None,
+                  target: Option[Long] = None): (RDD[(Long, (Long, Int))], Long, Boolean) = {
+    val part = seed.partitioner.get
+    var (state, n, d) = (seed, nSeed, 0)
+    var (grew, found) = (true, false)
+    while (grew && !found && d < maxDepth) {
+      val next = bfsRound(if (d == 0) firstHop.getOrElse(edges) else edges, state, d, part)
+      val m = Materialize.iterate(spark, next, d)
+      grew = m > n
+      if (!grew) next.unpersist(false)
+      else {
+        state.unpersist(false)
+        state = next; n = m
+        found = target.exists(t => state.lookup(t).nonEmpty)
+      }
+      d += 1
+    }
+    (state, n, found)
+  }
+
+  /** One BFS round (factored out so PlanSpec pins its shape). `state` maps
+    * every visited node to (min parent, depth) and is partitioned like the
+    * hop-keyed edges. Each partition streams its edges against a hash set
+    * of its own depth-`d` frontier; the reached nodes reduce to their MIN
+    * parent with map-side combine (the round's one shuffle, absorbing an
+    * in-degree hub); the ones not yet visited zip into the state at d + 1. */
+  private[graft] def bfsRound(edges: RDD[(Long, Long)], state: RDD[(Long, (Long, Int))],
+                              d: Int, part: Partitioner): RDD[(Long, (Long, Int))] = {
+    val reached = edges.zipPartitions(state) { (es, ss) =>
+      val frontier = mutable.LongMap.empty[Unit]
+      ss.foreach { case (id, (_, depth)) => if (depth == d) frontier.update(id, ()) }
+      if (frontier.isEmpty) Iterator.empty
+      else es.filter(e => frontier.contains(e._1)).map(_.swap)
+    }.reduceByKey(part, math.min(_, _))
+    state.zipPartitions(reached, preservesPartitioning = true) { (ss, rs) =>
+      val seen = mutable.LongMap.empty[(Long, Int)]
+      ss.foreach { case (id, v) => seen.update(id, v) }
+      seen.iterator ++ rs.collect { case (id, p) if !seen.contains(id) => (id, (p, d + 1)) }
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** The reference's Gremlin/Groovy query-step surface (SURVEY.md §2.6)
   * re-expressed as composable `DataFrame => DataFrame` functions over the
   * materialized `nodes` / `edges` tables.
@@ -217,38 +219,18 @@ object Steps {
     * (≙ reachableCfgNodes `cfg.groovy:18-26`; forwardSlice `slice.groovy`).
     * Returns distinct node ids (id) reachable from `seeds` (including seeds).
     *
-    * Each iteration: frontier ⋈ edges → next, minus visited (anti-join).
-    * `restrictFirstHopVars`: the slice semantics where only the first hop is
-    * filtered by symbol set (`slice.groovy:30-38`). */
+    * Runs as GraphAnalytics.reachClosure's co-partitioned RDD rounds: each
+    * round expands the new wavefront only and drops what is already visited
+    * (cfg.groovy:21). `restrictFirstHopVars`: the slice semantics where only
+    * the first hop is filtered by symbol set (`slice.groovy:30-38`). The
+    * returned frame reads the closure's pin; every other pin is released. */
   def reachable(seeds: DataFrame, edges: DataFrame, kinds: Seq[String],
                 maxDepth: Int = 5, forward: Boolean = true,
                 restrictFirstHopVars: Option[Seq[String]] = None): DataFrame = {
     val e0 = edges.filter(col("kind").isin(kinds: _*))
-    val (srcCol, dstCol) = if (forward) ("src", "dst") else ("dst", "src")
-    // materialize per iteration to truncate lineage — without it the plan
-    // doubles every hop and the driver OOMs on plan strings alone
-    // (Materialize.iterate: reliable every Nth round when configured)
-    var visited = seeds.select(col("id")).distinct().localCheckpoint(true)
-    var frontier = visited
-    var depth = 0
-    var done = false
-    while (!done && depth < maxDepth) {
-      val e = if (depth == 0 && restrictFirstHopVars.isDefined)
-        e0.filter(col("variable").isin(restrictFirstHopVars.get: _*))
-      else e0
-      val next = frontier.select(col("id").as(srcCol))
-        .join(e, srcCol)
-        .select(col(dstCol).as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti") // frontier - visited (cfg.groovy:21)
-        .transform(graft.util.Materialize.iterate(_, depth))
-      if (next.isEmpty) done = true
-      else {
-        visited = graft.util.Materialize.iterate(visited.union(next), depth)
-        frontier = next
-      }
-      depth += 1
-    }
-    visited
+    val visited = GraphAnalytics.reachClosure(e0, seeds, forward, maxDepth,
+      firstHop = restrictFirstHopVars.map(vs => e0.filter(col("variable").isin(vs: _*))))
+    GraphAnalytics.idFrame(edges.sparkSession, visited)
   }
 
   /** ≙ forwardSlice (`slice.groovy:1-45`): bounded closure over given edge
@@ -293,14 +275,20 @@ object Steps {
         .join(e0, "src")
         .select(col("origin"), col("dst").as("id")).distinct()
         .join(visited, Seq("origin", "id"), "left_anti")
-        .transform(graft.util.Materialize.iterate(_, depth))
-      if (next.isEmpty) done = true
+        .transform(Materialize.iterate(_, depth))
+      if (next.isEmpty) { Materialize.release(next); done = true }
       else {
-        visited = graft.util.Materialize.iterate(visited.union(next), depth)
+        val old = visited
+        visited = Materialize.iterate(visited.union(next), depth)
+        Materialize.release(old)
+        if (frontier ne old) Materialize.release(frontier)
         frontier = next
       }
       depth += 1
     }
+    // the result reads `visited`; the last frontier is a pin of its own
+    // unless no round ever ran
+    if (frontier ne visited) Materialize.release(frontier)
     visited.filter(col("origin") === col("id")).select(col("origin").as("id")).distinct()
   }
 

@@ -1,11 +1,15 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Iteration-materialization policy shared by the fixpoint operators
-  * (ConnectedComponents, Steps.reachable / selfReaching,
-  * neighborhoodHashFeatures, the GraphAnalytics kernels).
+  * (ConnectedComponents, Steps.selfReaching, neighborhoodHashFeatures, the
+  * GraphAnalytics kernels). The RDD query kernels (PageRank and the BFS
+  * closures behind `slice`, `path` and the SCC/bow-tie reach) use the RDD
+  * overloads of `pin` and `iterate`, which apply the same policy.
   *
   * Default: eager `localCheckpoint` — cheapest way to truncate lineage
   * (without it every iteration doubles the plan), but the blocks are
@@ -37,14 +41,37 @@ import org.apache.spark.storage.StorageLevel
 object Materialize {
   val IntervalKey = "spark.graft.reliableCheckpointInterval"
 
+  private def interval(spark: SparkSession): Int =
+    spark.conf.get(IntervalKey, "0").toInt
+
   /** Pin a fixpoint INPUT frame that every round re-reads: reliable
     * checkpoint under the interval — executor loss must not take the only
     * copy of a frame the whole fixpoint depends on — eager localCheckpoint
-    * otherwise. Both preserve outputPartitioning, so pre-partitioned edge
-    * frames keep satisfying EnsureRequirements from the pin. */
-  def pin(df: DataFrame): DataFrame = {
-    val n = df.sparkSession.conf.get(IntervalKey, "0").toInt
-    if (n > 0) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+    * otherwise. Neither keeps a partitioning a later join can use: under
+    * AQE the pinned frame reports `UnknownPartitioning`, even after a
+    * `repartition(col)`, so a join against it still plans its exchange.
+    * Kernels that need co-partitioned rounds pin an RDD instead. */
+  def pin(df: DataFrame): DataFrame =
+    if (interval(df.sparkSession) > 0) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
+
+  /** RDD counterpart of `pin(df)`, in place: reliable checkpoint (kept
+    * cached too) under the interval, localCheckpoint otherwise. The RDD's
+    * partitioner survives. Returns its row count, the materializing
+    * action's result. */
+  def pin(spark: SparkSession, rdd: RDD[_]): Long = {
+    if (interval(spark) > 0) { rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd.checkpoint() }
+    else rdd.localCheckpoint()
+    rdd.count()
+  }
+
+  /** Release a frame made by `pin`/`iterate` or any eager checkpoint. A
+    * checkpointed frame is not registered with the cache manager, so
+    * `Dataset.unpersist` leaves its blocks in place; this unpersists the
+    * RDD under it. Any other frame is unpersisted the usual way. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
   }
 
   /** Materialize iteration `iter`'s frame eagerly; reliable checkpoint on
@@ -52,7 +79,7 @@ object Materialize {
     * persist on the iterations in between, lineage-severing localCheckpoint
     * only when no interval is set. */
   def iterate(df: DataFrame, iter: Int): DataFrame = {
-    val n = df.sparkSession.conf.get(IntervalKey, "0").toInt
+    val n = interval(df.sparkSession)
     if (n <= 0) df.localCheckpoint(eager = true)
     else if (iter % n == n - 1) df.checkpoint(eager = true)
     else {
@@ -63,5 +90,20 @@ object Materialize {
       df.count()
       df
     }
+  }
+
+  /** RDD counterpart of `iterate(df, iter)`, in place, with the same
+    * contract: no interval → localCheckpoint; interval N → persist, plus a
+    * reliable checkpoint on every Nth iteration. The caller unpersists the
+    * superseded round's RDD. Returns the row count, the materializing
+    * action's result. */
+  def iterate(spark: SparkSession, rdd: RDD[_], iter: Int): Long = {
+    val n = interval(spark)
+    if (n <= 0) rdd.localCheckpoint()
+    else {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      if (iter % n == n - 1) rdd.checkpoint()
+    }
+    rdd.count()
   }
 }

@@ -131,6 +131,61 @@ class CliSpec extends AnyFunSuite with Matchers {
     KgCli.run(spark, dir, "path", Seq(a.toString, "999999999")).collect() shouldBe empty
   }
 
+  /** The bundle of graph queries a serving round runs, with fixed
+    * arguments: (verb args, pins its result may hold, job budget). The
+    * budgets are the counts this fixture gives (they repeat exactly for a
+    * fixed input); DataFrame-loop kernels took 28 (slice), 65 (rank) and
+    * 24 (path) jobs a call here. */
+  private lazy val graphBundle: Seq[(Seq[String], Int, Int)] = {
+    val link = graft.Incremental.readEdges(spark, dir).filter(col("kind") === "LINKS_TO")
+      .select("src", "dst").orderBy("src", "dst").head()
+    val e = graft.query.GraphAnalytics.entityEdges(graft.Incremental.readTriples(spark, dir))
+    val twoHop = e.as("x").join(e.as("y"), col("x.dst") === col("y.src"))
+      .filter(col("x.src") =!= col("y.dst"))
+      .select(col("x.src"), col("y.dst")).orderBy("src", "dst").head()
+    Seq(
+      (Seq("slice", "forward", "3", link.getLong(0).toString), 1, SliceJobs),
+      (Seq("slice", "backward", "3", link.getLong(1).toString), 1, SliceJobs),
+      (Seq("coref", link.getLong(0).toString), 0, Int.MaxValue),
+      (Seq("path", twoHop.getLong(0).toString, twoHop.getLong(1).toString, "8"), 0, PathJobs),
+      (Seq("rank", "10"), 1, RankJobs),
+      (Seq("sameas", "10"), 1, Int.MaxValue))
+  }
+  private val SliceJobs = 11
+  private val PathJobs = 12
+  private val RankJobs = 17
+
+  test("graph verbs release every pin but the one their result reads") {
+    // GC also reclaims unreleased pins, so a leak shows as growth only
+    // until a collection; explicit release keeps the bound always
+    val sc = spark.sparkContext
+    graphBundle.foreach { case (q, ownPins, _) =>
+      val before = sc.getPersistentRDDs.size
+      (1 to 2).foreach(_ => KgCli.run(spark, dir, q.head, q.tail).collect())
+      withClue(q.mkString(" ")) {
+        (sc.getPersistentRDDs.size - before) should be <= 2 * ownPins
+      }
+    }
+  }
+
+  test("graph verbs stay within their job budgets") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try graphBundle.foreach { case (q, _, budget) =>
+      KgCli.run(spark, dir, q.head, q.tail).collect() // first call warms the table reads
+      org.apache.spark.graft.BusDrain(sc)
+      jobs.set(0)
+      KgCli.run(spark, dir, q.head, q.tail).collect()
+      org.apache.spark.graft.BusDrain(sc)
+      withClue(q.mkString(" ")) { jobs.get should be <= budget }
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("scc verb: non-trivial components, largest first") {
     val rows = KgCli.run(spark, dir, "scc", Nil).collect()
     // only components with >1 member; sizes descending

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import org.apache.spark.{Dependency, HashPartitioner, NarrowDependency, ShuffleDependency}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -130,23 +132,42 @@ class PlanSpec extends AnyFunSuite with Matchers {
     capPlan should include("partial_")
   }
 
+  /** The dependencies of `r`'s lineage, down to (not into) `inputs`. */
+  private def lineage(r: RDD[_], inputs: RDD[_]*): Seq[Dependency[_]] =
+    r.dependencies.flatMap { d =>
+      d +: (if (inputs.exists(_ eq d.rdd)) Nil else lineage(d.rdd, inputs: _*))
+    }
+
+  /** An RDD kernel round reads its edge pin through narrow dependencies
+    * only (a zip with the co-partitioned state, never a per-round edge
+    * reshuffle) and pays exactly one shuffle, whose aggregator combines
+    * map-side — so a hub's degree is absorbed before the shuffle, never
+    * funneled whole through one reducer. */
+  private def assertRoundShape(round: RDD[_], edges: RDD[_], state: RDD[_]): Unit = {
+    val deps = lineage(round, edges, state)
+    val shuffles = deps.collect { case s: ShuffleDependency[_, _, _] => s }
+    shuffles should have size 1
+    shuffles.head.aggregator shouldBe defined
+    shuffles.head.mapSideCombine shouldBe true
+    val onEdges = deps.filter(_.rdd eq edges)
+    onEdges should not be empty
+    onEdges.foreach(_ shouldBe a[NarrowDependency[_]])
+  }
+
+  /** Parquet-backed (src, dst) edges, keyed and partitioned the way the
+    * kernels pin them (lazy: no job runs). */
+  private def lineitemHops(part: HashPartitioner): RDD[(Long, Long)] =
+    graft.query.GraphAnalytics.hops(spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select(col("l_orderkey").as("src"), col("l_partkey").as("dst")), part)
+
   test("integer PageRank round: partial-agg contribution sum, no Window, no cartesian") {
     // a hub entity's in-degree must be absorbed by map-side combine — the
-    // same argument as the near-dup caps; any parquet-backed edge shape
-    // drives the identical plan the pipeline's canonical graph gets
-    val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey").as("src"), col("l_partkey").as("dst")).distinct()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = e.join(outdeg, "src")
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val ranks = nodes.select(col("id"), lit(1000000L).as("rank"))
-    val nb = nodes.select(col("id"), lit(100L).as("base"))
-    val plan = physical(graft.query.GraphAnalytics.prStep(withDeg, ranks, nb))
-    plan should include("partial_sum")
-    plan shouldNot include("Window")
-    plan shouldNot include("CartesianProduct")
-    plan shouldNot include("BroadcastNestedLoopJoin")
+    // same argument as the near-dup caps — and the edge side, pinned once
+    // per call, must not be re-shuffled by any round
+    val part = new HashPartitioner(4)
+    val e = lineitemHops(part)
+    val state = spark.sparkContext.parallelize(Seq(1L -> (100L, 1L, 15L))).partitionBy(part)
+    assertRoundShape(graft.query.GraphAnalytics.prRound(e, state, part), e, state)
   }
 
   test("HITS gather: partial-agg sum, no Window, no cartesian") {
@@ -196,20 +217,13 @@ class PlanSpec extends AnyFunSuite with Matchers {
   }
 
   test("shortest-path round: partial-agg min-parent, no Window, no cartesian") {
-    // the BFS frontier expansion: equi-join + min-parent groupBy (map-side
-    // combine at in-degree hubs) + anti-join — same hub discipline as the
-    // other kernels
-    val e = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
-    val frontier = e.select(col("src").as("id")).distinct().limit(5)
-    val visited = frontier
-    val round = e.join(frontier.select(col("id").as("src")), Seq("src"))
-      .groupBy(col("dst").as("id")).agg(min(col("src")).as("parent"))
-      .join(visited.select("id"), Seq("id"), "left_anti")
-    val plan = physical(round)
-    plan should include("partial_min")
-    plan shouldNot include("Window")
-    plan shouldNot include("CartesianProduct")
+    // the BFS frontier expansion behind path, slice and the SCC reach:
+    // min-parent reduce combined map-side at in-degree hubs, the edge pin
+    // read through the zip — same hub discipline as the other kernels
+    val part = new HashPartitioner(4)
+    val e = lineitemHops(part)
+    val state = spark.sparkContext.parallelize(Seq(1L -> (1L, 0))).partitionBy(part)
+    assertRoundShape(graft.query.GraphAnalytics.bfsRound(e, state, 0, part), e, state)
   }
 
   test("triangle counts: equi-join wedge closure, no Window, no cartesian") {

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.canon.ConnectedComponents
-import graft.extract.{ExtractMetrics, Lit, PatternAutomaton, PatternRule, TripleExtractor}
+import graft.extract.{FlatDict, FlatRowEnc, Lit, PatternAutomaton, PatternRule, TripleExtractor}
 import graft.model.{GraphEdge, Ids, Page, Schema}
 import graft.store.TableIO
-import graft.util.Par
+import graft.util.{Materialize, Par}
 
 /** Rule-diff incremental recompute — the full G3 shape (≙ joern's
   * ArgumentTainter re-analyzing only affected functions and patching the
@@ -139,6 +139,7 @@ object Incremental {
       // no marker needed, and committing one would be a pointless snapshot
       if (!d.isEmpty)
         TableIO.appendBucketed(d, dir, col("id"), Map(marker -> 1L), numBuckets)
+      Materialize.release(d)
     }
     applied
   }
@@ -157,7 +158,9 @@ object Incremental {
       .agg(sum("n").as("n")).filter(col("n") =!= 0L)
       .localCheckpoint(true)
     swapWrite(folded, dir, col("id"), m.get.counters, numBuckets)
-    folded.count()
+    val n = folded.count()
+    Materialize.release(folded)
+    n
   }
 
   /** Entity-id remap lifted to the SAME_AS node-id space (merge-sized). */
@@ -165,7 +168,7 @@ object Incremental {
     import spark.implicits._
     r.as[(Long, Long)]
       .map { case (f, t) => (Ids.entityNodeId(f), Ids.entityNodeId(t)) }
-      .toDF("oldDst", "newDst").localCheckpoint(true)
+      .toDF("oldDst", "newDst")
   }
 
   private def applyEdgeRemap(e: DataFrame, remapNode: DataFrame): DataFrame =
@@ -178,7 +181,7 @@ object Incremental {
     * rows scatter by src hash). Returns the rewritten buckets. */
   private def rewriteStaleSameAs(spark: SparkSession, edgesDir: String,
                                  remap: DataFrame, numBuckets: Int): Set[Int] = {
-    val remapNode = nodeRemap(spark, remap)
+    val remapNode = nodeRemap(spark, remap).localCheckpoint(true)
     val stale = bucketsOf(TableIO.read(spark, edgesDir)
       .filter(col("kind") === Schema.EdgeKinds.SameAs)
       .join(broadcast(remapNode), col("dst") === col("oldDst"), "left_semi"), "src", numBuckets)
@@ -187,6 +190,7 @@ object Incremental {
       TableIO.rewriteBuckets(rewritten, edgesDir, col("src"), stale,
         numBuckets = numBuckets)
     }
+    Materialize.release(remapNode)
     stale
   }
 
@@ -244,6 +248,7 @@ object Incremental {
       else (rewriteStaleTriples(spark, s"$outDir/triples", r, rn, numBuckets),
         rewriteStaleSameAs(spark, s"$outDir/edges", r, numBuckets))
     TableIO.deleteRecursively(rd)
+    Materialize.release(r)
     folded
   }
 
@@ -312,6 +317,7 @@ object Incremental {
                                touchedN: Long, numBuckets: Int): Unit = {
     if (TableIO.readManifest(s"$outDir/nodes").isEmpty) return
     val meta = Map("ruleDiffTouchedBuckets" -> touchedN)
+    val pins = new Materialize.Pins
     val (newNodes, newEdges) =
       if (fullRebuild) (t.nodes, t.edges)
       else {
@@ -320,9 +326,9 @@ object Incremental {
         // stale = Triple nodes of the re-extracted pages, by old content ids
         val affectedPids = t.nodes.filter(col("kind") === "Page")
           .select(col("pageId")).distinct()
-        val staleIds = oldNodes.filter(col("kind") === "Triple")
+        val staleIds = pins(oldNodes.filter(col("kind") === "Triple")
           .join(affectedPids, Seq("pageId"), "left_semi")
-          .select(col("id")).localCheckpoint(true)
+          .select(col("id")))
         val pn = oldNodes.join(staleIds, Seq("id"), "left_anti")
           .unionByName(t.nodes.filter(col("kind") === "Triple"))
         // only SUBJ/OBJ edges have a Triple src, so one src anti-join drops
@@ -334,6 +340,7 @@ object Incremental {
       }
     swapWrite(newNodes, s"$outDir/nodes", col("id"), meta, numBuckets)
     swapWrite(newEdges, s"$outDir/edges", col("src"), meta, numBuckets)
+    pins.releaseAll()
   }
 
   /** Snapshot-swap rewrite (the tags-table pattern): stage into `.new`
@@ -425,7 +432,6 @@ object Incremental {
   def appendPages(spark: SparkSession, newPages: Dataset[Page], outDir: String,
                   nPersons: Int = 500, targetLang: String = "en",
                   rules: Seq[PatternRule] = PatternAutomaton.DefaultRules,
-                  canonBroadcastCutover: Long = Pipeline.CanonBroadcastCutover,
                   numBuckets: Int = TableIO.NumBuckets,
                   deferMergeRewrite: Boolean = false): AppendStats = {
     import spark.implicits._
@@ -452,18 +458,16 @@ object Incremental {
       newPages.toDF().withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn").as[Page]
     }
-    val gaz = spark.sparkContext.broadcast(Pipeline.defaultGazetteer(nPersons))
-    val auto = spark.sparkContext.broadcast(PatternAutomaton.compile(rules))
-    val metrics = new ExtractMetrics(spark)
-    val flatB = TripleExtractor
-      .extractFlat(dedupPages.filter($"lang" === targetLang), gaz, auto, metrics)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the build's extraction and kind-sorted encoded cache
+    val ex = TripleExtractor.flat(dedupPages.filter($"lang" === targetLang), nPersons, rules)
+    val flatBEnc = TripleExtractor.cached(ex.enc)
+    val flatB = ex.decode(flatBEnc)
     val batchCounters = Pipeline.flatCounters(flatB)
     val nBatch = batchCounters("pagesIn")
-    if (nBatch == 0L) { flatB.unpersist(false); return AppendStats(0, 0, 0, 0, 0, Nil) }
+    if (nBatch == 0L) { flatBEnc.unpersist(false); return AppendStats(0, 0, 0, 0, 0, Nil) }
 
-    val pageIds = flatB.filter($"rowKind" === "p")
-      .select($"pageId".as("id")).localCheckpoint(true)
+    val pins = new Materialize.Pins // released after the last chain is awaited
+    val pageIds = pins(flatB.filter($"rowKind" === "p").select($"pageId".as("id")))
 
     // ---- the AUTHORITATIVE batch-vs-corpus check, BEFORE anything commits:
     // Page nodes cover every ingested page (triple-url overlap would miss
@@ -481,30 +485,27 @@ object Incremental {
     // ---- merged canonical mapping (entity-sized CC, corpus-independent) ----
     val oldComponents = TableIO.read(spark, s"$outDir/components")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val newPairs = flatB.filter($"rowKind" === "t" && $"pred" === "same_as" && $"obj" >= 0)
-      .select($"subj".as("a"), $"obj".as("b")).distinct()
+    val newPairs = Pipeline.sameAsRows(flatB).select("a", "b").distinct()
     val havePairs = newPairs.limit(1).count() > 0
     val components2 =
       if (!havePairs) oldComponents
       else ConnectedComponents.auto(spark,
-        oldComponents.select($"id".as("a"), $"component".as("b")).unionByName(newPairs)
-          .localCheckpoint(true))
+        oldComponents.select($"id".as("a"), $"component".as("b")).unionByName(newPairs))
         .persist(StorageLevel.MEMORY_AND_DISK)
     // remap: old canonical value (root, or the raw id of a previously
     // unmapped singleton) → new root, where they differ. Merge-sized.
     val remap =
       if (!havePairs) Seq.empty[(Long, Long)].toDF("from", "to")
-      else components2
+      else pins(components2
         .join(oldComponents.withColumnRenamed("component", "oldC"), Seq("id"), "left")
         .select(coalesce($"oldC", $"id").as("from"), $"component".as("to"))
-        .filter($"from" =!= $"to").distinct().localCheckpoint(true)
+        .filter($"from" =!= $"to").distinct())
     val remapN = remap.count()
     // mapping rows the batch introduces — computed ONCE (stat + the fresh
     // SAME_AS edge source share it)
     val freshMapping =
       if (!havePairs) Seq.empty[(Long, Long)].toDF("id", "component")
-      else components2.join(oldComponents.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(true)
+      else pins(components2.join(oldComponents.select("id"), Seq("id"), "left_anti"))
     val newMappingRows = if (!havePairs) 0L else freshMapping.count()
 
     // ---- the three data tables are INDEPENDENT — patch them as concurrent
@@ -515,8 +516,8 @@ object Incremental {
     // ---- triples: rewrite merge-stale buckets, then append the batch ----
     val triplesDir = s"$outDir/triples"
     val triplesF = Par {
-    val triplesB = Pipeline.canonicalizeTriples(flatB, components2, canonBroadcastCutover)
-    val batchUrls = triplesB.select($"url").distinct().localCheckpoint(true)
+    val triplesB = Pipeline.canonicalizeTriples(flatB, components2)
+    val batchUrls = pins(triplesB.select($"url").distinct())
     val nUrls = batchUrls.count()
     val urlBuckets = bucketsOf(batchUrls, "url", numBuckets)
     // per-table resume detection (mixed batches were already rejected by the
@@ -592,7 +593,7 @@ object Incremental {
       // IS_PARENT_HOST rows are dimension edges (one per distinct host) —
       // like the dimension nodes, dedup against the buckets they hash into;
       // every other batch edge is page-scoped and cannot pre-exist
-      val ph = edgesB.filter(col("kind") === EK.IsParentHost).localCheckpoint(true)
+      val ph = pins(edgesB.filter(col("kind") === EK.IsParentHost))
       val phExisting = TableIO.read(spark, edgesDir,
         Some(bucketsOf(ph.select(col("src").as("s")), "s", numBuckets)))
         .filter(col("kind") === EK.IsParentHost).select("src", "dst")
@@ -612,8 +613,7 @@ object Incremental {
       val pageScoped = nodesB.filter(col("kind").isin(NK.Page, NK.Mention, NK.TripleN))
       // dimension rows (host/domain/entity universe ≪ corpus): dedup against
       // only the buckets the batch's ids hash into
-      val globals = nodesB.filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity))
-        .localCheckpoint(true)
+      val globals = pins(nodesB.filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity)))
       val gBuckets = bucketsOf(globals, "id", numBuckets)
       val existing = TableIO.read(spark, nodesDir, Some(gBuckets))
         .filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity)).select("id")
@@ -631,7 +631,7 @@ object Incremental {
     // are keyed (a, b, url), bucketed by a — the resume probe reads only the
     // batch pairs' buckets.
     val evDir = s"$outDir/sameas_evidence"
-    val evB = Pipeline.sameAsEvidence(flatB).localCheckpoint(true)
+    val evB = pins(Pipeline.sameAsEvidence(flatB))
     val nEv = evB.count()
     val evApplied =
       if (nEv == 0L) true
@@ -687,7 +687,8 @@ object Incremental {
       if (edgesApplied) Some("edges") else None,
       if (nodesApplied) Some("nodes") else None,
       if (evApplied) Some("sameas_evidence") else None).flatten
-    flatB.unpersist(false)
+    pins.releaseAll()
+    flatBEnc.unpersist(false)
     oldComponents.unpersist(false)
     if (havePairs) components2.unpersist(false)
     AppendStats(nBatch, newMappingRows, remapN,
@@ -769,7 +770,6 @@ object Incremental {
                   remaining: Dataset[Page], outDir: String,
                   nPersons: Int = 500, targetLang: String = "en",
                   rules: Seq[PatternRule] = PatternAutomaton.DefaultRules,
-                  canonBroadcastCutover: Long = Pipeline.CanonBroadcastCutover,
                   numBuckets: Int = TableIO.NumBuckets): RemoveStats = {
     import spark.implicits._
     import Schema.{EdgeKinds => EK}
@@ -787,35 +787,37 @@ object Incremental {
     def keepOrder(df: DataFrame, like: Seq[String]): DataFrame =
       df.select(like.map(col): _*)
 
-    val gaz = spark.sparkContext.broadcast(Pipeline.defaultGazetteer(nPersons))
-    val auto = spark.sparkContext.broadcast(PatternAutomaton.compile(rules))
-    val metrics = new ExtractMetrics(spark)
-    val flatR0 = TripleExtractor
-      .extractFlat(removedPages.filter($"lang" === targetLang), gaz, auto, metrics)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the build's extraction, cached encoded for the presence probe
+    val ex = TripleExtractor.flat(removedPages.filter($"lang" === targetLang), nPersons, rules)
+    val flatR0 = ex.enc.persist(StorageLevel.MEMORY_AND_DISK)
 
+    val pins = new Materialize.Pins // released after the last chain is awaited
     // presence anchor: restrict to pages actually IN the build
     val nodesDir = s"$outDir/nodes"
-    val batchPageIds = flatR0.filter($"rowKind" === "p").select($"pageId".as("id"))
-    val presentPages = TableIO.read(spark, nodesDir,
+    val batchPageIds = flatR0.filter(col("rowKind") === FlatDict.KindP)
+      .select($"pageId".as("id"))
+    val presentPages = pins(TableIO.read(spark, nodesDir,
         Some(bucketsOf(batchPageIds, "id", numBuckets)))
       .filter(col("kind") === Schema.NodeKinds.Page)
       .join(batchPageIds, Seq("id"), "left_semi")
-      .select(col("id").as("presentPid")).localCheckpoint(true)
+      .select(col("id").as("presentPid")))
     val nPresent = presentPages.count()
     if (nPresent == 0L) {
-      flatR0.unpersist(false); presentPages.unpersist(false)
+      flatR0.unpersist(false); pins.releaseAll()
       return RemoveStats(0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
     }
-    val flatR = flatR0.toDF()
-      .join(presentPages, flatR0("pageId") === col("presentPid"), "left_semi")
-      .as[graft.extract.FlatRow].persist(StorageLevel.MEMORY_AND_DISK)
+    // restricted on the ENCODED rows; every chain reads the cache's view
+    val flatREnc = TripleExtractor.cached(flatR0.toDF()
+      .join(presentPages, col("pageId") === col("presentPid"), "left_semi")
+      .as[FlatRowEnc])
+    val flatR = ex.decode(flatREnc)
     // the counter job also fills the flat cache every chain below reads
     val negCounters = Pipeline.flatCounters(flatR).map { case (k, v) => k -> -v }
+    flatR0.unpersist(false)
 
-    val pRows = flatR.filter($"rowKind" === "p")
-      .select($"pageId", $"url", $"host", $"hostId").localCheckpoint(true)
-    val urls = pRows.select("url").localCheckpoint(true)
+    val pRows = pins(flatR.filter($"rowKind" === "p")
+      .select($"pageId", $"url", $"host", $"hostId"))
+    val urls = pins(pRows.select("url"))
     val pageIds = pRows.select($"pageId".as("id"))
     val mentionIds = flatR.filter($"rowKind" === "m").select($"mentionId".as("id"))
     val tripleNodeIds = flatR.filter($"rowKind" === "t" && $"tripleNodeId" =!= 0L)
@@ -828,16 +830,14 @@ object Incremental {
       appendRefDeltas(spark, outDir,
         Pipeline.entityRefDeltas(flatR).select(col("id"), (-col("n")).as("n")),
         "takedown_" + batchTag(flatR.toDF()), numBuckets)
-      val entCand = flatR.filter($"rowKind" === "m" && $"entityId" >= 0)
-        .select($"entityId".as("id"), $"entityNodeId".as("e")).distinct()
-        .localCheckpoint(true)
+      val entCand = pins(flatR.filter($"rowKind" === "m" && $"entityId" >= 0)
+        .select($"entityId".as("id"), $"entityNodeId".as("e")).distinct())
       val liveIds = TableIO.read(spark, s"$outDir/entity_refcounts",
           Some(bucketsOf(entCand, "id", numBuckets)))
         .join(entCand.select("id"), Seq("id"), "left_semi")
         .groupBy("id").agg(sum($"n").as("n")).filter($"n" > 0)
         .select("id")
-      val deadEnts = entCand.join(liveIds, Seq("id"), "left_anti").select($"e")
-        .localCheckpoint(true)
+      val deadEnts = pins(entCand.join(liveIds, Seq("id"), "left_anti").select($"e"))
       (deadEnts, deadEnts.count())
     }
 
@@ -847,8 +847,7 @@ object Incremental {
     val evDir = s"$outDir/sameas_evidence"
     val compDir = s"$outDir/components"
     val splitF = Par {
-      val candPairs = flatR.filter($"rowKind" === "t" && $"pred" === "same_as" && $"obj" >= 0)
-        .select($"subj".as("a"), $"obj".as("b")).distinct().localCheckpoint(true)
+      val candPairs = pins(Pipeline.sameAsRows(flatR).select("a", "b").distinct())
       val deadPairsN =
         if (candPairs.isEmpty) 0L
         else {
@@ -868,15 +867,13 @@ object Incremental {
       if (deadPairsN == 0) Split(0L, null, null, 0L)
       else {
         val pairs = TableIO.read(spark, evDir).select($"a", $"b").distinct()
-          .localCheckpoint(true)
         val n = ConnectedComponents.auto(spark, pairs).persist(StorageLevel.MEMORY_AND_DISK)
         // removal only shrinks the pair set, so every id in the new mapping
         // exists in the old one: changed = old rows whose root moved or left
-        val ch = TableIO.read(spark, compDir)
+        val ch = pins(TableIO.read(spark, compDir)
           .join(n.withColumnRenamed("component", "newComp"), Seq("id"), "left")
           .filter(!($"component" <=> $"newComp"))
-          .select($"id", $"component".as("oldComp"), $"newComp")
-          .localCheckpoint(true)
+          .select($"id", $"component".as("oldComp"), $"newComp"))
         Split(deadPairsN, ch, n, ch.count())
       }
     }
@@ -888,18 +885,18 @@ object Incremental {
                     domBuckets: Set[Int], deadDoms: DataFrame, nDoms: Long)
     val edgesDir = s"$outDir/edges"
     val dimsF = Par {
-      val hostCand = pRows.select($"hostId".as("h")).distinct().localCheckpoint(true)
+      val hostCand = pins(pRows.select($"hostId".as("h")).distinct())
       val hostBuckets = bucketsOf(hostCand, "h", numBuckets)
       val liveHosts = TableIO.read(spark, edgesDir, Some(hostBuckets))
         .filter(col("kind") === EK.IsPageOf)
         .join(hostCand.withColumnRenamed("h", "src"), Seq("src"), "left_semi")
         .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
         .select($"src".as("h")).distinct()
-      val deadHosts = hostCand.join(liveHosts, Seq("h"), "left_anti").localCheckpoint(true)
+      val deadHosts = pins(hostCand.join(liveHosts, Seq("h"), "left_anti"))
       val nDeadHosts = deadHosts.count()
-      val domCand = Pipeline.hostDomainOf(pRows.toDF())
+      val domCand = pins(Pipeline.hostDomainOf(pRows.toDF())
         .join(deadHosts.withColumnRenamed("h", "hostId"), Seq("hostId"), "left_semi")
-        .select($"domainId".as("d")).distinct().localCheckpoint(true)
+        .select($"domainId".as("d")).distinct())
       if (nDeadHosts == 0) Dims(hostBuckets, deadHosts, 0L, Set.empty, domCand.limit(0), 0L)
       else {
         val domBuckets = bucketsOf(domCand, "d", numBuckets)
@@ -908,7 +905,7 @@ object Incremental {
           .join(domCand.withColumnRenamed("d", "src"), Seq("src"), "left_semi")
           .join(deadHosts.withColumnRenamed("h", "dst"), Seq("dst"), "left_anti")
           .select($"src".as("d")).distinct()
-        val deadDoms = domCand.join(liveDoms, Seq("d"), "left_anti").localCheckpoint(true)
+        val deadDoms = pins(domCand.join(liveDoms, Seq("d"), "left_anti"))
         Dims(hostBuckets, deadHosts, nDeadHosts, domBuckets, deadDoms, deadDoms.count())
       }
     }
@@ -927,11 +924,10 @@ object Incremental {
         else {
           val changedVals = broadcast(split.changed.select($"oldComp".as("v")).distinct())
           val t = TableIO.read(spark, triplesDir)
-          val aff = t
+          val aff = pins(t
             .join(changedVals, t("subj") === col("v") || t("obj") === col("v"), "left_semi")
             .select("url").distinct()
-            .join(urls, Seq("url"), "left_anti")
-            .localCheckpoint(true)
+            .join(urls, Seq("url"), "left_anti"))
           (aff, aff.count())
         }
       val buckets = (if (tripPresent) urlBuckets else Set.empty[Int]) ++
@@ -944,8 +940,8 @@ object Incremental {
           if (nAffected == 0) keep
           else {
             val affPages = remaining.join(affectedUrls, Seq("url"), "left_semi").as[Page]
-            val flatA = TripleExtractor.extractFlat(affPages, gaz, auto, metrics)
-            keep.unionByName(Pipeline.canonicalizeTriples(flatA, split.newC, canonBroadcastCutover))
+            val flatA = TripleExtractor.flat(affPages, nPersons, rules).view
+            keep.unionByName(Pipeline.canonicalizeTriples(flatA, split.newC))
           }
         // the batch's counters leave with its rows: a retry after this
         // commit finds no batch url and subtracts nothing again
@@ -957,8 +953,7 @@ object Incremental {
 
     // ---- edges: one combined rewrite over every touched bucket ----
     val edgesF = Par {
-      val srcIds = pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)
-        .distinct().localCheckpoint(true)
+      val srcIds = pins(pageIds.unionByName(mentionIds).unionByName(tripleNodeIds).distinct())
       val srcBuckets = bucketsOf(srcIds, "id", numBuckets)
       // the batch-presence probe needs nothing from B — it overlaps the
       // mapping refresh
@@ -969,8 +964,7 @@ object Incremental {
       val dims = Par.await(dimsF)
       val changedEntNodes =
         if (split.remapped == 0) null
-        else split.changed.select($"id").as[Long].map(Ids.entityNodeId).toDF("en")
-          .localCheckpoint(true)
+        else pins(split.changed.select($"id").as[Long].map(Ids.entityNodeId).toDF("en"))
       val edgeBuckets = srcBuckets ++ dims.hostBuckets ++ dims.domBuckets ++
         (if (changedEntNodes == null) Set.empty[Int]
          else bucketsOf(changedEntNodes, "en", numBuckets))
@@ -1023,19 +1017,19 @@ object Incremental {
     }
 
     // ---- nodes LAST: the presence anchor falls only when all else is done ----
-    val delNodeIds = pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)
+    val delNodeIds = pins(pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)
       .unionByName(dims.deadHosts.select($"h".as("id")))
       .unionByName(dims.deadDoms.select($"d".as("id")))
       .unionByName(deadEnts.select($"e".as("id")))
-      .distinct().localCheckpoint(true)
+      .distinct())
     val nodeBuckets = bucketsOf(delNodeIds, "id", numBuckets)
     val curN = TableIO.read(spark, nodesDir, Some(nodeBuckets))
     TableIO.rewriteBuckets(
       keepOrder(curN.join(delNodeIds, Seq("id"), "left_anti"), curN.columns),
       nodesDir, col("id"), nodeBuckets, negCounters, numBuckets)
 
-    flatR0.unpersist(false); flatR.unpersist(false)
-    presentPages.unpersist(false); delNodeIds.unpersist(false)
+    pins.releaseAll()
+    flatREnc.unpersist(false)
     if (split.newC != null) split.newC.unpersist(false)
     RemoveStats(nPresent, split.deadPairs, split.remapped, dims.nHosts, dims.nDoms,
       nDeadEnts, tripleBuckets.size, edgeBuckets.size, nodeBuckets.size, nAffected)

@@ -18,7 +18,7 @@ object Oracle {
       texts: Map[String, String])
 
   def run(cfg: PageGen.Config, targetLang: String = "en"): Result = {
-    val gaz = Pipeline.defaultGazetteer(cfg.nPersons)
+    val gaz = Gazetteer.default(cfg.nPersons)
     val auto = PatternAutomaton.compile(PatternAutomaton.DefaultRules)
 
     val uf = new UnionFind

@@ -24,10 +24,10 @@ import graft.util.Par
   *   4. connected components          — adaptive: driver union-find for small
   *                                      entity graphs, salted distributed
   *                                      label propagation at scale
-  *   5. canonical mapping applied     — BROADCAST join (mapping ≪ triples);
-  *                                      at 10^12-doc scale where the entity
-  *                                      table outgrows broadcast, the salted
-  *                                      shuffle-join path takes over
+  *   5. canonical mapping applied     — BROADCAST join while the mapping
+  *                                      (≪ triples) is under Spark's
+  *                                      threshold; a shuffle join (AQE
+  *                                      skew handling) once it outgrows it
   *   6. materialize                   — bucket-repartitioned writes (one task
   *                                      per bucket), manifest commit,
   *                                      per-bucket lineage counters
@@ -42,21 +42,8 @@ object Pipeline {
       edges: DataFrame,               // GraphEdge rows
       metrics: ExtractMetrics)
 
-  def defaultGazetteer(nPersons: Int): Gazetteer =
-    Gazetteer.build(KB.aliasEntries(nPersons).map(e => (e.alias, e.entityId, e.prior)))
-
-  /** Above this many canonical-mapping rows the broadcast join is demoted to
-    * a plain shuffle join: at 10^12-doc scale the entity component map
-    * outgrows the driver/broadcast budget, and a forced broadcast would kill
-    * the job exactly when it matters. Mirrors ConnectedComponents.auto's
-    * probe-then-pick-strategy adaptivity (same logical result either way —
-    * tested by the forced-cutover pipeline test). ~8M rows × 16B ≈ 128 MB
-    * broadcast, a safe executor budget. */
-  val CanonBroadcastCutover: Long = 8000000L
-
   def run(spark: SparkSession, pages: Dataset[Page], nPersons: Int = 500,
           targetLang: String = "en",
-          canonBroadcastCutover: Long = CanonBroadcastCutover,
           rules: Seq[PatternRule] = PatternAutomaton.DefaultRules,
           // rule-diff incremental recompute (G3): when a restricted page set
           // is re-extracted, the GLOBAL canonical mapping must come from the
@@ -65,95 +52,55 @@ object Pipeline {
           precomputedComponents: Option[DataFrame] = None): Tables = {
     import spark.implicits._
 
-    val g = defaultGazetteer(nPersons)
-    val a = PatternAutomaton.compile(rules)
-    val gaz = spark.sparkContext.broadcast(g)
-    val auto = spark.sparkContext.broadcast(a)
-    val metrics = new ExtractMetrics(spark)
-
     // 1-2: language predicate BEFORE the expensive mapPartitions (the
     // necessary-condition prefilter shape, joern `queryTemplate.groovy:36-50`).
     // The CACHED frame is the dictionary-ENCODED shape (FlatRowEnc: rowKind/
     // pred/norm/label as small ints — the flat cache is re-scanned by every
     // downstream stage and the 2→8 probes pinned its plateau on DRAM
-    // bandwidth); `flat` is a decode VIEW restoring the exact historical
-    // schema, so all consumers are unchanged and decode cost is CPU at the
-    // consuming projection, not resident bytes.
-    // KIND-SORTED cache batches: a page emits its p/m/e/t rows interleaved,
-    // so every 10k-row cached batch would hold every rowKind and no
-    // kind-restricted consumer could skip anything. Locally sorting on
-    // (rowKind, pred) before the persist makes batches kind-homogeneous
-    // (and clusters same_as inside the "t" run), so the columnar cache's
-    // per-batch min/max stats let InMemoryTableScanExec drop foreign-kind
-    // batches wholesale — the decode-view filters are folded back onto the
-    // int codes by DictDecodeFilterRewrite, which is what makes them
-    // stat-prunable in the first place. One local sort per partition at
-    // build, zero shuffle.
-    val flatEnc = TripleExtractor
-      .extractFlatEnc(pages.filter($"lang" === targetLang), gaz, auto, metrics)
-      .sortWithinPartitions($"rowKind", $"pred")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val predDict = spark.sparkContext.broadcast(a.preds)
-    val aliasDict = spark.sparkContext.broadcast(g.aliasArr)
-    val kindDict = spark.sparkContext.broadcast(FlatDict.RowKinds)
-    val labelDict = spark.sparkContext.broadcast(FlatDict.Labels)
-    val flat = TripleExtractor.decodeFlat(flatEnc, predDict, aliasDict,
-      kindDict, labelDict)
+    // bandwidth), kind-sorted (TripleExtractor.cached); `flat` is a decode
+    // VIEW restoring the exact historical schema, so all consumers are
+    // unchanged and decode cost is CPU at the consuming projection, not
+    // resident bytes.
+    val ex = TripleExtractor.flat(pages.filter($"lang" === targetLang), nPersons, rules)
+    val flatEnc = TripleExtractor.cached(ex.enc)
+    val flat = ex.decode(flatEnc)
 
     // 3: same-as edges (entity-id pairs) — the canonicalization input.
     // distinct() first: shrinks the edge multiset to the entity-pair set
     // distributed-side (partial-agg), so the adaptive-CC probe collects
-    // thousands of pairs, not millions of occurrences. Filters run on the
-    // CODES (byte/int compares against the encoded cache, no decode).
-    val sameAsCode = a.predIdx.getOrElse("same_as", -1)
-    // idB/idC carry subj/obj on "t" rows (FlatRowEnc overlay)
-    val sameAs = flatEnc
-      .filter($"rowKind" === FlatDict.KindT && $"pred" === sameAsCode && $"idC" >= 0)
-      .select($"idB".as("a"), $"idC".as("b")).distinct()
+    // thousands of pairs, not millions of occurrences.
+    val sameAs = sameAsRows(flat).select("a", "b").distinct()
 
     // 4: global fixpoint (adaptive: driver union-find under the cutover,
     // salted distributed label propagation above it — identical results).
-    // The distinct pair set is eagerly materialized ONCE (localCheckpoint):
-    // auto's strategy probe and the chosen path each act on sameAs, and
-    // without the checkpoint each action re-ran the flat scan + distinct
-    // shuffle — core-count-invariant serial drag on every bench leg. Inside
-    // getOrElse so a precomputed mapping (rule-diff incremental) never
-    // forces extraction just to build an unused edge set. Materialize.pin:
-    // a reliable checkpoint when the cluster fault interval is configured
-    // (the CC fixpoint's whole input must survive executor loss), the same
-    // localCheckpoint as before otherwise.
+    // Inside getOrElse so a precomputed mapping (rule-diff incremental)
+    // never forces extraction just to build an unused edge set.
     val components = precomputedComponents.getOrElse(
-      ConnectedComponents.auto(spark, graft.util.Materialize.pin(sameAs))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+      ConnectedComponents.auto(spark, sameAs).persist(StorageLevel.MEMORY_AND_DISK))
 
-    val triples = canonicalizeTriples(flat, components, canonBroadcastCutover)
+    val triples = canonicalizeTriples(flat, components)
 
     // 6: property-graph tables (SURVEY.md §1.4) — all pure column ops over
     // the flat cache (≙ nodes.csv / edges.csv emission)
     val (nodes, edges) = graphTables(spark, flat, components)
 
-    Tables(flat, flatEnc.toDF(), components, triples, nodes, edges, metrics)
+    Tables(flat, flatEnc.toDF(), components, triples, nodes, edges, ex.metrics)
   }
 
   /** Canonicalize the extracted triples with a (id, component) mapping —
-    * stage 5. The mapping is bounded by the entity universe (≪ triple count)
-    * → broadcast map-side join while it fits; past the cutover the broadcast
-    * hint is DROPPED and the join shuffles on the entity key (AQE handles
-    * residual skew) — the mapping-outgrows-broadcast failure mode at 10^12
-    * docs is handled, not hoped away. The count is one cheap job over the
-    * already-persisted (id, component) frame. */
-  def canonicalizeTriples(flat: Dataset[FlatRow], components: DataFrame,
-                          canonBroadcastCutover: Long = CanonBroadcastCutover): DataFrame = {
+    * stage 5. The mapping is bounded by the entity universe (≪ triple
+    * count), so Spark's size-based join selection broadcasts it while it is
+    * under `spark.sql.autoBroadcastJoinThreshold`; past that the join
+    * shuffles on the entity key, and AQE re-plans from runtime sizes and
+    * handles residual skew. No probe job decides the strategy. */
+  def canonicalizeTriples(flat: Dataset[FlatRow], components: DataFrame): DataFrame = {
     import flat.sparkSession.implicits._
     val rawTriples = flat.filter($"rowKind" === "t" && $"pred" =!= "same_as")
       .select($"subj", $"pred", $"obj", $"objValue", $"url", $"conf")
-    val canonMap =
-      if (components.count() <= canonBroadcastCutover) broadcast(components)
-      else components
     rawTriples
-      .join(canonMap.withColumnRenamed("id", "subj").withColumnRenamed("component", "subjCanon"),
+      .join(components.withColumnRenamed("id", "subj").withColumnRenamed("component", "subjCanon"),
         Seq("subj"), "left")
-      .join(canonMap.withColumnRenamed("id", "obj").withColumnRenamed("component", "objCanon"),
+      .join(components.withColumnRenamed("id", "obj").withColumnRenamed("component", "objCanon"),
         Seq("obj"), "left")
       .select(
         coalesce($"subjCanon", $"subj").as("subj"),
@@ -339,13 +286,19 @@ object Pipeline {
     counters
   }
 
-  /** Same-as evidence rows (a, b, url) from a flat frame — ONE projection
-    * shared by materialize, appendPages and the same_as rule-diff refresh,
-    * so the sidecar can never drift from what a rebuild would write. */
-  private[graft] def sameAsEvidence(flat: Dataset[FlatRow]): DataFrame =
+  /** Same-as pair occurrences (a, b, url) of a flat frame — the ONE filter
+    * behind the CC input, the evidence sidecar and the increments' pair
+    * sets, so none of them can drift from what a rebuild derives. Over the
+    * decode view, DictDecodeFilterRewrite folds the kind and pred tests onto
+    * the int codes of the encoded cache. */
+  private[graft] def sameAsRows(flat: Dataset[FlatRow]): DataFrame =
     flat.filter(col("rowKind") === "t" && col("pred") === "same_as" && col("obj") >= 0)
       .select(col("subj").as("a"), col("obj").as("b"), col("url"))
-      .dropDuplicates("a", "b", "url")
+
+  /** Same-as evidence rows (a, b, url), one per distinct occurrence —
+    * written by materialize, appendPages and the same_as rule-diff refresh. */
+  private[graft] def sameAsEvidence(flat: Dataset[FlatRow]): DataFrame =
+    sameAsRows(flat).dropDuplicates("a", "b", "url")
 
   /** Per-entity mention counts from a flat frame: (id = raw entityId, n).
     * The entity_refcounts DELTA LOG's row source — the full build writes one

@@ -29,6 +29,10 @@ object Queries {
     else if (sfDir.contains("sf1")) 200000 // sf1-class basis (ScaleUpData dir)
     else 500
 
+  /** Above this many pages (a ~128 MB page dim) kg_mentions drops its
+    * broadcast hint; the corpus size is config-known, so no job decides. */
+  val PageDimBroadcastCutover: Long = 8000000L
+
   // --- KG pipeline, cached so several queries share one build. SINGLE-slot:
   // an unbounded map keyed by session hash would pin persisted frames of
   // stopped sessions forever in a long-lived JVM
@@ -150,16 +154,15 @@ object Queries {
     // the flat frame carries url only on "p"/"t" rows (cache byte
     // discipline); the mention view joins it back via pageId — the page dim
     // is |pages|-sized, orders of magnitude under the mention stream it
-    // annotates, so it broadcasts while it fits; past the same cutover the
-    // canonical-map join uses (the 10^12-doc regime where a |pages|-row
+    // annotates, so it broadcasts while it fits; past
+    // PageDimBroadcastCutover (the 10^12-doc regime where a |pages|-row
     // broadcast would kill the driver) the hint is dropped and the join
-    // shuffles on pageId. The corpus size is config-known driver-side —
-    // no probe job needed
+    // shuffles on pageId
     "kg_mentions" -> ((s, d) => {
       val t = kg(s, d)
       val pageUrl = t.flat.filter(col("rowKind") === "p").select(col("pageId"), col("url"))
       val pageDim =
-        if (kgPages(d) <= Pipeline.CanonBroadcastCutover)
+        if (kgPages(d) <= PageDimBroadcastCutover)
           org.apache.spark.sql.functions.broadcast(pageUrl)
         else pageUrl
       t.flat.filter(col("rowKind") === "m")

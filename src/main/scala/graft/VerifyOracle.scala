@@ -164,7 +164,7 @@ object VerifyOracle {
 
     // ---- KG pipeline leaves: sequential loop over the same corpus ----
     val cfg = PageGen.Config(nPages = Queries.kgPages(sfDir))
-    val gaz = Pipeline.defaultGazetteer(cfg.nPersons)
+    val gaz = Gazetteer.default(cfg.nPersons)
     val auto = PatternAutomaton.compile(PatternAutomaton.DefaultRules)
     val uf = new LocalUnionFind
     // takedown-oracle twins: kg_remove_triples removes the corpus tail

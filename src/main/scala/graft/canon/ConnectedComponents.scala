@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.util.Materialize
+
 /** Iterative connected components over the entity same-as graph —
   * the global canonicalization fixpoint (north rule: "iterative
   * connected-components, hash-join label propagation, salted to kill skew").
@@ -42,21 +44,26 @@ object ConnectedComponents {
     * distributed path takes over. */
   val LocalCutover = 2000000L
 
-  /** Strategy-adaptive CC: identical output on either path (tested). */
+  /** Strategy-adaptive CC: identical output on either path (tested). The
+    * probe and the chosen path share one pin of the input; neither path's
+    * result reads it (a driver-built relation, a checkpointed round). */
   def auto(spark: SparkSession, edges: DataFrame,
            cutover: Long = LocalCutover): DataFrame = {
     import spark.implicits._
-    val e = edges.toDF("a", "b").filter($"a" =!= $"b")
+    val e = Materialize.pin(edges.toDF("a", "b").filter($"a" =!= $"b"))
     // bounded COUNT decides the strategy without shipping rows — collecting
     // cutover+1 pairs (~32 MB) to the driver just to discard them on the
     // distributed path coupled the cutover constant to driver memory; only
     // the genuinely-small path pulls data (≤ cutover rows by the probe)
     val probeCount = e.limit((cutover + 1).toInt).count()
-    if (probeCount <= cutover) {
-      val uf = new LocalUnionFind
-      e.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
-      uf.components.toSeq.toDF("id", "component")
-    } else run(spark, edges)
+    val out =
+      if (probeCount <= cutover) {
+        val uf = new LocalUnionFind
+        e.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
+        uf.components.toSeq.toDF("id", "component")
+      } else run(spark, e)
+    Materialize.release(e)
+    out
   }
 
   /** Driver-side union-find with path compression (the small-graph path and
@@ -102,6 +109,9 @@ object ConnectedComponents {
       .withColumn("label", $"id")
       .repartition($"id")
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // the frame `labels` projects: the superseded round's materialization
+    // is released through it (a checkpointed frame ignores unpersist)
+    var pinned: DataFrame = labels
 
     var iter = 0
     var converged = false
@@ -132,7 +142,7 @@ object ConnectedComponents {
       // spark.graft.reliableCheckpointInterval is set — cluster fault story);
       // it truncates lineage and preserves the id-hash partitioning, and the
       // changed-count then reads the materialized blocks
-      val newLabels = graft.util.Materialize.iterate(
+      val newLabels = Materialize.iterate(
         prop.join(jump, Seq("label"), "left")
           .select($"id", $"old",
             least($"label", coalesce($"label2", $"label")).as("label"))
@@ -140,9 +150,9 @@ object ConnectedComponents {
           .drop("old")
           .repartition($"id"), iter)
       val changed = newLabels.filter($"changed").count() // ≙ DDGCreator's changedNodes
-      val old = labels
+      Materialize.release(pinned)
+      pinned = newLabels
       labels = newLabels.drop("changed")
-      old.unpersist(false)
       converged = changed == 0
       iter += 1
     }

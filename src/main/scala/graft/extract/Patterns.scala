@@ -105,6 +105,10 @@ object Gazetteer {
     var terminal: String = null
   }
 
+  /** The gazetteer of [[graft.model.KB.aliasEntries]]`(nPersons)`. */
+  def default(nPersons: Int): Gazetteer =
+    build(graft.model.KB.aliasEntries(nPersons).map(e => (e.alias, e.entityId, e.prior)))
+
   /** Build from (alias, entityId, prior) entries. */
   def build(entries: Iterable[(String, Long, Double)]): Gazetteer = {
     val root = new TrieNode

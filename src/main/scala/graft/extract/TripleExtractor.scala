@@ -2,6 +2,7 @@ package graft.extract
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
 import graft.model._
@@ -192,6 +193,14 @@ final class ExtractMetrics(spark: SparkSession) extends Serializable {
     spark.sparkContext.longAccumulator("overlayLost")
 }
 
+/** One distributed extraction ([[TripleExtractor.flat]]). `decode` is the
+  * [[FlatRow]] view over `enc` or any row-for-row copy of it (cached, joined). */
+final case class Extraction(enc: Dataset[FlatRowEnc], metrics: ExtractMetrics,
+                            decode: Dataset[FlatRowEnc] => Dataset[FlatRow]) {
+  /** The decode view over the unsorted, unpersisted frame. */
+  def view: Dataset[FlatRow] = decode(enc)
+}
+
 /** The local half of the pipeline: HTML→text → sentences → mentions →
   * pattern matches → page-locally linked triples, all inside ONE
   * `mapPartitions` with broadcast-compiled rules. No shuffle happens here —
@@ -227,26 +236,41 @@ object TripleExtractor {
     ex
   }
 
-  /** Flat-row extraction: same per-page pure function, rows out immediately. */
-  def extractFlat(
-      pages: Dataset[Page],
-      gaz: Broadcast[Gazetteer],
-      rules: Broadcast[PatternAutomaton],
-      metrics: ExtractMetrics): Dataset[FlatRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.mapPartitions { it =>
-      val g = gaz.value
-      val auto = rules.value
-      it.flatMap(p => toFlatRows(extractCounted(p, g, auto, metrics), metrics))
-    }
+  /** The one distributed extraction — build, increments, streams and probes
+    * alike (≙ the reference's one exporter chain, `FunctionDatabaseNode.
+    * initialize` → `CSVWriterImpl`). Owns the broadcasts, the metrics, the
+    * encode and the decode dictionaries. */
+  def flat(pages: Dataset[Page], nPersons: Int,
+           rules: Seq[PatternRule] = PatternAutomaton.DefaultRules): Extraction = {
+    val sc = pages.sparkSession.sparkContext
+    val g = Gazetteer.default(nPersons)
+    val a = PatternAutomaton.compile(rules)
+    val metrics = new ExtractMetrics(pages.sparkSession)
+    val enc = extractFlatEnc(pages, sc.broadcast(g), sc.broadcast(a), metrics)
+    val preds = sc.broadcast(a.preds)
+    val aliases = sc.broadcast(g.aliasArr)
+    val kinds = sc.broadcast(FlatDict.RowKinds)
+    val labels = sc.broadcast(FlatDict.Labels)
+    Extraction(enc, metrics, decodeFlat(_, preds, aliases, kinds, labels))
   }
 
-  /** Dictionary-encoded flat extraction — the variant the PIPELINE caches
-    * ([[FlatRowEnc]] motivation). Same per-page pure function, then a total
-    * per-row encode against the broadcast vocabularies (two hash lookups on
-    * mention/triple rows — noise next to extraction itself). */
-  def extractFlatEnc(
+  /** The encoded frame as batch callers cache it: persisted, KIND-SORTED.
+    * A page emits its p/m/e/t rows interleaved; a local (rowKind, pred) sort
+    * makes cached batches kind-homogeneous, so their min/max stats let the
+    * cache scan skip foreign-kind batches for the view's filters (folded
+    * onto the codes by DictDecodeFilterRewrite). Zero shuffle. Streams read
+    * [[Extraction.view]]: a streaming Dataset rejects a Sort. */
+  def cached(enc: Dataset[FlatRowEnc]): Dataset[FlatRowEnc] = {
+    import org.apache.spark.sql.functions.col
+    enc.sortWithinPartitions(col("rowKind"), col("pred"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Dictionary-encoded flat extraction ([[FlatRowEnc]] motivation): the
+    * per-page pure function, then a total per-row encode against the
+    * broadcast vocabularies (two hash lookups on mention/triple rows —
+    * noise next to extraction itself). */
+  private def extractFlatEnc(
       pages: Dataset[Page],
       gaz: Broadcast[Gazetteer],
       rules: Broadcast[PatternAutomaton],
@@ -318,7 +342,7 @@ object TripleExtractor {
     * dictionary lookups evaluated where a consumer's plan actually reads the
     * column (Catalyst prunes the unused ones), so the persisted frame under
     * this view stays int-coded. */
-  def decodeFlat(enc: Dataset[FlatRowEnc],
+  private def decodeFlat(enc: Dataset[FlatRowEnc],
                  preds: Broadcast[Array[String]],
                  aliases: Broadcast[Array[String]],
                  kinds: Broadcast[Array[String]],

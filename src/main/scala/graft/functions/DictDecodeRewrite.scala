@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * mapping the literal through the dictionary at plan time turns the
   * predicate into a plain `code = k` integer comparison: codegen-cheap, and
   * batch-stat prunable (the cache is written kind-sorted, so foreign-kind
-  * batches are skipped wholesale — see TripleExtractor.extractFlatEnc).
+  * batches are skipped wholesale — see TripleExtractor.cached).
   *
   * Scope and null discipline: only conjuncts at the TOP of a Filter
   * condition are rewritten — there `null` and `false` both drop the row, so

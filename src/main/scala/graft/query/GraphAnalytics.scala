@@ -674,7 +674,7 @@ object GraphAnalytics {
   /** Above this many visited nodes the backtrack falls back to per-hop
     * lookups instead of one driver-side collect (~64 MB of (id, parent)
     * longs at the cap — the same driver-budget argument as
-    * Pipeline.CanonBroadcastCutover). */
+    * Queries.PageDimBroadcastCutover). */
   val BacktrackCollectCap: Long = 4000000L
 
   /** Deterministic shortest path between two entities over the directed,

@@ -556,21 +556,25 @@ object TableIO {
     val listed: Seq[String] =
       m.files.toSeq.filter { case (b, _) => visible.contains(b) }
         .flatMap { case (b, fs) => fs.map(f => bucketFilePath(dir, b, f).toString) }
+    // the stamped schema spares every read a parquet schema-inference job
+    val stamped = stampedSchema(dir)
     val df =
       if (listed.nonEmpty)
-        spark.read.option("basePath", s"$dir/data").parquet(listed: _*)
+        stamped.fold(spark.read)(spark.read.schema(_))
+          .option("basePath", s"$dir/data").parquet(listed: _*)
       else if (m.files.isEmpty && hasDataFiles(dir)) spark.read.parquet(s"$dir/data")
-      else {
-        val js = Paths.get(dir, "_schema.json")
-        if (Files.exists(js)) {
-          val schema = org.apache.spark.sql.types.DataType
-            .fromJson(new String(Files.readAllBytes(js), StandardCharsets.UTF_8))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        } else spark.read.parquet(s"$dir/_schema")
-      }
+      else stamped.fold(spark.read.parquet(s"$dir/_schema"))(
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), _))
     df.filter(col("bucket").isin(visible.toSeq: _*)).drop("bucket")
+  }
+
+  /** The schema stamped on a table's first write (`_schema.json`), if any. */
+  private def stampedSchema(dir: String): Option[org.apache.spark.sql.types.StructType] = {
+    val js = Paths.get(dir, "_schema.json")
+    if (!Files.exists(js)) None
+    else Some(org.apache.spark.sql.types.DataType
+      .fromJson(new String(Files.readAllBytes(js), StandardCharsets.UTF_8))
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
   // one Configuration for all footer reads — construction parses the

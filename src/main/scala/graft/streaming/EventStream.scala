@@ -142,22 +142,16 @@ object EventStream {
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Streaming triple extraction: the SAME `extractFlat` operator the batch
-    * pipeline uses, applied to a stream of pages — it is a stateless
-    * mapPartitions, so it lifts to streaming unchanged (append mode, no
-    * state). NOTE this view selects the TRIPLE rows only: failed pages are
-    * visible in the metrics accumulators, and a consumer that needs the
-    * per-page error rows should run `extractFlat` itself and keep the
-    * rowKind = "p" rows alongside. */
+  /** Streaming triple extraction: the build's `TripleExtractor.flat`, read
+    * through its unsorted view (a stateless mapPartitions and a projection,
+    * so it lifts to streaming unchanged: append mode, no state). NOTE this
+    * selects the TRIPLE rows only: failed pages are visible in the metrics
+    * accumulators, and a consumer that needs the per-page error rows should
+    * read the view itself and keep the rowKind = "p" rows alongside. */
   def streamingTriples(spark: SparkSession, pages: DataFrame,
                        nPersons: Int = 500): DataFrame = {
     import spark.implicits._
-    val gaz = spark.sparkContext.broadcast(graft.Pipeline.defaultGazetteer(nPersons))
-    val auto = spark.sparkContext.broadcast(
-      graft.extract.PatternAutomaton.compile(graft.extract.PatternAutomaton.DefaultRules))
-    val metrics = new graft.extract.ExtractMetrics(spark)
-    graft.extract.TripleExtractor
-      .extractFlat(pages.as[graft.model.Page], gaz, auto, metrics)
+    graft.extract.TripleExtractor.flat(pages.as[graft.model.Page], nPersons).view
       .filter($"rowKind" === "t" && $"pred" =!= "same_as")
       .select($"subj", $"pred", $"obj", $"objValue", $"url", $"conf")
   }

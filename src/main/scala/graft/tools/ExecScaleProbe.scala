@@ -63,14 +63,9 @@ object ExecScaleProbe {
     * flat-row count as the work unit. */
   private def runExtractOnce(spark: SparkSession, pagesDir: String): (Long, Double) = {
     import spark.implicits._
-    val gaz = spark.sparkContext.broadcast(Pipeline.defaultGazetteer(500))
-    val auto = spark.sparkContext.broadcast(
-      graft.extract.PatternAutomaton.compile(graft.extract.PatternAutomaton.DefaultRules))
-    val metrics = new graft.extract.ExtractMetrics(spark)
     val t0 = System.nanoTime()
     val n = graft.extract.TripleExtractor
-      .extractFlatEnc(spark.read.parquet(pagesDir).as[Page].filter($"lang" === "en"),
-        gaz, auto, metrics)
+      .flat(spark.read.parquet(pagesDir).as[Page].filter($"lang" === "en"), 500).enc
       .count()
     val sec = (System.nanoTime() - t0) / 1e9
     (n, sec)

@@ -447,19 +447,16 @@ object KgCli {
     val schema = spark.read.parquet(pagesDir).schema
     val outDir = java.nio.file.Files.createTempDirectory("graft-stream-emb").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-emb").toString
-    val gaz = spark.sparkContext.broadcast(graft.Pipeline.defaultGazetteer(500))
-    val auto = spark.sparkContext.broadcast(
-      graft.extract.PatternAutomaton.compile(graft.extract.PatternAutomaton.DefaultRules))
-    val metrics = new graft.extract.ExtractMetrics(spark)
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+    val pages = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(pagesDir)
       .select(col("url"), col("warc_ts").cast("timestamp").as("warc_ts"),
         col("html"), col("text"), col("lang"))
+      .filter(col("lang") === "en")
       .as[graft.model.Page]
+    // the build's extraction over the stream, read through the unsorted view
+    val q = graft.extract.TripleExtractor.flat(pages, 500).view.toDF()
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.Page], _: Long) =>
-        val flat = graft.extract.TripleExtractor
-          .extractFlat(batch.filter(col("lang") === "en"), gaz, auto, metrics).toDF()
+      .foreachBatch { (flat: DataFrame, _: Long) =>
         val bags = flat.filter(col("rowKind") === "m")
           .select(col("pageId"), col("surface").as("code"))
           .unionByName(flat

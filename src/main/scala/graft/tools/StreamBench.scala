@@ -18,8 +18,8 @@ import graft.util.Sessions
   *    expected session count is exact) through flatMapGroupsWithState via
   *    MemoryStream in ~10 micro-batches. Reports events/sec and the session
   *    count (must equal nEvents/50 after the far-future flush sentinel).
-  * 2. Streaming extraction: the SAME extractFlat operator the batch pipeline
-  *    uses, over a FILE-SOURCE page stream (PageGen corpus parquet split
+  * 2. Streaming extraction: the build's extraction (`TripleExtractor.flat`,
+  *    read through its unsorted decode view), over a FILE-SOURCE page stream (PageGen corpus parquet split
   *    into files, maxFilesPerTrigger=1 → real micro-batches), counted via
   *    foreachBatch (no driver materialization). Reports pages/sec and
   *    triples emitted, next to the batch wall on the identical corpus.

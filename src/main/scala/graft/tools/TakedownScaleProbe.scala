@@ -43,7 +43,7 @@ object TakedownScaleProbe {
 
     val minSize = sizes.min
     val cfg0 = PageGen.Config(nPages = minSize)
-    val gaz = Pipeline.defaultGazetteer(cfg0.nPersons)
+    val gaz = graft.extract.Gazetteer.default(cfg0.nPersons)
     val auto = PatternAutomaton.compile(PatternAutomaton.DefaultRules)
     val batchIdx = Iterator.range(minSize - 20000, minSize)
       .map(_.toLong)
@@ -140,7 +140,7 @@ object TakedownScaleProbe {
 
     // batch = the evidence pages + same-as-free base padding (constant size,
     // same set at every corpus size)
-    val gaz = Pipeline.defaultGazetteer(gazPersons)
+    val gaz = graft.extract.Gazetteer.default(gazPersons)
     val auto = PatternAutomaton.compile(PatternAutomaton.DefaultRules)
     val padIdx = Iterator.range(math.max(minSize - 20000, 0), minSize)
       .map(_.toLong)

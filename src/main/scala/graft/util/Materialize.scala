@@ -74,6 +74,21 @@ object Materialize {
     case _ => df.unpersist(blocking = false)
   }
 
+  /** One operation's eager localCheckpoints, released together once no job
+    * reads them. Thread-safe: concurrent `Par` chains pin into one set. */
+  final class Pins {
+    private val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    def apply(df: DataFrame): DataFrame = {
+      val p = df.localCheckpoint(eager = true)
+      held.add(p)
+      p
+    }
+    def releaseAll(): Unit = {
+      var p = held.poll()
+      while (p != null) { release(p); p = held.poll() }
+    }
+  }
+
   /** Materialize iteration `iter`'s frame eagerly; reliable checkpoint on
     * every Nth iteration when the interval is configured, recomputable
     * persist on the iterations in between, lineage-severing localCheckpoint

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.extract._
 import graft.model._
 
-/** The dictionary-encoded flat cache (FlatRowEnc + decodeFlat) must be a
-  * BIT-EXACT round trip of the historical string frame: every downstream
+/** The dictionary-encoded flat cache (FlatRowEnc + its decode view) must be
+  * a BIT-EXACT round trip of the per-page string rows: every downstream
   * consumer — the driver's 99 oracled entries included — reads through the
   * decode view, so any divergence here is a silent corpus-wide corruption. */
 class EncodedFlatSpec extends AnyFunSuite with Matchers {
@@ -21,31 +21,25 @@ class EncodedFlatSpec extends AnyFunSuite with Matchers {
     PageGen.pages(spark, cfg).filter($"lang" === "en")
   }
 
-  test("decodeFlat(extractFlatEnc) == extractFlat, row for row, null for null") {
+  test("the decoded extraction == toFlatRows(extractPage), row for row, null for null") {
     val pages = corpus(400)
-    val g = Pipeline.defaultGazetteer(500)
+    val g = Gazetteer.default(500)
     val a = PatternAutomaton.compile(PatternAutomaton.DefaultRules)
-    val gaz = spark.sparkContext.broadcast(g)
-    val auto = spark.sparkContext.broadcast(a)
-    val m1 = new ExtractMetrics(spark)
-    val m2 = new ExtractMetrics(spark)
+    def byKey(rows: Array[FlatRow]) =
+      rows.sortBy(r => (r.pageId, r.rowKind, r.mentionId, r.subj, r.obj, String.valueOf(r.pred)))
 
-    val want = TripleExtractor.extractFlat(pages, gaz, auto, m1)
-      .collect().sortBy(r => (r.pageId, r.rowKind, r.mentionId, r.subj, r.obj, String.valueOf(r.pred)))
-    val enc = TripleExtractor.extractFlatEnc(pages, gaz, auto, m2)
-    val got = TripleExtractor.decodeFlat(enc,
-        spark.sparkContext.broadcast(a.preds),
-        spark.sparkContext.broadcast(g.aliasArr),
-        spark.sparkContext.broadcast(FlatDict.RowKinds),
-        spark.sparkContext.broadcast(FlatDict.Labels))
-      .collect().sortBy(r => (r.pageId, r.rowKind, r.mentionId, r.subj, r.obj, String.valueOf(r.pred)))
+    // the reference: the driver-side pure per-page function, page by page
+    val want = byKey(pages.collect()
+      .flatMap(p => TripleExtractor.toFlatRows(TripleExtractor.extractPage(p, g, a))))
+    val ex = TripleExtractor.flat(pages, 500)
+    val got = byKey(ex.view.collect())
 
     got.length shouldBe want.length
     got.zip(want).foreach { case (g0, w0) => g0 shouldBe w0 }
-    m2.dictMisses.value shouldBe 0L
+    ex.metrics.dictMisses.value shouldBe 0L
     // the kind-determined overlay defaults (conf; p-dim fields on non-"p"
     // rows) never deviated — the encode was lossless for this corpus
-    m2.overlayLost.value shouldBe 0L
+    ex.metrics.overlayLost.value shouldBe 0L
   }
 
   test("the persisted pipeline cache is the ENCODED shape (ints, not strings)") {
@@ -80,7 +74,7 @@ class EncodedFlatSpec extends AnyFunSuite with Matchers {
       // norm decodes to a gazetteer alias verbatim
       val norms = t.flat.filter($"rowKind" === "m").select("norm").distinct()
         .as[String].collect()
-      val aliasSet = Pipeline.defaultGazetteer(200).candidates.keySet
+      val aliasSet = Gazetteer.default(200).candidates.keySet
       norms.foreach(n => aliasSet should contain(n))
     } finally {
       t.flatEnc.unpersist(false); t.components.unpersist(false)

@@ -33,6 +33,14 @@ class EntryPointsSpec extends AnyFunSuite with Matchers {
       .toSet shouldBe Set("graft/util/Sessions.scala")
   }
 
+  test("only TripleExtractor builds the extraction set-up") {
+    // the metrics and the encoded extractor belong to TripleExtractor.flat:
+    // a caller that builds its own would be a second extraction path
+    val setUp = """new\s+(graft\.extract\.)?ExtractMetrics\b|extractFlatEnc\s*\(""".r
+    sources.collect { case (f, text) if setUp.findFirstIn(text).isDefined => f }
+      .toSet shouldBe Set("graft/extract/TripleExtractor.scala")
+  }
+
   test("the objects defining main are exactly the allowlist") {
     val objectDecl = """(?m)^\s*object\s+(\w+)""".r
     val mainDecl = """def main\s*\(""".r

@@ -78,7 +78,7 @@ class GazetteerSpec extends AnyFunSuite with Matchers {
 
 class PatternSpec extends AnyFunSuite with Matchers {
   val auto = PatternAutomaton.compile(PatternAutomaton.DefaultRules)
-  val gaz = Pipeline.defaultGazetteer(100)
+  val gaz = Gazetteer.default(100)
 
   private def matches(sentence: String): List[(String, Vector[Int])] = {
     val toks = Tokenizer.tokens(sentence)

@@ -253,6 +253,21 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     TableIO.deleteRecursively(dir)
   }
 
+  test("an append and a takedown leave no pinned or cached frame behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pins").toString
+    TableIO.deleteRecursively(dir); copyTree(rmWant, dir)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // pages [60, 90) merge components on the way in and split them on the
+    // way out, so both the merge and the CC slow path pin their frames
+    val a = Incremental.appendPages(spark, rmRange(60, 90), dir, rmCfg.nPersons)
+    a.remappedIds should be > 0L
+    val r = takedown(dir)
+    r.remappedIds should be > 0L
+    sc.getPersistentRDDs.size should be <= before
+    TableIO.deleteRecursively(dir)
+  }
+
   test("removePages fast path: no dead evidence means no mapping churn") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-rm-fast").toString

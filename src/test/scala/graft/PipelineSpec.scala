@@ -110,26 +110,21 @@ class PipelineSpec extends AnyFunSuite with Matchers {
   }
 
   test("canonical join past the cutover: shuffle path, identical triples") {
-    // cutover 0 forces the non-broadcast-hint path on the same input
-    val t2 = Pipeline.run(spark, PageGen.pages(spark, cfg), cfg.nPersons,
-      canonBroadcastCutover = 0L)
+    // the broadcast build's triples, collected under the default threshold
     val a = tables.triples.collect().map(_.toString).sorted
-    val b = t2.triples.collect().map(_.toString).sorted
-    b shouldBe a
-    // with Spark's own auto-broadcast disabled, the hint-free path must plan
-    // a genuine shuffle join of the canonical map (the shape that survives a
-    // component map too big to broadcast)
+    // with Spark's own auto-broadcast disabled, the canonical map must join
+    // by a genuine shuffle (the shape that survives a component map too big
+    // to broadcast) and yield the same triples
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val t3 = Pipeline.run(spark, PageGen.pages(spark, cfg), cfg.nPersons,
-        canonBroadcastCutover = 0L)
-      val plan = t3.triples.queryExecution.executedPlan.toString
+      val t2 = Pipeline.run(spark, PageGen.pages(spark, cfg), cfg.nPersons)
+      val plan = t2.triples.queryExecution.executedPlan.toString
       plan shouldNot include("BroadcastHashJoin")
       "(SortMergeJoin|ShuffledHashJoin)".r.findFirstIn(plan) should be(defined)
-      t3.flatEnc.unpersist(false); t3.components.unpersist(false)
+      t2.triples.collect().map(_.toString).sorted shouldBe a
+      t2.flatEnc.unpersist(false); t2.components.unpersist(false)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    t2.flatEnc.unpersist(false); t2.components.unpersist(false)
   }
 
   test("triple provenance: SUBJ/OBJ edges point at the slot mentions") {

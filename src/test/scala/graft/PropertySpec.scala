@@ -68,7 +68,7 @@ class PropertySpec extends AnyFunSuite with Matchers {
   }
 
   test("property: extractor never throws and is deterministic on arbitrary bytes") {
-    val gaz = Pipeline.defaultGazetteer(100)
+    val gaz = graft.extract.Gazetteer.default(100)
     val auto = graft.extract.PatternAutomaton.compile(graft.extract.PatternAutomaton.DefaultRules)
     val pageGen = for {
       bytes <- Gen.option(Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray))

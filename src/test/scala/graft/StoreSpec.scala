@@ -101,6 +101,40 @@ class StoreSpec extends AnyFunSuite with Matchers {
     back.columns.toSeq shouldBe Seq("key", "value")
   }
 
+  test("committed tables read with their stamped schema: no job, same schema as inferred") {
+    val out = Files.createTempDirectory("graft-store-kg").toString
+    val t = Pipeline.run(spark, graft.model.PageGen.pages(spark,
+      graft.model.PageGen.Config(nPages = 60)), 200)
+    try Pipeline.materialize(spark, t, out, numBuckets = 4)
+    finally { t.flatEnc.unpersist(false); t.components.unpersist(false) }
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val tables = Seq("triples", "nodes", "edges", "components", "sameas_evidence",
+      "entity_refcounts")
+    try tables.foreach { tb =>
+      val dir = s"$out/$tb"
+      // what parquet schema inference reads off the committed files
+      val inferred = spark.read.parquet(s"$dir/data").drop("bucket").schema
+      sc.addSparkListener(listener)
+      val got = try {
+        org.apache.spark.graft.BusDrain(sc)
+        jobs.set(0)
+        val s0 = TableIO.read(spark, dir).schema
+        TableIO.read(spark, dir, Some(Set(1))).schema shouldBe s0
+        org.apache.spark.graft.BusDrain(sc)
+        s0
+      } finally sc.removeSparkListener(listener)
+      withClue(s"$tb: ") {
+        jobs.get shouldBe 0
+        got shouldBe inferred
+      }
+    } finally TableIO.deleteRecursively(out)
+  }
+
   test("bucket-count mismatch on resume is rejected, not silently mixed") {
     val dir = freshDir()
     TableIO.writeBucketed(sample(), dir, col("key"), numBuckets = 8,

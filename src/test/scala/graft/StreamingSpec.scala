@@ -175,7 +175,7 @@ class StreamingSpec extends AnyFunSuite with Matchers {
       q.processAllAvailable()
       val streamed = spark.table("trip").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted
-      val gaz = Pipeline.defaultGazetteer(cfg.nPersons)
+      val gaz = graft.extract.Gazetteer.default(cfg.nPersons)
       val auto = graft.extract.PatternAutomaton.compile(
         graft.extract.PatternAutomaton.DefaultRules)
       val batch = pages.flatMap(p =>

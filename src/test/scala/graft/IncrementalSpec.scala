@@ -268,6 +268,35 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     TableIO.deleteRecursively(dir)
   }
 
+  /** Jobs one call runs, counted by a listener once the bus has drained. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.BusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.graft.BusDrain(sc) } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+  // the counts this fixture gives (they repeat exactly for a fixed input)
+  private val AppendJobs = 101
+  private val TakedownJobs = 135
+
+  test("an append and a takedown stay within their job budgets") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    TableIO.deleteRecursively(dir); copyTree(rmWant, dir)
+    // the pin-release case's fixture: [60, 90) merges on the way in and
+    // splits on the way out, so both ops take their slow paths
+    val append = jobsOf(Incremental.appendPages(spark, rmRange(60, 90), dir, rmCfg.nPersons))
+    val remove = jobsOf(takedown(dir))
+    withClue("appendPages") { append should be <= AppendJobs }
+    withClue("removePages") { remove should be <= TakedownJobs }
+    TableIO.deleteRecursively(dir)
+  }
+
   test("removePages fast path: no dead evidence means no mapping churn") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-rm-fast").toString

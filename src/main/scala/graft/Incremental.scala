@@ -68,10 +68,6 @@ object Incremental {
   private def bucketCol(c: String, numBuckets: Int): Column =
     pmod(xxhash64(col(c)), lit(numBuckets)).cast("int")
 
-  /** The buckets `df`'s `c` keys hash into (one small collect). */
-  private def bucketsOf(df: DataFrame, c: String, numBuckets: Int): Set[Int] =
-    df.select(bucketCol(c, numBuckets).as("b")).distinct().collect().map(_.getInt(0)).toSet
-
   /** Remap canonical ids in both triple slots (broadcast — merge-sized). */
   private def applyRemap(t: DataFrame, r: DataFrame): DataFrame =
     t.join(broadcast(r.withColumnRenamed("from", "subj")
@@ -83,42 +79,30 @@ object Incremental {
         coalesce(col("objTo"), col("obj")).as("obj"),
         col("objValue"), col("url"), col("conf"))
 
-  /** Eager merge fallout: find the buckets holding rows whose canonical ids
-    * changed and overwrite exactly those. Returns the rewritten buckets. */
-  private def rewriteStaleTriples(spark: SparkSession, triplesDir: String,
-                                  remap: DataFrame, remapN: Long,
-                                  numBuckets: Int): Set[Int] = {
+  /** Eager merge fallout on triples: the buckets holding rows whose
+    * canonical ids changed, and those buckets' rows with the remap applied
+    * (the content that replaces them). */
+  private def staleTriples(spark: SparkSession, triplesDir: String,
+                           remap: DataFrame, remapN: Long,
+                           numBuckets: Int): (Set[Int], DataFrame) = {
     import spark.implicits._
     val old = TableIO.read(spark, triplesDir)
-    val tb = bucketCol("url", numBuckets).as("b")
     // merges are usually few: below the literal threshold the stale-row
     // probe is ONE scan with an isin predicate that pushes into parquet
     // (row-group stats skip clean files); past it, two broadcast-semi
     // column scans. Either way only (subj|obj, url) columns are read.
-    val stale =
-      (if (remapN <= 256) {
+    val staleUrls =
+      if (remapN <= 256) {
         val ks = remap.select($"from").as[Long].collect().toSeq
-        old.filter(col("subj").isin(ks: _*) || col("obj").isin(ks: _*)).select(tb)
+        old.filter(col("subj").isin(ks: _*) || col("obj").isin(ks: _*)).select("url")
       } else {
         val keys = broadcast(remap.select($"from"))
-        old.join(keys, col("subj") === col("from"), "left_semi").select(tb)
-          .union(old.join(keys, col("obj") === col("from"), "left_semi").select(tb))
-      }).distinct().collect().map(_.getInt(0)).toSet
-    if (stale.nonEmpty) {
-      val rewritten = applyRemap(TableIO.read(spark, triplesDir, Some(stale)), remap)
-        .dropDuplicates("subj", "pred", "obj", "objValue", "url")
-      TableIO.rewriteBuckets(rewritten, triplesDir, col("url"), stale,
-        numBuckets = numBuckets)
-    }
-    stale
-  }
-
-  /** Deterministic batch tag: xor of the batch's page-url hashes — the same
-    * batch (even redelivered or re-deduped) always produces the same tag. */
-  private def batchTag(flatB: DataFrame): String = {
-    val r = flatB.filter(col("rowKind") === "p")
-      .agg(expr("bit_xor(xxhash64(url))")).head()
-    java.lang.Long.toHexString(if (r.isNullAt(0)) 0L else r.getLong(0))
+        old.join(keys, col("subj") === col("from"), "left_semi").select("url")
+          .union(old.join(keys, col("obj") === col("from"), "left_semi").select("url"))
+      }
+    val stale = Materialize.tally(staleUrls, numBuckets, "url").buckets("url")
+    (stale, applyRemap(TableIO.read(spark, triplesDir, Some(stale)), remap)
+      .dropDuplicates("subj", "pred", "obj", "objValue", "url"))
   }
 
   /** Append signed entity-refcount deltas EXACTLY ONCE. Deltas are not
@@ -134,12 +118,13 @@ object Incremental {
     val dir = s"$outDir/entity_refcounts"
     val applied = TableIO.readManifest(dir).exists(_.counters.contains(marker))
     if (!applied) {
-      val d = deltas.localCheckpoint(true)
+      val pins = new Materialize.Pins(numBuckets)
+      val d = pins(deltas)
       // an entity-free batch re-derives the same empty delta on any retry —
       // no marker needed, and committing one would be a pointless snapshot
-      if (!d.isEmpty)
-        TableIO.appendBucketed(d, dir, col("id"), Map(marker -> 1L), numBuckets)
-      Materialize.release(d)
+      if (d.count > 0)
+        TableIO.appendBucketed(d.df, dir, col("id"), Map(marker -> 1L), numBuckets)
+      pins.releaseAll()
     }
     applied
   }
@@ -154,13 +139,12 @@ object Incremental {
     val dir = s"$outDir/entity_refcounts"
     val m = TableIO.readManifest(dir)
     if (m.isEmpty) return 0L
-    val folded = TableIO.read(spark, dir).groupBy("id")
-      .agg(sum("n").as("n")).filter(col("n") =!= 0L)
-      .localCheckpoint(true)
-    swapWrite(folded, dir, col("id"), m.get.counters, numBuckets)
-    val n = folded.count()
-    Materialize.release(folded)
-    n
+    val pins = new Materialize.Pins(numBuckets)
+    val folded = pins(TableIO.read(spark, dir).groupBy("id")
+      .agg(sum("n").as("n")).filter(col("n") =!= 0L))
+    swapWrite(folded.df, dir, col("id"), m.get.counters, numBuckets)
+    pins.releaseAll()
+    folded.count
   }
 
   /** Entity-id remap lifted to the SAME_AS node-id space (merge-sized). */
@@ -178,20 +162,16 @@ object Incremental {
         col("kind"), col("variable"), col("label"))
 
   /** Eager SAME_AS merge fallout on the edges table (dst references roots;
-    * rows scatter by src hash). Returns the rewritten buckets. */
-  private def rewriteStaleSameAs(spark: SparkSession, edgesDir: String,
-                                 remap: DataFrame, numBuckets: Int): Set[Int] = {
-    val remapNode = nodeRemap(spark, remap).localCheckpoint(true)
-    val stale = bucketsOf(TableIO.read(spark, edgesDir)
+    * rows scatter by src hash): the buckets holding stale rows, and those
+    * buckets' rows with the remap applied. */
+  private def staleSameAs(spark: SparkSession, edgesDir: String, remap: DataFrame,
+                          numBuckets: Int): (Set[Int], DataFrame) = {
+    val remapNode = nodeRemap(spark, remap)
+    val stale = Materialize.tally(TableIO.read(spark, edgesDir)
       .filter(col("kind") === Schema.EdgeKinds.SameAs)
-      .join(broadcast(remapNode), col("dst") === col("oldDst"), "left_semi"), "src", numBuckets)
-    if (stale.nonEmpty) {
-      val rewritten = applyEdgeRemap(TableIO.read(spark, edgesDir, Some(stale)), remapNode)
-      TableIO.rewriteBuckets(rewritten, edgesDir, col("src"), stale,
-        numBuckets = numBuckets)
-    }
-    Materialize.release(remapNode)
-    stale
+      .join(broadcast(remapNode), col("dst") === col("oldDst"), "left_semi")
+      .select("src"), numBuckets, "src").buckets("src")
+    (stale, applyEdgeRemap(TableIO.read(spark, edgesDir, Some(stale)), remapNode))
   }
 
   /** Read the triples table with any pending merge remap applied — the
@@ -240,15 +220,21 @@ object Incremental {
                         numBuckets: Int = TableIO.NumBuckets): (Set[Int], Set[Int]) = {
     val rd = remapDir(outDir)
     if (TableIO.readManifest(rd).isEmpty) return (Set.empty, Set.empty)
+    val pins = new Materialize.Pins(numBuckets)
     // the remap must survive the side-table delete below (blocks, not files)
-    val r = TableIO.read(spark, rd).localCheckpoint(true)
-    val rn = r.count()
+    val r = pins(TableIO.read(spark, rd))
     val folded =
-      if (rn == 0) (Set.empty[Int], Set.empty[Int])
-      else (rewriteStaleTriples(spark, s"$outDir/triples", r, rn, numBuckets),
-        rewriteStaleSameAs(spark, s"$outDir/edges", r, numBuckets))
+      if (r.count == 0) (Set.empty[Int], Set.empty[Int])
+      else {
+        val (tDir, eDir) = (s"$outDir/triples", s"$outDir/edges")
+        val (ts, tRows) = staleTriples(spark, tDir, r.df, r.count, numBuckets)
+        TableIO.rewriteBuckets(tRows, tDir, col("url"), ts, numBuckets = numBuckets)
+        val (es, eRows) = staleSameAs(spark, eDir, r.df, numBuckets)
+        TableIO.rewriteBuckets(eRows, eDir, col("src"), es, numBuckets = numBuckets)
+        (ts, es)
+      }
     TableIO.deleteRecursively(rd)
-    Materialize.release(r)
+    pins.releaseAll()
     folded
   }
 
@@ -266,7 +252,7 @@ object Incremental {
     val sameAsChanged = changed.exists(_.pred == "same_as")
     val touched: Set[Int] =
       if (sameAsChanged) (0 until numBuckets).toSet
-      else bucketsOf(affectedPages(pages, changed).toDF(), "url", numBuckets)
+      else Materialize.tally(affectedPages(pages, changed).toDF(), numBuckets, "url").buckets("url")
     if (touched.isEmpty) return Set.empty
 
     TableIO.invalidateBuckets(s"$outDir/triples", touched)
@@ -317,7 +303,7 @@ object Incremental {
                                touchedN: Long, numBuckets: Int): Unit = {
     if (TableIO.readManifest(s"$outDir/nodes").isEmpty) return
     val meta = Map("ruleDiffTouchedBuckets" -> touchedN)
-    val pins = new Materialize.Pins
+    val pins = new Materialize.Pins(numBuckets)
     val (newNodes, newEdges) =
       if (fullRebuild) (t.nodes, t.edges)
       else {
@@ -328,7 +314,7 @@ object Incremental {
           .select(col("pageId")).distinct()
         val staleIds = pins(oldNodes.filter(col("kind") === "Triple")
           .join(affectedPids, Seq("pageId"), "left_semi")
-          .select(col("id")))
+          .select(col("id"))).df
         val pn = oldNodes.join(staleIds, Seq("id"), "left_anti")
           .unionByName(t.nodes.filter(col("kind") === "Triple"))
         // only SUBJ/OBJ edges have a Triple src, so one src anti-join drops
@@ -382,16 +368,19 @@ object Incremental {
     *
     *   - triples: rows whose subj/obj canonical id changed are found by a
     *     broadcast semi-join (remap is merge-sized), and ONLY their buckets
-    *     are rewritten via [[TableIO.rewriteBuckets]] — the Iceberg
-    *     overwrite: new files commit in the manifest before stale files
-    *     drop, so no caller-side materialization is needed and a crash at
-    *     any point loses nothing. The triple dedup key includes `url` and
-    *     `url` determines the bucket, so bucket-local dropDuplicates after
-    *     remapping equals the full rebuild's global dedup.
+    *     are replaced — in the same [[TableIO.commitBuckets]] that appends
+    *     the batch: ONE write and ONE manifest swap. It is the Iceberg
+    *     overwrite plus append: new files commit in the manifest before
+    *     stale files drop, so no caller-side materialization is needed and a
+    *     crash at any point loses nothing. The triple dedup key includes
+    *     `url` and `url` determines the bucket, so bucket-local
+    *     dropDuplicates after remapping equals the full rebuild's global
+    *     dedup.
     *   - edges: only SAME_AS rows reference roots (entity/mention/page rows
     *     carry raw ids); stale ones (dst ∈ remapped roots) get the same
-    *     bucket-subset rewrite; mapping rows new in the merged mapping
-    *     append as fresh SAME_AS edges.
+    *     bucket-subset replacement, in the one commit that also appends the
+    *     batch edges and, as fresh SAME_AS edges, the mapping rows new in
+    *     the merged mapping.
     *   - nodes: never reference roots — page-scoped rows (Page / Mention /
     *     Triple) append blindly; corpus-global rows (Host / Domain / Entity,
     *     the dimension tables of the graph) are deduped by an anti-join
@@ -399,12 +388,13 @@ object Incremental {
     *   - components: the merged mapping replaces the table via snapshot-swap
     *     — LAST, which makes a crashed append resumable (see below).
     *
-    * Crash/retry: each table's append commits atomically (one manifest
-    * swap), and a retry detects per table whether the batch is already in
-    * (all-or-nothing key overlap) and skips it. Because the components swap
-    * happens last, a retry recomputes the SAME merged mapping and remap set
-    * from the unchanged old mapping (CC is deterministic), and the bucket
-    * rewrites no-op once applied (no stale rows match). A batch that mixes
+    * Crash/retry: each data table commits ONCE, atomically (one manifest
+    * swap covering its merge fallout and its batch rows), and a retry
+    * detects per table whether the batch is already in (all-or-nothing key
+    * overlap) and skips it. Because the components swap still happens last,
+    * a retry recomputes the SAME merged mapping and remap set from the
+    * unchanged old mapping (CC is deterministic), and a table whose commit
+    * landed finds no stale rows and no missing batch rows: it no-ops. A batch that mixes
     * new and already-ingested urls is rejected — a re-crawled url is an
     * UPDATE (invalidate + rewrite its bucket), not an append.
     *
@@ -412,7 +402,8 @@ object Incremental {
     * the CC input is O(|entities|); the dedup/overlap probes read only the
     * O(|batch|) buckets their keys hash into (driver-side file pruning);
     * merge fallout rewrites only the buckets holding affected rows. Nothing
-    * scans the corpus. */
+    * scans the corpus. Each pinned frame costs one job: the job that fills
+    * it also returns its row count and key buckets ([[Materialize.Pins]]). */
   /** `deferMergeRewrite`: the merge-on-read option. A merge into a popular
     * entity (the head-entity case) can make EVERY triples bucket stale —
     * and the hot component's SAME_AS edges scatter by src hash, staling the
@@ -462,12 +453,19 @@ object Incremental {
     val ex = TripleExtractor.flat(dedupPages.filter($"lang" === targetLang), nPersons, rules)
     val flatBEnc = TripleExtractor.cached(ex.enc)
     val flatB = ex.decode(flatBEnc)
-    val batchCounters = Pipeline.flatCounters(flatB)
+    // one aggregate: the manifest counters, the batch tag and the same-as
+    // row count (whether the batch carries any same-as pair at all)
+    val fc = Pipeline.flatCounters(flatB)
+    val batchCounters = fc.counters
     val nBatch = batchCounters("pagesIn")
     if (nBatch == 0L) { flatBEnc.unpersist(false); return AppendStats(0, 0, 0, 0, 0, Nil) }
 
-    val pins = new Materialize.Pins // released after the last chain is awaited
-    val pageIds = pins(flatB.filter($"rowKind" === "p").select($"pageId".as("id")))
+    val pins = new Materialize.Pins(numBuckets) // released after the last chain is awaited
+    // the batch's pages, with the buckets their ids (nodes) and their hosts
+    // (the IS_PAGE_OF edges) hash into
+    val pRows = pins(flatB.filter($"rowKind" === "p").select($"pageId".as("id"), $"hostId"),
+      "id", "hostId")
+    val pageIds = pRows.df.select("id")
 
     // ---- the AUTHORITATIVE batch-vs-corpus check, BEFORE anything commits:
     // Page nodes cover every ingested page (triple-url overlap would miss
@@ -475,9 +473,9 @@ object Incremental {
     // rejects — a permanent split). All-or-nothing: all present = resume,
     // none = fresh append, a mix = misuse, rejected atomically.
     val nodesDir = s"$outDir/nodes"
-    val pageOverlap = TableIO.read(spark, nodesDir, Some(bucketsOf(pageIds, "id", numBuckets)))
+    val pageOverlap = Materialize.count(TableIO.read(spark, nodesDir, Some(pRows.buckets("id")))
       .filter(col("kind") === Schema.NodeKinds.Page)
-      .join(pageIds, Seq("id"), "left_semi").count()
+      .join(pageIds, Seq("id"), "left_semi"))
     require(pageOverlap == 0 || pageOverlap == nBatch,
       s"batch mixes new and already-ingested urls ($pageOverlap of $nBatch " +
         s"already in $nodesDir) — a re-crawled url is an update, not an append")
@@ -485,48 +483,54 @@ object Incremental {
     // ---- merged canonical mapping (entity-sized CC, corpus-independent) ----
     val oldComponents = TableIO.read(spark, s"$outDir/components")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val newPairs = Pipeline.sameAsRows(flatB).select("a", "b").distinct()
-    val havePairs = newPairs.limit(1).count() > 0
+    val havePairs = fc.sameAsRows > 0
     val components2 =
       if (!havePairs) oldComponents
       else ConnectedComponents.auto(spark,
-        oldComponents.select($"id".as("a"), $"component".as("b")).unionByName(newPairs))
+        oldComponents.select($"id".as("a"), $"component".as("b"))
+          .unionByName(Pipeline.sameAsRows(flatB).select("a", "b").distinct()))
         .persist(StorageLevel.MEMORY_AND_DISK)
     // remap: old canonical value (root, or the raw id of a previously
     // unmapped singleton) → new root, where they differ. Merge-sized.
-    val remap =
-      if (!havePairs) Seq.empty[(Long, Long)].toDF("from", "to")
-      else pins(components2
-        .join(oldComponents.withColumnRenamed("component", "oldC"), Seq("id"), "left")
-        .select(coalesce($"oldC", $"id").as("from"), $"component".as("to"))
-        .filter($"from" =!= $"to").distinct())
-    val remapN = remap.count()
+    val (remap, remapN) =
+      if (!havePairs) (Seq.empty[(Long, Long)].toDF("from", "to"), 0L)
+      else {
+        val r = pins(components2
+          .join(oldComponents.withColumnRenamed("component", "oldC"), Seq("id"), "left")
+          .select(coalesce($"oldC", $"id").as("from"), $"component".as("to"))
+          .filter($"from" =!= $"to").distinct())
+        (r.df, r.count)
+      }
     // mapping rows the batch introduces — computed ONCE (stat + the fresh
     // SAME_AS edge source share it)
-    val freshMapping =
-      if (!havePairs) Seq.empty[(Long, Long)].toDF("id", "component")
-      else pins(components2.join(oldComponents.select("id"), Seq("id"), "left_anti"))
-    val newMappingRows = if (!havePairs) 0L else freshMapping.count()
+    val (freshMapping, newMappingRows) =
+      if (!havePairs) (Seq.empty[(Long, Long)].toDF("id", "component"), 0L)
+      else {
+        val f = pins(components2.join(oldComponents.select("id"), Seq("id"), "left_anti"))
+        (f.df, f.count)
+      }
 
     // ---- the three data tables are INDEPENDENT — patch them as concurrent
     // jobs (the materialize precedent): the append path is dominated by
     // driver-synchronized round trips, and on a real cluster three output
-    // pipelines sharing the executor pool beat a serial walk just the same
+    // pipelines sharing the executor pool beat a serial walk just the same.
+    // triples and edges each commit ONCE: the merge-stale buckets are
+    // replaced (their remapped rows plus the batch rows hashing there) and
+    // the batch's other rows append, in one write and one manifest swap
 
-    // ---- triples: rewrite merge-stale buckets, then append the batch ----
+    // ---- triples: merge-stale buckets and the batch in one commit ----
     val triplesDir = s"$outDir/triples"
     val triplesF = Par {
     val triplesB = Pipeline.canonicalizeTriples(flatB, components2)
-    val batchUrls = pins(triplesB.select($"url").distinct())
-    val nUrls = batchUrls.count()
-    val urlBuckets = bucketsOf(batchUrls, "url", numBuckets)
+    val batchUrls = pins(triplesB.select($"url").distinct(), "url")
+    val nUrls = batchUrls.count
     // per-table resume detection (mixed batches were already rejected by the
     // authoritative page-node check; a partial overlap here can only mean a
-    // corrupted table — appendBucketed commits are all-or-nothing)
+    // corrupted table — every commit is all-or-nothing)
     val tripOverlap =
       if (nUrls == 0) 0L
-      else TableIO.read(spark, triplesDir, Some(urlBuckets))
-        .join(batchUrls, Seq("url"), "left_semi").select("url").distinct().count()
+      else Materialize.count(TableIO.read(spark, triplesDir, Some(batchUrls.buckets("url")))
+        .join(batchUrls.df, Seq("url"), "left_semi").select("url").distinct())
     assert(tripOverlap == 0 || tripOverlap == nUrls,
       s"triples table at $triplesDir holds a partial batch ($tripOverlap of $nUrls urls)")
     // a batch extracting ZERO triples has no url to probe — fall back to the
@@ -535,8 +539,8 @@ object Incremental {
     val tripApplied =
       if (nUrls == 0) pageOverlap == nBatch else tripOverlap == nUrls
 
-    val tripleBucketsRewritten: Set[Int] =
-      if (remapN == 0) Set.empty
+    val (stale, remapped) =
+      if (remapN == 0) (Set.empty[Int], null)
       else if (deferMergeRewrite) {
         // merge-on-read: record the remap in the side table, touch no data
         // file. A pending chain is ROUTED through the new mapping first so
@@ -550,12 +554,11 @@ object Incremental {
           .select(pending("from"), coalesce($"t1", pending("to")).as("to"))
         swapWrite(routed.unionByName(remap).dropDuplicates("from", "to"),
           rd, col("from"), Map.empty, 1)
-        Set.empty
-      } else
-        rewriteStaleTriples(spark, triplesDir, remap, remapN, numBuckets)
-    if (!tripApplied)
-      TableIO.appendBucketed(triplesB, triplesDir, col("url"), batchCounters, numBuckets)
-    (tripApplied, tripleBucketsRewritten)
+        (Set.empty[Int], null)
+      } else staleTriples(spark, triplesDir, remap, remapN, numBuckets)
+    commitPatch(triplesDir, col("url"), stale, remapped, if (tripApplied) None else Some(triplesB),
+      batchCounters, numBuckets)
+    (tripApplied, stale)
     }
 
     // ---- graph tables: batch subgraph + SAME_AS delta ----
@@ -564,14 +567,13 @@ object Incremental {
     val emptyComp = Seq.empty[(Long, Long)].toDF("id", "component")
     val (nodesB, edgesB) = Pipeline.graphTables(spark, flatB, emptyComp)
 
+    // ---- edges: merge-stale SAME_AS buckets and the batch in one commit ----
     val edgesDir = s"$outDir/edges"
     val edgesF = Par {
-    val hostBuckets = bucketsOf(
-      flatB.filter($"rowKind" === "p").select($"hostId".as("h")).distinct(), "h", numBuckets)
-    val edgeOverlap = TableIO.read(spark, edgesDir, Some(hostBuckets))
+    val edgeOverlap = Materialize.count(TableIO.read(spark, edgesDir, Some(pRows.buckets("hostId")))
       .filter(col("kind") === EK.IsPageOf)
       .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-      .select("dst").distinct().count()
+      .select("dst").distinct())
     assert(edgeOverlap == 0 || edgeOverlap == nBatch,
       s"edges table at $edgesDir holds a partial batch ($edgeOverlap of $nBatch pages)")
     val edgesApplied = edgeOverlap == nBatch
@@ -580,30 +582,30 @@ object Incremental {
     // merge fallout scatters by src hash, so a hot merge makes this a
     // near-full-table rewrite too — the SAME deferral applies (the node-id
     // remap derives from the entity-id side table, so one table serves both)
-    val edgeBucketsRewritten: Set[Int] =
-      if (remapN == 0 || deferMergeRewrite) Set.empty
-      else rewriteStaleSameAs(spark, edgesDir, remap, numBuckets)
-    if (!edgesApplied) {
-      val freshSameAs =
-        freshMapping
-          .as[(Long, Long)]
-          .map { case (id, comp) =>
-            GraphEdge(Ids.entityNodeId(id), Ids.entityNodeId(comp), EK.SameAs, null) }
-          .toDF().select(col("src"), col("dst"), col("kind"), col("variable"), col("label"))
-      // IS_PARENT_HOST rows are dimension edges (one per distinct host) —
-      // like the dimension nodes, dedup against the buckets they hash into;
-      // every other batch edge is page-scoped and cannot pre-exist
-      val ph = pins(edgesB.filter(col("kind") === EK.IsParentHost))
-      val phExisting = TableIO.read(spark, edgesDir,
-        Some(bucketsOf(ph.select(col("src").as("s")), "s", numBuckets)))
-        .filter(col("kind") === EK.IsParentHost).select("src", "dst")
-      val novelPh = ph.join(phExisting, Seq("src", "dst"), "left_anti")
-      TableIO.appendBucketed(
-        edgesB.filter(col("kind") =!= EK.IsParentHost)
-          .unionByName(novelPh).unionByName(freshSameAs),
-        edgesDir, col("src"), batchCounters, numBuckets)
-    }
-    (edgesApplied, edgeBucketsRewritten)
+    val (stale, remapped) =
+      if (remapN == 0 || deferMergeRewrite) (Set.empty[Int], null)
+      else staleSameAs(spark, edgesDir, remap, numBuckets)
+    val batch =
+      if (edgesApplied) None
+      else {
+        val freshSameAs =
+          freshMapping
+            .as[(Long, Long)]
+            .map { case (id, comp) =>
+              GraphEdge(Ids.entityNodeId(id), Ids.entityNodeId(comp), EK.SameAs, null) }
+            .toDF().select(col("src"), col("dst"), col("kind"), col("variable"), col("label"))
+        // IS_PARENT_HOST rows are dimension edges (one per distinct host) —
+        // like the dimension nodes, dedup against the buckets they hash into;
+        // every other batch edge is page-scoped and cannot pre-exist
+        val ph = pins(edgesB.filter(col("kind") === EK.IsParentHost), "src")
+        val phExisting = TableIO.read(spark, edgesDir, Some(ph.buckets("src")))
+          .filter(col("kind") === EK.IsParentHost).select("src", "dst")
+        val novelPh = ph.df.join(phExisting, Seq("src", "dst"), "left_anti")
+        Some(edgesB.filter(col("kind") =!= EK.IsParentHost)
+          .unionByName(novelPh).unionByName(freshSameAs))
+      }
+    commitPatch(edgesDir, col("src"), stale, remapped, batch, batchCounters, numBuckets)
+    (edgesApplied, stale)
     }
 
     val nodesF = Par {
@@ -613,11 +615,10 @@ object Incremental {
       val pageScoped = nodesB.filter(col("kind").isin(NK.Page, NK.Mention, NK.TripleN))
       // dimension rows (host/domain/entity universe ≪ corpus): dedup against
       // only the buckets the batch's ids hash into
-      val globals = pins(nodesB.filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity)))
-      val gBuckets = bucketsOf(globals, "id", numBuckets)
-      val existing = TableIO.read(spark, nodesDir, Some(gBuckets))
+      val globals = pins(nodesB.filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity)), "id")
+      val existing = TableIO.read(spark, nodesDir, Some(globals.buckets("id")))
         .filter(col("kind").isin(NK.Host, NK.Domain, NK.Entity)).select("id")
-      val novel = globals.join(existing, Seq("id"), "left_anti")
+      val novel = globals.df.join(existing, Seq("id"), "left_anti")
       TableIO.appendBucketed(pageScoped.unionByName(novel), nodesDir, col("id"),
         batchCounters, numBuckets)
     }
@@ -629,22 +630,18 @@ object Incremental {
     // (removePages) recomputes the canonical mapping from this table, so an
     // append must keep it exactly what a full rebuild would extract. Rows
     // are keyed (a, b, url), bucketed by a — the resume probe reads only the
-    // batch pairs' buckets.
+    // batch pairs' buckets. A pair-free batch has no evidence to add.
     val evDir = s"$outDir/sameas_evidence"
-    val evB = pins(Pipeline.sameAsEvidence(flatB))
-    val nEv = evB.count()
-    val evApplied =
-      if (nEv == 0L) true
-      else {
-        val evOverlap = TableIO.read(spark, evDir,
-            Some(bucketsOf(evB.select($"a"), "a", numBuckets)))
-          .join(evB, Seq("a", "b", "url"), "left_semi").count()
-        assert(evOverlap == 0 || evOverlap == nEv,
-          s"evidence table at $evDir holds a partial batch ($evOverlap of $nEv pairs)")
-        evOverlap == nEv
-      }
-    if (!evApplied) TableIO.appendBucketed(evB, evDir, col("a"), batchCounters, numBuckets)
-    evApplied && nEv > 0 // "skipped" = a genuine resume, not an empty batch
+    havePairs && {
+      val evB = pins(Pipeline.sameAsEvidence(flatB), "a")
+      val evOverlap = Materialize.count(TableIO.read(spark, evDir, Some(evB.buckets("a")))
+        .join(evB.df, Seq("a", "b", "url"), "left_semi"))
+      assert(evOverlap == 0 || evOverlap == evB.count,
+        s"evidence table at $evDir holds a partial batch ($evOverlap of ${evB.count} pairs)")
+      val evApplied = evOverlap == evB.count
+      if (!evApplied) TableIO.appendBucketed(evB.df, evDir, col("a"), batchCounters, numBuckets)
+      evApplied // "skipped" = a genuine resume, not an empty batch
+    }
     }
 
     val refcountF = Par {
@@ -655,7 +652,7 @@ object Incremental {
     // fresh key is an insert, and the manifest commit is atomic with the
     // data files — a redelivered batch sees its marker and skips.
     appendRefDeltas(spark, outDir, Pipeline.entityRefDeltas(flatB),
-      "batch_" + batchTag(flatB.toDF()), numBuckets)
+      "batch_" + fc.batchTag, numBuckets)
     }
 
     Par.awaitAll(triplesF, edgesF, nodesF, evidenceF, refcountF)
@@ -693,6 +690,18 @@ object Incremental {
     if (havePairs) components2.unpersist(false)
     AppendStats(nBatch, newMappingRows, remapN,
       tripleBucketsRewritten.size, edgeBucketsRewritten.size, skipped)
+  }
+
+  /** One append commit to a data table: the merge-stale buckets `stale` are
+    * replaced by `remapped` (their rows with the remap applied) plus the
+    * batch rows hashing there, and the batch's other rows append; the batch
+    * counters go in with the batch. A no-op when there is neither. */
+  private def commitPatch(dir: String, key: Column, stale: Set[Int], remapped: DataFrame,
+                          batch: Option[DataFrame], counters: Map[String, Long],
+                          numBuckets: Int): Unit = {
+    val rows = (Option.when(stale.nonEmpty)(remapped) ++ batch).reduceOption(_ unionByName _)
+    rows.foreach(r => TableIO.commitBuckets(r, dir, key, stale, appendRest = batch.isDefined,
+      if (batch.isDefined) counters else Map.empty, numBuckets))
   }
 
   final case class RemoveStats(
@@ -746,6 +755,11 @@ object Incremental {
     * the new SAME_AS delta. The components snapshot-swap and
     * the nodes rewrite follow, in that order.
     *
+    * Every pin is a [[Materialize.Pins]] pin whose filling job also returns
+    * the row count and key buckets the chains branch on, and every count or
+    * emptiness probe is one job ([[Materialize.tally]]); none of this moves
+    * a commit, so the ordering below is unchanged.
+    *
     * Crash/retry: idempotent. Each table commit is atomic, and four
     * ordering edges keep any crash point resumable:
     *   1. the refcount deltas land before entity liveness reads them (the
@@ -791,34 +805,37 @@ object Incremental {
     val ex = TripleExtractor.flat(removedPages.filter($"lang" === targetLang), nPersons, rules)
     val flatR0 = ex.enc.persist(StorageLevel.MEMORY_AND_DISK)
 
-    val pins = new Materialize.Pins // released after the last chain is awaited
+    val pins = new Materialize.Pins(numBuckets) // released after the last chain is awaited
     // presence anchor: restrict to pages actually IN the build
     val nodesDir = s"$outDir/nodes"
-    val batchPageIds = flatR0.filter(col("rowKind") === FlatDict.KindP)
-      .select($"pageId".as("id"))
-    val presentPages = pins(TableIO.read(spark, nodesDir,
-        Some(bucketsOf(batchPageIds, "id", numBuckets)))
+    val batchPageIds = pins(flatR0.filter(col("rowKind") === FlatDict.KindP)
+      .select($"pageId".as("id")), "id")
+    val presentPages = pins(TableIO.read(spark, nodesDir, Some(batchPageIds.buckets("id")))
       .filter(col("kind") === Schema.NodeKinds.Page)
-      .join(batchPageIds, Seq("id"), "left_semi")
+      .join(batchPageIds.df, Seq("id"), "left_semi")
       .select(col("id").as("presentPid")))
-    val nPresent = presentPages.count()
+    val nPresent = presentPages.count
     if (nPresent == 0L) {
       flatR0.unpersist(false); pins.releaseAll()
       return RemoveStats(0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
     }
     // restricted on the ENCODED rows; every chain reads the cache's view
     val flatREnc = TripleExtractor.cached(flatR0.toDF()
-      .join(presentPages, col("pageId") === col("presentPid"), "left_semi")
+      .join(presentPages.df, col("pageId") === col("presentPid"), "left_semi")
       .as[FlatRowEnc])
     val flatR = ex.decode(flatREnc)
-    // the counter job also fills the flat cache every chain below reads
-    val negCounters = Pipeline.flatCounters(flatR).map { case (k, v) => k -> -v }
+    // the counter job also fills the flat cache every chain below reads; its
+    // same-as row count says whether the batch carries any same-as pair
+    val fc = Pipeline.flatCounters(flatR)
+    val negCounters = fc.counters.map { case (k, v) => k -> -v }
     flatR0.unpersist(false)
 
+    // the batch's pages, with the buckets their urls (triples) and their
+    // hosts (the IS_PAGE_OF edges) hash into
     val pRows = pins(flatR.filter($"rowKind" === "p")
-      .select($"pageId", $"url", $"host", $"hostId"))
-    val urls = pins(pRows.select("url"))
-    val pageIds = pRows.select($"pageId".as("id"))
+      .select($"pageId", $"url", $"host", $"hostId"), "url", "hostId")
+    val urls = pRows.df.select("url")
+    val pageIds = pRows.df.select($"pageId".as("id"))
     val mentionIds = flatR.filter($"rowKind" === "m").select($"mentionId".as("id"))
     val tripleNodeIds = flatR.filter($"rowKind" === "t" && $"tripleNodeId" =!= 0L)
       .select($"tripleNodeId".as("id")).distinct()
@@ -829,16 +846,16 @@ object Incremental {
       // sums, so retries on either side of this append read the same answer
       appendRefDeltas(spark, outDir,
         Pipeline.entityRefDeltas(flatR).select(col("id"), (-col("n")).as("n")),
-        "takedown_" + batchTag(flatR.toDF()), numBuckets)
+        "takedown_" + fc.batchTag, numBuckets)
       val entCand = pins(flatR.filter($"rowKind" === "m" && $"entityId" >= 0)
-        .select($"entityId".as("id"), $"entityNodeId".as("e")).distinct())
+        .select($"entityId".as("id"), $"entityNodeId".as("e")).distinct(), "id")
       val liveIds = TableIO.read(spark, s"$outDir/entity_refcounts",
-          Some(bucketsOf(entCand, "id", numBuckets)))
-        .join(entCand.select("id"), Seq("id"), "left_semi")
+          Some(entCand.buckets("id")))
+        .join(entCand.df.select("id"), Seq("id"), "left_semi")
         .groupBy("id").agg(sum($"n").as("n")).filter($"n" > 0)
         .select("id")
-      val deadEnts = pins(entCand.join(liveIds, Seq("id"), "left_anti").select($"e"))
-      (deadEnts, deadEnts.count())
+      val deadEnts = pins(entCand.df.join(liveIds, Seq("id"), "left_anti").select($"e"))
+      (deadEnts.df, deadEnts.count)
     }
 
     // ---- chain B: evidence drop, dead pairs, then the mapping refresh ----
@@ -847,13 +864,13 @@ object Incremental {
     val evDir = s"$outDir/sameas_evidence"
     val compDir = s"$outDir/components"
     val splitF = Par {
-      val candPairs = pins(Pipeline.sameAsRows(flatR).select("a", "b").distinct())
       val deadPairsN =
-        if (candPairs.isEmpty) 0L
+        if (fc.sameAsRows == 0) 0L
         else {
-          val evBuckets = bucketsOf(candPairs.select("a"), "a", numBuckets)
-          val hasBatchRows = TableIO.read(spark, evDir, Some(evBuckets))
-            .join(urls, Seq("url"), "left_semi").limit(1).count() > 0
+          val candPairs = pins(Pipeline.sameAsRows(flatR).select("a", "b").distinct(), "a")
+          val evBuckets = candPairs.buckets("a")
+          val hasBatchRows = Materialize.nonEmpty(TableIO.read(spark, evDir, Some(evBuckets))
+            .join(urls, Seq("url"), "left_semi"))
           if (hasBatchRows) {
             val cur = TableIO.read(spark, evDir, Some(evBuckets))
             TableIO.rewriteBuckets(
@@ -862,7 +879,7 @@ object Incremental {
           }
           val survivors = TableIO.read(spark, evDir, Some(evBuckets))
             .select("a", "b").distinct()
-          candPairs.join(survivors, Seq("a", "b"), "left_anti").count()
+          Materialize.count(candPairs.df.join(survivors, Seq("a", "b"), "left_anti"))
         }
       if (deadPairsN == 0) Split(0L, null, null, 0L)
       else {
@@ -874,7 +891,7 @@ object Incremental {
           .join(n.withColumnRenamed("component", "newComp"), Seq("id"), "left")
           .filter(!($"component" <=> $"newComp"))
           .select($"id", $"component".as("oldComp"), $"newComp"))
-        Split(deadPairsN, ch, n, ch.count())
+        Split(deadPairsN, ch.df, n, ch.count)
       }
     }
 
@@ -885,28 +902,27 @@ object Incremental {
                     domBuckets: Set[Int], deadDoms: DataFrame, nDoms: Long)
     val edgesDir = s"$outDir/edges"
     val dimsF = Par {
-      val hostCand = pins(pRows.select($"hostId".as("h")).distinct())
-      val hostBuckets = bucketsOf(hostCand, "h", numBuckets)
+      val hostCand = pRows.df.select($"hostId".as("h"))
+      val hostBuckets = pRows.buckets("hostId")
       val liveHosts = TableIO.read(spark, edgesDir, Some(hostBuckets))
         .filter(col("kind") === EK.IsPageOf)
         .join(hostCand.withColumnRenamed("h", "src"), Seq("src"), "left_semi")
         .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
         .select($"src".as("h")).distinct()
-      val deadHosts = pins(hostCand.join(liveHosts, Seq("h"), "left_anti"))
-      val nDeadHosts = deadHosts.count()
-      val domCand = pins(Pipeline.hostDomainOf(pRows.toDF())
-        .join(deadHosts.withColumnRenamed("h", "hostId"), Seq("hostId"), "left_semi")
-        .select($"domainId".as("d")).distinct())
-      if (nDeadHosts == 0) Dims(hostBuckets, deadHosts, 0L, Set.empty, domCand.limit(0), 0L)
+      val deadHosts = pins(hostCand.join(liveHosts, Seq("h"), "left_anti").distinct())
+      if (deadHosts.count == 0) Dims(hostBuckets, deadHosts.df, 0L, Set.empty, Seq.empty[Long].toDF("d"), 0L)
       else {
-        val domBuckets = bucketsOf(domCand, "d", numBuckets)
+        val domCand = pins(Pipeline.hostDomainOf(pRows.df)
+          .join(deadHosts.df.withColumnRenamed("h", "hostId"), Seq("hostId"), "left_semi")
+          .select($"domainId".as("d")).distinct(), "d")
+        val domBuckets = domCand.buckets("d")
         val liveDoms = TableIO.read(spark, edgesDir, Some(domBuckets))
           .filter(col("kind") === EK.IsParentHost)
-          .join(domCand.withColumnRenamed("d", "src"), Seq("src"), "left_semi")
-          .join(deadHosts.withColumnRenamed("h", "dst"), Seq("dst"), "left_anti")
+          .join(domCand.df.withColumnRenamed("d", "src"), Seq("src"), "left_semi")
+          .join(deadHosts.df.withColumnRenamed("h", "dst"), Seq("dst"), "left_anti")
           .select($"src".as("d")).distinct()
-        val deadDoms = pins(domCand.join(liveDoms, Seq("d"), "left_anti"))
-        Dims(hostBuckets, deadHosts, nDeadHosts, domBuckets, deadDoms, deadDoms.count())
+        val deadDoms = pins(domCand.df.join(liveDoms, Seq("d"), "left_anti"))
+        Dims(hostBuckets, deadHosts.df, deadHosts.count, domBuckets, deadDoms.df, deadDoms.count)
       }
     }
 
@@ -915,23 +931,22 @@ object Incremental {
     val triplesDir = s"$outDir/triples"
     val triplesF = Par {
       // the url probe needs nothing from B — it overlaps the mapping refresh
-      val urlBuckets = bucketsOf(urls, "url", numBuckets)
-      val tripPresent = TableIO.read(spark, triplesDir, Some(urlBuckets))
-        .join(urls, Seq("url"), "left_semi").limit(1).count() > 0
+      val urlBuckets = pRows.buckets("url")
+      val tripPresent = Materialize.nonEmpty(TableIO.read(spark, triplesDir, Some(urlBuckets))
+        .join(urls, Seq("url"), "left_semi"))
       val split = Par.await(splitF)
-      val (affectedUrls, nAffected) =
-        if (split.remapped == 0) (urls.limit(0), 0L)
+      val (affectedUrls, nAffected, affBuckets) =
+        if (split.remapped == 0) (urls.limit(0), 0L, Set.empty[Int])
         else {
           val changedVals = broadcast(split.changed.select($"oldComp".as("v")).distinct())
           val t = TableIO.read(spark, triplesDir)
           val aff = pins(t
             .join(changedVals, t("subj") === col("v") || t("obj") === col("v"), "left_semi")
             .select("url").distinct()
-            .join(urls, Seq("url"), "left_anti"))
-          (aff, aff.count())
+            .join(urls, Seq("url"), "left_anti"), "url")
+          (aff.df, aff.count, aff.buckets("url"))
         }
-      val buckets = (if (tripPresent) urlBuckets else Set.empty[Int]) ++
-        (if (nAffected == 0) Set.empty[Int] else bucketsOf(affectedUrls, "url", numBuckets))
+      val buckets = (if (tripPresent) urlBuckets else Set.empty[Int]) ++ affBuckets
       if (buckets.nonEmpty) {
         val cur = TableIO.read(spark, triplesDir, Some(buckets))
         val keep = keepOrder(cur.join(urls.unionByName(affectedUrls), Seq("url"), "left_anti"),
@@ -953,36 +968,33 @@ object Incremental {
 
     // ---- edges: one combined rewrite over every touched bucket ----
     val edgesF = Par {
-      val srcIds = pins(pageIds.unionByName(mentionIds).unionByName(tripleNodeIds).distinct())
-      val srcBuckets = bucketsOf(srcIds, "id", numBuckets)
+      val srcIds = pins(pageIds.unionByName(mentionIds).unionByName(tripleNodeIds).distinct(), "id")
+      val srcBuckets = srcIds.buckets("id")
       // the batch-presence probe needs nothing from B — it overlaps the
       // mapping refresh
-      val srcPresent = TableIO.read(spark, edgesDir, Some(srcBuckets))
-        .join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .limit(1).count() > 0
+      val srcPresent = Materialize.nonEmpty(TableIO.read(spark, edgesDir, Some(srcBuckets))
+        .join(srcIds.df.withColumnRenamed("id", "src"), Seq("src"), "left_semi"))
       val split = Par.await(splitF)
       val dims = Par.await(dimsF)
       val changedEntNodes =
-        if (split.remapped == 0) null
-        else pins(split.changed.select($"id").as[Long].map(Ids.entityNodeId).toDF("en"))
+        if (split.remapped == 0) None
+        else Some(pins(split.changed.select($"id").as[Long].map(Ids.entityNodeId).toDF("en"), "en"))
       val edgeBuckets = srcBuckets ++ dims.hostBuckets ++ dims.domBuckets ++
-        (if (changedEntNodes == null) Set.empty[Int]
-         else bucketsOf(changedEntNodes, "en", numBuckets))
+        changedEntNodes.map(_.buckets("en")).getOrElse(Set.empty[Int])
       val eContent = TableIO.read(spark, edgesDir, Some(edgeBuckets))
       val batchPresent = srcPresent ||
-        eContent.filter(col("kind") === EK.IsPageOf)
-          .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .limit(1).count() > 0
-      if (batchPresent || changedEntNodes != null) {
+        Materialize.nonEmpty(eContent.filter(col("kind") === EK.IsPageOf)
+          .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi"))
+      if (batchPresent || changedEntNodes.nonEmpty) {
         var keepE = eContent
-          .join(srcIds.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
+          .join(srcIds.df.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
           .join(pageIds.select($"id".as("dst")).withColumn("kind", lit(EK.IsPageOf)),
             Seq("dst", "kind"), "left_anti")
           .join(dims.deadHosts.select($"h".as("dst")).withColumn("kind", lit(EK.IsParentHost)),
             Seq("dst", "kind"), "left_anti")
-        if (changedEntNodes != null) {
+        changedEntNodes.foreach { cen =>
           keepE = keepE.join(
-            changedEntNodes.select($"en".as("src")).withColumn("kind", lit(EK.SameAs)),
+            cen.df.select($"en".as("src")).withColumn("kind", lit(EK.SameAs)),
             Seq("src", "kind"), "left_anti")
           val freshSameAs = split.changed.filter($"newComp".isNotNull)
             .select($"id", $"newComp").as[(Long, Long)]
@@ -1021,11 +1033,11 @@ object Incremental {
       .unionByName(dims.deadHosts.select($"h".as("id")))
       .unionByName(dims.deadDoms.select($"d".as("id")))
       .unionByName(deadEnts.select($"e".as("id")))
-      .distinct())
-    val nodeBuckets = bucketsOf(delNodeIds, "id", numBuckets)
+      .distinct(), "id")
+    val nodeBuckets = delNodeIds.buckets("id")
     val curN = TableIO.read(spark, nodesDir, Some(nodeBuckets))
     TableIO.rewriteBuckets(
-      keepOrder(curN.join(delNodeIds, Seq("id"), "left_anti"), curN.columns),
+      keepOrder(curN.join(delNodeIds.df, Seq("id"), "left_anti"), curN.columns),
       nodesDir, col("id"), nodeBuckets, negCounters, numBuckets)
 
     pins.releaseAll()

@@ -256,7 +256,7 @@ object Pipeline {
     // the same flat cache) — each write only blocks on it at manifest-commit
     // time, after its data files are out, so the counter scan's wall time
     // fully overlaps the writes instead of serially preceding them
-    val countersF = Par(flatCounters(t.flat))
+    val countersF = Par(flatCounters(t.flat).counters)
     def counters: Map[String, Long] = Par.await(countersF)
     val writes = Seq(
       Par(TableIO.writeBucketed(t.triples, s"$outDir/triples", col("url"), counters, numBuckets)),
@@ -312,20 +312,33 @@ object Pipeline {
     flat.filter(col("rowKind") === "m" && col("entityId") >= 0)
       .groupBy(col("entityId").as("id")).agg(count(lit(1)).as("n"))
 
-  /** Lineage counters from the flat extraction frame (one aggregation job). */
-  def flatCounters(flat: Dataset[FlatRow]): Map[String, Long] = {
+  /** What one aggregation over a flat frame counts: the five lineage
+    * `counters` every manifest carries; the batch tag, the xor of the page
+    * rows' `xxhash64(url)` (the same page set, redelivered or re-deduped,
+    * always gets the same tag); and the number of same-as rows
+    * ([[sameAsRows]]). */
+  final case class FlatCounts(counters: Map[String, Long], batchTag: String, sameAsRows: Long)
+
+  /** Lineage counters, batch tag and same-as row count of a flat extraction
+    * frame (one aggregation job). */
+  def flatCounters(flat: Dataset[FlatRow]): FlatCounts = {
     import org.apache.spark.sql.functions.{count => cnt, sum => sm}
     val c = flat.groupBy("rowKind").agg(
       cnt(lit(1)).as("n"),
       sm(when(col("error").isNotNull, 1L).otherwise(0L)).as("nErr"),
-      sm(coalesce(col("nSentences"), lit(0))).as("nSent"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    def of(k: String): (Long, Long, Long) = c.getOrElse(k, (0L, 0L, 0L))
-    Map(
-      "pagesIn" -> of("p")._1,
-      "pagesErrored" -> of("p")._2,
-      "sentences" -> of("p")._3,
-      "mentions" -> of("m")._1,
-      "triples" -> of("t")._1)
+      sm(coalesce(col("nSentences"), lit(0))).as("nSent"),
+      expr("bit_xor(xxhash64(url))").as("tag"),
+      sm(when(col("pred") === "same_as" && col("obj") >= 0, 1L).otherwise(0L)).as("nSameAs"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    def of(k: String, i: Int): Long = c.get(k).filterNot(_.isNullAt(i)).map(_.getLong(i)).getOrElse(0L)
+    FlatCounts(
+      Map(
+        "pagesIn" -> of("p", 1),
+        "pagesErrored" -> of("p", 2),
+        "sentences" -> of("p", 3),
+        "mentions" -> of("m", 1),
+        "triples" -> of("t", 1)),
+      java.lang.Long.toHexString(of("p", 4)),
+      of("t", 5))
   }
 }

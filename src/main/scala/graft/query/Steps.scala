@@ -599,9 +599,10 @@ object Steps {
         .otherwise(xxhash64(col("kind"), col("code")))) % 65536).as("label"))
       .dropDuplicates("id")
       .localCheckpoint(true)
-    // edge frame shuffled onto its join key ONCE — the per-round join then
-    // only moves the (much narrower) label frame; the checkpoint preserves
-    // the partitioning, so no round re-exchanges the edges
+    // edge frame shuffled onto its join key once and pinned, so no round
+    // recomputes the dedup. The pin does NOT keep that partitioning: under
+    // AQE a checkpointed frame reports `UnknownPartitioning`, so each
+    // round's join still plans an exchange of the edges
     val e = edges.filter(col("kind") === edgeKind).select("src", "dst")
       // same identity argument for edges: a duplicated (src,dst) row would
       // XOR-cancel the child's contribution (this predates the union form —

@@ -18,11 +18,16 @@ import org.apache.spark.sql.functions._
   *   dir/_manifest.json                 (atomic: committed buckets + counters)
   *
   * Commit protocol: data for a bucket is written by Spark's normal task
-  * commit; the bucket becomes VISIBLE only when listed in the manifest, and
+  * commit; a data file becomes VISIBLE only when listed in the manifest, and
   * the manifest is replaced atomically (tmp + ATOMIC_MOVE) — the analog of
   * the reference's transaction batches (`CSVImporter.java:91-98`).
-  * Resume = read manifest, write only missing buckets
-  * (≙ joern's ArgumentTainter delta patching, SURVEY.md G3).
+  * [[writeBucketed]] builds a table; resume = read manifest, write only
+  * missing buckets (≙ joern's ArgumentTainter delta patching, SURVEY.md
+  * G3). A committed table changes through [[commitBuckets]]: one write job
+  * and one manifest swap that replaces a bucket subset and appends to the
+  * other buckets, in any mix — [[appendBucketed]] and [[rewriteBuckets]]
+  * are its pure-append and pure-overwrite cases. Files a crashed commit
+  * left behind are claimed by no snapshot and wiped by the next commit.
   */
 object TableIO {
   val NumBuckets = 32 // at cluster scale this is O(thousands); local[32] keeps 32
@@ -262,72 +267,21 @@ object TableIO {
     * NEW SNAPSHOT — the Iceberg append: new data files land in the bucket
     * dirs, and only the atomic manifest swap makes them (and their lineage
     * counts) visible. O(|df|) work — committed files are never rewritten or
-    * even opened. Orphan files from a crashed previous append (present on
-    * disk, absent from the manifest) are deleted first, so a retry never
-    * double-counts. `counters` are summed into the prior snapshot's. */
+    * even opened. `counters` are summed into the prior snapshot's. With no
+    * committed snapshot yet, this is a fresh [[writeBucketed]]. */
   def appendBucketed(
       df: DataFrame,
       dir: String,
       bucketKey: org.apache.spark.sql.Column,
       counters: => Map[String, Long] = Map.empty,
-      numBuckets: Int = NumBuckets): Manifest = {
-    val prior0 = readManifest(dir).getOrElse(
-      return writeBucketed(df, dir, bucketKey, counters, numBuckets))
-    require(prior0.numBuckets == numBuckets,
-      s"bucket-count mismatch: table at $dir has ${prior0.numBuckets} buckets, append uses $numBuckets")
-    require(prior0.buckets.keySet == (0 until numBuckets).toSet,
-      s"append to $dir requires a fully-committed snapshot; missing buckets " +
-        s"${(0 until numBuckets).toSet -- prior0.buckets.keySet}")
-    val prior = backfillFiles(dir, prior0)
-    // a legacy prior adopted its on-disk files just now — persist that BEFORE
-    // any new data file can land, otherwise a crash mid-append leaves orphans
-    // that the next retry's backfill would adopt as committed (visible rows
-    // with no lineage count)
-    if (prior0.files.isEmpty && prior.files.nonEmpty) writeManifestAtomic(dir, prior)
-    // wipe orphans of a crashed append: on disk but claimed by NO snapshot
-    // (the history union keeps retained-but-replaced files time-travelable)
-    val claimed = claimedFiles(dir, prior)
-    (0 until numBuckets).foreach { b =>
-      bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty)).foreach { f =>
-        Files.deleteIfExists(bucketFilePath(dir, b, f))
-      }
-    }
-    val withBucket = df.withColumn("bucket",
-      pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
-    val keys = partKeys(numBuckets)
-    withBucket.repartition(numBuckets, element_at(typedLit(keys.toSeq), col("bucket") + 1))
-      .write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
-    val appended: Map[Int, (Long, Seq[String])] = (0 until numBuckets).flatMap { b =>
-      val fresh = bucketFiles(dir, b)
-        .filterNot(prior.files.getOrElse(b, Seq.empty).toSet)
-        .filterNot(claimed.getOrElse(b, Set.empty))
-      if (fresh.isEmpty) None
-      else Some(b -> (fresh.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fresh))
-    }.toMap
-    val m = Manifest(
-      nextSnapshotId(Some(prior)),
-      prior.buckets.map { case (b, n) => b -> (n + appended.get(b).map(_._1).getOrElse(0L)) },
-      sumCounters(prior.counters, counters),
-      numBuckets,
-      prior.files.map { case (b, fs) => b -> (fs ++ appended.get(b).map(_._2).getOrElse(Seq.empty)) })
-    writeManifestAtomic(dir, m)
-    m
-  }
+      numBuckets: Int = NumBuckets): Manifest =
+    commitBuckets(df, dir, bucketKey, Set.empty, appendRest = true, counters, numBuckets)
 
   /** Rewrite the CONTENT of a committed bucket subset as a new snapshot —
-    * the Iceberg overwrite: `df`'s rows (which must hash into `buckets`)
-    * replace those buckets' rows. Crash-safe without any caller-side
-    * materialization: the new data files are written FIRST, the manifest
-    * swap atomically points the touched buckets at them, and only then are
-    * the replaced files deleted — at no instant is a committed row only in
-    * memory. A crash before the swap leaves invisible orphans (wiped by the
-    * next write); after it, the stale files are invisible and wiped later.
-    * `df` may read the table itself (the usual case: a small-delta update
-    * joined against the current snapshot) — reads resolve the manifest's
-    * file list eagerly, so the self-overwrite never sees its own output.
-    * Counters: `addCounters` is summed into the prior snapshot's.
-    * `vacuum=false` keeps the replaced files on disk so the prior snapshot
-    * stays time-travelable ([[readAt]]); [[expireSnapshots]] reclaims. */
+    * the Iceberg overwrite: `df`'s rows in `buckets` replace those buckets'
+    * rows, and rows hashing elsewhere are dropped. `df` may read the table
+    * itself (the usual case: a small-delta update joined against the
+    * current snapshot). An empty `buckets` commits nothing. */
   def rewriteBuckets(
       df: DataFrame,
       dir: String,
@@ -335,18 +289,58 @@ object TableIO {
       buckets: Set[Int],
       addCounters: Map[String, Long] = Map.empty,
       numBuckets: Int = NumBuckets,
+      vacuum: Boolean = true): Manifest =
+    commitBuckets(df, dir, bucketKey, buckets, appendRest = false, addCounters, numBuckets, vacuum)
+
+  /** The one commit body behind [[appendBucketed]] and [[rewriteBuckets]]:
+    * ONE write job and ONE manifest swap. `df`'s rows hashing into
+    * `replace` become those buckets' whole content (a target may end up
+    * empty); with `appendRest`, rows hashing into any other bucket are
+    * appended to it as new files, otherwise they are dropped. So a merge
+    * fallout rewrite and a batch append to the same table commit together.
+    *
+    * Crash-safe without any caller-side materialization: the new data files
+    * are written FIRST, the manifest swap atomically points the table at
+    * them, and only then are the replaced files deleted — at no instant is a
+    * committed row only in memory. A crash before the swap leaves invisible
+    * orphans, wiped (with any earlier crash's) before the next write; reads
+    * resolve the manifest's file list eagerly, so a `df` reading the table
+    * never sees this commit's own output. `counters` are summed into the
+    * prior snapshot's; they are evaluated only at the swap. With
+    * `vacuum=false` the replaced files stay on disk so the prior snapshot
+    * stays time-travelable ([[readAt]]); [[expireSnapshots]] reclaims. */
+  def commitBuckets(
+      df: DataFrame,
+      dir: String,
+      bucketKey: org.apache.spark.sql.Column,
+      replace: Set[Int],
+      appendRest: Boolean,
+      counters: => Map[String, Long],
+      numBuckets: Int = NumBuckets,
       vacuum: Boolean = true): Manifest = {
-    val prior0 = readManifest(dir).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $dir"))
+    val prior0 = readManifest(dir) match {
+      case Some(m) => m
+      case None if appendRest && replace.isEmpty =>
+        return writeBucketed(df, dir, bucketKey, counters, numBuckets)
+      case None => throw new IllegalStateException(s"no committed snapshot at $dir")
+    }
     require(prior0.numBuckets == numBuckets,
-      s"bucket-count mismatch: table at $dir has ${prior0.numBuckets} buckets, rewrite uses $numBuckets")
-    require(buckets.subsetOf(prior0.buckets.keySet),
-      s"rewrite targets must be committed buckets; uncommitted: ${buckets -- prior0.buckets.keySet}")
-    if (buckets.isEmpty) return prior0
+      s"bucket-count mismatch: table at $dir has ${prior0.numBuckets} buckets, this commit uses $numBuckets")
+    require(replace.subsetOf(prior0.buckets.keySet),
+      s"rewrite targets must be committed buckets; uncommitted: ${replace -- prior0.buckets.keySet}")
+    require(!appendRest || prior0.buckets.keySet == (0 until numBuckets).toSet,
+      s"append to $dir requires a fully-committed snapshot; missing buckets " +
+        s"${(0 until numBuckets).toSet -- prior0.buckets.keySet}")
+    if (replace.isEmpty && !appendRest) return prior0
     val prior = backfillFiles(dir, prior0)
+    // a legacy prior adopted its on-disk files just now — persist that BEFORE
+    // any new data file can land, otherwise a crash mid-write leaves orphans
+    // that the next retry's backfill would adopt as committed (visible rows
+    // with no lineage count)
     if (prior0.files.isEmpty && prior.files.nonEmpty) writeManifestAtomic(dir, prior)
-    // wipe orphans of a crashed previous append/rewrite (claimed by NO
-    // snapshot — current or retained history)
+    // wipe orphans of a crashed previous write: on disk but claimed by NO
+    // snapshot (the history union keeps retained-but-replaced files
+    // time-travelable)
     val claimed = claimedFiles(dir, prior)
     (0 until numBuckets).foreach { b =>
       bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty)).foreach { f =>
@@ -355,31 +349,34 @@ object TableIO {
     }
     val withBucket = df.withColumn("bucket",
       pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
-      .filter(col("bucket").isin(buckets.toSeq: _*))
+    val kept = if (appendRest) withBucket else withBucket.filter(col("bucket").isin(replace.toSeq: _*))
     val keys = partKeys(numBuckets)
-    withBucket.repartition(numBuckets, element_at(typedLit(keys.toSeq), col("bucket") + 1))
+    kept.repartition(numBuckets, element_at(typedLit(keys.toSeq), col("bucket") + 1))
       .write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
-    // a rewritten bucket may legitimately end up EMPTY (all rows deduped
-    // away) — map over the full target set, not just buckets that got files
-    val fresh: Map[Int, (Long, Seq[String])] = buckets.toSeq.map { b =>
+    // this write's files, read off disk; a replaced bucket may legitimately
+    // end up EMPTY (all rows deduped away), so every target gets an entry
+    val fresh: Map[Int, (Long, Seq[String])] = (0 until numBuckets).flatMap { b =>
       val fs = bucketFiles(dir, b)
         .filterNot(prior.files.getOrElse(b, Seq.empty).toSet)
         .filterNot(claimed.getOrElse(b, Set.empty))
-      b -> (fs.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fs)
+      if (fs.isEmpty && !replace(b)) None
+      else Some(b -> (fs.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fs))
     }.toMap
     val m = Manifest(
       nextSnapshotId(Some(prior)),
-      prior.buckets ++ fresh.map { case (b, (n, _)) => b -> n },
-      sumCounters(prior.counters, addCounters),
+      prior.buckets ++ fresh.map { case (b, (n, _)) =>
+        b -> (if (replace(b)) n else prior.buckets.getOrElse(b, 0L) + n) },
+      sumCounters(prior.counters, counters),
       numBuckets,
-      prior.files ++ fresh.map { case (b, (_, fs)) => b -> fs })
+      prior.files ++ fresh.map { case (b, (_, fs)) =>
+        b -> (if (replace(b)) fs else prior.files.getOrElse(b, Seq.empty) ++ fs) })
     writeManifestAtomic(dir, m)
-    if (vacuum) {
+    if (vacuum && replace.nonEmpty) {
       // the replaced files are invisible to the head now — reclaim the space
       // (this dangles any history snapshot still referencing them: readAt
       // of such a snapshot fails loudly on the missing file; keep
       // vacuum=false + expireSnapshots for a time-travelable rewrite chain)
-      buckets.foreach { b =>
+      replace.foreach { b =>
         prior.files.getOrElse(b, Seq.empty).foreach { f =>
           Files.deleteIfExists(bucketFilePath(dir, b, f))
         }

@@ -1,8 +1,12 @@
 package graft.util
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
 /** Iteration-materialization policy shared by the fixpoint operators
@@ -74,20 +78,89 @@ object Materialize {
     case _ => df.unpersist(blocking = false)
   }
 
-  /** One operation's eager localCheckpoints, released together once no job
-    * reads them. Thread-safe: concurrent `Par` chains pin into one set. */
-  final class Pins {
+  /** What one job over a frame's rows counts: the rows and, per requested
+    * key column, the buckets its values hash into — `pmod(xxhash64(key),
+    * numBuckets)`, TableIO's bucketing. */
+  final case class Tally(count: Long, buckets: Map[String, Set[Int]])
+
+  /** A frame pinned by [[Pins]], with the tally of the job that filled it. */
+  final case class Pinned(df: DataFrame, count: Long, buckets: Map[String, Set[Int]])
+
+  /** One operation's pins, released together once no job reads them. Each
+    * pin follows `pin`'s policy (reliable checkpoint under the interval,
+    * localCheckpoint otherwise) and costs ONE job: the job that fills it is
+    * a [[tally]], so its row count and the buckets of `keys` need no query
+    * of their own. Thread-safe: concurrent `Par` chains pin into one set. */
+  final class Pins(numBuckets: Int) {
     private val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    def apply(df: DataFrame): DataFrame = {
-      val p = df.localCheckpoint(eager = true)
+    def apply(df: DataFrame, keys: String*): Pinned = {
+      val reliable = interval(df.sparkSession) > 0
+      // lazy: under AQE this still runs the plan's exchanges and leaves the
+      // final stage to the tally job, whose end fills the checkpoint (Spark
+      // checkpoints the marked ancestors of a job's RDD when the job ends)
+      val p = if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
       held.add(p)
-      p
+      // a reliable checkpoint writes after the job: keep the blocks so the
+      // write does not recompute them
+      if (reliable) p.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val t = tally(p, numBuckets, keys: _*)
+      Pinned(p, t.count, t.buckets)
     }
     def releaseAll(): Unit = {
       var p = held.poll()
       while (p != null) { release(p); p = held.poll() }
     }
   }
+
+  /** Row count of `df` and the buckets of `keys`, in ONE job (plus the
+    * exchanges `df`'s own plan needs): each partition counts and sets bits,
+    * and the driver sums. A Dataset `count()` pays a second job for its
+    * exchange to one partition. */
+  def tally(df: DataFrame, numBuckets: Int, keys: String*): Tally = {
+    val ords = keys.map(df.schema.fieldIndex).toArray
+    val types = ords.map(df.schema(_).dataType)
+    require(ords.isEmpty || numBuckets > 0, s"bucket sets of ${keys.mkString(",")} need numBuckets > 0")
+    val n = numBuckets
+    val parts = perPartition(df, "tally") { it =>
+      val sets = Array.fill(ords.length)(new java.util.BitSet(n))
+      var rows = 0L
+      it.foreach { row =>
+        rows += 1
+        var i = 0
+        while (i < ords.length) {
+          val h = if (row.isNullAt(ords(i))) XxHashSeed
+            else XxHash64Function.hash(row.get(ords(i), types(i)), types(i), XxHashSeed)
+          sets(i).set((((h % n) + n) % n).toInt)
+          i += 1
+        }
+      }
+      (rows, sets)
+    }
+    val sets = Array.fill(ords.length)(new java.util.BitSet(n))
+    parts.foreach { case (_, ss) => ss.indices.foreach(i => sets(i).or(ss(i))) }
+    Tally(parts.map(_._1).sum, keys.zip(sets.map(_.stream().toArray.toSet)).toMap)
+  }
+
+  /** Row count of `df` in one job (see [[tally]]). */
+  def count(df: DataFrame): Long = tally(df, 0).count
+
+  /** Whether `df` has a row, in one job: each partition stops at its first. */
+  def nonEmpty(df: DataFrame): Boolean = perPartition(df, "nonEmpty")(_.hasNext).contains(true)
+
+  /** `f` over each partition of `df`'s rows, as one job run under a SQL
+    * execution of `df` (as any Dataset action is, so listeners attribute it
+    * to the same plan and call site). */
+  private def perPartition[R: ClassTag](df: DataFrame, name: String)(
+      f: Iterator[InternalRow] => R): Array[R] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.execute().mapPartitions(it => Iterator.single(f(it))).collect()
+    }
+  }
+
+  /** `xxhash64`'s default seed. */
+  private val XxHashSeed = 42L
 
   /** Materialize iteration `iter`'s frame eagerly; reliable checkpoint on
     * every Nth iteration when the interval is configured, recomputable

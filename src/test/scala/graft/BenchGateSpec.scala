@@ -66,6 +66,22 @@ class BenchGateSpec extends AnyFunSuite with Matchers {
       Map("SPARK_GRAFT_SENTINEL_Q1_MAX" -> "2.5")).q1Max shouldBe 2.5
   }
 
+  test("the core ladder has distinct ascending levels ending at the host's cores") {
+    Bench.ladder(4) shouldBe Seq(1, 2, 4)
+    Bench.ladder(32) shouldBe Seq(2, 8, 32)
+    Bench.ladder(8) shouldBe Seq(1, 2, 8)
+    Bench.ladder(2) shouldBe Seq(1, 2)
+    Bench.ladder(1) shouldBe Seq(1)
+    (1 to 64).foreach { n =>
+      val l = Bench.ladder(n)
+      withClue(n) {
+        l shouldBe l.distinct.sorted
+        l.last shouldBe n
+        l.size shouldBe math.min(n, 3)
+      }
+    }
+  }
+
   test("an error message is a valid JSON string") {
     Json.quote("q: \"x\"\tat a\\b\n\u0001") shouldBe
       "\"q: \\\"x\\\"\\tat a\\\\b\\n\\u0001\""

@@ -125,6 +125,58 @@ class CanonSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("a pin costs one job and carries its row count and key buckets") {
+    import graft.util.Materialize
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import spark.implicits._
+    val df = (0 until 200).map(i => (if (i % 17 == 0) null else s"u$i", i.toLong * 7919))
+      .toDF("url", "id")
+    // the buckets TableIO writes a key into, null keys included
+    def want(c: String): Set[Int] = df.select(pmod(xxhash64(col(c)), lit(8)).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val pins = new Materialize.Pins(8)
+    org.apache.spark.graft.BusDrain(sc)
+    sc.addSparkListener(listener)
+    val p = try { val p = pins(df, "url", "id"); org.apache.spark.graft.BusDrain(sc); p }
+      finally sc.removeSparkListener(listener)
+    jobs.get shouldBe 1
+    p.count shouldBe 200L
+    p.buckets shouldBe Map("url" -> want("url"), "id" -> want("id"))
+    p.df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] shouldBe true
+    p.df.collect().toSet shouldBe df.collect().toSet
+    sc.getPersistentRDDs.size shouldBe before + 1
+    pins.releaseAll()
+    sc.getPersistentRDDs.size shouldBe before
+    // the same one-job tally over an unpinned frame
+    Materialize.count(df.filter(col("id") > 7919L)) shouldBe 198L
+    Materialize.nonEmpty(df.filter(col("id") < 0L)) shouldBe false
+    Materialize.nonEmpty(df) shouldBe true
+
+    // under the interval the pin is a reliable checkpoint, tallied the same
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-pins").toString
+    sc.setCheckpointDir(dir)
+    spark.conf.set(Materialize.IntervalKey, "2")
+    try {
+      val r = pins(df, "id")
+      r.count shouldBe 200L
+      r.buckets shouldBe Map("id" -> want("id"))
+      r.df.collect().toSet shouldBe df.collect().toSet
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(f => java.nio.file.Files.isRegularFile(f) &&
+          f.getFileName.toString.startsWith("part-"))
+        .count() should be > 0L
+      pins.releaseAll()
+    } finally spark.conf.set(Materialize.IntervalKey, "0")
+  }
+
   test("property: CC equals union-find on random graphs; invariant under edge order") {
     (0 until 5).foreach { trial =>
       val e = (0 until 60).map { i =>

@@ -41,6 +41,10 @@ class EntryPointsSpec extends AnyFunSuite with Matchers {
       .toSet shouldBe Set("graft/extract/TripleExtractor.scala")
   }
 
+  test("Incremental pins only through Materialize, under its checkpoint policy") {
+    sources("graft/Incremental.scala") should not include "localCheckpoint("
+  }
+
   test("the objects defining main are exactly the allowlist") {
     val objectDecl = """(?m)^\s*object\s+(\w+)""".r
     val mainDecl = """def main\s*\(""".r

@@ -105,6 +105,7 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     // the monthly crawl batch: pages [60, 90) — with a slice re-fetched
     // INSIDE the batch window (duplicate urls must collapse to one row
     // deterministically, not wedge the guards)
+    val snaps = Seq("triples", "edges").map(tb => tb -> TableIO.snapshots(s"$dir/$tb")).toMap
     val stats = Incremental.appendPages(spark,
       range(60, 90).union(range(75, 90)), dir, c.nPersons)
     stats.pages should be > 0L
@@ -113,6 +114,11 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     // the retroactive-canonicalization path is actually exercised
     stats.remappedIds should be > 0L
     stats.tripleBucketsRewritten should be > 0
+    stats.edgeBucketsRewritten should be > 0
+    // the merge-stale rewrite and the batch append are ONE commit per table
+    snaps.foreach { case (tb, before) =>
+      withClue(tb) { TableIO.snapshots(s"$dir/$tb").filterNot(before.toSet) should have size 1 }
+    }
 
     // ground truth: a from-scratch rebuild over all 90 pages
     val t1 = Pipeline.run(spark, range(0, 90), c.nPersons)
@@ -281,9 +287,11 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     try { body; org.apache.spark.graft.BusDrain(sc) } finally sc.removeSparkListener(listener)
     jobs.get
   }
-  // the counts this fixture gives (they repeat exactly for a fixed input)
-  private val AppendJobs = 101
-  private val TakedownJobs = 135
+  // the counts this fixture gives (they repeat exactly for a fixed input);
+  // before each pin returned its count and key buckets, and before an
+  // append committed each data table once, they were 101 and 135
+  private val AppendJobs = 67
+  private val TakedownJobs = 93
 
   test("an append and a takedown stay within their job budgets") {
     val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString

@@ -214,6 +214,60 @@ class StoreSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("one commit replaces some buckets and appends to the rest; a crash before the swap changes nothing") {
+    import spark.implicits._
+    val dir = freshDir()
+    TableIO.writeBucketed(sample(), dir, col("key"), Map("rows" -> 1000L), numBuckets = 8)
+    val prior = TableIO.readManifest(dir).get
+    val before = TableIO.snapshots(dir)
+    val bucketExpr = pmod(xxhash64(col("key")), lit(8)).cast("int")
+    val targets = Set(TableIO.bucketOfSpark(spark, "k7", 8), TableIO.bucketOfSpark(spark, "k8", 8))
+    targets.size should be < 8
+    // the targets' rows negated (a rewrite reading the live table) plus 300
+    // new keys, which land in targets and other buckets alike
+    val batch = (1000 until 1300).map(i => (s"k$i", i.toLong)).toDF("key", "value")
+    val rows = TableIO.read(spark, dir).filter(bucketExpr.isin(targets.toSeq: _*))
+      .withColumn("value", -col("value")).unionByName(batch)
+    def onDisk: Map[Int, Set[String]] = (0 until 8).map { b =>
+      val ls = Files.list(java.nio.file.Paths.get(dir, "data", s"bucket=$b"))
+      try b -> ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSet
+      finally ls.close()
+    }.toMap
+
+    // a crash after the data files are out, before the manifest swap (the
+    // counters are evaluated at the swap): the head and history stand
+    intercept[IllegalStateException] {
+      TableIO.commitBuckets(rows, dir, col("key"), targets, appendRest = true,
+        throw new IllegalStateException("crash before the swap"), numBuckets = 8)
+    }
+    TableIO.readManifest(dir).get shouldBe prior
+    TableIO.snapshots(dir) shouldBe before
+    TableIO.read(spark, dir).count() shouldBe 1000L
+    onDisk.values.map(_.size).sum should be > prior.files.values.map(_.size).sum
+
+    // the next commit wipes those orphans and commits exactly one snapshot
+    val m = TableIO.commitBuckets(rows, dir, col("key"), targets, appendRest = true,
+      Map("rows" -> 300L), numBuckets = 8)
+    TableIO.snapshots(dir).filterNot(before.toSet) shouldBe Seq(m.snapshotId)
+    m.counters("rows") shouldBe 1300L
+    onDisk shouldBe (0 until 8).map(b => b -> m.files(b).toSet).toMap
+    // bucket counts are the footers' (every file on disk is the head's)
+    m.buckets shouldBe spark.read.parquet(s"$dir/data").groupBy("bucket").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // targets got new files only; the other buckets kept theirs and gained some
+    targets.foreach(b => m.files(b).toSet.intersect(prior.files(b).toSet) shouldBe empty)
+    (0 until 8).filterNot(targets).foreach { b =>
+      m.files(b) should contain allElementsOf prior.files(b)
+    }
+    val bucketOf = TableIO.bucketsOfSpark(spark, (0 until 1300).map(i => s"k$i"), 8)
+    val want = (0 until 1300).map { i =>
+      val k = s"k$i"
+      (k, if (i < 1000 && targets(bucketOf(k))) -i.toLong else i.toLong)
+    }.sorted
+    TableIO.read(spark, dir).as[(String, Long)].collect().sorted.toSeq shouldBe want
+  }
+
   test("compact: append-fragmented buckets collapse to one file, content unchanged") {
     import spark.implicits._
     val dir = freshDir()

@@ -281,14 +281,14 @@ object Bench {
     val errorsJson = errors.map(Json.quote).mkString("[", ",", "]")
     // per-round raw seconds: the host is a shared microVM with multi-minute
     // neighbor-noise bursts — the spread makes the best-of basis auditable
-    val roundsJson = rounds.map(_.map(r => f"${r._2}%.3f").mkString("[", ",", "]"))
-      .mkString("[", ",", "]")
+    def arr(xs: Seq[String]) = xs.mkString("[", ",", "]")
+    val roundsJson = arr(rounds.map(r => arr(r.map(l => f"${l._2}%.3f"))))
     val effJson = levels.indices.tail.map { j =>
       val eff = (thr(j) / thr(j - 1)) / (levels(j).toDouble / levels(j - 1))
       f""","scaling_efficiency_${levels(j - 1)}to${levels(j)}":$eff%.3f"""
     }.mkString
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$gatedJson${sentinel.json},"headline_attempts":$headlineAttempts,"errors":$errorsJson,"queries":$qs,"sf":"$sfDir","pipeline":{"pages":$benchPages,"triples":$triplesHigh,"cores":${levels.mkString("[", ",", "]")},"sec":${best.map(b => f"${b._2}%.3f").mkString("[", ",", "]")},"round_sec":$roundsJson,"triples_per_sec":${thr.map(t => f"$t%.1f").mkString("[", ",", "]")}$effJson}}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$gatedJson${sentinel.json},"headline_attempts":$headlineAttempts,"errors":$errorsJson,"queries":$qs,"sf":"$sfDir","pipeline":{"pages":$benchPages,"triples":$triplesHigh,"cores":${arr(levels.map(_.toString))},"sec":${arr(best.map(b => f"${b._2}%.3f"))},"round_sec":$roundsJson,"triples_per_sec":${arr(thr.map(t => f"$t%.1f"))}$effJson}}"""
     // the JSON must be machine-findable: sbt's logger prefixes every
     // println with "[info] ", which broke the round-1 driver parse — so
     // also (a) write it straight to fd 1, bypassing the redirected

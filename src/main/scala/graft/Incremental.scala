@@ -394,9 +394,10 @@ object Incremental {
     * overlap) and skips it. Because the components swap still happens last,
     * a retry recomputes the SAME merged mapping and remap set from the
     * unchanged old mapping (CC is deterministic), and a table whose commit
-    * landed finds no stale rows and no missing batch rows: it no-ops. A batch that mixes
-    * new and already-ingested urls is rejected — a re-crawled url is an
-    * UPDATE (invalidate + rewrite its bucket), not an append.
+    * landed finds no stale rows and no missing batch rows: it no-ops. A
+    * batch that mixes new and already-ingested urls is rejected — a
+    * re-crawled url is an UPDATE (invalidate + rewrite its bucket), not an
+    * append.
     *
     * Scale shape: extraction, linking and canonical join are O(|batch|);
     * the CC input is O(|entities|); the dedup/overlap probes read only the
@@ -556,7 +557,7 @@ object Incremental {
           rd, col("from"), Map.empty, 1)
         (Set.empty[Int], null)
       } else staleTriples(spark, triplesDir, remap, remapN, numBuckets)
-    commitPatch(triplesDir, col("url"), stale, remapped, if (tripApplied) None else Some(triplesB),
+    commitPatch(triplesDir, col("url"), stale, remapped, Option.unless(tripApplied)(triplesB),
       batchCounters, numBuckets)
     (tripApplied, stale)
     }
@@ -585,25 +586,23 @@ object Incremental {
     val (stale, remapped) =
       if (remapN == 0 || deferMergeRewrite) (Set.empty[Int], null)
       else staleSameAs(spark, edgesDir, remap, numBuckets)
-    val batch =
-      if (edgesApplied) None
-      else {
-        val freshSameAs =
-          freshMapping
-            .as[(Long, Long)]
-            .map { case (id, comp) =>
-              GraphEdge(Ids.entityNodeId(id), Ids.entityNodeId(comp), EK.SameAs, null) }
-            .toDF().select(col("src"), col("dst"), col("kind"), col("variable"), col("label"))
-        // IS_PARENT_HOST rows are dimension edges (one per distinct host) —
-        // like the dimension nodes, dedup against the buckets they hash into;
-        // every other batch edge is page-scoped and cannot pre-exist
-        val ph = pins(edgesB.filter(col("kind") === EK.IsParentHost), "src")
-        val phExisting = TableIO.read(spark, edgesDir, Some(ph.buckets("src")))
-          .filter(col("kind") === EK.IsParentHost).select("src", "dst")
-        val novelPh = ph.df.join(phExisting, Seq("src", "dst"), "left_anti")
-        Some(edgesB.filter(col("kind") =!= EK.IsParentHost)
-          .unionByName(novelPh).unionByName(freshSameAs))
-      }
+    val batch = Option.unless(edgesApplied) {
+      val freshSameAs =
+        freshMapping
+          .as[(Long, Long)]
+          .map { case (id, comp) =>
+            GraphEdge(Ids.entityNodeId(id), Ids.entityNodeId(comp), EK.SameAs, null) }
+          .toDF().select(col("src"), col("dst"), col("kind"), col("variable"), col("label"))
+      // IS_PARENT_HOST rows are dimension edges (one per distinct host) —
+      // like the dimension nodes, dedup against the buckets they hash into;
+      // every other batch edge is page-scoped and cannot pre-exist
+      val ph = pins(edgesB.filter(col("kind") === EK.IsParentHost), "src")
+      val phExisting = TableIO.read(spark, edgesDir, Some(ph.buckets("src")))
+        .filter(col("kind") === EK.IsParentHost).select("src", "dst")
+      val novelPh = ph.df.join(phExisting, Seq("src", "dst"), "left_anti")
+      edgesB.filter(col("kind") =!= EK.IsParentHost)
+        .unionByName(novelPh).unionByName(freshSameAs)
+    }
     commitPatch(edgesDir, col("src"), stale, remapped, batch, batchCounters, numBuckets)
     (edgesApplied, stale)
     }
@@ -910,7 +909,8 @@ object Incremental {
         .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
         .select($"src".as("h")).distinct()
       val deadHosts = pins(hostCand.join(liveHosts, Seq("h"), "left_anti").distinct())
-      if (deadHosts.count == 0) Dims(hostBuckets, deadHosts.df, 0L, Set.empty, Seq.empty[Long].toDF("d"), 0L)
+      if (deadHosts.count == 0)
+        Dims(hostBuckets, deadHosts.df, 0L, Set.empty, Seq.empty[Long].toDF("d"), 0L)
       else {
         val domCand = pins(Pipeline.hostDomainOf(pRows.df)
           .join(deadHosts.df.withColumnRenamed("h", "hostId"), Seq("hostId"), "left_semi")

@@ -330,7 +330,8 @@ object Pipeline {
       expr("bit_xor(xxhash64(url))").as("tag"),
       sm(when(col("pred") === "same_as" && col("obj") >= 0, 1L).otherwise(0L)).as("nSameAs"))
       .collect().map(r => r.getString(0) -> r).toMap
-    def of(k: String, i: Int): Long = c.get(k).filterNot(_.isNullAt(i)).map(_.getLong(i)).getOrElse(0L)
+    def of(k: String, i: Int): Long =
+      c.get(k).filterNot(_.isNullAt(i)).map(_.getLong(i)).getOrElse(0L)
     FlatCounts(
       Map(
         "pagesIn" -> of("p", 1),

@@ -325,9 +325,11 @@ object TableIO {
       case None => throw new IllegalStateException(s"no committed snapshot at $dir")
     }
     require(prior0.numBuckets == numBuckets,
-      s"bucket-count mismatch: table at $dir has ${prior0.numBuckets} buckets, this commit uses $numBuckets")
+      s"bucket-count mismatch: table at $dir has ${prior0.numBuckets} buckets, " +
+        s"this commit uses $numBuckets")
     require(replace.subsetOf(prior0.buckets.keySet),
-      s"rewrite targets must be committed buckets; uncommitted: ${replace -- prior0.buckets.keySet}")
+      s"rewrite targets must be committed buckets; uncommitted: " +
+        s"${replace -- prior0.buckets.keySet}")
     require(!appendRest || prior0.buckets.keySet == (0 until numBuckets).toSet,
       s"append to $dir requires a fully-committed snapshot; missing buckets " +
         s"${(0 until numBuckets).toSet -- prior0.buckets.keySet}")
@@ -349,7 +351,8 @@ object TableIO {
     }
     val withBucket = df.withColumn("bucket",
       pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
-    val kept = if (appendRest) withBucket else withBucket.filter(col("bucket").isin(replace.toSeq: _*))
+    val kept =
+      if (appendRest) withBucket else withBucket.filter(col("bucket").isin(replace.toSeq: _*))
     val keys = partKeys(numBuckets)
     kept.repartition(numBuckets, element_at(typedLit(keys.toSeq), col("bucket") + 1))
       .write.mode("append").partitionBy("bucket").parquet(s"$dir/data")

@@ -120,7 +120,8 @@ object Materialize {
   def tally(df: DataFrame, numBuckets: Int, keys: String*): Tally = {
     val ords = keys.map(df.schema.fieldIndex).toArray
     val types = ords.map(df.schema(_).dataType)
-    require(ords.isEmpty || numBuckets > 0, s"bucket sets of ${keys.mkString(",")} need numBuckets > 0")
+    require(ords.isEmpty || numBuckets > 0,
+      s"bucket sets of ${keys.mkString(",")} need numBuckets > 0")
     val n = numBuckets
     val parts = perPartition(df, "tally") { it =>
       val sets = Array.fill(ords.length)(new java.util.BitSet(n))

@@ -214,7 +214,8 @@ class StoreSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("one commit replaces some buckets and appends to the rest; a crash before the swap changes nothing") {
+  test("one commit replaces some buckets and appends to the rest; " +
+      "a crash before the swap changes nothing") {
     import spark.implicits._
     val dir = freshDir()
     TableIO.writeBucketed(sample(), dir, col("key"), Map("rows" -> 1000L), numBuckets = 8)

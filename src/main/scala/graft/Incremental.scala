@@ -472,14 +472,20 @@ object Incremental {
     // Page nodes cover every ingested page (triple-url overlap would miss
     // zero-triple pages and could let one table commit while another
     // rejects — a permanent split). All-or-nothing: all present = resume,
-    // none = fresh append, a mix = misuse, rejected atomically.
+    // none = fresh append, a mix = misuse, rejected atomically. It and the
+    // edges table's resume probe need only the batch pages, so both run
+    // while the merged mapping is computed.
     val nodesDir = s"$outDir/nodes"
-    val pageOverlap = Materialize.count(TableIO.read(spark, nodesDir, Some(pRows.buckets("id")))
-      .filter(col("kind") === Schema.NodeKinds.Page)
-      .join(pageIds, Seq("id"), "left_semi"))
-    require(pageOverlap == 0 || pageOverlap == nBatch,
-      s"batch mixes new and already-ingested urls ($pageOverlap of $nBatch " +
-        s"already in $nodesDir) — a re-crawled url is an update, not an append")
+    val edgesDir = s"$outDir/edges"
+    val pageOverlapF = Par(Materialize.count(
+      TableIO.read(spark, nodesDir, Some(pRows.buckets("id")))
+        .filter(col("kind") === Schema.NodeKinds.Page)
+        .join(pageIds, Seq("id"), "left_semi")))
+    val edgeOverlapF = Par(Materialize.count(
+      TableIO.read(spark, edgesDir, Some(pRows.buckets("hostId")))
+        .filter(col("kind") === EK.IsPageOf)
+        .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+        .select("dst").distinct()))
 
     // ---- merged canonical mapping (entity-sized CC, corpus-independent) ----
     val oldComponents = TableIO.read(spark, s"$outDir/components")
@@ -493,7 +499,7 @@ object Incremental {
         .persist(StorageLevel.MEMORY_AND_DISK)
     // remap: old canonical value (root, or the raw id of a previously
     // unmapped singleton) → new root, where they differ. Merge-sized.
-    val (remap, remapN) =
+    val remapF = Par {
       if (!havePairs) (Seq.empty[(Long, Long)].toDF("from", "to"), 0L)
       else {
         val r = pins(components2
@@ -502,14 +508,23 @@ object Incremental {
           .filter($"from" =!= $"to").distinct())
         (r.df, r.count)
       }
+    }
     // mapping rows the batch introduces — computed ONCE (stat + the fresh
     // SAME_AS edge source share it)
-    val (freshMapping, newMappingRows) =
+    val freshF = Par {
       if (!havePairs) (Seq.empty[(Long, Long)].toDF("id", "component"), 0L)
       else {
         val f = pins(components2.join(oldComponents.select("id"), Seq("id"), "left_anti"))
         (f.df, f.count)
       }
+    }
+    Par.awaitAll(pageOverlapF, remapF, freshF)
+    val pageOverlap = Par.await(pageOverlapF)
+    require(pageOverlap == 0 || pageOverlap == nBatch,
+      s"batch mixes new and already-ingested urls ($pageOverlap of $nBatch " +
+        s"already in $nodesDir) — a re-crawled url is an update, not an append")
+    val (remap, remapN) = Par.await(remapF)
+    val (freshMapping, newMappingRows) = Par.await(freshF)
 
     // ---- the three data tables are INDEPENDENT — patch them as concurrent
     // jobs (the materialize precedent): the append path is dominated by
@@ -522,6 +537,11 @@ object Incremental {
     // ---- triples: merge-stale buckets and the batch in one commit ----
     val triplesDir = s"$outDir/triples"
     val triplesF = Par {
+    // the merge-stale probe (read-only) runs beside the batch's resume probe
+    val staleF = Par {
+      if (remapN == 0 || deferMergeRewrite) (Set.empty[Int], null)
+      else staleTriples(spark, triplesDir, remap, remapN, numBuckets)
+    }
     val triplesB = Pipeline.canonicalizeTriples(flatB, components2)
     val batchUrls = pins(triplesB.select($"url").distinct(), "url")
     val nUrls = batchUrls.count
@@ -540,23 +560,21 @@ object Incremental {
     val tripApplied =
       if (nUrls == 0) pageOverlap == nBatch else tripOverlap == nUrls
 
-    val (stale, remapped) =
-      if (remapN == 0) (Set.empty[Int], null)
-      else if (deferMergeRewrite) {
-        // merge-on-read: record the remap in the side table, touch no data
-        // file. A pending chain is ROUTED through the new mapping first so
-        // one read-time lookup always reaches the current root.
-        val rd = remapDir(outDir)
-        val pending = TableIO.readManifest(rd)
-          .map(_ => TableIO.read(spark, rd))
-          .getOrElse(Seq.empty[(Long, Long)].toDF("from", "to"))
-        val hop = remap.withColumnRenamed("from", "t0").withColumnRenamed("to", "t1")
-        val routed = pending.join(broadcast(hop), pending("to") === hop("t0"), "left")
-          .select(pending("from"), coalesce($"t1", pending("to")).as("to"))
-        swapWrite(routed.unionByName(remap).dropDuplicates("from", "to"),
-          rd, col("from"), Map.empty, 1)
-        (Set.empty[Int], null)
-      } else staleTriples(spark, triplesDir, remap, remapN, numBuckets)
+    if (remapN > 0 && deferMergeRewrite) {
+      // merge-on-read: record the remap in the side table, touch no data
+      // file. A pending chain is ROUTED through the new mapping first so
+      // one read-time lookup always reaches the current root.
+      val rd = remapDir(outDir)
+      val pending = TableIO.readManifest(rd)
+        .map(_ => TableIO.read(spark, rd))
+        .getOrElse(Seq.empty[(Long, Long)].toDF("from", "to"))
+      val hop = remap.withColumnRenamed("from", "t0").withColumnRenamed("to", "t1")
+      val routed = pending.join(broadcast(hop), pending("to") === hop("t0"), "left")
+        .select(pending("from"), coalesce($"t1", pending("to")).as("to"))
+      swapWrite(routed.unionByName(remap).dropDuplicates("from", "to"),
+        rd, col("from"), Map.empty, 1)
+    }
+    val (stale, remapped) = Par.await(staleF)
     commitPatch(triplesDir, col("url"), stale, remapped, Option.unless(tripApplied)(triplesB),
       batchCounters, numBuckets)
     (tripApplied, stale)
@@ -569,23 +587,20 @@ object Incremental {
     val (nodesB, edgesB) = Pipeline.graphTables(spark, flatB, emptyComp)
 
     // ---- edges: merge-stale SAME_AS buckets and the batch in one commit ----
-    val edgesDir = s"$outDir/edges"
     val edgesF = Par {
-    val edgeOverlap = Materialize.count(TableIO.read(spark, edgesDir, Some(pRows.buckets("hostId")))
-      .filter(col("kind") === EK.IsPageOf)
-      .join(pageIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-      .select("dst").distinct())
-    assert(edgeOverlap == 0 || edgeOverlap == nBatch,
-      s"edges table at $edgesDir holds a partial batch ($edgeOverlap of $nBatch pages)")
-    val edgesApplied = edgeOverlap == nBatch
-
     // SAME_AS rows are the only edges referencing canonical roots; their
     // merge fallout scatters by src hash, so a hot merge makes this a
     // near-full-table rewrite too — the SAME deferral applies (the node-id
-    // remap derives from the entity-id side table, so one table serves both)
-    val (stale, remapped) =
+    // remap derives from the entity-id side table, so one table serves
+    // both). The stale probe runs beside the batch's dedup pin.
+    val staleF = Par {
       if (remapN == 0 || deferMergeRewrite) (Set.empty[Int], null)
       else staleSameAs(spark, edgesDir, remap, numBuckets)
+    }
+    val edgeOverlap = Par.await(edgeOverlapF)
+    assert(edgeOverlap == 0 || edgeOverlap == nBatch,
+      s"edges table at $edgesDir holds a partial batch ($edgeOverlap of $nBatch pages)")
+    val edgesApplied = edgeOverlap == nBatch
     val batch = Option.unless(edgesApplied) {
       val freshSameAs =
         freshMapping
@@ -603,6 +618,7 @@ object Incremental {
       edgesB.filter(col("kind") =!= EK.IsParentHost)
         .unionByName(novelPh).unionByName(freshSameAs)
     }
+    val (stale, remapped) = Par.await(staleF)
     commitPatch(edgesDir, col("src"), stale, remapped, batch, batchCounters, numBuckets)
     (edgesApplied, stale)
     }

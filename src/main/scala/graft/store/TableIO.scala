@@ -356,12 +356,11 @@ object TableIO {
     val keys = partKeys(numBuckets)
     kept.repartition(numBuckets, element_at(typedLit(keys.toSeq), col("bucket") + 1))
       .write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
-    // this write's files, read off disk; a replaced bucket may legitimately
-    // end up EMPTY (all rows deduped away), so every target gets an entry
+    // this write's files: on disk, claimed by no snapshot (the orphans are
+    // gone). A replaced bucket may legitimately end up EMPTY (all rows
+    // deduped away), so every target gets an entry
     val fresh: Map[Int, (Long, Seq[String])] = (0 until numBuckets).flatMap { b =>
-      val fs = bucketFiles(dir, b)
-        .filterNot(prior.files.getOrElse(b, Seq.empty).toSet)
-        .filterNot(claimed.getOrElse(b, Set.empty))
+      val fs = bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty))
       if (fs.isEmpty && !replace(b)) None
       else Some(b -> (fs.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fs))
     }.toMap

@@ -290,7 +290,7 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   // the counts this fixture gives (they repeat exactly for a fixed input);
   // before each pin returned its count and key buckets, and before an
   // append committed each data table once, they were 101 and 135
-  private val AppendJobs = 67
+  private val AppendJobs = 68
   private val TakedownJobs = 93
 
   test("an append and a takedown stay within their job budgets") {

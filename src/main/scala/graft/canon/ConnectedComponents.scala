@@ -45,24 +45,25 @@ object ConnectedComponents {
   val LocalCutover = 2000000L
 
   /** Strategy-adaptive CC: identical output on either path (tested). The
-    * probe and the chosen path share one pin of the input; neither path's
-    * result reads it (a driver-built relation, a checkpointed round). */
+    * chosen path reads one pin of the input, and the job that fills the
+    * pin also counts it; neither path's result reads the pin (a
+    * driver-built relation, a checkpointed round). */
   def auto(spark: SparkSession, edges: DataFrame,
            cutover: Long = LocalCutover): DataFrame = {
     import spark.implicits._
-    val e = Materialize.pin(edges.toDF("a", "b").filter($"a" =!= $"b"))
-    // bounded COUNT decides the strategy without shipping rows — collecting
-    // cutover+1 pairs (~32 MB) to the driver just to discard them on the
-    // distributed path coupled the cutover constant to driver memory; only
-    // the genuinely-small path pulls data (≤ cutover rows by the probe)
-    val probeCount = e.limit((cutover + 1).toInt).count()
+    val pins = new Materialize.Pins
+    val e = pins(edges.toDF("a", "b").filter($"a" =!= $"b"))
+    // the pin's own count decides the strategy without shipping rows —
+    // collecting cutover+1 pairs (~32 MB) to the driver just to discard them
+    // on the distributed path would couple the cutover constant to driver
+    // memory; only the genuinely-small path pulls data (≤ cutover rows)
     val out =
-      if (probeCount <= cutover) {
+      if (e.count <= cutover) {
         val uf = new LocalUnionFind
-        e.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
+        e.df.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
         uf.components.toSeq.toDF("id", "component")
-      } else run(spark, e)
-    Materialize.release(e)
+      } else run(spark, e.df)
+    pins.releaseAll()
     out
   }
 

@@ -91,7 +91,7 @@ object Materialize {
     * localCheckpoint otherwise) and costs ONE job: the job that fills it is
     * a [[tally]], so its row count and the buckets of `keys` need no query
     * of their own. Thread-safe: concurrent `Par` chains pin into one set. */
-  final class Pins(numBuckets: Int) {
+  final class Pins(numBuckets: Int = 0) {
     private val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     def apply(df: DataFrame, keys: String*): Pinned = {
       val reliable = interval(df.sparkSession) > 0

@@ -290,8 +290,8 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   // the counts this fixture gives (they repeat exactly for a fixed input);
   // before each pin returned its count and key buckets, and before an
   // append committed each data table once, they were 101 and 135
-  private val AppendJobs = 68
-  private val TakedownJobs = 93
+  private val AppendJobs = 66
+  private val TakedownJobs = 91
 
   test("an append and a takedown stay within their job budgets") {
     val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString

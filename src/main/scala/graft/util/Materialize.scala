@@ -11,9 +11,10 @@ import org.apache.spark.storage.StorageLevel
 
 /** Iteration-materialization policy shared by the fixpoint operators
   * (ConnectedComponents, Steps.selfReaching, neighborhoodHashFeatures, the
-  * GraphAnalytics kernels). The RDD query kernels (PageRank and the BFS
-  * closures behind `slice`, `path` and the SCC/bow-tie reach) use the RDD
-  * overloads of `pin` and `iterate`, which apply the same policy.
+  * GraphAnalytics kernels) and the increments' [[Pins]]. The RDD query
+  * kernels (PageRank and the BFS closures behind `slice`, `path` and the
+  * SCC/bow-tie reach) use the RDD `pin` and `iterate`, which apply the same
+  * policy.
   *
   * Default: eager `localCheckpoint` — cheapest way to truncate lineage
   * (without it every iteration doubles the plan), but the blocks are
@@ -48,20 +49,9 @@ object Materialize {
   private def interval(spark: SparkSession): Int =
     spark.conf.get(IntervalKey, "0").toInt
 
-  /** Pin a fixpoint INPUT frame that every round re-reads: reliable
-    * checkpoint under the interval — executor loss must not take the only
-    * copy of a frame the whole fixpoint depends on — eager localCheckpoint
-    * otherwise. Neither keeps a partitioning a later join can use: under
-    * AQE the pinned frame reports `UnknownPartitioning`, even after a
-    * `repartition(col)`, so a join against it still plans its exchange.
-    * Kernels that need co-partitioned rounds pin an RDD instead. */
-  def pin(df: DataFrame): DataFrame =
-    if (interval(df.sparkSession) > 0) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  /** RDD counterpart of `pin(df)`, in place: reliable checkpoint (kept
-    * cached too) under the interval, localCheckpoint otherwise. The RDD's
-    * partitioner survives. Returns its row count, the materializing
+  /** Pin an RDD in place: reliable checkpoint (kept cached too) under the
+    * interval, localCheckpoint otherwise — as [[Pins]] pins a frame. The
+    * RDD's partitioner survives. Returns its row count, the materializing
     * action's result. */
   def pin(spark: SparkSession, rdd: RDD[_]): Long = {
     if (interval(spark) > 0) { rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd.checkpoint() }
@@ -69,7 +59,7 @@ object Materialize {
     rdd.count()
   }
 
-  /** Release a frame made by `pin`/`iterate` or any eager checkpoint. A
+  /** Release a frame made by [[Pins]], `iterate` or any eager checkpoint. A
     * checkpointed frame is not registered with the cache manager, so
     * `Dataset.unpersist` leaves its blocks in place; this unpersists the
     * RDD under it. Any other frame is unpersisted the usual way. */
@@ -86,11 +76,17 @@ object Materialize {
   /** A frame pinned by [[Pins]], with the tally of the job that filled it. */
   final case class Pinned(df: DataFrame, count: Long, buckets: Map[String, Set[Int]])
 
-  /** One operation's pins, released together once no job reads them. Each
-    * pin follows `pin`'s policy (reliable checkpoint under the interval,
-    * localCheckpoint otherwise) and costs ONE job: the job that fills it is
-    * a [[tally]], so its row count and the buckets of `keys` need no query
-    * of their own. Thread-safe: concurrent `Par` chains pin into one set. */
+  /** One operation's pins, released together once no job reads them. A pin
+    * is a reliable checkpoint under the interval — executor loss must not
+    * take the only copy of a frame a whole fixpoint or increment depends on
+    * — and a localCheckpoint otherwise. Neither keeps a partitioning a
+    * later join can use: under AQE the pinned frame reports
+    * `UnknownPartitioning`, even after a `repartition(col)`, so a join
+    * against it still plans its exchange (kernels that need co-partitioned
+    * rounds pin an RDD instead). Each pin costs ONE job: the job that fills
+    * it is a [[tally]], so its row count and the buckets of `keys` need no
+    * query of their own. Thread-safe: concurrent `Par` chains pin into one
+    * set. */
   final class Pins(numBuckets: Int = 0) {
     private val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     def apply(df: DataFrame, keys: String*): Pinned = {

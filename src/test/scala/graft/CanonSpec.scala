@@ -117,9 +117,10 @@ class CanonSpec extends AnyFunSuite with Matchers {
       dataFiles should be > 0L
       // pin: inputs the whole fixpoint depends on are reliable under the
       // interval (an executor loss must not take their only copy)
-      val pinned = Materialize.pin(frame)
-      pinned.queryExecution.logical
+      val pins = new Materialize.Pins
+      pins(frame).df.queryExecution.logical
         .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] shouldBe true
+      pins.releaseAll()
     } finally {
       spark.conf.set(Materialize.IntervalKey, "0")
     }

@@ -131,11 +131,11 @@ class CliSpec extends AnyFunSuite with Matchers {
     KgCli.run(spark, dir, "path", Seq(a.toString, "999999999")).collect() shouldBe empty
   }
 
-  /** The bundle of graph queries a serving round runs, with fixed
-    * arguments: (verb args, pins its result may hold, job budget). The
-    * budgets are the counts this fixture gives (they repeat exactly for a
-    * fixed input); DataFrame-loop kernels took 28 (slice), 65 (rank) and
-    * 24 (path) jobs a call here. */
+  /** The bundle of graph queries a serving round runs, then the other graph
+    * verbs, with fixed arguments: (verb args, pins its result may hold, job
+    * budget). The budgets are the counts this fixture gives (they repeat
+    * exactly for a fixed input); DataFrame-loop kernels took 28 (slice), 65
+    * (rank) and 24 (path) jobs a call here. */
   private lazy val graphBundle: Seq[(Seq[String], Int, Int)] = {
     val link = graft.Incremental.readEdges(spark, dir).filter(col("kind") === "LINKS_TO")
       .select("src", "dst").orderBy("src", "dst").head()
@@ -149,7 +149,14 @@ class CliSpec extends AnyFunSuite with Matchers {
       (Seq("coref", link.getLong(0).toString), 0, Int.MaxValue),
       (Seq("path", twoHop.getLong(0).toString, twoHop.getLong(1).toString, "8"), 0, PathJobs),
       (Seq("rank", "10"), 1, RankJobs),
-      (Seq("sameas", "10"), 1, Int.MaxValue))
+      (Seq("sameas", "10"), 1, 11),
+      (Seq("hits", "10"), 1, 109),
+      (Seq("communities"), 1, 37),
+      (Seq("scc"), 1, 90),
+      (Seq("bowtie"), 1, 111),
+      (Seq("kcore", "2"), 1, 20),
+      (Seq("triangles"), 1, 17),
+      (Seq("features", "MENTIONS"), 1, 16))
   }
   private val SliceJobs = 11
   private val PathJobs = 12

@@ -58,7 +58,7 @@ object Queries {
           val nh = nhSlot.get()
           if (nh != null && nh._1 == cur._1) {
             nhSlot.compareAndSet(nh, null)
-            nh._2._1.unpersist(false); nh._2._2.unpersist(false)
+            Seq(nh._2._1, nh._2._2).foreach(graft.util.Materialize.release)
           }
         } catch { case _: Throwable => () }
         val cfg = PageGen.Config(nPages = kgPages(sfDir))
@@ -85,7 +85,7 @@ object Queries {
       if (cur != null && cur._1 == key) cur._2
       else {
         if (cur != null) try {
-          cur._2._1.unpersist(false); cur._2._2.unpersist(false)
+          Seq(cur._2._1, cur._2._2).foreach(graft.util.Materialize.release)
         } catch { case _: Throwable => () }
         val kt = kg(spark, sfDir)
         val fr = graft.query.Steps.neighborhoodHashFrames(kt.nodes, kt.edges,
@@ -186,7 +186,7 @@ object Queries {
         s.range(split, c.nPages.toLong).map(i => PageGen.page(c, i)), dir, c.nPersons)
       // detach the result from the temp build (blocks, not files) so the
       // whole throwaway table can be reclaimed NOW, not on tmp cleanup
-      val out = graft.store.TableIO.read(s, s"$dir/triples").localCheckpoint(true)
+      val out = graft.util.Materialize.pin(graft.store.TableIO.read(s, s"$dir/triples")).df
       graft.store.TableIO.deleteRecursively(dir)
       out
     }),
@@ -206,7 +206,7 @@ object Queries {
         s.range(split, c.nPages.toLong).map(i => PageGen.page(c, i)),
         s.range(0L, split).map(i => PageGen.page(c, i)),
         dir, c.nPersons)
-      val out = graft.store.TableIO.read(s, s"$dir/triples").localCheckpoint(true)
+      val out = graft.util.Materialize.pin(graft.store.TableIO.read(s, s"$dir/triples")).df
       graft.store.TableIO.deleteRecursively(dir)
       out
     }),

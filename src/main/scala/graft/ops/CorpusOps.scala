@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Corpus-preparation operators a large-scale training-data pipeline needs
   * beyond document-level dedup (Dedup.scala) and per-doc signals
   * (TextAnalysis.scala): cross-document duplicated-substring detection
@@ -66,11 +68,11 @@ object CorpusOps {
     * never by corpus-wide key frequency (the hot gram is handled in the
     * groupBy, which partial-aggregates). */
   def duplicatedSpans(docs: DataFrame, k: Int = 8, minDocs: Int = 2): DataFrame = {
-    // eager checkpoint: the dup-set groupBy and the occurrence semi-join
+    // pinned: the dup-set groupBy and the occurrence semi-join
     // both consume the gram frame, and without materialization each branch
     // re-runs the tokenize+shingle+hash pass — the dominant CPU cost (same
-    // reasoning, and same fix, as Dedup.ngramJaccard's shingle checkpoint)
-    val g = grams(docs, k).localCheckpoint(true)
+    // reasoning, and same fix, as Dedup.ngramJaccard's shingle pin)
+    val g = Materialize.pin(grams(docs, k)).df
     // distinct FIRST: a gram repeated inside one doc must not count as
     // cross-document duplication
     val dup = g.select("doc_id", "h1", "h2").distinct()
@@ -151,7 +153,7 @@ object CorpusOps {
     * to rows of another, i.e. silently wrong shard ids. */
   private def shardIdsFromCounts(perDocIn: DataFrame, budget: Long): DataFrame = {
     val spark = perDocIn.sparkSession
-    val perDoc = perDocIn.localCheckpoint(true)
+    val perDoc = Materialize.pin(perDocIn).df
     val chunkTotals = perDoc.groupBy("cid").agg(sum("n_toks").as("ctoks"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     // exclusive prefix: chunk i's offset = sum of all earlier chunks' tokens
@@ -181,10 +183,10 @@ object CorpusOps {
                     chunk: Long = 0L): DataFrame = {
     val c = if (chunk > 0) chunk else autoChunk(docs)
     // tokenize ONCE: shard assignment and stream assembly both derive from
-    // this checkpointed token frame (naively composing shardPack + a token
+    // this pinned token frame (naively composing shardPack + a token
     // join re-runs the whitespace split, the dominant per-row cost, 3x)
-    val tk = docs.select(col("doc_id"), toks(col("text")).as("t"),
-      expr(s"doc_id div ${c}L").as("cid")).localCheckpoint(true)
+    val tk = Materialize.pin(docs.select(col("doc_id"), toks(col("text")).as("t"),
+      expr(s"doc_id div ${c}L").as("cid"))).df
     val sharded = shardIdsFromCounts(
       tk.select(col("doc_id"), size(col("t")).cast("long").as("n_toks"), col("cid")),
       budget).select("doc_id", "shard_id")

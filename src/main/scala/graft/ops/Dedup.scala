@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Scale shape for all near-dup variants: per-doc signature computed narrowly
@@ -49,11 +51,10 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
                    maxBucket: Int = 100): DataFrame = {
     val withSh = docs.select(col("doc_id"), shingles(col("text"), n).as("sh"))
-    // eager checkpoint: exploded feeds the hot-key count, the size count and
+    // pinned: exploded feeds the hot-key count, the size count and
     // both join branches — recomputing the tokenize+shingle pass 4× is the
     // dominant CPU cost otherwise
-    val exploded = withSh.select(col("doc_id"), explode(col("sh")).as("s"))
-      .localCheckpoint(true)
+    val exploded = Materialize.pin(withSh.select(col("doc_id"), explode(col("sh")).as("s"))).df
     // drop hot shingles (stopword-only n-grams): the skew kill. Hot-key
     // detection is a groupBy count (map-side partial agg) + anti join — NOT
     // a count-over-window, which would funnel every occurrence of a
@@ -141,7 +142,7 @@ object Dedup {
       .select(explode(graft.functions.MinKAgg.pairCombos(col("ids"))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .dropDuplicates("a", "b")
-    if (materialize) pairs.localCheckpoint(true) else pairs
+    if (materialize) Materialize.pin(pairs).df else pairs
   }
 
   /** Fused single-pass (doc_id, sig, bandKeys) frame shared by the one-shot
@@ -177,12 +178,11 @@ object Dedup {
   def minhashLSH(docs: DataFrame, shingleN: Int = 3, numHashes: Int = 32,
                  bands: Int = 8, threshold: Double = 0.7,
                  maxBucket: Int = 50): DataFrame = {
-    // eager localCheckpoint, not persist: the signatures must be shared by
+    // a pin (Materialize.pin), not persist: the signatures must be shared by
     // the l/r join branches of the LAZY result — an in-function unpersist
     // ran before any action and silently recomputed them, while never
     // unpersisting leaked the cache entry
-    val sig = signatureFrame(docs, shingleN, numHashes, bands)
-      .localCheckpoint(true)
+    val sig = Materialize.pin(signatureFrame(docs, shingleN, numHashes, bands)).df
     // ids-only banding: the banding shuffle carries (band, bandHash, doc_id)
     // — no signature payload — and the hot-bucket cap ("maxBucket smallest
     // doc_ids per bucket", same semantics as before) is a bounded min-k heap
@@ -246,11 +246,10 @@ object Dedup {
     */
   def buildMinhashIndex(docs: DataFrame, dir: String, shingleN: Int = 3,
                         numHashes: Int = 32, bands: Int = 8,
-                        maxBucket: Int = 50): Unit = {
-    val sig = signatureFrame(docs, shingleN, numHashes, bands).localCheckpoint(true)
+                        maxBucket: Int = 50): Unit = Materialize.withPins { pins =>
+    val sig = pins(signatureFrame(docs, shingleN, numHashes, bands)).df
     sig.select("doc_id", "sig").write.mode("overwrite").parquet(s"$dir/sigs")
     cappedBandLists(sig, maxBucket).write.mode("overwrite").parquet(s"$dir/bands")
-    sig.unpersist(false)
   }
 
   private def cappedBandLists(sig: DataFrame, maxBucket: Int): DataFrame =
@@ -270,12 +269,13 @@ object Dedup {
     * the band lists it probes, which the candidate join needs anyway). */
   def ingestDedup(batch: DataFrame, dir: String, shingleN: Int = 3,
                   numHashes: Int = 32, bands: Int = 8,
-                  threshold: Double = 0.7, maxBucket: Int = 50): DataFrame = {
+                  threshold: Double = 0.7,
+                  maxBucket: Int = 50): DataFrame = Materialize.withPins { pins =>
     val spark = batch.sparkSession
     healSwap(s"$dir/sigs"); healSwap(s"$dir/bands")
     val oldSigs = spark.read.parquet(s"$dir/sigs")
     val oldBands = spark.read.parquet(s"$dir/bands")
-    val bsig = signatureFrame(batch, shingleN, numHashes, bands).localCheckpoint(true)
+    val bsig = pins(signatureFrame(batch, shingleN, numHashes, bands)).df
     // the probe needs capped lists ONLY for the buckets this batch touches:
     // semi-join the stored generations down to those keys FIRST (without
     // this, every small ingest exploded and re-capped the whole index —
@@ -286,14 +286,13 @@ object Dedup {
     // ids would otherwise count twice toward the cap and evict distinct
     // ids (missed near-dups after a retry).
     val batchKeys = bandRows(bsig).select("band", "bandHash").distinct()
-    val probeBands = oldBands
+    val probeBands = pins(oldBands
       .join(batchKeys, Seq("band", "bandHash"), "left_semi")
       .select(col("band"), col("bandHash"), explode(col("ids")).as("doc_id"))
       .unionByName(bandRows(bsig).select("band", "bandHash", "doc_id"))
       .distinct()
       .groupBy("band", "bandHash")
-      .agg(graft.functions.MinKAgg.minK(maxBucket)(col("doc_id")).as("ids"))
-      .localCheckpoint(true)
+      .agg(graft.functions.MinKAgg.minK(maxBucket)(col("doc_id")).as("ids"))).df
     // probe: every batch band row (a probe needn't survive the cap itself)
     // against the capped bucket lists, strictly-smaller ids only. The
     // per-probe candidate set is deduped IN-ROW: collect the ≤`bands`
@@ -301,27 +300,26 @@ object Dedup {
     // partial-agg), flatten + array_distinct — never a pair-grain
     // dropDuplicates, which at N identical docs shuffled N·bands·cap
     // exploded rows (measured 200M at the 500k-doc skew probe) to throw
-    // 7/8 away.
-    val candL = bandRows(bsig).join(probeBands, Seq("band", "bandHash"))
+    // 7/8 away. Pinned: feeds the referenced-sig semi-join AND the verify
+    // stream.
+    val candL = pins(bandRows(bsig).join(probeBands, Seq("band", "bandHash"))
       .groupBy(col("doc_id").as("x"))
       .agg(collect_list(col("ids")).as("idss"))
-      .select(col("x"), array_distinct(flatten(col("idss"))).as("ys"))
-      .localCheckpoint(true) // feeds the referenced-sig semi-join AND the verify stream
+      .select(col("x"), array_distinct(flatten(col("idss"))).as("ys"))).df
     // lazy — only the semi-join below consumes it, and only the referenced
     // slice is ever materialized (checkpointing the union here made every
     // ingest O(corpus) in storage memory)
     val allSigs = oldSigs.unionByName(bsig.select("doc_id", "sig"))
     // only the index signatures the candidates actually reference (map-side
     // partial distinct shrinks the exploded stream before it shuffles);
-    // eager checkpoint → exact stats, so a small referenced set broadcasts
+    // pinned → exact stats, so a small referenced set broadcasts
     // into the pair-grain verify below and the N·cap pair stream then runs
     // explode → filter → broadcast join → agg inside ONE codegen stage with
     // no pair-grain shuffle or materialization anywhere (the previous shape
     // shuffled the pair table twice for the two sig re-attach joins)
-    val ySigs = allSigs.join(
+    val ySigs = pins(allSigs.join(
       candL.select(explode(col("ys")).as("doc_id")).distinct(),
-      Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+      Seq("doc_id"), "left_semi")).df
     val dropped = candL
       .join(bsig.select(col("doc_id").as("x"), col("sig").as("sigX")), Seq("x"))
       .select(col("x"), col("sigX"), explode(col("ys")).as("y"))
@@ -329,22 +327,19 @@ object Dedup {
       .join(ySigs.select(col("doc_id").as("y"), col("sig").as("sigY")), Seq("y"))
       .filter(estJaccard(col("sigX"), col("sigY"), numHashes) >= threshold)
       .select(col("x").as("doc_id")).distinct()
-    val out = bsig.select("doc_id")
+    val out = Materialize.pin(bsig.select("doc_id")
       .join(dropped.withColumn("hit", lit(true)), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("hit"), lit(false)) === lit(false))
-      .toDF("doc_id", "kept")
-      .localCheckpoint(true)
+      .toDF("doc_id", "kept")).df
     // O(batch) index fold: append the batch's signatures and its OWN capped
     // band lists as a new generation (readers re-cap the union; compaction
     // folds). Spark's commit protocol makes the appends crash-tolerant —
     // files surface only at job commit.
     bsig.select("doc_id", "sig").write.mode("append").parquet(s"$dir/sigs")
     cappedBandLists(bsig, maxBucket).write.mode("append").parquet(s"$dir/bands")
-    // `out` is its own checkpoint — release every intermediate's blocks
-    // (without this, repeated ingests pile batch-sized checkpoint copies
-    // into storage memory until an eviction cliff, the pageRankInt lesson)
-    bsig.unpersist(false); probeBands.unpersist(false)
-    candL.unpersist(false); ySigs.unpersist(false)
+    // `out` is its own pin; the set's go on return (without that, repeated
+    // ingests pile batch-sized checkpoint copies into storage memory until
+    // an eviction cliff, the pageRankInt lesson)
     out
   }
 
@@ -353,22 +348,19 @@ object Dedup {
     * bucket and rewrite the signature table's accumulated small files. The
     * only O(corpus) step in the index lifecycle, by design. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                          maxBucket: Int = 50): Unit = {
+                          maxBucket: Int = 50): Unit = Materialize.withPins { pins =>
     healSwap(s"$dir/sigs"); healSwap(s"$dir/bands")
     // DISTINCT before the re-cap and per-doc sig dedup: an at-least-once
     // redelivery appends duplicate generations, which must not count twice
     // toward the cap (evicting distinct ids) nor persist duplicate rows
-    val bands2 = spark.read.parquet(s"$dir/bands")
+    val bands2 = pins(spark.read.parquet(s"$dir/bands")
       .select(col("band"), col("bandHash"), explode(col("ids")).as("doc_id"))
       .distinct()
       .groupBy("band", "bandHash")
-      .agg(graft.functions.MinKAgg.minK(maxBucket)(col("doc_id")).as("ids"))
-      .localCheckpoint(true)
-    val sigs2 = spark.read.parquet(s"$dir/sigs")
-      .dropDuplicates("doc_id").localCheckpoint(true)
+      .agg(graft.functions.MinKAgg.minK(maxBucket)(col("doc_id")).as("ids"))).df
+    val sigs2 = pins(spark.read.parquet(s"$dir/sigs").dropDuplicates("doc_id")).df
     swapWrite(bands2, s"$dir/bands")
     swapWrite(sigs2, s"$dir/sigs")
-    bands2.unpersist(false); sigs2.unpersist(false)
   }
 
   /** Overwrite `path` via write-aside + two renames, no window where the
@@ -435,9 +427,9 @@ object Dedup {
   def simhashNearDup(docs: DataFrame, maxHamming: Int = 3, maxBucket: Int = 200): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sh = docs.select(col("doc_id"), col("text")).as[(Long, String)]
+    val sh = Materialize.pin(docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(_.map { case (id, text) => (id, simhashLocal(text)) })
-      .toDF("doc_id", "sh").localCheckpoint(true)
+      .toDF("doc_id", "sh")).df
     // same ids-only + bounded-heap cap shape as minhashLSH: chunk value 0 is
     // hot for short docs, and the min-k aggregator reduces it map-side
     val chunked = sh.select(col("doc_id"),

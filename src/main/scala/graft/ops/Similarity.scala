@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopKAgg
+import graft.util.Materialize
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -98,11 +99,10 @@ object Similarity {
   def kmeansCentroids(corpus: DataFrame, nCentroids: Int, iters: Int = 3): DataFrame = {
     // the tiny window below runs over <= nCentroids rows (post-limit)
     val wTiny = org.apache.spark.sql.expressions.Window.orderBy("id")
-    var centroids = corpus
+    var centroids = Materialize.pin(corpus
       .orderBy(xxhash64(col("id"))).limit(nCentroids)
       .select((row_number().over(wTiny) - 1).as("centroid_id"),
-        col("embedding").as("c_emb"))
-      .localCheckpoint(true)
+        col("embedding").as("c_emb"))).df
     (0 until iters).foreach { it =>
       val assigned = assign(corpus, centroids)
       centroids = assigned
@@ -114,7 +114,7 @@ object Similarity {
         .groupBy("centroid_id")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m").cast("float")).as("c_emb"))
-        .transform(graft.util.Materialize.iterate(_, it))
+        .transform(Materialize.iterate(_, it))
     }
     centroids
   }

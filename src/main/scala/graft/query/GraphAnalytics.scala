@@ -207,49 +207,50 @@ object GraphAnalytics {
               scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, "hitsInt: iters must be >= 1")
     require(scale >= 1L, "hitsInt: scale must be >= 1")
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    val empty = e.isEmpty
-    if (empty) Materialize.release(e)
-    require(!empty, "hitsInt: empty graph")
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = true)
-    // Intermediate scores are SPARSE: a node absent from a gather has score
-    // 0, and a 0 row is indistinguishable from an absent row to both the
-    // next gather (inner join, contributes 0) and the max divisor — so the
-    // per-half-round nodes zero-fill join is dropped entirely (≈2× less
-    // per-round work on the probe wheel) and zero-filling happens once, on
-    // the final output. Bit-exact equivalent of the dense recurrence the
-    // oracle runs.
-    var hubs = nodes.select(col("id"), lit(scale).as("score"))
-    var auths: DataFrame = null
-    for (i <- 0 until iters) {
-      val oldH = hubs
-      val oldA = auths
-      // authority half-round: gather hub mass along edge direction
-      val aRaw = gatherSum(e, hubs, from = "src", to = "dst")
-        .localCheckpoint(eager = true) // read twice: max probe + divide
-      auths = Materialize.iterate(rescale(aRaw, scale), 2 * i)
-      Materialize.release(aRaw)
-      // hub half-round: gather authority mass against edge direction
-      val hRaw = gatherSum(e, auths, from = "dst", to = "src")
-        .localCheckpoint(eager = true)
-      hubs = Materialize.iterate(rescale(hRaw, scale), 2 * i + 1)
-      Materialize.release(hRaw)
-      // the first round's hubs is a lazy projection of `nodes`, not a pin
-      if (i > 0) Materialize.release(oldH)
-      if (oldA != null) Materialize.release(oldA)
+    Materialize.withPins { pins =>
+      val e = directedPin(edges, pins, "hitsInt")
+      val nodes = pins(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()).df
+      // one half-round: gather `scores` from → to and renormalize into the
+      // round that supersedes `prev`. The raw sums are read twice (max probe
+      // + divide), so they are pinned too
+      def half(scores: DataFrame, from: String, to: String, iter: Int,
+               prev: DataFrame): DataFrame = {
+        val raw = pins(gatherSum(e, scores, from, to)).df
+        val next = pins.iterate(rescale(raw, scale), iter)
+        Seq(raw, prev).foreach(Materialize.release)
+        next
+      }
+      // Intermediate scores are SPARSE: a node absent from a gather has score
+      // 0, and a 0 row is indistinguishable from an absent row to both the
+      // next gather (inner join, contributes 0) and the max divisor — so the
+      // per-half-round nodes zero-fill join is dropped entirely (≈2× less
+      // per-round work on the probe wheel) and zero-filling happens once, on
+      // the final output. Bit-exact equivalent of the dense recurrence the
+      // oracle runs. The first round's `prev` is this lazy projection, whose
+      // release is a no-op.
+      var hubs = nodes.select(col("id"), lit(scale).as("score"))
+      var auths = hubs
+      for (i <- 0 until iters) {
+        // authority half-round along edge direction, hub half-round against it
+        auths = half(hubs, "src", "dst", 2 * i, auths)
+        hubs = half(auths, "dst", "src", 2 * i + 1, hubs)
+      }
+      Materialize.pin(nodes
+        .join(hubs.withColumnRenamed("score", "hub"), Seq("id"), "left")
+        .join(auths.withColumnRenamed("score", "auth"), Seq("id"), "left")
+        .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
+          coalesce(col("auth"), lit(0L)).as("auth"))).df
     }
-    val res = nodes
-      .join(hubs.withColumnRenamed("score", "hub"), Seq("id"), "left")
-      .join(auths.withColumnRenamed("score", "auth"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"),
-        coalesce(col("auth"), lit(0L)).as("auth"))
-      .localCheckpoint(eager = true)
-    Seq(e, nodes, hubs, auths).foreach(Materialize.release)
-    res
+  }
+
+  /** The directed, deduped, self-loop-free projection of `edges` (src,
+    * dst), pinned into `pins`; `kernel` names the caller in the error for an
+    * empty graph, which the pin's own count detects. */
+  private def directedPin(edges: DataFrame, pins: Materialize.Pins, kernel: String): DataFrame = {
+    val e = pins(edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")).distinct())
+    require(e.count > 0, s"$kernel: empty graph")
+    e.df
   }
 
   /** One HITS gather: Σ of `scores` over the `from` endpoint, keyed by the
@@ -293,25 +294,35 @@ object GraphAnalytics {
     */
   def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, "labelPropagation: iters must be >= 1")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    // both directions, pre-partitioned ONCE by the per-round join key
-    val bi = und.select(col("u").as("node"), col("v").as("nb"))
-      .union(und.select(col("v").as("node"), col("u").as("nb")))
-      .repartition(col("nb"))
-      .localCheckpoint(eager = true)
-    var labels = bi.select(col("node").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-    for (i <- 0 until iters) {
-      val old = labels
-      labels = Materialize.iterate(lpStep(bi, labels), i)
-      old.unpersist(false)
+    val und = undirected(edges)
+    Materialize.withPins { pins =>
+      // both directions, shuffled ONCE onto the per-round join key
+      val bi = pins(und.select(col("u").as("node"), col("v").as("nb"))
+        .union(und.select(col("v").as("node"), col("u").as("nb")))
+        .repartition(col("nb"))).df
+      // the result is the last round, so the rounds are not the set's; the
+      // first `old` is a lazy frame, whose release is a no-op
+      var labels = bi.select(col("node").as("id")).distinct()
+        .select(col("id"), col("id").as("label"))
+      for (i <- 0 until iters) {
+        val old = labels
+        labels = Materialize.iterate(lpStep(bi, labels), i)
+        Materialize.release(old)
+      }
+      labels
     }
-    bi.unpersist(false)
-    labels
   }
+
+  /** The undirected, deduped, self-loop-free projection of `edges` as
+    * (u, v) with u < v. Lazy. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+
+  /** Per-node degree (id, deg) of an undirected (u, v) edge frame. Lazy. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("u").as("id")).union(und.select(col("v").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
 
   /** One LP round (factored for PlanSpec): neighbor-label histogram, then
     * (count desc, label asc) argmax via a single struct-max aggregation. */
@@ -342,37 +353,25 @@ object GraphAnalytics {
     */
   def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "kCore: k must be >= 1")
-    var cur = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(eager = true)
-    var it = 0
-    var done = false
-    while (!done) {
-      val deg = cur.select(col("u").as("id"))
-        .union(cur.select(col("v").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      val weak = deg.filter(col("deg") < k).select("id")
-        .localCheckpoint(eager = true) // tiny in practice; exact stats
-      if (weak.isEmpty) done = true
-      else {
+    Materialize.withPins { pins =>
+      // the nodes of degree < k: tiny in practice, pinned for exact stats
+      // (broadcast anti-joins); the pin's count ends the peel
+      def weakOf(g: DataFrame) = pins(degrees(g).filter(col("deg") < k).select("id"))
+      var cur = pins(undirected(edges)).df
+      var weak = weakOf(cur)
+      var it = 0
+      while (weak.count > 0) {
         val old = cur
-        cur = graft.util.Materialize.iterate(
-          cur.join(weak.withColumnRenamed("id", "u"), Seq("u"), "left_anti")
-            .join(weak.withColumnRenamed("id", "v"), Seq("v"), "left_anti")
+        cur = pins.iterate(
+          cur.join(weak.df.withColumnRenamed("id", "u"), Seq("u"), "left_anti")
+            .join(weak.df.withColumnRenamed("id", "v"), Seq("v"), "left_anti")
             .select("u", "v"), it)
-        old.unpersist(false)
+        Seq(old, weak.df).foreach(Materialize.release)
+        weak = weakOf(cur)
+        it += 1
       }
-      weak.unpersist(false)
-      it += 1
+      Materialize.pin(degrees(cur)).df
     }
-    val res = cur.select(col("u").as("id"))
-      .union(cur.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = true)
-    cur.unpersist(false)
-    res
   }
 
   /** Per-entity triangle and wedge counts over the undirected, deduped,
@@ -387,50 +386,41 @@ object GraphAnalytics {
     * releases the edge-sized invariant frames (cappedPairs pattern).
     */
   def triangleCounts(edges: DataFrame, materialize: Boolean = true): DataFrame = {
-    // the lazy (plan-inspection) path checkpoints NOTHING — eager blocks it
-    // could never release would leak for the session's lifetime
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = true) else df
-    val und = pin(edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()) // feeds degree, orientation AND closure
-    val deg = pin(und.select(col("u").as("id"))
-      .union(und.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg")))
-    // orient toward the (deg, id)-larger endpoint: wedges form only at the
-    // ≺-min vertex, so the hub (≺-max on every incident edge) expands nothing
-    val uFirst = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = pin(und
-      .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
-      .select(when(uFirst, col("u")).otherwise(col("v")).as("s"),
-        when(uFirst, col("v")).otherwise(col("u")).as("t"))) // both sides of the wedge self-join
-    val wedge = oriented.select(col("s"), col("t").as("a"))
-      .join(oriented.select(col("s"), col("t").as("b")), "s")
-      .filter(col("a") < col("b"))
-    // close each wedge against the undirected edge set: a < b by id, und is
-    // (u < v) by id, so closure is a plain two-key equi-join
-    val tri = wedge.join(und,
-      col("a") === col("u") && col("b") === col("v"), "inner")
-      .select("s", "a", "b")
-    // one pass over the (expensive) closed-wedge join: explode the three
-    // corners instead of unioning three scans of `tri`
-    val perNode = tri
-      .select(explode(array(col("s"), col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("triangles"))
-    val census = deg.join(perNode, Seq("id"), "left")
-      .select(col("id"), col("deg"),
-        expr("(deg * (deg - 1)) div 2").as("wedges"),
-        coalesce(col("triangles"), lit(0L)).as("triangles"))
-    if (!materialize) census
-    else {
-      // materialize the (node-sized) census and release the edge-sized
-      // invariant frames — same block discipline as pageRankInt
-      val res = census.localCheckpoint(eager = true)
-      und.unpersist(false); deg.unpersist(false); oriented.unpersist(false)
-      res
+    Materialize.withPins { pins =>
+      // the lazy (plan-inspection) path checkpoints NOTHING — eager blocks it
+      // could never release would leak for the session's lifetime
+      def pin(df: DataFrame): DataFrame = if (materialize) pins(df).df else df
+      val und = pin(undirected(edges)) // feeds degree, orientation AND closure
+      val deg = pin(degrees(und))
+      // orient toward the (deg, id)-larger endpoint: wedges form only at the
+      // ≺-min vertex, so the hub (≺-max on every incident edge) expands nothing
+      val uFirst = col("du") < col("dv") ||
+        (col("du") === col("dv") && col("u") < col("v"))
+      val oriented = pin(und
+        .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
+        .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
+        .select(when(uFirst, col("u")).otherwise(col("v")).as("s"),
+          when(uFirst, col("v")).otherwise(col("u")).as("t"))) // both sides of the wedge self-join
+      val wedge = oriented.select(col("s"), col("t").as("a"))
+        .join(oriented.select(col("s"), col("t").as("b")), "s")
+        .filter(col("a") < col("b"))
+      // close each wedge against the undirected edge set: a < b by id, und is
+      // (u < v) by id, so closure is a plain two-key equi-join
+      val tri = wedge.join(und,
+        col("a") === col("u") && col("b") === col("v"), "inner")
+        .select("s", "a", "b")
+      // one pass over the (expensive) closed-wedge join: explode the three
+      // corners instead of unioning three scans of `tri`
+      val perNode = tri
+        .select(explode(array(col("s"), col("a"), col("b"))).as("id"))
+        .groupBy("id").agg(count(lit(1)).as("triangles"))
+      val census = deg.join(perNode, Seq("id"), "left")
+        .select(col("id"), col("deg"),
+          expr("(deg * (deg - 1)) div 2").as("wedges"),
+          coalesce(col("triangles"), lit(0L)).as("triangles"))
+      // the (node-sized) census is the result pin; the edge-sized invariant
+      // frames go with the set
+      if (materialize) Materialize.pin(census).df else census
     }
   }
 
@@ -439,13 +429,7 @@ object GraphAnalytics {
     * web-graph paper opens with. Two map-side-combinable groupBys; the
     * mega-hub contributes one row to the tail, never a hot task. */
   def degreeHistogram(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    und.select(col("u").as("id")).union(und.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
+    degrees(undirected(edges)).groupBy("deg").agg(count(lit(1)).as("n_nodes"))
   }
 
   /** Structural entity-resolution candidates: pairs of entities whose
@@ -475,35 +459,30 @@ object GraphAnalytics {
     require(minInter >= 1, "sameAsCandidates: minInter must be >= 1")
     require(jacNum >= 0 && jacDen >= 1, "sameAsCandidates: bad jaccard ratio")
     require(hubCap >= 1, "sameAsCandidates: hubCap must be >= 1")
-    // lazy (plan-inspection) path checkpoints nothing — triangleCounts rule
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = true) else df
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val bi = pin(und.select(col("u").as("node"), col("v").as("nb"))
-      .union(und.select(col("v").as("node"), col("u").as("nb")))) // feeds degree AND the inverted index
-    val deg = pin(bi.groupBy("node").agg(count(lit(1)).as("deg"))) // read 3×: hub drop + both denominators
-    // inverted index witness → member, hub witnesses anti-joined away
-    val inv = pin(bi.select(col("nb").as("w"), col("node"))
-      .join(deg.filter(col("deg") > hubCap).select(col("node").as("w")),
-        Seq("w"), "left_anti")) // read twice: both sides of the pair join
-    val pairs = inv.select(col("w"), col("node").as("u"))
-      .join(inv.select(col("w"), col("node").as("v")), Seq("w"))
-      .filter(col("u") < col("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("inter"))
-    val cand = pairs
-      .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
-      .filter(col("inter") >= minInter &&
-        col("inter") * jacDen >= (col("du") + col("dv") - col("inter")) * jacNum)
-      .select("u", "v", "inter", "du", "dv")
-    if (!materialize) cand
-    else {
-      val res = cand.localCheckpoint(eager = true)
-      Seq(bi, deg, inv).foreach(Materialize.release)
-      res
+    Materialize.withPins { pins =>
+      // lazy (plan-inspection) path checkpoints nothing — triangleCounts rule
+      def pin(df: DataFrame): DataFrame = if (materialize) pins(df).df else df
+      val und = undirected(edges)
+      // feeds degree AND the inverted index
+      val bi = pin(und.select(col("u").as("node"), col("v").as("nb"))
+        .union(und.select(col("v").as("node"), col("u").as("nb"))))
+      // read 3×: hub drop + both denominators
+      val deg = pin(bi.groupBy("node").agg(count(lit(1)).as("deg")))
+      // inverted index witness → member, hub witnesses anti-joined away
+      val inv = pin(bi.select(col("nb").as("w"), col("node"))
+        .join(deg.filter(col("deg") > hubCap).select(col("node").as("w")),
+          Seq("w"), "left_anti")) // read twice: both sides of the pair join
+      val pairs = inv.select(col("w"), col("node").as("u"))
+        .join(inv.select(col("w"), col("node").as("v")), Seq("w"))
+        .filter(col("u") < col("v"))
+        .groupBy("u", "v").agg(count(lit(1)).as("inter"))
+      val cand = pairs
+        .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
+        .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
+        .filter(col("inter") >= minInter &&
+          col("inter") * jacDen >= (col("du") + col("dv") - col("inter")) * jacNum)
+        .select("u", "v", "inter", "du", "dv")
+      if (materialize) Materialize.pin(cand).df else cand
     }
   }
 
@@ -535,95 +514,79 @@ object GraphAnalytics {
     * equi-join or partial aggregation; no windows; a mega-hub's fan-in
     * collapses in map-side combine. Requires a non-empty edge set.
     */
-  def scc(edges: DataFrame): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    require(!e0.isEmpty, "scc: empty graph")
-    val res = sccCanonical(e0)
-    e0.unpersist(false)
-    res
+  def scc(edges: DataFrame): DataFrame = Materialize.withPins { pins =>
+    Materialize.pin(sccParts(directedPin(edges, pins, "scc"), pins)).df
   }
 
   /** scc body over an already canonical (deduped, self-loop-free, pinned)
     * edge frame — shared with bowTie so the canonicalization shuffle and
-    * the pinned edge copy are paid once. */
-  private def sccCanonical(e0: DataFrame): DataFrame = {
+    * the pinned edge copy are paid once. Returns the lazy union of the
+    * emitted (id, scc) parts, each a pin in `pins`. */
+  private def sccParts(e0: DataFrame, pins: Materialize.Pins): DataFrame = {
     val spark = e0.sparkSession
-    var active = e0.select(col("src").as("id"))
+    var active = pins(e0.select(col("src").as("id"))
       .union(e0.select(col("dst").as("id"))).distinct()
-      .select(col("id"), lit(0L).as("part"))
-      .localCheckpoint(eager = true)
+      .select(col("id"), lit(0L).as("part")))
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var outer = 0
-    while (!active.isEmpty) {
+    while (active.count > 0) {
       // within-part edge set for this round
-      var aE = e0
-        .join(active.select(col("id").as("src"), col("part").as("ps")), Seq("src"))
-        .join(active.select(col("id").as("dst"), col("part").as("pd")), Seq("dst"))
+      var aE = pins(e0
+        .join(active.df.select(col("id").as("src"), col("part").as("ps")), Seq("src"))
+        .join(active.df.select(col("id").as("dst"), col("part").as("pd")), Seq("dst"))
         .filter(col("ps") === col("pd"))
-        .select(col("src"), col("dst"))
-        .localCheckpoint(eager = true)
-      // 1. trim to fixpoint
-      var nActive = active.count()
-      var trimming = true
-      while (trimming) {
-        val keep = active
-          .join(aE.select(col("src").as("id")).distinct(), Seq("id"), "left_semi")
-          .join(aE.select(col("dst").as("id")).distinct(), Seq("id"), "left_semi")
-          .localCheckpoint(eager = true)
-        val nKeep = keep.count()
-        if (nKeep == nActive) { keep.unpersist(false); trimming = false }
-        else {
-          out += active.join(keep.select("id"), Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc"))
-            .localCheckpoint(eager = true)
-          active.unpersist(false); active = keep; nActive = nKeep
-          val oldE = aE
-          aE = aE
-            .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .localCheckpoint(eager = true)
-          oldE.unpersist(false)
-        }
+        .select(col("src"), col("dst"))).df
+      // 1. trim to fixpoint: `keep` is a subset of `active`, so equal counts
+      // mean nothing was trimmed
+      var keep = trimmed(active.df, aE, pins)
+      while (keep.count < active.count) {
+        out += pins(active.df.join(keep.df.select("id"), Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("scc"))).df
+        val next = pins(aE
+          .join(keep.df.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(keep.df.select(col("id").as("dst")), Seq("dst"), "left_semi")).df
+        Seq(active.df, aE).foreach(Materialize.release)
+        active = keep; aE = next
+        keep = trimmed(active.df, aE, pins)
       }
-      if (nActive == 0L) { aE.unpersist(false) }
-      else {
+      Materialize.release(keep.df)
+      if (active.count > 0) {
         // 2. pivot reach closures — frontier BFS over the within-part edge
         // set. Parts are disjoint and aE edges never cross parts, so ONE
         // closure from the union of all pivots equals the per-part
         // closures run simultaneously.
-        val pivots = active.groupBy("part").agg(min(col("id")).as("pivot"))
-          .localCheckpoint(eager = true)
+        val pivots = pins(active.df.groupBy("part").agg(min(col("id")).as("pivot"))).df
         val seeds = pivots.select(col("pivot").as("id"))
         val fwdPin = reachClosure(aE, seeds, forward = true)
         val bwdPin = reachClosure(aE, seeds, forward = false)
         val (fwd, bwd) = (idFrame(spark, fwdPin), idFrame(spark, bwdPin))
         // 3. emit the pivot SCCs (fwd ∩ bwd), split the rest
         val inBoth = fwd.join(bwd, Seq("id"), "left_semi")
-        out += active.join(inBoth, Seq("id"), "left_semi")
-          .join(pivots, Seq("part")).select(col("id"), col("pivot").as("scc"))
-          .localCheckpoint(eager = true)
-        val rest = active.join(inBoth, Seq("id"), "left_anti")
+        out += pins(active.df.join(inBoth, Seq("id"), "left_semi")
+          .join(pivots, Seq("part")).select(col("id"), col("pivot").as("scc"))).df
+        val rest = active.df.join(inBoth, Seq("id"), "left_anti")
           .join(fwd.withColumn("fIn", lit(true)), Seq("id"), "left")
           .join(bwd.withColumn("bIn", lit(true)), Seq("id"), "left")
           .select(col("id"), col("part"),
             col("fIn").isNotNull.as("fwd"), col("bIn").isNotNull.as("bwd"))
         val np = rest.groupBy("part", "fwd", "bwd").agg(min("id").as("npart"))
-        val oldActive = active
-        active = rest.join(np, Seq("part", "fwd", "bwd"))
-          .select(col("id"), col("npart").as("part"))
-          .localCheckpoint(eager = true)
-        Seq(oldActive, pivots, aE).foreach(_.unpersist(false))
+        val next = pins(rest.join(np, Seq("part", "fwd", "bwd"))
+          .select(col("id"), col("npart").as("part")))
+        Seq(active.df, pivots).foreach(Materialize.release)
         fwdPin.unpersist(false); bwdPin.unpersist(false)
+        active = next
       }
-      outer += 1
+      Materialize.release(aE)
     }
-    active.unpersist(false)
-    val res = out.reduce(_ unionByName _).localCheckpoint(eager = true)
-    out.foreach(_.unpersist(false))
-    res
+    out.reduce(_ unionByName _)
   }
+
+  /** The nodes of `active` with an in- and an out-edge in `aE`, pinned:
+    * one trim step of sccParts. */
+  private def trimmed(active: DataFrame, aE: DataFrame,
+                      pins: Materialize.Pins): Materialize.Pinned =
+    pins(active
+      .join(aE.select(col("src").as("id")).distinct(), Seq("id"), "left_semi")
+      .join(aE.select(col("dst").as("id")).distinct(), Seq("id"), "left_semi"))
 
   /** Bow-tie decomposition (Broder et al.'s web-graph macro-structure) of
     * the directed, deduped, self-loop-free projection of `edges`:
@@ -641,22 +604,18 @@ object GraphAnalytics {
     * map-side-combinable distinct, changed-count termination; rounds =
     * reach diameter. The giant-SCC pick is a partial-agg count.
     */
-  def bowTie(edges: DataFrame): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    require(!e0.isEmpty, "bowTie: empty graph")
-    val s = sccCanonical(e0) // reuse the pinned canonical edge frame
+  def bowTie(edges: DataFrame): DataFrame = Materialize.withPins { pins =>
+    val e0 = directedPin(edges, pins, "bowTie")
+    val s = pins(sccParts(e0, pins)).df // reuse the pinned canonical edge frame
     // largest SCC, deterministic tie-break on the smaller label
     val coreRow = s.groupBy("scc").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("scc").asc).head()
     val coreId = coreRow.getLong(0)
-    val core = s.filter(col("scc") === lit(coreId)).select("id")
-      .localCheckpoint(eager = true)
+    val core = pins(s.filter(col("scc") === lit(coreId)).select("id")).df
     val toPin = reachClosure(e0, core, forward = false) // core ∪ who reaches it
     val fromPin = reachClosure(e0, core, forward = true) // core ∪ whom it reaches
     val (toCore, fromCore) = (idFrame(e0.sparkSession, toPin), idFrame(e0.sparkSession, fromPin))
-    val res = s.select("id")
+    val res = Materialize.pin(s.select("id")
       .join(core.withColumn("inCore", lit(true)), Seq("id"), "left")
       .join(toCore.withColumn("inTo", lit(true)), Seq("id"), "left")
       .join(fromCore.withColumn("inFrom", lit(true)), Seq("id"), "left")
@@ -664,9 +623,7 @@ object GraphAnalytics {
         when(col("inCore").isNotNull, "CORE")
           .when(col("inTo").isNotNull, "IN")
           .when(col("inFrom").isNotNull, "OUT")
-          .otherwise("OTHER").as("region"))
-      .localCheckpoint(eager = true)
-    Seq(e0, s, core).foreach(_.unpersist(false))
+          .otherwise("OTHER").as("region"))).df
     toPin.unpersist(false); fromPin.unpersist(false)
     res
   }

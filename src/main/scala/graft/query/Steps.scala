@@ -263,32 +263,28 @@ object Steps {
                    maxDepth: Int = 30): DataFrame = {
     val e0 = edges.filter(col("kind").isin(kinds: _*))
     // one-hop successors of each seed, then closure, then membership test —
-    // batched for the whole seed set: (origin, id) pair frontier
-    var frontier = seeds.select(col("id").as("origin"))
+    // batched for the whole seed set: (origin, id) pair frontier. The first
+    // frontier is also the first `visited`, which the result reads; later
+    // frontiers are temporary pins, and each pin's count is its emptiness
+    var frontier = Materialize.pin(seeds.select(col("id").as("origin"))
       .join(e0.withColumnRenamed("src", "origin"), "origin")
-      .select(col("origin"), col("dst").as("id")).distinct().localCheckpoint(true)
-    var visited = frontier
-    var depth = 1
-    var done = frontier.isEmpty
-    while (!done && depth < maxDepth) {
-      val next = frontier.select(col("origin"), col("id").as("src"))
-        .join(e0, "src")
-        .select(col("origin"), col("dst").as("id")).distinct()
-        .join(visited, Seq("origin", "id"), "left_anti")
-        .transform(Materialize.iterate(_, depth))
-      if (next.isEmpty) { Materialize.release(next); done = true }
-      else {
-        val old = visited
-        visited = Materialize.iterate(visited.union(next), depth)
-        Materialize.release(old)
-        if (frontier ne old) Materialize.release(frontier)
-        frontier = next
+      .select(col("origin"), col("dst").as("id")).distinct())
+    var visited = frontier.df
+    Materialize.withPins { pins =>
+      var depth = 1
+      while (frontier.count > 0 && depth < maxDepth) {
+        frontier = pins(frontier.df.select(col("origin"), col("id").as("src"))
+          .join(e0, "src")
+          .select(col("origin"), col("dst").as("id")).distinct()
+          .join(visited, Seq("origin", "id"), "left_anti"))
+        if (frontier.count > 0) {
+          val old = visited
+          visited = Materialize.iterate(visited.union(frontier.df), depth)
+          Materialize.release(old)
+        }
+        depth += 1
       }
-      depth += 1
     }
-    // the result reads `visited`; the last frontier is a pin of its own
-    // unless no round ever ran
-    if (frontier ne visited) Materialize.release(frontier)
     visited.filter(col("origin") === col("id")).select(col("origin").as("id")).distinct()
   }
 
@@ -576,7 +572,8 @@ object Steps {
     * (Triple provenance nodes alone are ~60% of the node table and carry no
     * MENTIONS edges). Default = unrestricted, the reference's semantics. */
   /** The kernel's reusable seed frames — the deduped initial label frame
-    * and the dst-partitioned edge frame, both eagerly checkpointed. Split
+    * and the dst-partitioned edge frame, both pinned (Materialize.pin) and
+    * owned by the caller. Split
     * out so a session cache (Queries.nhashFrames) can build them ONCE per
     * (kg, edge kind, frame restriction) and every kernel run reuses them:
     * they are pure functions of the built KG, the same
@@ -594,22 +591,20 @@ object Steps {
     // rows for one id (e.g. the same url ingested twice → one Page id), and
     // without the dedup two self rows of one id would XOR-cancel their
     // rotation contributions inside the per-round aggregation below
-    val initial = frame.select(col("id"), col("pageId"),
+    val initial = Materialize.pin(frame.select(col("id"), col("pageId"),
       (abs(when(col("code").rlike("^[0-9]+$"), xxhash64(lit("A_NUMBER")))
         .otherwise(xxhash64(col("kind"), col("code")))) % 65536).as("label"))
-      .dropDuplicates("id")
-      .localCheckpoint(true)
+      .dropDuplicates("id")).df
     // edge frame shuffled onto its join key once and pinned, so no round
     // recomputes the dedup. The pin does NOT keep that partitioning: under
     // AQE a checkpointed frame reports `UnknownPartitioning`, so each
     // round's join still plans an exchange of the edges
-    val e = edges.filter(col("kind") === edgeKind).select("src", "dst")
+    val e = Materialize.pin(edges.filter(col("kind") === edgeKind).select("src", "dst")
       // same identity argument for edges: a duplicated (src,dst) row would
       // XOR-cancel the child's contribution (this predates the union form —
       // the old per-round bit_xor had the identical blind spot)
       .dropDuplicates("src", "dst")
-      .repartition(col("dst"))
-      .localCheckpoint(true)
+      .repartition(col("dst"))).df
     (initial, e)
   }
 
@@ -617,7 +612,10 @@ object Steps {
                                edgeKind: String, iterations: Int = 2,
                                onKinds: Option[Seq[String]] = None): DataFrame = {
     val (initial, e) = neighborhoodHashFrames(nodes, edges, edgeKind, onKinds)
-    neighborhoodHashFeaturesFrom(initial, e, iterations)
+    val out = neighborhoodHashFeaturesFrom(initial, e, iterations)
+    // once a round has run, the result reads only the last round's pin
+    if (iterations > 0) Seq(initial, e).foreach(Materialize.release)
+    out
   }
 
   /** Kernel rounds over pre-built seed frames (see neighborhoodHashFrames). */
@@ -643,11 +641,14 @@ object Steps {
         .join(labeled.withColumnRenamed("id", "dst").select("dst", "label"), "dst")
         .select(col("src").as("id"), lit(null).cast("long").as("pageId"),
           col("label").as("contrib"))
+      val prev = labeled
       labeled = self.unionByName(fromChildren)
         .groupBy("id")
         .agg(max("pageId").as("pageId"), (expr("bit_xor(contrib)") % 65536).as("label"))
         .filter(col("pageId").isNotNull)
-        .transform(graft.util.Materialize.iterate(_, it))
+        .transform(Materialize.iterate(_, it))
+      // the result reads the last round; `initial` is the caller's
+      if (prev ne initial) Materialize.release(prev)
     }
     labeled.groupBy("pageId", "label").count()
   }

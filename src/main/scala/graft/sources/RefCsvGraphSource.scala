@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Reader for the reference's nodes.csv / edges.csv TSV interchange format
   * (jpanlib `outputModules/csv/CSVWriterImpl.java:19-23,87-99`), mapped onto
   * graft's `nodes` / `edges` schema — the S5/S8 analog (SURVEY.md §2.1):
@@ -106,15 +108,14 @@ object RefCsvGraphSource {
     * returns (valid edges, dangling-edge count). */
   def validated(nodes: DataFrame, edges: DataFrame): (DataFrame, Long) = {
     val ids = nodes.select(col("id")).distinct()
-    // checkpoint the parsed edges once: the CSV would otherwise be
-    // re-parsed for the total count, the valid count, AND every downstream
-    // consumption of the returned frame
-    val e = edges.localCheckpoint(true)
-    val valid = e
-      .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-      .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-      .localCheckpoint(true)
-    val dangling = e.count() - valid.count()
-    (valid, dangling)
+    // pin the parsed edges once: the CSV would otherwise be re-parsed for
+    // the valid set AND the total count; each pin's fill job counts it
+    Materialize.withPins { pins =>
+      val e = pins(edges)
+      val valid = Materialize.pin(e.df
+        .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi"))
+      (valid.df, e.count - valid.count)
+    }
   }
 }

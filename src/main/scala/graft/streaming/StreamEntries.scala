@@ -162,7 +162,7 @@ object StreamEntries {
       graft.store.TableIO.deleteRecursively(ckpt)
     }
     // detach from the temp build so it can be reclaimed now, not on tmp GC
-    val res = graft.store.TableIO.read(spark, s"$out/triples").localCheckpoint(true)
+    val res = graft.util.Materialize.pin(graft.store.TableIO.read(spark, s"$out/triples")).df
     graft.store.TableIO.deleteRecursively(out)
     res
   }
@@ -208,7 +208,7 @@ object StreamEntries {
       q.stop()
       graft.store.TableIO.deleteRecursively(ckpt)
     }
-    val res = graft.store.TableIO.read(spark, s"$out/triples").localCheckpoint(true)
+    val res = graft.util.Materialize.pin(graft.store.TableIO.read(spark, s"$out/triples")).df
     graft.store.TableIO.deleteRecursively(out)
     res
   }

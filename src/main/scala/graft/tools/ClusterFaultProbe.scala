@@ -13,7 +13,8 @@ import graft.util.Sessions
   * allows (separate block managers, real shuffle fetches over the wire,
   * executor loss = process death). The probe:
   *
-  *  1. runs the distributed fixpoint (CC or integer PageRank) clean with
+  *  1. runs the distributed fixpoint (CC, integer PageRank or the k-core
+  *     peel) clean with
   *     `spark.graft.reliableCheckpointInterval=3` + a durable checkpoint
   *     dir → baseline wall + a bit_xor content hash;
   *  2. runs it again and `kill -9`s one executor JVM mid-fixpoint (after
@@ -30,7 +31,7 @@ import graft.util.Sessions
   *     between arguing the 100-TB recovery story and showing it.
   *
   *   spark-submit --master 'local-cluster[2,4,4096]' --driver-memory 4g \
-  *     --class graft.tools.ClusterFaultProbe <jar> [cc|pagerank] [nSpokes]
+  *     --class graft.tools.ClusterFaultProbe <jar> [cc|pagerank|kcore] [nSpokes]
   *
   * (Run it alone: the kill scans /proc for this app's
   * CoarseGrainedExecutorBackend JVMs, filtered by the Spark app id.)
@@ -99,13 +100,18 @@ object ClusterFaultProbe {
       }
       val t0 = System.nanoTime()
       try {
-        val out =
-          if (kernel == "pagerank")
-            graft.query.GraphAnalytics.pageRankInt(
-              edges.select(col("a").as("src"), col("b").as("dst")), iters = 8)
-              .select(col("id"), col("rank").as("component"))
-          else
-            graft.canon.ConnectedComponents.auto(spark, edges, cutover = 0L)
+        val directed = edges.select(col("a").as("src"), col("b").as("dst"))
+        val out = kernel match {
+          case "pagerank" => graft.query.GraphAnalytics.pageRankInt(directed, iters = 8)
+            .select(col("id"), col("rank").as("component"))
+          // each chain's back half closes into a ring: the 2-core is the
+          // rings, reached after one peel round per tail node
+          case "kcore" => graft.query.GraphAnalytics.kCore(directed.unionByName(
+            spark.range(chainLen - 1, nChainNodes, chainLen).select((col("id") + base).as("src"),
+              (col("id") + base + 1 - chainLen / 2).as("dst"))), k = 2)
+            .select(col("id"), col("deg").as("component"))
+          case _ => graft.canon.ConnectedComponents.auto(spark, edges, cutover = 0L)
+        }
         val r = out.agg(
           expr("bit_xor(xxhash64(id, component))"), count(lit(1))).head()
         val wall = (System.nanoTime() - t0) / 1e9

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.query.Steps
 import graft.store.TableIO
-import graft.util.Sessions
+import graft.util.{Materialize, Sessions}
 
 /** The joern-tools CLI contract (SURVEY.md §2.7: thin verb per tool, ids in,
   * TSV on stdout) over materialized KG tables:
@@ -474,7 +474,7 @@ object KgCli {
       q.stop()
       graft.store.TableIO.deleteRecursively(ckpt)
     }
-    val res = spark.read.parquet(outDir).orderBy("id").localCheckpoint(true)
+    val res = Materialize.pin(spark.read.parquet(outDir).orderBy("id")).df
     graft.store.TableIO.deleteRecursively(outDir)
     res
   }
@@ -545,7 +545,7 @@ object KgCli {
     val live = s"$tablesDir/tags"
     val existing = readTags(spark, tablesDir)
       .getOrElse(Seq.empty[(Long, String)].toDF("id", "tag"))
-    val next = f(existing).localCheckpoint(true)
+    val next = Materialize.pin(f(existing)).df
     TableIO.deleteRecursively(s"$live.new")
     TableIO.writeBucketed(next, s"$live.new", col("id"))
     TableIO.deleteRecursively(s"$live.old")

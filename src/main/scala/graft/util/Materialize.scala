@@ -76,37 +76,57 @@ object Materialize {
   /** A frame pinned by [[Pins]], with the tally of the job that filled it. */
   final case class Pinned(df: DataFrame, count: Long, buckets: Map[String, Set[Int]])
 
-  /** One operation's pins, released together once no job reads them. A pin
-    * is a reliable checkpoint under the interval — executor loss must not
-    * take the only copy of a frame a whole fixpoint or increment depends on
-    * — and a localCheckpoint otherwise. Neither keeps a partitioning a
-    * later join can use: under AQE the pinned frame reports
-    * `UnknownPartitioning`, even after a `repartition(col)`, so a join
-    * against it still plans its exchange (kernels that need co-partitioned
-    * rounds pin an RDD instead). Each pin costs ONE job: the job that fills
-    * it is a [[tally]], so its row count and the buckets of `keys` need no
-    * query of their own. Thread-safe: concurrent `Par` chains pin into one
-    * set. */
+  /** Pin `df` in place and fill it with ONE job, a [[tally]] that also
+    * returns its row count and the buckets of `keys`: a reliable checkpoint
+    * under the interval — executor loss must not take the only copy of a
+    * frame a whole fixpoint or increment depends on — and a localCheckpoint
+    * otherwise. Neither keeps a partitioning a later join can use: under
+    * AQE the pinned frame reports `UnknownPartitioning`, even after a
+    * `repartition(col)`, so a join against it still plans its exchange
+    * (kernels that need co-partitioned rounds pin an RDD instead). The
+    * caller owns the pin: a result pin goes to its caller, a temporary one
+    * into a [[Pins]] set. */
+  def pin(df: DataFrame, numBuckets: Int = 0, keys: Seq[String] = Nil): Pinned = {
+    val reliable = interval(df.sparkSession) > 0
+    // lazy: under AQE this still runs the plan's exchanges and leaves the
+    // final stage to the tally job, whose end fills the checkpoint (Spark
+    // checkpoints the marked ancestors of a job's RDD when the job ends)
+    val p = if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
+    // a reliable checkpoint writes after the job: keep the blocks so the
+    // write does not recompute them
+    if (reliable) p.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val t = try tally(p, numBuckets, keys: _*) catch { case e: Throwable => release(p); throw e }
+    Pinned(p, t.count, t.buckets)
+  }
+
+  /** One operation's temporary pins, released together once no job reads
+    * them ([[withPins]] does so in a `finally`). Superseded rounds may go
+    * earlier through [[release]]; releasing one twice is harmless.
+    * Thread-safe: concurrent `Par` chains pin into one set. */
   final class Pins(numBuckets: Int = 0) {
     private val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    private def hold(df: DataFrame): DataFrame = { held.add(df); df }
+    /** [[pin]] with this set's bucket count, held by the set. */
     def apply(df: DataFrame, keys: String*): Pinned = {
-      val reliable = interval(df.sparkSession) > 0
-      // lazy: under AQE this still runs the plan's exchanges and leaves the
-      // final stage to the tally job, whose end fills the checkpoint (Spark
-      // checkpoints the marked ancestors of a job's RDD when the job ends)
-      val p = if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-      held.add(p)
-      // a reliable checkpoint writes after the job: keep the blocks so the
-      // write does not recompute them
-      if (reliable) p.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val t = tally(p, numBuckets, keys: _*)
-      Pinned(p, t.count, t.buckets)
+      val p = pin(df, numBuckets, keys)
+      hold(p.df)
+      p
     }
+    /** [[iterate]], held by the set. */
+    def iterate(df: DataFrame, iter: Int): DataFrame = hold(Materialize.iterate(df, iter))
     def releaseAll(): Unit = {
       var p = held.poll()
       while (p != null) { release(p); p = held.poll() }
     }
+  }
+
+  /** `f` with a fresh [[Pins]] set, released when `f` returns or throws. A
+    * frame `f` returns must not read the set's pins: a result pin comes
+    * from [[pin]]. */
+  def withPins[T](f: Pins => T): T = {
+    val pins = new Pins()
+    try f(pins) finally pins.releaseAll()
   }
 
   /** Row count of `df` and the buckets of `keys`, in ONE job (plus the

@@ -49,22 +49,18 @@ object ConnectedComponents {
     * pin also counts it; neither path's result reads the pin (a
     * driver-built relation, a checkpointed round). */
   def auto(spark: SparkSession, edges: DataFrame,
-           cutover: Long = LocalCutover): DataFrame = {
+           cutover: Long = LocalCutover): DataFrame = Materialize.withPins { pins =>
     import spark.implicits._
-    val pins = new Materialize.Pins
     val e = pins(edges.toDF("a", "b").filter($"a" =!= $"b"))
     // the pin's own count decides the strategy without shipping rows —
     // collecting cutover+1 pairs (~32 MB) to the driver just to discard them
     // on the distributed path would couple the cutover constant to driver
     // memory; only the genuinely-small path pulls data (≤ cutover rows)
-    val out =
-      if (e.count <= cutover) {
-        val uf = new LocalUnionFind
-        e.df.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
-        uf.components.toSeq.toDF("id", "component")
-      } else run(spark, e.df)
-    pins.releaseAll()
-    out
+    if (e.count <= cutover) {
+      val uf = new LocalUnionFind
+      e.df.as[(Long, Long)].collect().foreach { case (a, b) => uf.union(a, b) }
+      uf.components.toSeq.toDF("id", "component")
+    } else run(spark, e.df)
   }
 
   /** Driver-side union-find with path compression (the small-graph path and

@@ -9,12 +9,22 @@ import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
-/** Iteration-materialization policy shared by the fixpoint operators
-  * (ConnectedComponents, Steps.selfReaching, neighborhoodHashFeatures, the
-  * GraphAnalytics kernels) and the increments' [[Pins]]. The RDD query
-  * kernels (PageRank and the BFS closures behind `slice`, `path` and the
-  * SCC/bow-tie reach) use the RDD `pin` and `iterate`, which apply the same
-  * policy.
+/** The one owner of pins: every checkpoint in src/main is made here
+  * (EntryPointsSpec checks it), and every pin is released through
+  * [[release]] or [[Pins.releaseAll]] — never `Dataset.unpersist`, which
+  * frees nothing on a checkpointed frame.
+  *
+  * Callers: [[pin]] (a pin its caller owns — the graph kernels' results,
+  * the nhash seed frames, the Dedup/CorpusOps/Similarity pins a lazy
+  * result still reads, the stream entries' and KgCli's detached tables);
+  * [[Pins]]/[[withPins]] (one operation's temporary pins — `Incremental`,
+  * `ConnectedComponents.auto`, the GraphAnalytics kernels,
+  * `Steps.selfReaching`, Dedup's index passes,
+  * `RefCsvGraphSource.validated`); `iterate` (the fixpoint rounds of
+  * ConnectedComponents, labelPropagation, kCore, hitsInt, selfReaching,
+  * the nhash kernel and k-means); the RDD `pin` and `iterate` (PageRank
+  * and the BFS closures behind `slice`, `path` and the SCC/bow-tie reach).
+  * All of them apply the same policy.
   *
   * Default: eager `localCheckpoint` — cheapest way to truncate lineage
   * (without it every iteration doubles the plan), but the blocks are
@@ -73,7 +83,7 @@ object Materialize {
     * numBuckets)`, TableIO's bucketing. */
   final case class Tally(count: Long, buckets: Map[String, Set[Int]])
 
-  /** A frame pinned by [[Pins]], with the tally of the job that filled it. */
+  /** A frame pinned by [[pin]], with the tally of the job that filled it. */
   final case class Pinned(df: DataFrame, count: Long, buckets: Map[String, Set[Int]])
 
   /** Pin `df` in place and fill it with ONE job, a [[tally]] that also

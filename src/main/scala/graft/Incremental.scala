@@ -23,13 +23,13 @@ import graft.util.{Materialize, Par}
   *      reference's `queryTemplate.groovy` literal pre-grep). Substring
   *      containment over lowercased text is a strict superset of the
   *      tokenizer's view, so no affected page can be missed;
-  *   3. map affected urls to their triples-table buckets, invalidate
-  *      exactly those ([[TableIO.invalidateBuckets]] — manifest-first,
-  *      crash-safe);
-  *   4. re-extract ONLY pages hashing into the touched buckets (a bucket
+  *   3. map affected urls to the triples-table buckets they hash into;
+  *   4. re-extract ONLY pages hashing into those touched buckets (a bucket
   *      holds every page that hashes there, affected or not) under the new
-  *      rules, reusing the materialized GLOBAL canonical mapping, and let
-  *      [[TableIO.writeBucketed]] recompute exactly the missing buckets.
+  *      rules, reusing the materialized GLOBAL canonical mapping, and
+  *      replace exactly those buckets in ONE [[TableIO.rewriteBuckets]]
+  *      commit — until its manifest swap, readers see the old rows, and a
+  *      crash before it changes nothing.
   *
   * If a `same_as` rule changed, the global canonical mapping itself is
   * stale and the recompute falls back to a full rebuild (all buckets) —
@@ -132,17 +132,17 @@ object Incremental {
   /** Maintenance fold for the refcount delta log (the compact-verb family):
     * collapse to one row per entity (sum of signed deltas), dropping
     * zero-count entities — aggregate-equivalent by construction. The
-    * manifest counters (incl. every batch marker) carry over through the
-    * snapshot swap, so exactly-once holds across a fold. */
+    * whole-table overwrite keeps the manifest counters (incl. every batch
+    * marker), so exactly-once holds across a fold. */
   def foldRefcounts(spark: SparkSession, outDir: String,
                     numBuckets: Int = TableIO.NumBuckets): Long = {
     val dir = s"$outDir/entity_refcounts"
-    val m = TableIO.readManifest(dir)
-    if (m.isEmpty) return 0L
+    if (TableIO.readManifest(dir).isEmpty) return 0L
     val pins = new Materialize.Pins(numBuckets)
     val folded = pins(TableIO.read(spark, dir).groupBy("id")
       .agg(sum("n").as("n")).filter(col("n") =!= 0L))
-    swapWrite(folded.df, dir, col("id"), m.get.counters, numBuckets)
+    TableIO.rewriteBuckets(folded.df, dir, col("id"), (0 until numBuckets).toSet,
+      numBuckets = numBuckets)
     pins.releaseAll()
     folded.count
   }
@@ -239,7 +239,8 @@ object Incremental {
   }
 
   /** Apply a rule diff to a materialized build at `outDir`. Returns the set
-    * of invalidated/recomputed triples buckets (empty = no-op diff). */
+    * of recomputed triples buckets (empty = no-op diff). Every table it
+    * rewrites keeps the build's counters and adds `ruleDiffTouchedBuckets`. */
   def applyRuleDiff(spark: SparkSession, pages: Dataset[Page],
                     oldRules: Seq[PatternRule], newRules: Seq[PatternRule],
                     outDir: String, nPersons: Int = 500,
@@ -255,8 +256,6 @@ object Incremental {
       else Materialize.tally(affectedPages(pages, changed).toDF(), numBuckets, "url").buckets("url")
     if (touched.isEmpty) return Set.empty
 
-    TableIO.invalidateBuckets(s"$outDir/triples", touched)
-
     val restricted =
       if (touched.size == numBuckets) pages
       else pages.filter(bucketCol("url", numBuckets).isin(touched.toSeq: _*))
@@ -265,23 +264,20 @@ object Incremental {
       else Some(TableIO.read(spark, s"$outDir/components"))
     val t = Pipeline.run(spark, restricted, nPersons,
       rules = newRules, precomputedComponents = components)
-    TableIO.writeBucketed(t.triples, s"$outDir/triples", col("url"),
-      Map("ruleDiffTouchedBuckets" -> touched.size.toLong), numBuckets)
+    val diff = Map("ruleDiffTouchedBuckets" -> touched.size.toLong)
+    TableIO.rewriteBuckets(t.triples, s"$outDir/triples", col("url"), touched, diff, numBuckets)
     if (sameAsChanged) {
       // refresh the mapping table too — later diffs depend on it
-      TableIO.invalidateBuckets(s"$outDir/components", (0 until numBuckets).toSet)
-      TableIO.writeBucketed(t.components, s"$outDir/components", col("id"),
-        Map("ruleDiffTouchedBuckets" -> touched.size.toLong), numBuckets)
+      val all = (0 until numBuckets).toSet
+      TableIO.rewriteBuckets(t.components, s"$outDir/components", col("id"), all, diff, numBuckets)
       // the evidence sidecar derives from the same_as rows — refresh it in
       // lockstep or a later removePages would recompute a stale mapping
       val evDir = s"$outDir/sameas_evidence"
-      if (TableIO.readManifest(evDir).isDefined) {
-        TableIO.invalidateBuckets(evDir, (0 until numBuckets).toSet)
-        TableIO.writeBucketed(Pipeline.sameAsEvidence(t.flat), evDir, col("a"),
-          Map("ruleDiffTouchedBuckets" -> touched.size.toLong), numBuckets)
-      }
+      if (TableIO.readManifest(evDir).isDefined)
+        TableIO.rewriteBuckets(Pipeline.sameAsEvidence(t.flat), evDir, col("a"), all, diff,
+          numBuckets)
     }
-    patchGraphTables(spark, t, outDir, sameAsChanged, touched.size.toLong, numBuckets)
+    patchGraphTables(spark, t, outDir, sameAsChanged, diff, numBuckets)
     t.flatEnc.unpersist(false)
     if (components.isEmpty) t.components.unpersist(false)
     touched
@@ -294,15 +290,15 @@ object Incremental {
     * edges (mentions/links/hosts come from the gazetteer, SAME_AS from the
     * mapping); `t` covers the re-extracted pages, so its Triple subgraph
     * replaces theirs. nodes/edges are bucketed by id/src — affected rows
-    * scatter across every bucket, so the patch is a full-table REWRITE
-    * (snapshot-swap, crash-recoverable): O(|graph|) I/O but zero
-    * re-extraction CPU, still far below a rebuild. The triples table
-    * itself stays O(touched buckets). */
+    * scatter across every bucket, so the patch is a whole-table overwrite
+    * (the patched frames read the table they replace; the commit lists its
+    * files before it writes): O(|graph|) I/O but zero re-extraction CPU,
+    * still far below a rebuild. The triples table itself stays O(touched
+    * buckets). */
   private def patchGraphTables(spark: SparkSession, t: Pipeline.Tables,
                                outDir: String, fullRebuild: Boolean,
-                               touchedN: Long, numBuckets: Int): Unit = {
+                               diff: Map[String, Long], numBuckets: Int): Unit = {
     if (TableIO.readManifest(s"$outDir/nodes").isEmpty) return
-    val meta = Map("ruleDiffTouchedBuckets" -> touchedN)
     val pins = new Materialize.Pins(numBuckets)
     val (newNodes, newEdges) =
       if (fullRebuild) (t.nodes, t.edges)
@@ -324,25 +320,10 @@ object Incremental {
           .unionByName(t.edges.filter(col("kind").isin("SUBJ", "OBJ")))
         (pn, pe)
       }
-    swapWrite(newNodes, s"$outDir/nodes", col("id"), meta, numBuckets)
-    swapWrite(newEdges, s"$outDir/edges", col("src"), meta, numBuckets)
+    val all = (0 until numBuckets).toSet
+    TableIO.rewriteBuckets(newNodes, s"$outDir/nodes", col("id"), all, diff, numBuckets)
+    TableIO.rewriteBuckets(newEdges, s"$outDir/edges", col("src"), all, diff, numBuckets)
     pins.releaseAll()
-  }
-
-  /** Snapshot-swap rewrite (the tags-table pattern): stage into `.new`
-    * while the live table is still readable (the patched frame reads it
-    * lazily), then move live aside and the snapshot in — a crash between
-    * the renames leaves a recoverable copy rather than nothing. */
-  private def swapWrite(df: org.apache.spark.sql.DataFrame, path: String,
-                        key: Column, meta: Map[String, Long], numBuckets: Int): Unit = {
-    import java.nio.file.{Files, Paths}
-    TableIO.deleteRecursively(s"$path.new")
-    TableIO.writeBucketed(df, s"$path.new", key, meta, numBuckets)
-    TableIO.deleteRecursively(s"$path.old")
-    if (Files.exists(Paths.get(path)))
-      Files.move(Paths.get(path), Paths.get(s"$path.old"))
-    Files.move(Paths.get(s"$path.new"), Paths.get(path))
-    TableIO.deleteRecursively(s"$path.old")
   }
 
   final case class AppendStats(
@@ -385,13 +366,13 @@ object Incremental {
     *     Triple) append blindly; corpus-global rows (Host / Domain / Entity,
     *     the dimension tables of the graph) are deduped by an anti-join
     *     against only the buckets the batch's ids hash into.
-    *   - components: the merged mapping replaces the table via snapshot-swap
-    *     — LAST, which makes a crashed append resumable (see below).
+    *   - components: the merged mapping overwrites the whole table — LAST,
+    *     which makes a crashed append resumable (see below).
     *
     * Crash/retry: each data table commits ONCE, atomically (one manifest
     * swap covering its merge fallout and its batch rows), and a retry
     * detects per table whether the batch is already in (all-or-nothing key
-    * overlap) and skips it. Because the components swap still happens last,
+    * overlap) and skips it. Because the components overwrite happens last,
     * a retry recomputes the SAME merged mapping and remap set from the
     * unchanged old mapping (CC is deterministic), and a table whose commit
     * landed finds no stale rows and no missing batch rows: it no-ops. A
@@ -571,8 +552,8 @@ object Incremental {
       val hop = remap.withColumnRenamed("from", "t0").withColumnRenamed("to", "t1")
       val routed = pending.join(broadcast(hop), pending("to") === hop("t0"), "left")
         .select(pending("from"), coalesce($"t1", pending("to")).as("to"))
-      swapWrite(routed.unionByName(remap).dropDuplicates("from", "to"),
-        rd, col("from"), Map.empty, 1)
+      TableIO.rewriteBuckets(routed.unionByName(remap).dropDuplicates("from", "to"),
+        rd, col("from"), Set(0), numBuckets = 1)
     }
     val (stale, remapped) = Par.await(staleF)
     commitPatch(triplesDir, col("url"), stale, remapped, Option.unless(tripApplied)(triplesB),
@@ -676,23 +657,22 @@ object Incremental {
     val nodesApplied = Par.await(nodesF)
     val evApplied = Par.await(evidenceF)
 
-    // ---- components: snapshot-swap LAST (the retry-convergence anchor).
-    // Swap only when the batch actually CHANGED the mapping (merges or new
-    // rows): a redelivered batch computes components2 from the already-
-    // swapped table, both deltas are zero, and re-swapping would both pay a
-    // pointless O(|mapping|) rewrite and double-add the batch counters. A
-    // retry after a crash-before-swap still sees nonzero deltas (the old
-    // table is unchanged) and completes the swap — with the counters added
-    // exactly once, since the crashed run never got here.
+    // ---- components: whole-table overwrite LAST (the retry-convergence
+    // anchor; components2 reads the table, and nothing reads it after).
+    // Overwrite only when the batch actually CHANGED the mapping (merges or
+    // new rows): a redelivered batch computes components2 from the already-
+    // overwritten table, both deltas are zero, and overwriting again would
+    // both pay a pointless O(|mapping|) rewrite and double-add the batch
+    // counters. A retry after a crash before the overwrite still sees
+    // nonzero deltas (the old table is unchanged) and completes it — with
+    // the counters added exactly once, since the crashed run never got here.
     // Counter semantics (deliberate): the components manifest's counters
     // advance only with mapping-CHANGING batches — it is a derived
     // dimension table, not an ingest log; the three data tables carry the
     // per-batch lineage.
-    if (havePairs && (remapN > 0 || newMappingRows > 0)) {
-      val priorC = TableIO.readManifest(s"$outDir/components").get.counters
-      swapWrite(components2.toDF(), s"$outDir/components", col("id"),
-        TableIO.sumCounters(priorC, batchCounters), numBuckets)
-    }
+    if (havePairs && (remapN > 0 || newMappingRows > 0))
+      TableIO.rewriteBuckets(components2.toDF(), s"$outDir/components", col("id"),
+        (0 until numBuckets).toSet, batchCounters, numBuckets)
 
     val skipped = Seq(
       if (tripApplied) Some("triples") else None,
@@ -716,7 +696,7 @@ object Incremental {
                           numBuckets: Int): Unit = {
     val rows = (Option.when(stale.nonEmpty)(remapped) ++ batch).reduceOption(_ unionByName _)
     rows.foreach(r => TableIO.commitBuckets(r, dir, key, stale, appendRest = batch.isDefined,
-      if (batch.isDefined) counters else Map.empty, numBuckets))
+      TableIO.sumCounters(_, if (batch.isDefined) counters else Map.empty), numBuckets))
   }
 
   final case class RemoveStats(
@@ -767,8 +747,8 @@ object Incremental {
     * and affected urls and unions in the re-derived rows. Edges probe for
     * the batch's page-scoped rows at once, then wait for B and C: one
     * rewrite drops page-scoped, dead-host and stale SAME_AS rows and adds
-    * the new SAME_AS delta. The components snapshot-swap and
-    * the nodes rewrite follow, in that order.
+    * the new SAME_AS delta. The components overwrite and the nodes rewrite
+    * follow, in that order.
     *
     * Every pin is a [[Materialize.Pins]] pin whose filling job also returns
     * the row count and key buckets the chains branch on, and every count or
@@ -780,9 +760,9 @@ object Incremental {
     *   1. the refcount deltas land before entity liveness reads them (the
     *      batch marker makes the append exactly-once);
     *   2. the SAME_AS edge delta (and the triples fallout) land before the
-    *      components swap, so a crash between them re-derives the same
+    *      components overwrite, so a crash between them re-derives the same
     *      `changed` from the unchanged old mapping;
-    *   3. the components swap lands before the nodes anchor;
+    *   3. the components overwrite lands before the nodes anchor;
     *   4. the page NODES are the presence anchor and drop LAST.
     * A retry first probes the anchor: all gone means the removal completed
     * (early no-op; negative manifest counters cannot double-subtract); still
@@ -1020,7 +1000,7 @@ object Incremental {
           keepE = keepE.unionByName(freshSameAs)
         }
         // as for triples: a retry after this commit but before the
-        // components swap re-applies the SAME_AS delta, never the counters
+        // components overwrite re-applies the SAME_AS delta, never the counters
         TableIO.rewriteBuckets(keepOrder(keepE, eContent.columns), edgesDir, col("src"),
           edgeBuckets, if (batchPresent) negCounters else Map.empty, numBuckets)
       }
@@ -1036,13 +1016,11 @@ object Incremental {
     val (tripleBuckets, nAffected) = Par.await(triplesF)
     val edgeBuckets = Par.await(edgesF)
 
-    // ---- components: snapshot-swap after the triples and SAME_AS deltas,
-    // BEFORE the nodes anchor drops ----
-    if (split.remapped > 0) {
-      val priorC = TableIO.readManifest(compDir).get.counters
-      swapWrite(split.newC.toDF(), compDir, col("id"),
-        TableIO.sumCounters(priorC, negCounters), numBuckets)
-    }
+    // ---- components: whole-table overwrite after the triples and SAME_AS
+    // deltas, BEFORE the nodes anchor drops ----
+    if (split.remapped > 0)
+      TableIO.rewriteBuckets(split.newC, compDir, col("id"), (0 until numBuckets).toSet,
+        negCounters, numBuckets)
 
     // ---- nodes LAST: the presence anchor falls only when all else is done ----
     val delNodeIds = pins(pageIds.unionByName(mentionIds).unionByName(tripleNodeIds)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.store.TableIO
 import graft.util.Materialize
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -219,16 +220,16 @@ object Dedup {
     * batch is gated against the WHOLE corpus seen so far in O(batch) work,
     * instead of re-running corpus×corpus dedup per crawl.
     *
-    * Layout under `dir`:
-    *   `sigs/`  — (doc_id, sig): full signatures, APPENDED per ingest
-    *              (O(batch) write through Spark's commit protocol: files
-    *              surface only at job commit, a crash leaves hidden
-    *              `_temporary` debris that parquet readers ignore)
-    *   `bands/` — (band, bandHash, ids): capped min-`maxBucket` id lists,
-    *              one GENERATION appended per ingest; readers re-cap the
-    *              union (exact — min-k of per-generation min-k's IS the
-    *              global min-k), [[compactMinhashIndex]] folds generations
-    *              back to one row per bucket
+    * Layout under `dir`, two [[TableIO]] tables (so every write is a
+    * manifest commit, and a crashed one is invisible and wiped by the next):
+    *   `sigs/`  — (doc_id, sig), bucketed by doc_id: full signatures,
+    *              APPENDED per ingest (an O(batch) commit)
+    *   `bands/` — (band, bandHash, ids), bucketed by bandHash: capped
+    *              min-`maxBucket` id lists, one GENERATION appended per
+    *              ingest; readers re-cap the union (exact — min-k of
+    *              per-generation min-k's IS the global min-k),
+    *              [[compactMinhashIndex]] folds generations back to one row
+    *              per bucket
     *
     * Semantics (mirrored closed-form by the d19 oracle): a batch doc is
     * DROPPED iff some strictly-smaller doc_id (base corpus or same batch)
@@ -248,9 +249,14 @@ object Dedup {
                         numHashes: Int = 32, bands: Int = 8,
                         maxBucket: Int = 50): Unit = Materialize.withPins { pins =>
     val sig = pins(signatureFrame(docs, shingleN, numHashes, bands)).df
-    sig.select("doc_id", "sig").write.mode("overwrite").parquet(s"$dir/sigs")
-    cappedBandLists(sig, maxBucket).write.mode("overwrite").parquet(s"$dir/bands")
+    overwrite(sig.select("doc_id", "sig"), s"$dir/sigs", "doc_id")
+    overwrite(cappedBandLists(sig, maxBucket), s"$dir/bands", "bandHash")
   }
+
+  /** Replace an index table whole (its frame may read it: the commit lists
+    * the table's files before it writes). */
+  private def overwrite(df: DataFrame, path: String, key: String): Unit =
+    TableIO.rewriteBuckets(df, path, col(key), (0 until TableIO.NumBuckets).toSet)
 
   private def cappedBandLists(sig: DataFrame, maxBucket: Int): DataFrame =
     bandRows(sig)
@@ -272,9 +278,8 @@ object Dedup {
                   threshold: Double = 0.7,
                   maxBucket: Int = 50): DataFrame = Materialize.withPins { pins =>
     val spark = batch.sparkSession
-    healSwap(s"$dir/sigs"); healSwap(s"$dir/bands")
-    val oldSigs = spark.read.parquet(s"$dir/sigs")
-    val oldBands = spark.read.parquet(s"$dir/bands")
+    val oldSigs = TableIO.read(spark, s"$dir/sigs")
+    val oldBands = TableIO.read(spark, s"$dir/bands")
     val bsig = pins(signatureFrame(batch, shingleN, numHashes, bands)).df
     // the probe needs capped lists ONLY for the buckets this batch touches:
     // semi-join the stored generations down to those keys FIRST (without
@@ -333,10 +338,9 @@ object Dedup {
       .toDF("doc_id", "kept")).df
     // O(batch) index fold: append the batch's signatures and its OWN capped
     // band lists as a new generation (readers re-cap the union; compaction
-    // folds). Spark's commit protocol makes the appends crash-tolerant —
-    // files surface only at job commit.
-    bsig.select("doc_id", "sig").write.mode("append").parquet(s"$dir/sigs")
-    cappedBandLists(bsig, maxBucket).write.mode("append").parquet(s"$dir/bands")
+    // folds)
+    TableIO.appendBucketed(bsig.select("doc_id", "sig"), s"$dir/sigs", col("doc_id"))
+    TableIO.appendBucketed(cappedBandLists(bsig, maxBucket), s"$dir/bands", col("bandHash"))
     // `out` is its own pin; the set's go on return (without that, repeated
     // ingests pile batch-sized checkpoint copies into storage memory until
     // an eviction cliff, the pageRankInt lesson)
@@ -349,54 +353,17 @@ object Dedup {
     * only O(corpus) step in the index lifecycle, by design. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                           maxBucket: Int = 50): Unit = Materialize.withPins { pins =>
-    healSwap(s"$dir/sigs"); healSwap(s"$dir/bands")
     // DISTINCT before the re-cap and per-doc sig dedup: an at-least-once
     // redelivery appends duplicate generations, which must not count twice
     // toward the cap (evicting distinct ids) nor persist duplicate rows
-    val bands2 = pins(spark.read.parquet(s"$dir/bands")
+    val bands2 = pins(TableIO.read(spark, s"$dir/bands")
       .select(col("band"), col("bandHash"), explode(col("ids")).as("doc_id"))
       .distinct()
       .groupBy("band", "bandHash")
       .agg(graft.functions.MinKAgg.minK(maxBucket)(col("doc_id")).as("ids"))).df
-    val sigs2 = pins(spark.read.parquet(s"$dir/sigs").dropDuplicates("doc_id")).df
-    swapWrite(bands2, s"$dir/bands")
-    swapWrite(sigs2, s"$dir/sigs")
-  }
-
-  /** Overwrite `path` via write-aside + two renames, no window where the
-    * table is deleted but not yet replaced: tmp is fully written BEFORE the
-    * live dir moves aside, so after a crash either `path` still exists or a
-    * COMPLETE `path`_tmp does — [[healSwap]] promotes the latter on the
-    * next open. Single-FS local semantics; on an object store this becomes
-    * the TableIO snapshot-swap instead. */
-  private def swapWrite(df: DataFrame, path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = path + "_tmp"
-    val old = path + "_old"
-    graft.store.TableIO.deleteRecursively(tmp)
-    graft.store.TableIO.deleteRecursively(old)
-    df.write.mode("overwrite").parquet(tmp)
-    if (Files.exists(Paths.get(path)))
-      Files.move(Paths.get(path), Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    graft.store.TableIO.deleteRecursively(old)
-  }
-
-  /** Crash recovery for [[swapWrite]]: a missing live dir next to a
-    * (by-construction complete) `_tmp` means the crash hit between the two
-    * renames — promote the tmp. Any `_old` leftover is stale either way.
-    * Also wipes `_temporary` append debris: Hadoop's FileOutputCommitter
-    * reuses `_temporary/0` across jobs, so committed TASK dirs from a
-    * crashed append would otherwise be published by the NEXT append's job
-    * commit as phantom rows (the index has a single writer by contract, so
-    * the wipe cannot race a live job). */
-  private def healSwap(path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    if (!Files.exists(Paths.get(path)) && Files.exists(Paths.get(path + "_tmp")))
-      Files.move(Paths.get(path + "_tmp"), Paths.get(path),
-        StandardCopyOption.ATOMIC_MOVE)
-    graft.store.TableIO.deleteRecursively(path + "_old")
-    graft.store.TableIO.deleteRecursively(path + "/_temporary")
+    val sigs2 = pins(TableIO.read(spark, s"$dir/sigs").dropDuplicates("doc_id")).df
+    overwrite(bands2, s"$dir/bands", "bandHash")
+    overwrite(sigs2, s"$dir/sigs", "doc_id")
   }
 
   /** 64-bit SimHash of the token stream: per-bit weighted majority over

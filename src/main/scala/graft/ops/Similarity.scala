@@ -104,8 +104,8 @@ object Similarity {
       .select((row_number().over(wTiny) - 1).as("centroid_id"),
         col("embedding").as("c_emb"))).df
     (0 until iters).foreach { it =>
-      val assigned = assign(corpus, centroids)
-      centroids = assigned
+      val prev = centroids
+      centroids = assign(corpus, prev)
         .select(col("centroid_id"), col("embedding"))
         .withColumn("pos", explode(sequence(lit(0), size(col("embedding")) - 1)))
         .select(col("centroid_id"), col("pos"),
@@ -115,6 +115,9 @@ object Similarity {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m").cast("float")).as("c_emb"))
         .transform(Materialize.iterate(_, it))
+      // filled from `prev`, which nothing reads any more; the last round
+      // stays, the result reads it
+      Materialize.release(prev)
     }
     centroids
   }

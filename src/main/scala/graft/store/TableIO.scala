@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style table IO emulated over Parquet + a JSON snapshot manifest
   * (SURVEY.md §7.4 — no Iceberg jars on the image, so the required semantics
@@ -14,20 +15,25 @@ import org.apache.spark.sql.functions._
   * in by reimplementing it).
   *
   * Layout:
-  *   dir/data/bucket=K/part-*.parquet   (host-hash bucketed data files)
-  *   dir/_manifest.json                 (atomic: committed buckets + counters)
+  *   dir/data/bucket=K/part-*.parquet   (key-hash bucketed data files)
+  *   dir/_manifest.json                 (atomic: committed buckets, their
+  *                                       files, counters)
+  *   dir/_schema.json                   (the schema of the first commit)
+  *   dir/_snapshots/<id>.json           (history, for [[readAt]])
   *
-  * Commit protocol: data for a bucket is written by Spark's normal task
-  * commit; a data file becomes VISIBLE only when listed in the manifest, and
-  * the manifest is replaced atomically (tmp + ATOMIC_MOVE) — the analog of
-  * the reference's transaction batches (`CSVImporter.java:91-98`).
-  * [[writeBucketed]] builds a table; resume = read manifest, write only
-  * missing buckets (≙ joern's ArgumentTainter delta patching, SURVEY.md
-  * G3). A committed table changes through [[commitBuckets]]: one write job
-  * and one manifest swap that replaces a bucket subset and appends to the
-  * other buckets, in any mix — [[appendBucketed]] and [[rewriteBuckets]]
-  * are its pure-append and pure-overwrite cases. Files a crashed commit
-  * left behind are claimed by no snapshot and wiped by the next commit.
+  * A table changes only through [[commitBuckets]], and every change has the
+  * same crash story — new files first, atomic manifest swap, then delete —
+  * the analog of the reference's transaction batches
+  * (`CSVImporter.java:91-98`). One write job puts the new data files in the
+  * bucket dirs; a file becomes VISIBLE only when the manifest lists it, and
+  * the manifest is replaced atomically (tmp + ATOMIC_MOVE); only then are
+  * the files it replaced deleted. Files a crashed commit left behind are
+  * claimed by no snapshot and wiped by the next commit. The public entries
+  * are its cases: [[writeBucketed]] builds a table and resumes a crashed
+  * build (only the missing buckets are written — ≙ joern's
+  * ArgumentTainter delta patching, SURVEY.md G3), [[appendBucketed]]
+  * appends, and [[rewriteBuckets]] replaces a bucket subset, or with every
+  * bucket the whole table.
   */
 object TableIO {
   val NumBuckets = 32 // at cluster scale this is O(thousands); local[32] keeps 32
@@ -39,9 +45,8 @@ object TableIO {
       numBuckets: Int = NumBuckets, // the hash modulus — resume MUST match
       // bucket -> data file names belonging to THIS snapshot (the Iceberg
       // manifest-file semantic): readers open exactly these files, so rows
-      // a crashed append left behind are invisible until a manifest commit
-      // claims them. Empty = legacy snapshot (pre-append format): every
-      // file in the bucket dir is the snapshot's.
+      // a crashed write left behind are invisible. Every committed bucket
+      // has an entry, empty or not.
       files: Map[Int, Seq[String]] = Map.empty)
 
   private def manifestPath(dir: String): Path = Paths.get(dir, "_manifest.json")
@@ -169,10 +174,14 @@ object TableIO {
     else readManifest(dir).filter(_.snapshotId == snapshotId)
   }
 
-  /** Write `df` bucketed by hash of `bucketKeyCol` into `dir`, resuming from
-    * an existing manifest (committed buckets are skipped — their input rows
-    * are not even read upstream if the caller pushes `bucketFilter` down).
-    * Returns the final manifest.
+  /** Build `dir` from `df`, resuming from an existing manifest: the buckets
+    * not committed yet are written (committed ones are skipped — their input
+    * rows are not even read upstream if the caller pushes a bucket filter
+    * down), and the manifest states `counters`. On a fully committed table
+    * it writes nothing and only re-states the counters. `counters` is
+    * by-name and evaluated at the swap, so a caller may pass an Await on a
+    * concurrently-computing counter job (Pipeline.materialize) and the
+    * counter scan overlaps the data write.
     *
     * `onlyBuckets`: test hook to simulate a mid-job crash (write a subset,
     * commit a partial manifest, die).
@@ -180,208 +189,152 @@ object TableIO {
   def writeBucketed(
       df: DataFrame,
       dir: String,
-      bucketKey: org.apache.spark.sql.Column,
-      // by-name: evaluated only at manifest-commit time, so a caller may pass
-      // an Await on a concurrently-computing counter job (Pipeline.materialize)
-      // and the counter scan overlaps the data write instead of preceding it
+      bucketKey: Column,
       counters: => Map[String, Long] = Map.empty,
       numBuckets: Int = NumBuckets,
-      onlyBuckets: Option[Set[Int]] = None): Manifest = {
-    val prior = readManifest(dir)
-    prior.foreach { m =>
-      require(m.numBuckets == numBuckets,
-        s"bucket-count mismatch: table at $dir was written with ${m.numBuckets} buckets, " +
-          s"resume requested $numBuckets — mixing moduli would duplicate rows")
-    }
-    val committed: Map[Int, Long] = prior.map(_.buckets).getOrElse(Map.empty)
+      onlyBuckets: Option[Set[Int]] = None): Manifest =
+    commitBuckets(df, dir, bucketKey, missingBuckets(dir, numBuckets).filter(b =>
+      onlyBuckets.forall(_(b))), appendRest = false, _ => counters, numBuckets)
 
-    val withBucket = df.withColumn("bucket",
-      pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
-
-    // schema stamp on first write: an empty table produces no data files at
-    // all, so the reader needs somewhere to get the schema from. Written
-    // driver-side as schema JSON — the old limit(0) parquet write was a full
-    // Spark job + committer round per table, pure fixed overhead that the
-    // high-core bench legs (and a real cluster's driver) pay 4× per snapshot
-    if (prior.isEmpty) {
-      Files.createDirectories(Paths.get(dir))
-      Files.write(Paths.get(dir, "_schema.json"),
-        withBucket.schema.json.getBytes(StandardCharsets.UTF_8))
-    }
-
-    val wanted: Set[Int] = {
-      val all = (0 until numBuckets).toSet -- committed.keySet
-      onlyBuckets.map(all.intersect).getOrElse(all)
-    }
-    if (wanted.isEmpty) {
-      val m = Manifest(nextSnapshotId(prior), committed, counters, numBuckets,
-        prior.map(m0 => backfillFiles(dir, m0)).map(_.files).getOrElse(Map.empty))
-      writeManifestAtomic(dir, m)
-      return m
-    }
-
-    // clear orphaned partial output of uncommitted buckets (a crash may have
-    // left task files that never made it into a manifest)
-    wanted.foreach(b => deleteRecursively(s"$dir/data/bucket=$b"))
-
-    // repartition on the bucket key so each bucket is written by one task:
-    // without this, every input partition writes a file into every bucket
-    // directory (P × B small files — the write anti-scales with cores).
-    // The partition key is REMAPPED (see partKeys) so the mapping is exactly
-    // 1 bucket : 1 reduce task — a plain repartition(n, bucket) murmur-
-    // hashes the bucket id, leaving ~1/3 of the write slots empty and
-    // loading others with 2-3 buckets, a skewed write tail that wastes the
-    // mid/high-core levels' parallelism
-    val keys = partKeys(numBuckets)
-    val pending = withBucket.filter(col("bucket").isin(wanted.toSeq: _*))
-      .repartition(numBuckets, element_at(typedLit(keys.toSeq), col("bucket") + 1))
-    pending.write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
-    // lineage counters from parquet footers — metadata-only, no recompute.
-    // Read driver-side (java.nio walk + footer row counts): this module's
-    // whole snapshot protocol already assumes a POSIX-visible table dir (the
-    // manifest moves are java.nio), and a footer read is a few KB per file —
-    // the previous empty-schema Spark scan was a whole extra job (+32
-    // scheduled tasks) per table, fixed overhead the high-core legs can't
-    // amortize. At catalog scale (thousands of buckets on object storage)
-    // this becomes the catalog's snapshot statistics, not a driver loop.
-    val written: Map[Int, (Long, Seq[String])] = wanted.toSeq.flatMap { b =>
-      val fs = bucketFiles(dir, b)
-      if (fs.isEmpty) None
-      else Some(b -> (fs.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fs))
-    }.toMap
-
-    val newBuckets = committed ++ wanted.map(b => b -> written.get(b).map(_._1).getOrElse(0L))
-    // file lists: this write's files for the wanted buckets, the prior
-    // snapshot's (backfilled for legacy priors) for the already-committed
-    val priorFiles = prior.map(m0 => backfillFiles(dir, m0).files).getOrElse(Map.empty)
-    val newFiles = priorFiles ++ wanted.map(b => b -> written.get(b).map(_._2).getOrElse(Seq.empty))
-    val m = Manifest(nextSnapshotId(prior), newBuckets, counters, numBuckets, newFiles)
-    writeManifestAtomic(dir, m)
-    // writeBucketed is the DESTRUCTIVE path (fresh build / invalidated-bucket
-    // recompute wipes bucket dirs): drop history entries it made unreadable
-    pruneHistoryExcept(dir, m.snapshotId)
-    m
-  }
-
-  /** Append `df`'s rows to an already fully-committed bucketed table as a
-    * NEW SNAPSHOT — the Iceberg append: new data files land in the bucket
-    * dirs, and only the atomic manifest swap makes them (and their lineage
-    * counts) visible. O(|df|) work — committed files are never rewritten or
-    * even opened. `counters` are summed into the prior snapshot's. With no
-    * committed snapshot yet, this is a fresh [[writeBucketed]]. */
+  /** Append `df`'s rows as a NEW SNAPSHOT — the Iceberg append: new data
+    * files land in the bucket dirs, and only the atomic manifest swap makes
+    * them (and their lineage counts) visible. O(|df|) work — committed files
+    * are never rewritten or even opened. `counters` are summed into the
+    * prior snapshot's. A missing table is created. */
   def appendBucketed(
       df: DataFrame,
       dir: String,
-      bucketKey: org.apache.spark.sql.Column,
+      bucketKey: Column,
       counters: => Map[String, Long] = Map.empty,
       numBuckets: Int = NumBuckets): Manifest =
-    commitBuckets(df, dir, bucketKey, Set.empty, appendRest = true, counters, numBuckets)
+    commitBuckets(df, dir, bucketKey, Set.empty, appendRest = true,
+      sumCounters(_, counters), numBuckets)
 
-  /** Rewrite the CONTENT of a committed bucket subset as a new snapshot —
-    * the Iceberg overwrite: `df`'s rows in `buckets` replace those buckets'
-    * rows, and rows hashing elsewhere are dropped. `df` may read the table
+  /** Rewrite the CONTENT of a bucket subset as a new snapshot — the Iceberg
+    * overwrite: `df`'s rows in `buckets` replace those buckets' rows, and
+    * rows hashing elsewhere are dropped. With every bucket this is the
+    * whole-table overwrite (of a missing table too). `df` may read the table
     * itself (the usual case: a small-delta update joined against the
-    * current snapshot). An empty `buckets` commits nothing. */
+    * current snapshot). `addCounters` are summed into the prior's. */
   def rewriteBuckets(
       df: DataFrame,
       dir: String,
-      bucketKey: org.apache.spark.sql.Column,
+      bucketKey: Column,
       buckets: Set[Int],
       addCounters: Map[String, Long] = Map.empty,
       numBuckets: Int = NumBuckets,
       vacuum: Boolean = true): Manifest =
-    commitBuckets(df, dir, bucketKey, buckets, appendRest = false, addCounters, numBuckets, vacuum)
+    commitBuckets(df, dir, bucketKey, buckets, appendRest = false,
+      sumCounters(_, addCounters), numBuckets, vacuum)
 
-  /** The one commit body behind [[appendBucketed]] and [[rewriteBuckets]]:
-    * ONE write job and ONE manifest swap. `df`'s rows hashing into
-    * `replace` become those buckets' whole content (a target may end up
-    * empty); with `appendRest`, rows hashing into any other bucket are
-    * appended to it as new files, otherwise they are dropped. So a merge
-    * fallout rewrite and a batch append to the same table commit together.
+  /** The one commit body: every change to a table's data files or manifest
+    * is ONE write job and ONE manifest swap. `df`'s rows hashing into
+    * `replace` (any subset of [0, numBuckets)) become those buckets' whole
+    * content (a target may end up empty); with `appendRest`, rows hashing
+    * into any other bucket are appended to it as new files, otherwise they
+    * are dropped. So a merge-fallout rewrite and a batch append to the same
+    * table commit together. `counters` maps the prior snapshot's counters
+    * (empty for a missing table) to the new snapshot's; it is evaluated
+    * only at the swap. The first commit stamps `df`'s schema
+    * (`_schema.json`); every later one must match it by column name and
+    * type. Nothing to write and unchanged counters commit nothing.
     *
     * Crash-safe without any caller-side materialization: the new data files
     * are written FIRST, the manifest swap atomically points the table at
     * them, and only then are the replaced files deleted — at no instant is a
     * committed row only in memory. A crash before the swap leaves invisible
-    * orphans, wiped (with any earlier crash's) before the next write; reads
+    * orphans, wiped (with any earlier crash's, and any task output Spark's
+    * committer left under `_temporary`) before the next write. Reads
     * resolve the manifest's file list eagerly, so a `df` reading the table
-    * never sees this commit's own output. `counters` are summed into the
-    * prior snapshot's; they are evaluated only at the swap. With
-    * `vacuum=false` the replaced files stay on disk so the prior snapshot
-    * stays time-travelable ([[readAt]]); [[expireSnapshots]] reclaims. */
+    * sees the prior snapshot throughout the write; no frame may read the
+    * replaced files after the commit returns. With `vacuum=false` the
+    * replaced files stay on disk so the prior snapshot stays
+    * time-travelable ([[readAt]]); [[expireSnapshots]] reclaims. */
   def commitBuckets(
       df: DataFrame,
       dir: String,
-      bucketKey: org.apache.spark.sql.Column,
+      bucketKey: Column,
       replace: Set[Int],
       appendRest: Boolean,
-      counters: => Map[String, Long],
+      counters: Map[String, Long] => Map[String, Long],
       numBuckets: Int = NumBuckets,
       vacuum: Boolean = true): Manifest = {
-    val prior0 = readManifest(dir) match {
-      case Some(m) => m
-      case None if appendRest && replace.isEmpty =>
-        return writeBucketed(df, dir, bucketKey, counters, numBuckets)
-      case None => throw new IllegalStateException(s"no committed snapshot at $dir")
-    }
-    require(prior0.numBuckets == numBuckets,
-      s"bucket-count mismatch: table at $dir has ${prior0.numBuckets} buckets, " +
-        s"this commit uses $numBuckets")
-    require(replace.subsetOf(prior0.buckets.keySet),
-      s"rewrite targets must be committed buckets; uncommitted: " +
-        s"${replace -- prior0.buckets.keySet}")
-    require(!appendRest || prior0.buckets.keySet == (0 until numBuckets).toSet,
+    val all = (0 until numBuckets).toSet
+    val prior = readManifest(dir)
+    prior.foreach(m => require(m.numBuckets == numBuckets,
+      s"bucket-count mismatch: table at $dir was written with ${m.numBuckets} buckets, " +
+        s"this commit uses $numBuckets — mixing moduli would duplicate rows"))
+    require(replace.subsetOf(all), s"bucket ids outside [0, $numBuckets): ${replace -- all}")
+    require(!appendRest || prior.forall(_.buckets.keySet == all),
       s"append to $dir requires a fully-committed snapshot; missing buckets " +
-        s"${(0 until numBuckets).toSet -- prior0.buckets.keySet}")
-    if (replace.isEmpty && !appendRest) return prior0
-    val prior = backfillFiles(dir, prior0)
-    // a legacy prior adopted its on-disk files just now — persist that BEFORE
-    // any new data file can land, otherwise a crash mid-write leaves orphans
-    // that the next retry's backfill would adopt as committed (visible rows
-    // with no lineage count)
-    if (prior0.files.isEmpty && prior.files.nonEmpty) writeManifestAtomic(dir, prior)
+        s"${all -- prior.map(_.buckets.keySet).getOrElse(all)}")
+    // an append to a missing table fills every bucket
+    val targets = if (appendRest && prior.isEmpty) all else replace
+    val base = prior.getOrElse(Manifest(0L, Map.empty, Map.empty, numBuckets))
+    val withBucket = df.withColumn("bucket",
+      pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
+    if (prior.isEmpty) {
+      // an empty table has no data file to take its schema from
+      Files.createDirectories(Paths.get(dir))
+      Files.write(Paths.get(dir, "_schema.json"),
+        withBucket.schema.json.getBytes(StandardCharsets.UTF_8))
+    } else {
+      // catalogString carries no nullability
+      def shape(s: StructType) = s.fields.filter(_.name != "bucket")
+        .map(f => f.name -> f.dataType.catalogString).toMap
+      val stamped = stampedSchema(dir)
+      require(shape(withBucket.schema) == shape(stamped),
+        s"frame ${df.schema.simpleString} does not match the schema stamped at $dir: " +
+          stamped.simpleString)
+    }
     // wipe orphans of a crashed previous write: on disk but claimed by NO
     // snapshot (the history union keeps retained-but-replaced files
     // time-travelable)
-    val claimed = claimedFiles(dir, prior)
-    (0 until numBuckets).foreach { b =>
+    val claimed = claimedFiles(dir, base)
+    // Hadoop's FileOutputCommitter reuses `_temporary/0` across jobs: the
+    // task output of a crashed write would be published by this job's commit
+    deleteRecursively(s"$dir/data/_temporary")
+    all.foreach { b =>
       bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty)).foreach { f =>
         Files.deleteIfExists(bucketFilePath(dir, b, f))
       }
     }
-    val withBucket = df.withColumn("bucket",
-      pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
-    val kept =
-      if (appendRest) withBucket else withBucket.filter(col("bucket").isin(replace.toSeq: _*))
-    val keys = partKeys(numBuckets)
-    kept.repartition(numBuckets, element_at(typedLit(keys.toSeq), col("bucket") + 1))
-      .write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
+    // repartition on the bucket key so each bucket is written by one task:
+    // without this, every input partition writes a file into every bucket
+    // directory (P × B small files — the write anti-scales with cores).
+    // The partition key is REMAPPED (see partKeys) so the mapping is exactly
+    // 1 bucket : 1 reduce task
+    if (appendRest || targets.nonEmpty) {
+      val kept =
+        if (appendRest) withBucket else withBucket.filter(col("bucket").isin(targets.toSeq: _*))
+      kept.repartition(numBuckets, element_at(typedLit(partKeys(numBuckets).toSeq), col("bucket") + 1))
+        .write.mode("append").partitionBy("bucket").parquet(s"$dir/data")
+    }
     // this write's files: on disk, claimed by no snapshot (the orphans are
-    // gone). A replaced bucket may legitimately end up EMPTY (all rows
-    // deduped away), so every target gets an entry
-    val fresh: Map[Int, (Long, Seq[String])] = (0 until numBuckets).flatMap { b =>
+    // gone). Every target gets an entry, empty or not. Row counts come from
+    // the footers, read driver-side: a Spark scan would be one more job
+    val fresh: Map[Int, (Long, Seq[String])] = all.toSeq.flatMap { b =>
       val fs = bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty))
-      if (fs.isEmpty && !replace(b)) None
+      if (fs.isEmpty && !targets(b)) None
       else Some(b -> (fs.map(f => parquetRowCount(bucketFilePath(dir, b, f))).sum, fs))
     }.toMap
+    val next = counters(base.counters)
+    if (fresh.isEmpty && prior.exists(_.counters == next)) return prior.get
     val m = Manifest(
-      nextSnapshotId(Some(prior)),
-      prior.buckets ++ fresh.map { case (b, (n, _)) =>
-        b -> (if (replace(b)) n else prior.buckets.getOrElse(b, 0L) + n) },
-      sumCounters(prior.counters, counters),
+      nextSnapshotId(prior),
+      base.buckets ++ fresh.map { case (b, (n, _)) =>
+        b -> (if (targets(b)) n else base.buckets.getOrElse(b, 0L) + n) },
+      next,
       numBuckets,
-      prior.files ++ fresh.map { case (b, (_, fs)) =>
-        b -> (if (replace(b)) fs else prior.files.getOrElse(b, Seq.empty) ++ fs) })
+      base.files ++ fresh.map { case (b, (_, fs)) =>
+        b -> (if (targets(b)) fs else base.files.getOrElse(b, Seq.empty) ++ fs) })
     writeManifestAtomic(dir, m)
-    if (vacuum && replace.nonEmpty) {
+    if (vacuum && targets.nonEmpty) {
       // the replaced files are invisible to the head now — reclaim the space
-      // (this dangles any history snapshot still referencing them: readAt
-      // of such a snapshot fails loudly on the missing file; keep
-      // vacuum=false + expireSnapshots for a time-travelable rewrite chain)
-      replace.foreach { b =>
-        prior.files.getOrElse(b, Seq.empty).foreach { f =>
-          Files.deleteIfExists(bucketFilePath(dir, b, f))
-        }
+      // and drop the history entries that still named them (vacuum=false +
+      // expireSnapshots keeps a rewrite chain time-travelable)
+      targets.foreach { b =>
+        base.files.getOrElse(b, Seq.empty).foreach(f => Files.deleteIfExists(bucketFilePath(dir, b, f)))
       }
       pruneHistoryExcept(dir, m.snapshotId)
     }
@@ -395,16 +348,15 @@ object TableIO {
     all.groupBy(_._1).map { case (b, fs) => b -> fs.flatMap(_._2).toSet }
   }
 
-  /** Drop history entries [[readAt]] could no longer serve honestly — files
-    * missing (vacuumed / destructively recomputed) or a legacy no-file-list
-    * shape — keeping `snapshots()` an honest "what readAt can serve". */
+  /** Drop history entries [[readAt]] could no longer serve honestly (a
+    * file missing: vacuumed by a rewrite), keeping `snapshots()` an honest
+    * "what readAt can serve". */
   private def pruneHistoryExcept(dir: String, keepId: Long): Unit =
     snapshots(dir).filterNot(_ == keepId).foreach { sid =>
       readManifestAt(dir, sid).foreach { sm =>
-        val readable = (sm.files.nonEmpty || sm.buckets.isEmpty) &&
-          sm.files.forall { case (b, fs) =>
-            fs.forall(f => Files.exists(bucketFilePath(dir, b, f)))
-          }
+        val readable = sm.files.forall { case (b, fs) =>
+          fs.forall(f => Files.exists(bucketFilePath(dir, b, f)))
+        }
         if (!readable)
           Files.deleteIfExists(Paths.get(dir, "_snapshots", s"$sid.json"))
       }
@@ -441,14 +393,12 @@ object TableIO {
     * file count, so periodic compaction keeps reads O(buckets), not
     * O(appends). Returns the compacted bucket set. */
   def compact(spark: SparkSession, dir: String,
-              bucketKey: org.apache.spark.sql.Column,
+              bucketKey: Column,
               maxFilesPerBucket: Int = 1,
               numBuckets: Int = NumBuckets,
               vacuum: Boolean = true): Set[Int] = {
-    val m0 = readManifest(dir).getOrElse(return Set.empty)
-    val m = backfillFiles(dir, m0)
+    val m = readManifest(dir).getOrElse(return Set.empty)
     val targets = m.files.filter(_._2.size > maxFilesPerBucket).keySet
-      .intersect(m.buckets.keySet)
     if (targets.isEmpty) return Set.empty
     rewriteBuckets(read(spark, dir, Some(targets)), dir, bucketKey, targets,
       numBuckets = numBuckets, vacuum = vacuum)
@@ -468,12 +418,6 @@ object TableIO {
       finally ls.close()
     }
   }
-
-  /** Legacy snapshots carry no file lists — adopt every on-disk file of the
-    * committed buckets (single-writer; committed dirs are stable). */
-  private def backfillFiles(dir: String, m: Manifest): Manifest =
-    if (m.files.nonEmpty || m.buckets.isEmpty) m
-    else m.copy(files = m.buckets.keySet.map(b => b -> bucketFiles(dir, b)).toMap)
 
   /** For each bucket b in [0, n): an int whose Spark murmur3 (seed 42, the
     * HashPartitioning hash) lands in partition b of n — computed with
@@ -495,27 +439,15 @@ object TableIO {
       keys
     })
 
-  private def hasDataFiles(dir: String): Boolean = {
-    val d = Paths.get(dir, "data")
-    if (!Files.exists(d)) false
-    else {
-      val ls = Files.list(d)
-      try ls.iterator().asScala.exists(p =>
-        Files.isDirectory(p) && p.getFileName.toString.startsWith("bucket="))
-      finally ls.close()
-    }
-  }
-
   /** Read a committed table: only buckets listed in the manifest are visible.
-    * An empty snapshot reads back as an empty frame with the stamped schema
-    * (`_schema.json`; pre-round-3 tables stamped a parquet `_schema` dir —
-    * still honored). */
+    * Every read takes the schema stamped on the table's first commit
+    * (`_schema.json`), so an empty snapshot reads back as an empty frame of
+    * that schema and no read runs a schema-inference job. */
   def read(spark: SparkSession, dir: String): DataFrame =
     read(spark, dir, None)
 
-  /** As [[read]], restricted to a bucket subset: with file-list manifests the
-    * pruning happens driver-side (only the wanted buckets' files are even
-    * listed to Spark); legacy tables fall back to partition-column pruning.
+  /** As [[read]], restricted to a bucket subset: the pruning happens
+    * driver-side (only the wanted buckets' files are even listed to Spark).
     * This is the key-restricted point read — callers that know which buckets
     * a key set hashes into (xxhash64 pmod, [[bucketsOfSpark]]) touch
     * O(wanted) files, not the table. */
@@ -532,14 +464,6 @@ object TableIO {
   def readAt(spark: SparkSession, dir: String, snapshotId: Long): DataFrame = {
     val m = readManifestAt(dir, snapshotId).getOrElse(
       throw new IllegalStateException(s"no snapshot $snapshotId in $dir/_snapshots"))
-    // a legacy (no-file-list) manifest can only be read as "whatever is in
-    // the directory" — for the LIVE head that is exactly right (same
-    // semantics as read()), but serving it as a HISTORICAL snapshot would
-    // silently include rows appended later; refuse instead of lying
-    val isLiveHead = readManifest(dir).exists(_.snapshotId == snapshotId)
-    if (m.files.isEmpty && m.buckets.nonEmpty && !isLiveHead)
-      throw new IllegalStateException(
-        s"snapshot $snapshotId of $dir predates file-granular manifests — not time-travelable")
     frameFor(spark, dir, m, None)
   }
 
@@ -550,31 +474,22 @@ object TableIO {
       case None     => m.buckets.keySet
     }
     // snapshot-exact read: open ONLY the manifest-listed files, so data a
-    // crashed append left on disk is invisible (legacy manifests without
-    // file lists fall back to the whole-directory read)
+    // crashed write left on disk is invisible
     val listed: Seq[String] =
       m.files.toSeq.filter { case (b, _) => visible.contains(b) }
         .flatMap { case (b, fs) => fs.map(f => bucketFilePath(dir, b, f).toString) }
-    // the stamped schema spares every read a parquet schema-inference job
     val stamped = stampedSchema(dir)
     val df =
       if (listed.nonEmpty)
-        stamped.fold(spark.read)(spark.read.schema(_))
-          .option("basePath", s"$dir/data").parquet(listed: _*)
-      else if (m.files.isEmpty && hasDataFiles(dir)) spark.read.parquet(s"$dir/data")
-      else stamped.fold(spark.read.parquet(s"$dir/_schema"))(
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), _))
+        spark.read.schema(stamped).option("basePath", s"$dir/data").parquet(listed: _*)
+      else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stamped)
     df.filter(col("bucket").isin(visible.toSeq: _*)).drop("bucket")
   }
 
-  /** The schema stamped on a table's first write (`_schema.json`), if any. */
-  private def stampedSchema(dir: String): Option[org.apache.spark.sql.types.StructType] = {
-    val js = Paths.get(dir, "_schema.json")
-    if (!Files.exists(js)) None
-    else Some(org.apache.spark.sql.types.DataType
-      .fromJson(new String(Files.readAllBytes(js), StandardCharsets.UTF_8))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+  /** The schema stamped on a table's first commit (`_schema.json`). */
+  private def stampedSchema(dir: String): StructType =
+    DataType.fromJson(new String(Files.readAllBytes(Paths.get(dir, "_schema.json")),
+      StandardCharsets.UTF_8)).asInstanceOf[StructType]
 
   // one Configuration for all footer reads — construction parses the
   // hadoop config XMLs (tens of ms), which would dominate a 32-file loop
@@ -592,9 +507,8 @@ object TableIO {
   def missingBuckets(dir: String, numBuckets: Int = NumBuckets): Set[Int] =
     (0 until numBuckets).toSet -- readManifest(dir).map(_.buckets.keySet).getOrElse(Set.empty)
 
-  /** The bucket ids [[writeBucketed]] assigns for a set of keys (xxhash64
-    * pmod) — ONE job for the whole changed-key set, used to map changed
-    * urls/ids to the buckets to invalidate. */
+  /** The bucket ids a commit assigns for a set of keys (xxhash64 pmod) —
+    * ONE job for the whole key set. */
   def bucketsOfSpark(spark: SparkSession, keys: Seq[String],
                      numBuckets: Int = NumBuckets): Map[String, Int] = {
     import spark.implicits._
@@ -605,23 +519,6 @@ object TableIO {
 
   def bucketOfSpark(spark: SparkSession, key: String, numBuckets: Int = NumBuckets): Int =
     bucketsOfSpark(spark, Seq(key), numBuckets)(key)
-
-  /** Incremental invalidation (≙ joern's ArgumentTainter delta patching,
-    * SURVEY.md G3): drop the given buckets from the snapshot — atomically,
-    * manifest first — so the next [[writeBucketed]] recomputes exactly them.
-    * This is the "overwrite partitions by predicate" primitive: when a
-    * rule-set or page subset changes, invalidate the buckets its keys hash
-    * to and re-run materialize; everything else is untouched. */
-  def invalidateBuckets(dir: String, buckets: Set[Int]): Unit = {
-    readManifest(dir).foreach { m =>
-      // manifest shrinks FIRST (rows in dropped buckets become invisible
-      // immediately); orphaned data dirs are cleared lazily by the next
-      // writeBucketed, which always wipes uncommitted bucket dirs
-      writeManifestAtomic(dir,
-        m.copy(snapshotId = nextSnapshotId(Some(m)), buckets = m.buckets -- buckets))
-      buckets.foreach(b => deleteRecursively(s"$dir/data/bucket=$b"))
-    }
-  }
 
   def deleteRecursively(dir: String): Unit = {
     val p = Paths.get(dir)

@@ -149,19 +149,16 @@ object KgCli {
       case "import-ref" =>
         // ≙ joern-import: load a reference nodes.csv/edges.csv export into
         // graft tables (FK-validated; dangling edges counted, not dropped).
-        // OVERWRITE semantics: stale tables are invalidated first — without
-        // this, writeBucketed would see every bucket committed and silently
-        // keep the old data while reporting success
-        for (tbl <- Seq("nodes", "edges"))
-          if (TableIO.readManifest(s"$tablesDir/$tbl").isDefined)
-            TableIO.invalidateBuckets(s"$tablesDir/$tbl", (0 until TableIO.NumBuckets).toSet)
+        // OVERWRITE semantics: every bucket is replaced and the counters
+        // stated, whatever the tables held before
         val nodes = graft.sources.RefCsvGraphSource.readNodes(spark, args(0))
         val edges = graft.sources.RefCsvGraphSource.readEdges(spark, args(1))
         val (valid, dangling) = graft.sources.RefCsvGraphSource.validated(nodes, edges)
-        val nm = TableIO.writeBucketed(nodes, s"$tablesDir/nodes", col("id"),
-          Map("danglingEdges" -> dangling))
-        val em = TableIO.writeBucketed(valid, s"$tablesDir/edges", col("src"),
-          Map("danglingEdges" -> dangling))
+        def overwrite(df: DataFrame, tbl: String, key: String) =
+          TableIO.commitBuckets(df, s"$tablesDir/$tbl", col(key), (0 until TableIO.NumBuckets).toSet,
+            appendRest = false, _ => Map("danglingEdges" -> dangling))
+        val nm = overwrite(nodes, "nodes", "id")
+        val em = overwrite(valid, "edges", "src")
         import spark.implicits._
         Seq(("nodes", nm.buckets.values.sum), ("edges", em.buckets.values.sum),
           ("danglingEdges", dangling)).toDF("counter", "value")
@@ -218,21 +215,21 @@ object KgCli {
         val seeds = nodes.filter(col("id").isin(args.map(_.toLong): _*))
         Steps.corefMentions(seeds, edges, nodes).drop("props").orderBy("id")
       // ≙ joern-tag / joern-hide / joern-unhide: tags live in their own
-      // bucketed table, rewritten by snapshot swap (no node mutation).
+      // bucketed table, overwritten whole (no node mutation).
       // hide/unhide are sugar over the reserved 'hidden' tag.
       case "tag" =>
         val (tag, ids) = (args.head, args.tail.map(_.toLong))
-        swapTags(spark, tablesDir, existing =>
+        rewriteTags(spark, tablesDir, existing =>
           existing.unionByName(tagRows(spark, ids, tag)).distinct())
       case "untag" =>
         val (tag, ids) = (args.head, args.tail.map(_.toLong))
-        swapTags(spark, tablesDir, existing =>
+        rewriteTags(spark, tablesDir, existing =>
           existing.join(tagRows(spark, ids, tag), Seq("id", "tag"), "left_anti"))
       case "hide" =>
-        swapTags(spark, tablesDir, existing =>
+        rewriteTags(spark, tablesDir, existing =>
           existing.unionByName(tagRows(spark, args.map(_.toLong), "hidden")).distinct())
       case "unhide" =>
-        swapTags(spark, tablesDir, existing =>
+        rewriteTags(spark, tablesDir, existing =>
           existing.join(tagRows(spark, args.map(_.toLong), "hidden"),
             Seq("id", "tag"), "left_anti"))
       case "list-tags" =>
@@ -523,36 +520,19 @@ object KgCli {
     ids.map((_, tag)).toDF("id", "tag")
   }
 
-  /** Read the tags table with the SAME crash-swap fallback the writer has
-    * (live, then .new, then .old) — a crash mid-swap must not make hidden
-    * nodes silently reappear in lookup or break list-tags. */
-  private def readTags(spark: SparkSession, tablesDir: String): Option[DataFrame] = {
-    val live = s"$tablesDir/tags"
-    Seq(live, s"$live.new", s"$live.old")
-      .find(TableIO.readManifest(_).isDefined)
-      .map(TableIO.read(spark, _))
-  }
+  private def readTags(spark: SparkSession, tablesDir: String): Option[DataFrame] =
+    Option.when(TableIO.readManifest(s"$tablesDir/tags").isDefined)(
+      TableIO.read(spark, s"$tablesDir/tags"))
 
-  /** Rewrite the tags table via snapshot swap. Crash-safe at every step:
-    * new snapshot lands in tags.new; the LIVE table is renamed ASIDE (not
-    * deleted) before the new one moves in, so a crash between the renames
-    * leaves a recoverable copy (tags.old or tags.new) rather than nothing —
-    * and read() falls back to those if the swap was interrupted. */
-  private def swapTags(spark: SparkSession, tablesDir: String,
+  /** Overwrite the tags table with `f` of its rows. The result is pinned:
+    * it reads the files the overwrite replaces. */
+  private def rewriteTags(spark: SparkSession, tablesDir: String,
                        f: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    val live = s"$tablesDir/tags"
     val existing = readTags(spark, tablesDir)
       .getOrElse(Seq.empty[(Long, String)].toDF("id", "tag"))
     val next = Materialize.pin(f(existing)).df
-    TableIO.deleteRecursively(s"$live.new")
-    TableIO.writeBucketed(next, s"$live.new", col("id"))
-    TableIO.deleteRecursively(s"$live.old")
-    if (Files.exists(Paths.get(live)))
-      Files.move(Paths.get(live), Paths.get(s"$live.old"))
-    Files.move(Paths.get(s"$live.new"), Paths.get(live))
-    TableIO.deleteRecursively(s"$live.old")
+    TableIO.rewriteBuckets(next, s"$tablesDir/tags", col("id"), (0 until TableIO.NumBuckets).toSet)
     next.orderBy("id", "tag")
   }
 

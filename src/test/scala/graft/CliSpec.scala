@@ -157,7 +157,9 @@ class CliSpec extends AnyFunSuite with Matchers {
       (Seq("bowtie"), 1, 99),
       (Seq("kcore", "2"), 1, 17),
       (Seq("triangles"), 1, 17),
-      (Seq("features", "MENTIONS"), 1, 16))
+      (Seq("features", "MENTIONS"), 1, 16),
+      // its result reads the features' last round and the last k-means round
+      (Seq("cluster", "4"), 2, 43))
   }
   private val SliceJobs = 11
   private val PathJobs = 12

@@ -49,6 +49,13 @@ class EntryPointsSpec extends AnyFunSuite with Matchers {
     }.toSet shouldBe Set("graft/util/Materialize.scala")
   }
 
+  test("only TableIO renames files, so every table change is a manifest commit") {
+    // a rename swap of a table directory is a second overwrite protocol
+    // with its own crash windows; ScaleUpData renames a generated part file
+    sources.collect { case (f, text) if text.contains("Files.move(") => f }
+      .toSet shouldBe Set("graft/store/TableIO.scala", "graft/tools/ScaleUpData.scala")
+  }
+
   test("the objects defining main are exactly the allowlist") {
     val objectDecl = """(?m)^\s*object\s+(\w+)""".r
     val mainDecl = """def main\s*\(""".r

@@ -30,6 +30,13 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     TableIO.read(spark, s"$dir/entity_refcounts")
       .groupBy("id").agg(sum("n").as("n")).filter(col("n") =!= 0L))
 
+  /** The build's lineage counters of every table a rule diff may rewrite. */
+  private def buildCounters(dir: String): Map[String, Map[String, Long]] =
+    Seq("triples", "components", "sameas_evidence", "nodes", "edges").map { tb =>
+      tb -> TableIO.readManifest(s"$dir/$tb").get.counters
+        .filter { case (k, _) => Set("pagesIn", "mentions", "triples")(k) }
+    }.toMap
+
   test("changedRules is the structural symmetric difference") {
     Incremental.changedRules(PatternAutomaton.DefaultRules, PatternAutomaton.DefaultRules) shouldBe empty
     val ch = Incremental.changedRules(PatternAutomaton.DefaultRules, newRules)
@@ -44,12 +51,16 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     val t0 = Pipeline.run(spark, pages, cfg.nPersons)
     Pipeline.materialize(spark, t0, dir)
     t0.flatEnc.unpersist(false); t0.components.unpersist(false)
+    val built = buildCounters(dir)
 
     // incremental: apply the diff
     val touched = Incremental.applyRuleDiff(spark, pages,
       PatternAutomaton.DefaultRules, newRules, dir, cfg.nPersons)
     touched should not be empty
     touched.size should be < TableIO.NumBuckets // partial recompute, by construction
+    // every table keeps the build's lineage counters (a later takedown
+    // subtracts from them)
+    buildCounters(dir) shouldBe built
 
     // ground truth: a from-scratch rebuild under the NEW rules
     val t1 = Pipeline.run(spark, pages, cfg.nPersons, rules = newRules)
@@ -441,12 +452,14 @@ class IncrementalSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     val t0 = Pipeline.run(spark, pages, cfg.nPersons)
     Pipeline.materialize(spark, t0, dir)
     t0.flatEnc.unpersist(false); t0.components.unpersist(false)
+    val built = buildCounters(dir)
 
     // drop the same_as rule entirely: no links -> no canonicalization
     val noSameAs = PatternAutomaton.DefaultRules.filterNot(_.pred == "same_as")
     val touched = Incremental.applyRuleDiff(spark, pages,
       PatternAutomaton.DefaultRules, noSameAs, dir, cfg.nPersons)
-    touched.size shouldBe TableIO.NumBuckets // full invalidation, detected
+    touched.size shouldBe TableIO.NumBuckets // full recompute, detected
+    buildCounters(dir) shouldBe built
 
     val t1 = Pipeline.run(spark, pages, cfg.nPersons, rules = noSameAs)
     sortedRows(TableIO.read(spark, s"$dir/triples")) shouldBe sortedRows(t1.triples)

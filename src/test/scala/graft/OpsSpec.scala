@@ -127,7 +127,7 @@ class DedupSpec extends AnyFunSuite with Matchers {
         if (compactBetween) {
           Dedup.compactMinhashIndex(spark, dir)
           // compaction folds the two generations into one row per bucket
-          spark.read.parquet(s"$dir/bands")
+          graft.store.TableIO.read(spark, s"$dir/bands")
             .groupBy("band", "bandHash").count()
             .collect().foreach(_.getLong(2) shouldBe 1L)
         }
@@ -141,20 +141,41 @@ class DedupSpec extends AnyFunSuite with Matchers {
     run(compactBetween = true) shouldBe plain
   }
 
-  test("a crashed swap (live dir missing, complete _tmp) heals on the next ingest") {
-    val dir = java.nio.file.Files.createTempDirectory("lsh-heal").toString
+  test("a failed ingest append leaves the index readable and the retry converges") {
+    import java.nio.file.{Files, Paths}
+    import graft.store.TableIO
+    val base = Seq(1L -> "the quick brown fox jumps over the lazy dog near the river bank")
+    val batch = Seq(
+      10L -> "the quick brown fox jumps over the lazy dog near the river bank",
+      11L -> "fresh unseen prose describing iterative graph fixpoints at scale")
+    val clean = ingestAll(base, Seq(batch))
+    val dir = Files.createTempDirectory("lsh-crash").toString
     try {
-      Dedup.buildMinhashIndex(docs(
-        1L -> "the quick brown fox jumps over the lazy dog near the river bank"), dir)
-      Dedup.compactMinhashIndex(spark, dir)
-      // simulate the crash window between swapWrite's two renames
-      import java.nio.file.{Files, Paths}
-      Files.move(Paths.get(s"$dir/sigs"), Paths.get(s"$dir/sigs_tmp"))
-      val kept = Dedup.ingestDedup(docs(
-        10L -> "the quick brown fox jumps over the lazy dog near the river bank"), dir)
+      Dedup.buildMinhashIndex(docs(base: _*), dir)
+      // simulate a crashed ingest: each table holds a REAL data file no
+      // manifest claims (a committed file copied under a new name), and
+      // task output Spark's committer left under _temporary
+      val orphans = Seq("sigs", "bands").flatMap { t =>
+        val m = TableIO.readManifest(s"$dir/$t").get
+        val (b, fs) = m.files.find(_._2.nonEmpty).get
+        val bd = Paths.get(dir, t, "data", s"bucket=$b")
+        val orphan = bd.resolve("part-crashed-ingest.parquet")
+        Files.copy(bd.resolve(fs.head), orphan)
+        val task = Paths.get(dir, t, "data", "_temporary", "0", "task_crashed", s"bucket=$b")
+        Files.createDirectories(task)
+        Files.copy(bd.resolve(fs.head), task.resolve("part-crashed-task.parquet"))
+        Seq(orphan, task)
+      }
+      // the index still reads as the base alone
+      TableIO.read(spark, s"$dir/sigs").count() shouldBe 1L
+      val kept = Dedup.ingestDedup(docs(batch: _*), dir)
         .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      kept shouldBe Map(10L -> false)
-    } finally graft.store.TableIO.deleteRecursively(dir)
+      kept shouldBe clean
+      orphans.foreach(p => Files.exists(p) shouldBe false)
+      // the retried append committed exactly the batch's signatures
+      TableIO.read(spark, s"$dir/sigs").select("doc_id").collect().map(_.getLong(0))
+        .sorted.toSeq shouldBe Seq(1L, 10L, 11L)
+    } finally TableIO.deleteRecursively(dir)
   }
 
   test("minhash index stores capped bucket lists") {
@@ -162,12 +183,12 @@ class DedupSpec extends AnyFunSuite with Matchers {
     try {
       val many = (0L until 40L).map(i => i -> "identical boilerplate cookie banner text repeated everywhere")
       Dedup.buildMinhashIndex(docs(many: _*), dir, maxBucket = 5)
-      val rows = spark.read.parquet(s"$dir/bands").collect()
+      val rows = graft.store.TableIO.read(spark, s"$dir/bands").collect()
       rows.foreach(r => r.getSeq[Long](2).length should be <= 5)
       // and the cap survives an append fold
       Dedup.ingestDedup(docs(Seq(100L -> "identical boilerplate cookie banner text repeated everywhere"): _*),
         dir, maxBucket = 5)
-      spark.read.parquet(s"$dir/bands").collect()
+      graft.store.TableIO.read(spark, s"$dir/bands").collect()
         .foreach(r => r.getSeq[Long](2).length should be <= 5)
     } finally graft.store.TableIO.deleteRecursively(dir)
   }

@@ -100,9 +100,11 @@ class PipelineSpec extends AnyFunSuite with Matchers {
           b.exceptAll(a).count() shouldBe 0L
         }
       }
-      // lineage counters surface in the resumed manifest
+      // lineage counters surface in the resumed manifest, once (a resume
+      // states them; it does not add to a partial build's)
       val m = graft.store.TableIO.readManifest(s"$crashed/triples").get
       m.counters.keySet should contain allOf ("pagesIn", "mentions", "triples")
+      m.counters shouldBe graft.store.TableIO.readManifest(s"$clean/triples").get.counters
     } finally {
       graft.store.TableIO.deleteRecursively(clean)
       graft.store.TableIO.deleteRecursively(crashed)

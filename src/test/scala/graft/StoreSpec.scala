@@ -69,25 +69,33 @@ class StoreSpec extends AnyFunSuite with Matchers {
     TableIO.read(spark, dir).count() shouldBe 1000L
   }
 
-  test("invalidateBuckets: G3 delta patching — re-derive only changed buckets") {
-    import spark.implicits._
+  test("rewriteBuckets: G3 delta patching — re-derive only changed buckets") {
     val dir = freshDir()
-    TableIO.writeBucketed(sample(), dir, col("key"), numBuckets = 8)
-    // "the rules changed for key k7": find its bucket, invalidate it
+    TableIO.writeBucketed(sample(), dir, col("key"), Map("rows" -> 1000L), numBuckets = 8)
+    // "the rules changed for key k7": find its bucket, re-derive it with
+    // UPDATED content for the affected rows (rows hashing elsewhere drop)
     val b = TableIO.bucketOfSpark(spark, "k7", 8)
-    TableIO.invalidateBuckets(dir, Set(b))
-    TableIO.missingBuckets(dir, 8) shouldBe Set(b)
-    // invisible immediately (manifest shrank first)
-    TableIO.read(spark, dir).filter(col("key") === "k7").count() shouldBe 0L
-    // re-derivation with UPDATED content for the affected rows only
     val updated = sample().withColumn("value",
       when(col("key") === "k7", lit(9999L)).otherwise(col("value")))
-    TableIO.writeBucketed(updated, dir, col("key"), numBuckets = 8)
+    val m = TableIO.rewriteBuckets(updated, dir, col("key"), Set(b), numBuckets = 8)
+    m.counters shouldBe Map("rows" -> 1000L)
     val back = TableIO.read(spark, dir)
     back.count() shouldBe 1000L
     back.filter(col("key") === "k7").head().getLong(1) shouldBe 9999L
     // untouched buckets kept their original rows (no duplicate work / rows)
     back.dropDuplicates("key").count() shouldBe 1000L
+
+    // a whole-table overwrite of a missing table equals a build
+    val built = freshDir()
+    val fresh = freshDir()
+    val mb = TableIO.writeBucketed(updated, built, col("key"), Map("rows" -> 1000L), numBuckets = 8)
+    val mo = TableIO.rewriteBuckets(updated, fresh, col("key"), (0 until 8).toSet,
+      Map("rows" -> 1000L), numBuckets = 8)
+    mo.buckets shouldBe mb.buckets
+    mo.counters shouldBe mb.counters
+    TableIO.read(spark, fresh).schema shouldBe TableIO.read(spark, built).schema
+    TableIO.read(spark, fresh).collect().map(_.toString).sorted shouldBe
+      TableIO.read(spark, built).collect().map(_.toString).sorted
   }
 
   test("empty table: commit succeeds, read returns schema'd empty frame") {
@@ -240,7 +248,7 @@ class StoreSpec extends AnyFunSuite with Matchers {
     // counters are evaluated at the swap): the head and history stand
     intercept[IllegalStateException] {
       TableIO.commitBuckets(rows, dir, col("key"), targets, appendRest = true,
-        throw new IllegalStateException("crash before the swap"), numBuckets = 8)
+        _ => throw new IllegalStateException("crash before the swap"), numBuckets = 8)
     }
     TableIO.readManifest(dir).get shouldBe prior
     TableIO.snapshots(dir) shouldBe before
@@ -249,7 +257,7 @@ class StoreSpec extends AnyFunSuite with Matchers {
 
     // the next commit wipes those orphans and commits exactly one snapshot
     val m = TableIO.commitBuckets(rows, dir, col("key"), targets, appendRest = true,
-      Map("rows" -> 300L), numBuckets = 8)
+      TableIO.sumCounters(_, Map("rows" -> 300L)), numBuckets = 8)
     TableIO.snapshots(dir).filterNot(before.toSet) shouldBe Seq(m.snapshotId)
     m.counters("rows") shouldBe 1300L
     onDisk shouldBe (0 until 8).map(b => b -> m.files(b).toSet).toMap
@@ -365,28 +373,27 @@ class StoreSpec extends AnyFunSuite with Matchers {
     TableIO.deleteRecursively(dir)
   }
 
-  test("legacy manifest (no file lists) is backfilled by the first append") {
+  test("a commit whose frame does not match the stamped schema is rejected") {
     import spark.implicits._
     val dir = freshDir()
-    TableIO.writeBucketed(sample(), dir, col("key"), Map("rows" -> 1000L), numBuckets = 8)
-    // strip the files section: the pre-append manifest format
-    val mp = java.nio.file.Paths.get(dir, "_manifest.json")
-    val txt = new String(Files.readAllBytes(mp), java.nio.charset.StandardCharsets.UTF_8)
-    val legacy = txt.substring(0, txt.indexOf(",\"files\":")) + "}"
-    Files.write(mp, legacy.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    TableIO.readManifest(dir).get.files shouldBe empty
-    TableIO.read(spark, dir).count() shouldBe 1000L // whole-dir fallback
-    val batch = (1000 until 1100).map(i => (s"k$i", i.toLong)).toDF("key", "value")
-    val m2 = TableIO.appendBucketed(batch, dir, col("key"), Map("rows" -> 100L), numBuckets = 8)
-    m2.files should not be empty
-    m2.counters("rows") shouldBe 1100L
-    val back = TableIO.read(spark, dir)
-    back.count() shouldBe 1100L
-    back.select("key").distinct().count() shouldBe 1100L
+    TableIO.writeBucketed(sample(), dir, col("key"), numBuckets = 8)
+    val before = TableIO.snapshots(dir)
+    val renamed = (1000 until 1100).map(i => (s"k$i", i.toLong)).toDF("key", "amount")
+    val e = intercept[IllegalArgumentException] {
+      TableIO.appendBucketed(renamed, dir, col("key"), numBuckets = 8)
+    }
+    e.getMessage should include("does not match the schema stamped")
+    TableIO.snapshots(dir) shouldBe before
+    TableIO.read(spark, dir).count() shouldBe 1000L
+    // nullability is not part of the match: a nullable frame of the same
+    // columns appends
+    val nullable = (1000 until 1100).map(i => (s"k$i", Option(i.toLong))).toDF("key", "value")
+    TableIO.appendBucketed(nullable, dir, col("key"), numBuckets = 8)
+    TableIO.read(spark, dir).count() shouldBe 1100L
   }
 
   test("partKeys places each bucket in exactly its own reduce task") {
-    // writeBucketed's 1-bucket-per-write-task mapping depends on Spark's
+    // the commit's 1-bucket-per-write-task mapping depends on Spark's
     // INTERNAL HashPartitioning hash (Murmur3_x86_32, seed 42): a Spark
     // upgrade that changes it would silently degrade the bijection back to
     // skewed/empty writers (perf, not correctness). This pin fails loudly
